@@ -361,7 +361,7 @@ def hits(
             )
         )
 
-    # LAZY per-half-step cut (round 16; was two eager CheckpointCyclers):
+    # LAZY per-half-step cut (round 16; was two eager per-round cuts):
     # each half-step's raw table feeds BOTH the normalization total and
     # the normalized output (a changing subtree — reuse cannot dedup it),
     # so the cut stays, but all 2·iters half-steps now run in one job
@@ -397,8 +397,8 @@ def dedup_groups(components: DataFrame) -> DataFrame:
 
 def round_cut(df: DataFrame) -> DataFrame:
     """Per-round LAZY lineage cut for fixed-round loops over CHANGING
-    inputs (kcore/ktruss/HITS — round 16, replacing the eager
-    CheckpointCycler there).
+    inputs (kcore/ktruss/HITS — round 16, replacing an eager per-round
+    checkpoint that freed each superseded round's blocks).
 
     The cut is still required: each round consumes its (changing) input
     2-3 times and exchange reuse cannot cover a changing subtree. But
@@ -409,60 +409,20 @@ def round_cut(df: DataFrame) -> DataFrame:
     A/Bs (sf0.1, 5 rounds; sf1, 3 rounds): kcore 1.31→1.19 / 1.71→1.49 s,
     ktruss 1.59→1.46 / 2.09→1.85 s, HITS 3.44→3.02 s / wash.
 
-    Retention trade-off vs the cycler: ALL rounds' blocks stay persisted
-    until the terminal action ends (the cycler freed superseded rounds).
+    Retention trade-off vs the eager form: ALL rounds' blocks stay
+    persisted until the terminal action ends (the eager form freed
+    superseded rounds). `DataFrame.unpersist()` does NOT free
+    localCheckpoint blocks: the persisted RDD is the one inside the
+    LogicalRDD, not the Dataset's cache entry, so freeing takes a
+    JVM-side `rdd().unpersist()` on the analyzed plan's node.
     Safe here because these loops' tables are monotonically SHRINKING
     edge sets or node-grain score tables, stored SERIALIZED
     (MEMORY_AND_DISK, the PySpark serialized level — the round-9 lesson)
     and disk-spillable, so peak footprint is bounded by ~2x the round-0
     table. Do NOT apply to loops whose per-round state is data-shaped
-    and non-shrinking (LPA at sf10 needed the eager cycler's freeing
+    and non-shrinking (LPA at sf10 needed the eager form's freeing
     before the round-15 one-job rewrite made the point moot)."""
     from pyspark import StorageLevel
 
     return df.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
-
-class CheckpointCycler:
-    """Eager localCheckpoint per iteration + unpersist of the superseded
-    round's blocks — the memory-bounded form of the lineage-cut loop.
-    (As of round 16 no in-tree loop uses it — kcore/ktruss/HITS moved to
-    the lazy `round_cut` above after interleaved A/Bs; kept as the
-    documented fallback for a future loop whose per-round state is
-    data-shaped and NON-shrinking, where lazy retention would blow the
-    round-4 memory envelope this class was built for.)
-
-    A chain of lazy localCheckpoints retains EVERY round's block-manager
-    partitions until the terminal action finishes (round-4 verdict: LPA
-    needed >8 GiB driver heap at sf1 in local mode purely from this
-    retention; on a cluster it is executor memory, but the retention
-    itself is avoidable). `step(df)` checkpoints eagerly, then frees the
-    blocks of the PREVIOUS `step` result — safe because eager
-    materialization means round N no longer reads round N−1. The final
-    result's blocks are kept (it is what the caller returns); loop-
-    invariant checkpoints made outside the cycler — or by any CONCURRENT
-    query in the same SparkContext — are never touched: the superseded
-    round is identified by the checkpointed Dataset's OWN internal RDD
-    (its analyzed plan is a LogicalRDD wrapping exactly the persisted
-    RDD), not by diffing the global persistent-RDD set, so another
-    thread persisting between calls cannot be captured and lineage-cut
-    out from under it.
-
-    `DataFrame.unpersist()` does NOT free localCheckpoint blocks (the
-    persisted RDD is the internal one inside LogicalRDD, not the
-    Dataset's cache entry — verified on this engine), hence the direct
-    JVM-side RDD unpersist."""
-
-    def __init__(self, spark) -> None:
-        self._prev: list = []
-
-    def step(self, df: DataFrame) -> DataFrame:
-        out = df.localCheckpoint(eager=True)
-        node = out._jdf.queryExecution().analyzed()
-        # analyzed() of a localCheckpoint result is a LogicalRDD whose
-        # rdd() IS the RDD the block manager persisted (id-verified).
-        fresh = [node.rdd()]
-        for rdd in self._prev:
-            rdd.unpersist(False)
-        self._prev = fresh
-        return out

@@ -158,7 +158,6 @@ def daily_counts(df: DataFrame, ts_col: str = "start_time") -> DataFrame:
     return (
         df.groupBy(F.to_date(ts_col).alias("day"))
         .agg(F.count(F.lit(1)).alias("n_segments"))
-        .orderBy("day")
     )
 
 

@@ -71,7 +71,6 @@ SELECT f.cohort_day,
        CAST(count(DISTINCT d.user_id) AS BIGINT) AS n_active_users
 FROM days d JOIN firsts f ON d.user_id = f.user_id
 GROUP BY f.cohort_day, d.day_no - f.cohort_day
-ORDER BY cohort_day, day_offset
 """
 
 
@@ -113,7 +112,6 @@ t AS (
 SELECT prev_type, next_type, n,
        CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY prev_type) AS DOUBLE) AS p
 FROM t
-ORDER BY prev_type, next_type
 """
 
 
@@ -156,7 +154,6 @@ scored AS (
 SELECT event_id, event_type, value, z
 FROM scored
 WHERE abs(z) > 3.0e0
-ORDER BY event_id
 """
 
 
@@ -199,7 +196,6 @@ SELECT user_id, event_type,
 FROM ordered
 GROUP BY user_id, event_type, rn - rn_t
 HAVING count(*) >= 3
-ORDER BY user_id, start_us
 """
 
 
@@ -256,7 +252,6 @@ SELECT event_type,
        (s4/n - 4.0e0*{m}*(s3/n) + 6.0e0*{m}*{m}*(s2/n) - 3.0e0*{m}*{m}*{m}*{m})
          / nullif({var} * {var}, 0.0e0) AS kurtosis_pop
 FROM s
-ORDER BY event_type
 """
 # nullif guards: a zero-variance (constant) group yields NULL skew/kurtosis
 # on BOTH engines instead of engine-specific Inf/NaN-vs-error divergence.
@@ -314,7 +309,6 @@ SELECT event_type,
        ((n*sxy - sx*sy) * (n*sxy - sx*sy))
          / nullif((n*sxx - sx*sx) * (n*syy - sy*sy), 0.0e0) AS r2
 FROM s
-ORDER BY event_type
 """
 
 
@@ -364,7 +358,6 @@ SELECT f.event_type, f.event_id, f.value,
        abs(f.v - m.med) / nullif(m.mad, 0.0e0) AS mad_ratio
 FROM f JOIN mad m ON f.event_type = m.event_type
 WHERE abs(f.v - m.med) > 6.0e0 * m.mad
-ORDER BY f.event_type, f.event_id
 """
 
 
@@ -399,7 +392,6 @@ FROM (
   FROM c
 )
 WHERE rn = 1
-ORDER BY user_id
 """
 
 
@@ -438,7 +430,6 @@ SELECT s.d AS day,
        CAST(count(DISTINCT f.user_id) AS BIGINT) AS active_7d
 FROM spine s JOIN facts f ON f.day BETWEEN s.d - 6 AND s.d
 GROUP BY s.d
-ORDER BY day
 """
 
 
@@ -471,7 +462,6 @@ def window_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()  # one row per (user, day) — so the count below is exact
         .groupBy("day")
         .agg(F.count(F.lit(1)).alias("active_7d"))
-        .orderBy("day")
     )
 
 
@@ -582,7 +572,6 @@ SELECT lag_days,
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
          / (SELECT n_users FROM cohort) AS cum_conversion
 FROM hist
-ORDER BY lag_days
 """
 
 
@@ -649,7 +638,6 @@ JOIN ev c ON c.user_id = r.user_id AND c.rn = r.rn_last + 1
          AND c.event_type = 'click'
 JOIN ev p ON p.user_id = r.user_id AND p.rn = r.rn_last + 2
          AND p.event_type = 'purchase'
-ORDER BY r.user_id, r.ts_start
 """
 
 
@@ -710,7 +698,6 @@ FROM carried
 WHERE event_type = 'purchase'
   AND vrn IS NOT NULL
   AND cum_err - verr = 0
-ORDER BY user_id, purchase_rn
 """
 
 
@@ -760,7 +747,6 @@ series AS (
 )
 SELECT event_type, n_days, {fold} AS ewma
 FROM series
-ORDER BY event_type
 """
 
 
@@ -830,7 +816,6 @@ JOIN customer ON o_custkey = c_custkey
 JOIN stats ON stats.seg = c_mktsegment
 CROSS JOIN prior
 WHERE o_orderkey % 97 = 0
-ORDER BY o_orderkey
 """
 
 
@@ -903,7 +888,6 @@ FROM pairs p
 JOIN n_items na ON na.l_partkey = p.item_a
 JOIN n_items nb ON nb.l_partkey = p.item_b
 CROSS JOIN n_orders o
-ORDER BY lift DESC, p.item_a, p.item_b
 """
 
 
@@ -1073,7 +1057,6 @@ FROM (
   FROM purch
 ) m
 GROUP BY model, channel
-ORDER BY model, channel
 """
 
 
@@ -1216,7 +1199,6 @@ SELECT {rq} AS r_q, {fq} AS f_q, {mq} AS m_q,
        CAST(CAST(sum(monetary) AS STRING) AS DOUBLE) AS total_monetary
 FROM ranked
 GROUP BY 1, 2, 3
-ORDER BY r_q, f_q, m_q
 """
 
 
@@ -1255,7 +1237,6 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_monetary"
             ),
         )
-        .orderBy("r_q", "f_q", "m_q")
     )
 
 
@@ -1401,7 +1382,6 @@ SELECT category,
        (CAST(g AS DOUBLE) / CAST(gt AS DOUBLE)
         - CAST(b AS DOUBLE) / CAST(bt AS DOUBLE)) * ({woe}) AS iv_term
 FROM {last}
-ORDER BY category
 """
 
 
@@ -1540,7 +1520,6 @@ SELECT state AS event_type,
        v AS pi_micro,
        CAST(v AS DOUBLE) / 1.0e6 AS pi
 FROM r{MARKOV_ITERS}
-ORDER BY state
 """
 
 
@@ -1628,7 +1607,6 @@ SELECT t AS duration_days, n AS n_at_risk, d AS d_events,
        sum(ks_ln - kn_ln) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)
          AS ln_survival
 FROM {last}
-ORDER BY duration_days
 """
 
 
@@ -1993,7 +1971,6 @@ SELECT CAST(floor(CAST(t AS DOUBLE) / 86400000000.0e0) AS BIGINT) AS day,
        CAST(sum(plus) AS BIGINT) AS sessions_started
 FROM {src}
 GROUP BY 1
-ORDER BY day
 """
 
 
@@ -2348,7 +2325,6 @@ SELECT event_type, n,
            * (m4 / nullif(m2 * m2, 0.0e0) - 3.0e0) / 4.0e0)
          AS jb_stat
 FROM c
-ORDER BY event_type
 """
 
 
@@ -2417,7 +2393,6 @@ SELECT nn.event_type, nn.n_days, p.c AS concordant, p.d AS discordant,
               * (CAST(nn.n_days * (nn.n_days - 1) AS DOUBLE) / 2.0e0)), 0.0e0)
          AS tau_b
 FROM nn JOIN pairs p ON p.event_type = nn.event_type
-ORDER BY nn.event_type
 """
 
 
@@ -2516,7 +2491,6 @@ def _esd_sql(mat: str) -> str:
         + ",\n".join(parts)
         + "\n"
         + "\nUNION ALL\n".join(finals)
-        + "\nORDER BY event_type, round"
     )
 
 
@@ -2598,7 +2572,7 @@ def anomaly_esd_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)
-    return out.orderBy("event_type", "round")
+    return out
 
 
 # --- Cramér's V effect size (the magnitude chi-square doesn't give) ---
@@ -3197,7 +3171,6 @@ SELECT state AS event_type,
        CAST(t AS DOUBLE) / 1.0e6 AS expected_steps_h{ABSORB_ITERS},
        CAST(a AS DOUBLE) / 1.0e6 AS p_purchase_h{ABSORB_ITERS}
 FROM s{ABSORB_ITERS}
-ORDER BY state
 """
 
 
@@ -3275,7 +3248,7 @@ FROM t WHERE prev_type <> '{_ABS_TARGET}'
         rows,
         f"event_type string, steps_micro long, absorb_micro long, "
         f"expected_steps_h{ABSORB_ITERS} double, p_purchase_h{ABSORB_ITERS} double",
-    ).orderBy("event_type")
+    )
 
 
 # --- Wilcoxon signed-rank test (paired two-sample) ---
@@ -3523,7 +3496,6 @@ SELECT event_type, n,
        {var} AS var_gap_us,
        {var} / nullif({mean} * {mean}, 0e0) AS cv2
 FROM agg
-ORDER BY event_type
 """
 
 
@@ -3588,7 +3560,6 @@ agg AS (
 SELECT event_type, n, runs,
        (CAST(runs AS DOUBLE) - {er}) / nullif(sqrt({vr}), 0e0) AS z_stat
 FROM agg
-ORDER BY event_type
 """
 
 
@@ -5646,7 +5617,6 @@ sums AS (
 SELECT event_type, n,
        {s2d("num")} / nullif({s2d("den")}, 0e0) AS dw_stat
 FROM sums
-ORDER BY event_type
 """
 
 
@@ -5679,7 +5649,6 @@ SELECT event_type, n,
          / nullif((nd * sttd - std * std) * (nd * sggd - sgd * sgd), 0e0)
          AS lm_stat
 FROM emitted
-ORDER BY event_type
 """
 
 
@@ -5765,7 +5734,6 @@ JOIN wau w ON w.day = d.day
 JOIN mau m ON m.day = d.day
 CROSS JOIN cal
 WHERE d.day <= cal.max_day
-ORDER BY d.day
 """
 
 
@@ -5857,7 +5825,6 @@ JOIN wau w ON w.day = d.day
 JOIN mau m ON m.day = d.day
 CROSS JOIN cal
 WHERE d.day <= cal.max_day
-ORDER BY d.day
 """
 
 
@@ -6124,7 +6091,6 @@ SELECT p.pct, t.u AS n_users,
                                 AS BIGINT)) AS DOUBLE)
          / CAST(t.total_rev AS DOUBLE) AS rev_share
 FROM ({pcts}) p CROSS JOIN tot t
-ORDER BY p.pct
 """
 
 
@@ -6178,7 +6144,6 @@ def events_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
                                              / 100e0) AS BIGINT)) AS DOUBLE)
                  / CAST(t.total_rev AS DOUBLE) AS rev_share
         FROM ({pcts}) p CROSS JOIN tot t
-        ORDER BY p.pct
         """
     )
 
@@ -6691,7 +6656,6 @@ SELECT c.event_type, c.day,
 FROM daily c
 LEFT JOIN daily d ON d.event_type = c.event_type AND d.day = c.day - 1
 LEFT JOIN daily w ON w.event_type = c.event_type AND w.day = c.day - 7
-ORDER BY c.event_type, c.day
 """
 
 

@@ -28,7 +28,6 @@ SELECT source,
        len(list(DISTINCT split_part(text, ' ', 1))) AS n_distinct_first
 FROM documents
 GROUP BY source
-ORDER BY source
 """
 
 
@@ -47,7 +46,6 @@ def array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_join(F.sort_array(F.collect_set(first)), "|").alias("first_tokens"),
             F.size(F.collect_set(first)).cast("long").alias("n_distinct_first"),
         )
-        .orderBy("source")
     )
 
 
@@ -59,7 +57,7 @@ WITH lc AS (
 SELECT source,
        CAST(count(*) AS BIGINT) AS n_langs,
        string_agg(lang || ':' || CAST(n AS VARCHAR), '|' ORDER BY lang) AS lang_counts
-FROM lc GROUP BY source ORDER BY source
+FROM lc GROUP BY source
 """
 
 MAP_SPARK = """
@@ -77,7 +75,7 @@ SELECT source,
        array_join(transform(map_keys(lang_map),
                             k -> concat(k, ':', CAST(element_at(lang_map, k) AS STRING))),
                   '|') AS lang_counts
-FROM m ORDER BY source
+FROM m
 """
 
 

@@ -124,7 +124,6 @@ SELECT source,
        CAST(100 + ({h_source} % 400) AS BIGINT) AS keep_per_mille
 FROM documents
 GROUP BY source, 100 + ({h_source} % 400)
-ORDER BY source
 """
 
 
@@ -172,7 +171,6 @@ SELECT source,
 FROM cum
 WHERE cum_tok <= {TOKEN_BUDGET}
 GROUP BY source
-ORDER BY source
 """
 
 PACK_SPARK = f"""
@@ -191,7 +189,6 @@ SELECT source,
 FROM cum
 WHERE cum_tok <= {TOKEN_BUDGET}
 GROUP BY source
-ORDER BY source
 """
 
 
@@ -237,7 +234,6 @@ hits AS (
   GROUP BY s.doc_id
 )
 SELECT doc_id, n_eval_grams_hit FROM hits
-ORDER BY doc_id
 """
 
 
@@ -286,7 +282,6 @@ SELECT source, n_docs,
        raw_w / z AS mix_weight,
        raw_w / z * total_docs AS expected_docs
 FROM per_source CROSS JOIN norm
-ORDER BY source
 """
 
 
@@ -325,7 +320,6 @@ WITH ranked AS (
 )
 SELECT source, doc_id, rk FROM ranked
 WHERE rk <= {DOMAIN_CAP}
-ORDER BY source, rk
 """
 
 
@@ -424,7 +418,6 @@ sliced AS (
 )
 SELECT doc_id, chunk_id, n_chunk_tokens, md5(chunk_text) AS chunk_digest
 FROM sliced
-ORDER BY doc_id, chunk_id
 """
 
 CHUNKS_SPARK = f"""
@@ -448,7 +441,6 @@ sliced AS (
 )
 SELECT doc_id, chunk_id, n_chunk_tokens, md5(chunk_text) AS chunk_digest
 FROM sliced
-ORDER BY doc_id, chunk_id
 """
 
 
@@ -481,7 +473,6 @@ ranked AS (
   FROM freq
 )
 SELECT token, doc_freq, rnk FROM ranked WHERE rnk <= {VOCAB_K}
-ORDER BY rnk
 """
 
 
@@ -506,7 +497,7 @@ def vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk.withColumn(
         "rnk",
         F.row_number().over(W.orderBy(F.col("doc_freq").desc(), F.col("token"))).cast("long"),
-    ).orderBy("rnk")
+    )
 
 
 # --- training shard assignment ---
@@ -528,7 +519,6 @@ SELECT {md5_int_duck("CAST(doc_id AS VARCHAR)", salt="shard")} % {N_SHARDS} AS s
        CAST(max(doc_id) AS BIGINT) AS max_doc
 FROM documents
 GROUP BY 1
-ORDER BY shard
 """
 
 
@@ -551,7 +541,6 @@ def curation_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(max(doc_id) AS BIGINT) AS max_doc
         FROM documents
         GROUP BY 1
-        ORDER BY shard
         """
     )
 
@@ -599,7 +588,6 @@ SELECT {shard_hash} % {N_SHARDS} AS shard,
        CAST(max(doc_id) AS BIGINT) AS max_doc
 FROM gated
 GROUP BY 1
-ORDER BY shard
 """
 
 
@@ -686,7 +674,6 @@ SELECT split,
        CAST(sum(n_tok) AS BIGINT) AS n_tokens
 FROM assigned
 GROUP BY split
-ORDER BY split
 """
 
 
@@ -721,7 +708,6 @@ def curation_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tok").cast("long").alias("n_tokens"),
         )
-        .orderBy("split")
     )
 
 
@@ -771,7 +757,6 @@ SELECT shard,
        CAST(max(doc_id) AS BIGINT) AS max_doc
 FROM sharded
 GROUP BY shard
-ORDER BY shard
 """
 
 
@@ -901,7 +886,6 @@ SELECT source, n_docs,
        CAST(cum AS DOUBLE) / total AS cum_share
 FROM ranked
 WHERE (CAST(cum - n_docs AS DOUBLE) / total) < {_NUCLEUS_P}
-ORDER BY n_docs DESC, source
 """
 
 
@@ -941,7 +925,6 @@ FROM (
   FROM documents
 ) r
 WHERE sample_rank <= {BOTTOMK_K}
-ORDER BY source, sample_rank
 """
 
 
@@ -992,7 +975,6 @@ SELECT c_nationkey,
        CAST(min(class_size) AS BIGINT) AS min_class_size
 FROM qi
 GROUP BY c_nationkey
-ORDER BY c_nationkey
 """
 
 
@@ -1025,7 +1007,6 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("risk_rate"),
             F.min("class_size").alias("min_class_size"),
         )
-        .orderBy("c_nationkey")
     )
 
 
@@ -1090,7 +1071,6 @@ SELECT source,
        {dsum_expr("z")} / count(*) AS mean_log_odds
 FROM scored
 GROUP BY source
-ORDER BY source
 """
 
 
@@ -1154,7 +1134,6 @@ SELECT c_nationkey,
        CAST(min(n_sensitive) AS BIGINT) AS min_diversity
 FROM cls
 GROUP BY c_nationkey
-ORDER BY c_nationkey
 """
 
 
@@ -1185,7 +1164,6 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(low, F.col("class_size")).otherwise(0)).alias("rows_at_risk"),
             F.min("n_sensitive").alias("min_diversity"),
         )
-        .orderBy("c_nationkey")
     )
 
 
@@ -1235,7 +1213,6 @@ SELECT source, n_true,
          AS released_count,
        {DP_EPSILON!r}e0 AS epsilon
 FROM {last}
-ORDER BY source
 """
 
 
@@ -1312,7 +1289,7 @@ SELECT c_nationkey,
          AS n_violating,
        CAST(sum(CASE WHEN t > {T_CLOSENESS!r}e0 THEN n ELSE 0 END) AS BIGINT)
          AS rows_exposed
-FROM tval GROUP BY c_nationkey ORDER BY c_nationkey
+FROM tval GROUP BY c_nationkey
 """
 
 
@@ -1563,7 +1540,6 @@ SELECT source, n_true,
        {DP_RHO!r}e0 AS rho,
        {sigma} AS sigma
 FROM bm
-ORDER BY source
 """
 
 

@@ -66,7 +66,6 @@ EXACT_ORACLE = f"""
 SELECT md5(text) AS content_digest, min(doc_id) AS doc_id_kept, count(*) AS n_copies
 FROM ({EXACT_BASE_DUCK})
 GROUP BY md5(text)
-ORDER BY doc_id_kept
 """
 
 
@@ -80,7 +79,7 @@ ORDER BY doc_id_kept
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     base = spark.sql(EXACT_BASE_SPARK)
-    return dedup.exact_dedup(base, ["text"], "doc_id").orderBy("doc_id_kept")
+    return dedup.exact_dedup(base, ["text"], "doc_id")
 
 
 # --- MinHash + LSH near-dup ---
@@ -138,7 +137,6 @@ FROM inter i
 JOIN sizes za ON za.doc_id = i.id_a
 JOIN sizes zb ON zb.doc_id = i.id_b
 WHERE i.n_common / (za.n_sh + zb.n_sh - i.n_common) >= {JACCARD_T!r}
-ORDER BY id_a, id_b
 """
 
 
@@ -165,27 +163,15 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MIN aggregates are duplicate-insensitive, so the signature computed
     # over the DISTINCT shingle set is identical to the non-distinct
     # stream's — deriving sig FROM the materialized sh removes the second
-    # explode+md5 pass entirely (p50 3.4 → 2.8 s, row-identical). sig and
-    # the final frame keep no lineage cuts: the band self-join reuses
-    # sig's aggregation exchange (ReuseExchange) and the orderBy sampling
-    # reads AQE-materialized shuffle output, so the cuts only added jobs.
+    # explode+md5 pass entirely (p50 3.4 → 2.8 s, row-identical). sig
+    # keeps no lineage cut: the band self-join reuses sig's aggregation
+    # exchange (ReuseExchange), so a cut only added a job.
     sh = dedup.shingles(base, "doc_id", "text").localCheckpoint(eager=False)
     sig = dedup.minhash_signature(sh, "doc_id", NUM_HASHES)
     # hot_width arms boilerplate-bucket salting (output-equivalent blocked
     # self-join) — inert at this SF, load-bearing on skewed real corpora
     pairs = dedup.lsh_candidate_pairs(sig, "doc_id", NUM_HASHES, BANDS, hot_width=256)
-    verified = dedup.jaccard_verify(pairs, sh, "doc_id", JACCARD_T)
-    # Lazy cut BEFORE the orderBy (round 16): the sort's range-sampling
-    # pass re-computes everything between the last materialized exchange
-    # and the sort — here the whole verify tail (final n_common aggregate
-    # + two sizes joins), which AQE coalesces to ONE task. The sf1 scale
-    # tier caught it: twin ~1.9 s single-task stages reading the same
-    # 1.1 MB exchange. The cut makes sampling read materialized blocks
-    # instead. Interleaved A/B p50 (construction + noop timed): sf0.1
-    # 3.68 → 3.14 s, sf1 11.27 → 9.18 s. (An id_a re-spread of `inter`
-    # was also tried: wins at sf1 but LOSES at sf0.1 — not taken.)
-    verified = verified.localCheckpoint(eager=False)
-    return verified.orderBy("id_a", "id_b")
+    return dedup.jaccard_verify(pairs, sh, "doc_id", JACCARD_T)
 
 
 # --- incremental near-dup (new batch vs persisted index) ---
@@ -203,8 +189,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_oracle() -> str:
-    body = _minhash_oracle().rsplit("ORDER BY", 1)[0]
-    return f"SELECT * FROM ({body}) WHERE id_b >= 100000 ORDER BY id_a, id_b"
+    return f"SELECT * FROM ({_minhash_oracle()}) WHERE id_b >= 100000"
 
 
 @register(
@@ -243,12 +228,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         BANDS,
     ).localCheckpoint(eager=False)
     cand = dedup.incremental_candidate_pairs(banded_new, banded_idx, "doc_id")
-    verified = dedup.jaccard_verify(cand, sh, "doc_id", JACCARD_T)
-    # Lazy cut before the sort, as in dedup_minhash_lsh above (the range-
-    # sampling pass otherwise re-computes the single-task verify tail).
-    # Interleaved A/B p50: sf0.1 2.93 → 2.81 s (wash), sf1 15.45 → 12.80 s.
-    verified = verified.localCheckpoint(eager=False)
-    return verified.orderBy("id_a", "id_b")
+    return dedup.jaccard_verify(cand, sh, "doc_id", JACCARD_T)
 
 
 # --- n-gram Jaccard (inverted-index all-candidates) ---
@@ -278,7 +258,6 @@ FROM inter i
 JOIN sizes za ON za.doc_id = i.id_a
 JOIN sizes zb ON zb.doc_id = i.id_b
 WHERE i.n_common / (za.n_sh + zb.n_sh - i.n_common) >= {JACCARD_T!r}
-ORDER BY id_a, id_b
 """
 
 
@@ -310,9 +289,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("jaccard", F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")))
         .filter(F.col("jaccard") >= JACCARD_T)
         .select("id_a", "id_b", "jaccard")
-        # lineage cut before the sort (see dedup_simhash note)
-        .localCheckpoint(eager=False)
-        .orderBy("id_a", "id_b")
     )
 
 
@@ -344,7 +320,6 @@ SELECT doc_id, n_spans, n_dup_spans,
        CAST(n_dup_spans AS DOUBLE) / n_spans AS dup_span_frac
 FROM per_doc
 WHERE n_dup_spans > 0
-ORDER BY doc_id
 """
 
 
@@ -435,7 +410,6 @@ SELECT d.doc_id, z.n_tokens, d.n_removed,
 FROM removed d
 JOIN sizes z ON z.doc_id = d.doc_id
 LEFT JOIN kept k ON k.doc_id = d.doc_id
-ORDER BY d.doc_id
 """
 
 
@@ -482,7 +456,6 @@ SELECT d.doc_id, z.n_tokens, d.n_removed,
 FROM removed d
 JOIN sizes z ON z.doc_id = d.doc_id
 LEFT JOIN kept k ON k.doc_id = d.doc_id
-ORDER BY d.doc_id
 """
 
 
@@ -534,7 +507,6 @@ FROM inter i
 JOIN sizes za ON za.doc_id = i.id_a
 JOIN sizes zb ON zb.doc_id = i.id_b
 WHERE i.n_common / (za.n_sh + zb.n_sh - i.n_common) >= {JACCARD_T!r}
-ORDER BY id_a, id_b
 """
 
 
@@ -556,9 +528,6 @@ def dedup_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         dedup.jaccard_verify(cand, sh, "doc_id", JACCARD_T)
         .select("id_a", "id_b", "n_common", "jaccard")
-        # lineage cut before the sort (see dedup_simhash note)
-        .localCheckpoint(eager=False)
-        .orderBy("id_a", "id_b")
     )
 
 
@@ -584,7 +553,6 @@ SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
 FROM sig a JOIN sig b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
-ORDER BY id_a, id_b
 """
 
 
@@ -605,15 +573,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = dedup.simhash(base, "doc_id", "text", bits=48).repartition(
         spark.sparkContext.defaultParallelism
     )
-    pairs = dedup.simhash_near_pairs(sig, "doc_id", bits=48, max_hamming=3)
     # No lineage cuts here (round-15 measurement): every localCheckpoint
     # goes through .rdd, which under AQE executes all upstream query
-    # stages as extra sequential jobs (~0.3 s fixed cost each). The two
-    # concerns the cuts addressed are both covered by AQE itself: the
-    # band self-join reuses the sig repartition exchange (ReuseExchange),
-    # and the orderBy's range-sampling reads the materialized shuffle
-    # stage, not the lineage. Verified row-identical; p50 3.9 → 3.5 s.
-    return pairs.orderBy("id_a", "id_b")
+    # stages as extra sequential jobs (~0.3 s fixed cost each). The band
+    # self-join reuses the sig repartition exchange (ReuseExchange)
+    # without one. Verified row-identical; p50 3.9 → 3.5 s.
+    return dedup.simhash_near_pairs(sig, "doc_id", bits=48, max_hamming=3)
 
 
 # --- containment near-dup (asymmetric: catches truncated copies) ---
@@ -638,7 +603,6 @@ FROM inter i
 JOIN sizes za ON za.doc_id = i.id_a
 JOIN sizes zb ON zb.doc_id = i.id_b
 WHERE i.n_common / least(za.n_sh, zb.n_sh) >= {CONTAIN_T!r}
-ORDER BY id_a, id_b
 """
 
 
@@ -670,9 +634,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("containment", F.col("n_common") / F.least("n_a", "n_b"))
         .filter(F.col("containment") >= CONTAIN_T)
         .select("id_a", "id_b", "containment")
-        # lineage cut before the sort (see dedup_simhash note)
-        .localCheckpoint(eager=False)
-        .orderBy("id_a", "id_b")
     )
 
 
@@ -761,7 +722,6 @@ FROM inter i
 JOIN sizes za ON za.doc_id = i.id_a
 JOIN sizes zb ON zb.doc_id = i.id_b
 WHERE CAST(i.n_common AS DOUBLE) / (za.n_sh + zb.n_sh - i.n_common) >= {JACCARD_T!r}
-ORDER BY i.id_a, i.id_b
 """
 
 
@@ -799,15 +759,9 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["k", "doc_id"],
     )
     ranked.createOrReplaceTempView("snm_ranked")
-    sql = _snm_sql(NEAR_BASE_SPARK, _snm_shingles_spark(), ranked_src="snm_ranked")
-    # Lazy cut before the final sort (round 16, the dedup_minhash_lsh
-    # sampling lesson): the ORDER BY's range-sampling pass re-computes
-    # the verify tail after the last materialized exchange. Interleaved
-    # A/B p50: sf1 11.31 → 10.02 s, sf0.1 4.38 → 4.31 s (wash). Also
-    # re-tried materializing the sh CTE once at sf1 (the r15 sf0.1 wash):
-    # within noise once this cut is in place — still not taken.
-    body = sql.rsplit("ORDER BY", 1)[0]
-    return spark.sql(body).localCheckpoint(eager=False).orderBy("id_a", "id_b")
+    return spark.sql(
+        _snm_sql(NEAR_BASE_SPARK, _snm_shingles_spark(), ranked_src="snm_ranked")
+    )
 
 
 # --- MinHash estimator quality audit (est vs exact Jaccard per pair) ---
@@ -851,7 +805,6 @@ SELECT m.id_a, m.id_b,
 FROM matches m
 JOIN sizes za ON za.doc_id = m.id_a
 JOIN sizes zb ON zb.doc_id = m.id_b
-ORDER BY id_a, id_b
 """
 
 
@@ -891,7 +844,7 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CASE WHEN a_mh{j} = b_mh{j} THEN 1 ELSE 0 END" for j in range(NUM_HASHES)
     )
     est = f"CAST({match} AS DOUBLE) / {NUM_HASHES}.0e0"
-    out = (
+    return (
         verified.join(a, "id_a")
         .join(b, "id_b")
         .selectExpr(
@@ -902,7 +855,6 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"abs({est} - jaccard) AS abs_err",
         )
     )
-    return out.localCheckpoint(eager=False).orderBy("id_a", "id_b")
 
 
 # --- LSH band-configuration sweep (the S-curve, measured) ---
@@ -1109,7 +1061,6 @@ LEFT JOIN ccount n ON n.cfg = s.cfg
 LEFT JOIN bnd d ON d.cfg = s.cfg
 LEFT JOIN per_cfg p ON p.cfg = s.cfg
 CROSS JOIN tot x
-ORDER BY bands DESC
 """
 
 
@@ -1335,7 +1286,6 @@ def dedup_lsh_band_sweep(
                 / F.nullif(F.col("n_union_true").cast("double"), F.lit(0.0))
             ).alias("recall_vs_union"),
         )
-        .orderBy(F.col("bands").desc())
     )
 
 

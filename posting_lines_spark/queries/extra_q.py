@@ -19,7 +19,6 @@ CUBE_ORACLE = f"""
 SELECT l_returnflag, l_linestatus, count(*) AS n, {dsum_expr('l_quantity')} AS sum_qty
 FROM lineitem
 GROUP BY CUBE (l_returnflag, l_linestatus)
-ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
 """
 
 
@@ -34,7 +33,6 @@ def cube_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.cube("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("n"), F.expr(dsum_expr("l_quantity")).alias("sum_qty"))
-        .orderBy(F.col("l_returnflag").asc_nulls_first(), F.col("l_linestatus").asc_nulls_first())
     )
 
 
@@ -50,7 +48,6 @@ SELECT l_returnflag AS returnflag,
        {dsum_expr('l_quantity')} AS sum_qty
 FROM lineitem
 GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-ORDER BY g_flag, g_status, returnflag, linestatus
 """
 
 
@@ -75,7 +72,6 @@ WHERE EXISTS (
   WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000.0e0
 )
 GROUP BY c_mktsegment
-ORDER BY mktsegment
 """
 
 
@@ -118,7 +114,6 @@ SELECT p_partkey, metric, value FROM (
   SELECT p_partkey, 'retailprice' AS metric, p_retailprice AS value FROM part
 )
 WHERE p_partkey <= 200
-ORDER BY p_partkey, metric
 """
 
 
@@ -137,7 +132,6 @@ def unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         wide.unpivot("p_partkey", ["size", "retailprice"], "metric", "value")
-        .orderBy("p_partkey", "metric")
     )
 
 
@@ -149,7 +143,6 @@ SELECT o_orderpriority,
        count(*) AS n
 FROM orders
 GROUP BY o_orderpriority
-ORDER BY o_orderpriority
 """
 
 
@@ -169,7 +162,6 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("percentile(o_totalprice, 0.9)").alias("p90"),
             F.count(F.lit(1)).alias("n"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -180,7 +172,6 @@ SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS hour_start_us,
        {davg_expr('value')} AS avg_value
 FROM events
 GROUP BY 1, 2
-ORDER BY hour_start_us, event_type
 """
 
 
@@ -220,7 +211,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    return spark.table(name).orderBy("hour_start_us", "event_type")
+    return spark.table(name)
 
 
 # --- z-order spatial bucketing (P6: the GiST-index substitute) ---
@@ -253,7 +244,6 @@ FROM (
   FROM ({_CELLS.format(base=enriched_sql(keep_extra=['start_lon', 'start_lat']))})
 )
 GROUP BY zcell
-ORDER BY zcell
 """
 
 
@@ -273,7 +263,6 @@ def spatial_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         df.withColumn("zcell", F.expr(_interleave_spark("cx", "cy")))
         .groupBy("zcell")
         .agg(F.count(F.lit(1)).alias("n_segments"), F.expr(davg_expr("len_m")).alias("avg_len_m"))
-        .orderBy("zcell")
     )
 
 
@@ -365,7 +354,6 @@ SELECT curve,
 FROM hops
 WHERE ppos IS NOT NULL
 GROUP BY curve
-ORDER BY curve
 """
 
 

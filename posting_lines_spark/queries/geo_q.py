@@ -86,7 +86,6 @@ SELECT returnflag,
        {lsum("len_m", "total_len_m", scale=3)}
 FROM ({enriched_sql()})
 GROUP BY returnflag
-ORDER BY returnflag
 """
 
 
@@ -107,7 +106,6 @@ def geo_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(lavg_expr("sog_kt", scale=3)).alias("avg_sog_kt"),
             F.expr(lsum_expr("len_m", scale=3)).alias("total_len_m"),
         )
-        .orderBy("returnflag")
     )
 
 
@@ -189,7 +187,6 @@ SELECT mmsi,
 FROM ({enriched_sql()})
 WHERE duration > 0
 GROUP BY mmsi
-ORDER BY mmsi
 """
 
 
@@ -236,7 +233,6 @@ z2 AS (
 SELECT * FROM z1
 UNION ALL
 SELECT * FROM z2
-ORDER BY zoom, cell_x, cell_y
 """
 
 

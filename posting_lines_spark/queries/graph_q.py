@@ -23,8 +23,8 @@ from posting_lines_spark.queries.dedup_q import (
 )
 from posting_lines_spark.sources import load_table
 
-# the verified-pairs SQL is the minhash oracle minus its ORDER BY tail
-_PAIRS_DUCK = _minhash_oracle().rsplit("ORDER BY", 1)[0]
+# verified near-dup pairs (DuckDB): the input of every pair-graph oracle
+_PAIRS_DUCK = _minhash_oracle()
 
 COMPONENTS_ORACLE = f"""
 WITH RECURSIVE pairs AS ({_PAIRS_DUCK}),
@@ -41,7 +41,6 @@ reach(node, label) AS (
 SELECT node, min(label) AS component
 FROM reach
 GROUP BY node
-ORDER BY node
 """
 
 
@@ -90,7 +89,7 @@ def _spark_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = graph.connected_components(_spark_pairs(spark, sf_dir))
-    return comp.orderBy("node")
+    return comp
 
 
 GROUPS_ORACLE = f"""
@@ -110,7 +109,6 @@ SELECT component, count(*) AS n_members, min(node) AS survivor,
        count(*) - 1 AS n_drops
 FROM comp
 GROUP BY component
-ORDER BY component
 """
 
 
@@ -191,7 +189,7 @@ def pagerank_oracle_sql(
     return (
         "WITH "
         + ",\n".join(parts)
-        + f"\nSELECT node, CAST(rank AS BIGINT) AS rank_fp FROM r{iters} ORDER BY node"
+        + f"\nSELECT node, CAST(rank AS BIGINT) AS rank_fp FROM r{iters}"
     )
 
 
@@ -214,7 +212,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str):
     return pr.select(
         F.col("node").cast("long").alias("node"),
         F.col("rank").cast("long").alias("rank_fp"),
-    ).orderBy("node")
+    )
 
 
 @register(
@@ -225,7 +223,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str):
 )
 def dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = graph.connected_components(_spark_pairs(spark, sf_dir))
-    return graph.dedup_groups(comp).orderBy("component")
+    return graph.dedup_groups(comp)
 
 
 # --- triangle counting over the near-dup graph ---
@@ -342,7 +340,6 @@ SELECT d.node, d.degree,
             THEN (2.0e0 * coalesce(t.n_tri, 0)) / (CAST(d.degree AS DOUBLE) * (d.degree - 1))
             END AS clustering_coeff
 FROM deg d LEFT JOIN tcount t ON t.node = d.node
-ORDER BY d.node
 """
 
 
@@ -393,7 +390,6 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("n_tri"), F.lit(0).cast("long")).alias("n_tri"),
             F.when(F.col("degree") >= 2, cc).alias("clustering_coeff"),
         )
-        .orderBy("node")
     )
 
 
@@ -427,7 +423,6 @@ SELECT CAST(dist AS BIGINT) AS hop,
        CAST(count(*) / 2 AS BIGINT) AS n_pairs
 FROM sp
 GROUP BY dist
-ORDER BY hop
 """
 
 
@@ -468,7 +463,6 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         reached.filter(F.col("u") < F.col("v"))
         .groupBy(F.col("dist").cast("long").alias("hop"))
         .agg(F.count(F.lit(1)).alias("n_pairs"))
-        .orderBy("hop")
     )
 
 
@@ -527,8 +521,7 @@ def _lpa_oracle() -> str:
 SELECT label AS community, CAST(count(*) AS BIGINT) AS n_members,
        min(node) AS min_node, max(node) AS max_node
 FROM lab{LPA_ROUNDS}
-GROUP BY label
-ORDER BY community"""
+GROUP BY label"""
     )
 
 
@@ -563,10 +556,10 @@ def _lpa_labels(spark: SparkSession, sf_dir: str):
     labels = edges.select(F.col("u").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
-    # No per-round eager checkpoint (round 15; was a CheckpointCycler
-    # through round 14): the labels recurrence is LINEAR (each round
+    # No per-round eager checkpoint (round 15; there was one through
+    # round 14): the labels recurrence is LINEAR (each round
     # consumed exactly once by the next), so its state lives in the
-    # rounds' shuffle files inside ONE job. The cycler cost a ~0.3 s
+    # rounds' shuffle files inside ONE job. The eager cut cost a ~0.3 s
     # sequential job + serialization barrier per round, and — the big
     # one — by splitting rounds into separate jobs it defeated
     # exchange reuse, so every round RE-SHUFFLED the 22.7 MB edge
@@ -578,7 +571,7 @@ def _lpa_labels(spark: SparkSession, sf_dir: str):
     # (asserted in plans/r15/graph_label_propagation_after.txt).
     # (Contrast graph_kcore, whose rounds consume a SHRINKING edge set
     # three times each — reuse cannot cover a changing subtree, so it
-    # keeps the cycler.)
+    # keeps a per-round cut.)
     for _ in range(LPA_ROUNDS):
         votes = (
             edges.join(labels.withColumnRenamed("node", "u"), "u")
@@ -615,7 +608,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("node").alias("min_node"),
             F.max("node").alias("max_node"),
         )
-        .orderBy("community")
     )
 
 
@@ -663,8 +655,7 @@ e{r} AS MATERIALIZED (
         + f"""
 SELECT u AS node, CAST(count(*) AS BIGINT) AS core_degree
 FROM e{KCORE_ROUNDS}
-GROUP BY u
-ORDER BY node"""
+GROUP BY u"""
     )
 
 
@@ -681,7 +672,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     pairs = _spark_pairs(spark, sf_dir)
-    # LAZY per-round cut (round 16; was the eager CheckpointCycler):
+    # LAZY per-round cut (round 16; was an eager per-round cut):
     # the cut stays — each peel round consumes the previous edge set
     # three times (degree aggregate + two semi-joins) and reuse cannot
     # cover a changing subtree — but all rounds now run in ONE job with
@@ -708,7 +699,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         edges.groupBy(F.col("u").alias("node"))
         .agg(F.count(F.lit(1)).alias("core_degree"))
-        .orderBy("node")
     )
 
 
@@ -1078,8 +1068,7 @@ def _hits_oracle() -> str:
         + ",\n".join(parts)
         + f"""
 SELECT a.node, a.a AS authority_fp, h.h AS hub_fp
-FROM a{HITS_ITERS} a JOIN h{HITS_ITERS} h ON h.node = a.node
-ORDER BY a.node"""
+FROM a{HITS_ITERS} a JOIN h{HITS_ITERS} h ON h.node = a.node"""
     )
 
 
@@ -1105,7 +1094,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("node").cast("long").alias("node"),
         F.col("a").cast("long").alias("authority_fp"),
         F.col("h").cast("long").alias("hub_fp"),
-    ).orderBy("node")
+    )
 
 
 # --- deterministic random walks (node2vec corpus statistics) ---
@@ -1167,7 +1156,7 @@ def _rw_sql(h_step, walkers_src: str, mat: str) -> str:
 allv AS ({union})
 SELECT cur AS node, CAST(count(*) AS BIGINT) AS n_visits,
        CAST(count(DISTINCT step) AS BIGINT) AS n_steps_seen
-FROM allv GROUP BY cur ORDER BY node"""
+FROM allv GROUP BY cur"""
     )
 
 
@@ -1260,7 +1249,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str):
     return pr.select(
         F.col("node").cast("long").alias("node"),
         F.col("rank").cast("long").alias("rank_fp"),
-    ).orderBy("node")
+    )
 
 
 # --- harmonic centrality (out-reach) over the trade graph ---
@@ -1320,7 +1309,6 @@ SELECT n.node, coalesce(h.n_reached, 0) AS n_reached,
        coalesce(h.h_fp, 0) AS h_fp,
        CAST(coalesce(h.h_fp, 0) AS DOUBLE) / 60.0e0 AS harmonic
 FROM nodes n LEFT JOIN hv h ON h.v = n.node
-ORDER BY n.node
 """
 
 
@@ -1389,7 +1377,6 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "harmonic"
             ),
         )
-        .orderBy("node")
     )
 
 
@@ -1433,7 +1420,6 @@ SELECT p.type_a, p.type_b, p.n_common,
 FROM pairs p
 JOIN deg da ON da.event_type = p.type_a
 JOIN deg db ON db.event_type = p.type_b
-ORDER BY p.type_a, p.type_b
 """
 
 
@@ -1490,7 +1476,6 @@ SELECT user_id,
        CAST(sum(rk * (event_id % {LR_CHECK_MOD})) AS BIGINT) AS rank_checksum
 FROM ranked
 GROUP BY user_id
-ORDER BY user_id
 """
 
 
@@ -1552,7 +1537,6 @@ def graph_list_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("rank_checksum"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1827,7 +1811,6 @@ SELECT nk.k, nk.n_k, coalesce(ek.e_k, 0) AS e_k,
                  / (CAST(nk.n_k AS DOUBLE) * (CAST(nk.n_k AS DOUBLE) - 1.0e0))
             END AS phi
 FROM nk LEFT JOIN ek ON ek.k = nk.k
-ORDER BY nk.k
 """
 
 
@@ -1965,7 +1948,6 @@ SELECT component,
        CAST(count(*) - 1 AS BIGINT) AS n_drops
 FROM ranked
 GROUP BY component
-ORDER BY component
 """
 
 
@@ -2014,7 +1996,6 @@ def curation_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("survivor_chars"),
             (F.count(F.lit(1)) - 1).cast("long").alias("n_drops"),
         )
-        .orderBy("component")
     )
 
 
@@ -2090,8 +2071,7 @@ FROM (
   SELECT a AS node FROM g{TRUSS_ROUNDS}
   UNION ALL SELECT b FROM g{TRUSS_ROUNDS}
 )
-GROUP BY node
-ORDER BY node"""
+GROUP BY node"""
     )
 
 
@@ -2149,7 +2129,6 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(edges.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("truss_degree"))
-        .orderBy("node")
     )
 
 
@@ -2237,7 +2216,6 @@ FROM wcnt w
 JOIN ccnt c ON c.cap = w.cap
 LEFT JOIN cand cd ON cd.cap = w.cap
 CROSS JOIN tot t
-ORDER BY w.cap
 """
 
 

@@ -49,7 +49,6 @@ SELECT o_orderstatus,
 FROM orders
 WHERE o_orderdate BETWEEN DATE '{PRUNE_LO}' AND DATE '{PRUNE_HI}'
 GROUP BY o_orderstatus
-ORDER BY o_orderstatus
 """
 
 
@@ -116,7 +115,6 @@ def files_prune_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("o_orderdate").alias("min_date"),
             F.max("o_orderdate").alias("max_date"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -130,7 +128,6 @@ SELECT CAST(CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 2 END AS INTEGER) AS batch,
        CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_custs
 FROM orders
 GROUP BY 1
-ORDER BY 1
 """
 
 
@@ -165,7 +162,6 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("price_sum"),
             F.countDistinct("o_custkey").cast("long").alias("n_custs"),
         )
-        .orderBy("batch")
     )
 
 
@@ -334,7 +330,6 @@ SELECT o_orderstatus,
 FROM orders
 WHERE o_custkey NOT IN {DELETE_KEYS}
 GROUP BY o_orderstatus
-ORDER BY o_orderstatus
 """
 
 
@@ -361,7 +356,6 @@ def lake_delete_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.countDistinct("o_custkey").cast("long").alias("n_custs"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -393,7 +387,6 @@ SELECT event_type,
        CAST(max(user_id) AS BIGINT) AS max_user
 FROM ranked WHERE rn = 1
 GROUP BY event_type
-ORDER BY event_type
 """
 
 
@@ -429,7 +422,6 @@ def scd2_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("user_id").alias("min_user"),
             F.max("user_id").alias("max_user"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -649,7 +641,6 @@ SELECT o_orderstatus,
        CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) AS STRING) AS DOUBLE) AS total_price
 FROM orders
 GROUP BY o_orderstatus
-ORDER BY o_orderstatus
 """
 
 
@@ -709,7 +700,6 @@ def lake_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("total_price"),
         )
-        .orderBy("o_orderstatus")
     )
 
 

@@ -156,7 +156,6 @@ SELECT c.thr,
          / nullif(CAST(c.tp + c.fp AS DOUBLE) + CAST(tot.p_all AS DOUBLE), 0.0e0)
          AS f1_at_t
 FROM conf c CROSS JOIN tot
-ORDER BY c.thr
 """
 
 
@@ -207,7 +206,6 @@ SELECT bin, n_bin,
        CAST(sum(abs({C} * sum_y - sum_c)) OVER () AS DOUBLE)
          / ({C}.0e0 * CAST(sum(n_bin) OVER () AS DOUBLE)) AS ece
 FROM bins
-ORDER BY bin
 """
 
 
@@ -390,7 +388,6 @@ SELECT c.decile, c.rows_d, c.pos_d, c.rows_cum, c.pos_cum,
          / nullif(CAST(t.p_all AS DOUBLE) * CAST(c.rows_cum AS DOUBLE), 0.0e0)
          AS lift
 FROM c CROSS JOIN t
-ORDER BY c.decile
 """
 
 
@@ -700,7 +697,6 @@ SELECT b.bin, b.n_bin,
        CAST(b.sum_y AS DOUBLE) / CAST(b.n_bin AS DOUBLE) AS raw_accuracy,
        f.iso AS isotonic_accuracy
 FROM bins b JOIN fit f ON f.bin = b.bin
-ORDER BY b.bin
 """
 
 
@@ -1127,7 +1123,6 @@ SELECT grp, n, n_pos, pred_pos, prevalence, ppr, tpr, fpr,
        max(tpr) OVER () - tpr AS eo_tpr_gap,
        fpr - min(fpr) OVER () AS eo_fpr_gap
 FROM rates
-ORDER BY grp
 """
 
 

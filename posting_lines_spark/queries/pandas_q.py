@@ -32,7 +32,6 @@ FROM (
 )
 WHERE gap_us IS NOT NULL
 GROUP BY user_id
-ORDER BY user_id
 """
 
 
@@ -69,14 +68,13 @@ def pandas_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         _gap_stats,
         schema="user_id long, n_gaps long, median_gap_us double, min_gap_us long, max_gap_us long",
     )
-    return out.orderBy("user_id")
+    return out
 
 
 STATEFUL_ORACLE = """
 SELECT user_id, count(*) AS n_events, max(value) AS max_value
 FROM events
 GROUP BY user_id
-ORDER BY user_id
 """
 
 
@@ -91,7 +89,7 @@ def stream_stateful_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from posting_lines_spark.streaming.stateful import running_user_stats
 
     events = load_table(spark, sf_dir, "events").select("user_id", "value")
-    return running_user_stats(spark, events, n_files=4).orderBy("user_id")
+    return running_user_stats(spark, events, n_files=4)
 
 
 # --- scalar Arrow pandas_udf on a parity path ---
@@ -112,7 +110,6 @@ FROM (
          CAST(n_chars AS DOUBLE) AS nch
   FROM documents
 )
-ORDER BY doc_id
 """
 
 
@@ -142,4 +139,4 @@ def pandas_scalar_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return feats.select(
         "doc_id", blend("ntok", "nch").alias("blend_score")
-    ).orderBy("doc_id")
+    )

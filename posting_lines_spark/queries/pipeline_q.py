@@ -117,7 +117,6 @@ DAILY_ORACLE = f"""
 SELECT CAST(start_time AS DATE) AS day, count(*) AS n_segments
 FROM ({enriched_sql()})
 GROUP BY 1
-ORDER BY 1
 """
 
 

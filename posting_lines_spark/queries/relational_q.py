@@ -42,7 +42,6 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
 """
 
 
@@ -71,7 +70,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(davg_expr("l_discount")).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -87,7 +85,6 @@ JOIN customer c ON o.o_custkey = c.c_custkey
 JOIN nation n ON c.c_nationkey = n.n_nationkey
 JOIN region r ON n.n_regionkey = r.r_regionkey
 GROUP BY r.r_name, n.n_name
-ORDER BY region, nation
 """
 
 
@@ -113,7 +110,6 @@ def join_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_lineitems"),
             F.expr(dsum_expr("l_extendedprice * (1.0e0 - l_discount)")).alias("revenue"),
         )
-        .orderBy("region", "nation")
     )
 
 
@@ -124,7 +120,6 @@ SELECT c_mktsegment AS mktsegment, count(*) AS n_customers_with_orders
 FROM customer
 WHERE c_custkey IN (SELECT o_custkey FROM orders)
 GROUP BY c_mktsegment
-ORDER BY mktsegment
 """
 
 
@@ -141,7 +136,6 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(o, c.c_custkey == o.o_custkey, "left_semi")
         .groupBy(F.col("c_mktsegment").alias("mktsegment"))
         .agg(F.count(F.lit(1)).alias("n_customers_with_orders"))
-        .orderBy("mktsegment")
     )
 
 
@@ -149,7 +143,6 @@ ANTI_ORACLE = """
 SELECT o_orderkey, o_orderstatus, o_totalprice
 FROM orders
 WHERE o_orderkey NOT IN (SELECT l_orderkey FROM lineitem)
-ORDER BY o_orderkey
 """
 
 
@@ -165,7 +158,6 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         o.join(li, o.o_orderkey == li.l_orderkey, "left_anti")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
-        .orderBy("o_orderkey")
     )
 
 
@@ -177,7 +169,6 @@ SELECT p_brand, count(*) AS n_parts, {dsum_expr('p_retailprice', scale=2)} AS to
 FROM part
 WHERE p_size IN ({', '.join(str(v) for v in IN_LIST)})
 GROUP BY p_brand
-ORDER BY p_brand
 """
 
 
@@ -196,7 +187,6 @@ def filter_in_list(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_parts"),
             F.expr(dsum_expr("p_retailprice", scale=2)).alias("total_price"),
         )
-        .orderBy("p_brand")
     )
 
 
@@ -245,7 +235,6 @@ SELECT 'union_distinct' AS bucket, count(*) AS n FROM (
   UNION
   SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
 )
-ORDER BY bucket
 """
 
 
@@ -268,7 +257,7 @@ def setops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     for name, df in rows:
         piece = df.agg(F.count(F.lit(1)).alias("n")).select(F.lit(name).alias("bucket"), "n")
         out = piece if out is None else out.unionByName(piece)
-    return out.orderBy("bucket")
+    return out
 
 
 # --- full outer join ---
@@ -289,7 +278,6 @@ FROM (
   ) o ON c.c_custkey = o.o_custkey
 ) m
 GROUP BY match_type
-ORDER BY match_type
 """
 
 
@@ -320,7 +308,6 @@ SELECT CASE WHEN o_totalprice < 50000.0e0 THEN 'small'
        max(o_totalprice) AS max_price
 FROM orders
 GROUP BY 1
-ORDER BY bucket
 """
 
 
@@ -345,7 +332,6 @@ def case_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("o_totalprice").alias("min_price"),
             F.max("o_totalprice").alias("max_price"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -357,7 +343,6 @@ SELECT n_name AS nation, c_mktsegment AS mktsegment,
        {dsum_expr('c_acctbal', scale=2)} AS total_acctbal
 FROM customer JOIN nation ON c_nationkey = n_nationkey
 GROUP BY ROLLUP (n_name, c_mktsegment)
-ORDER BY nation NULLS FIRST, mktsegment NULLS FIRST
 """
 
 
@@ -377,7 +362,6 @@ def rollup_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_customers"),
             F.expr(dsum_expr("c_acctbal", scale=2)).alias("total_acctbal"),
         )
-        .orderBy(F.col("nation").asc_nulls_first(), F.col("mktsegment").asc_nulls_first())
     )
 
 
@@ -389,7 +373,6 @@ SELECT l_returnflag,
        {dsum_expr("CASE WHEN l_linestatus = 'F' THEN l_quantity END")} AS qty_F
 FROM lineitem
 GROUP BY l_returnflag
-ORDER BY l_returnflag
 """
 
 
@@ -407,7 +390,6 @@ def pivot_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.expr(dsum_expr("l_quantity")))
         .withColumnRenamed("O", "qty_O")
         .withColumnRenamed("F", "qty_F")
-        .orderBy("l_returnflag")
     )
 
 
@@ -421,7 +403,6 @@ FROM nation n, LATERAL (
   ORDER BY c_acctbal DESC, c_name
   LIMIT 2
 ) t
-ORDER BY nation, acctbal DESC, customer
 """
 
 
@@ -491,7 +472,6 @@ SELECT o.o_orderpriority,
        {dsum_expr("l.l_extendedprice * (1.0e0 - l.l_discount)")} AS revenue
 FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
 GROUP BY o.o_orderpriority
-ORDER BY o.o_orderpriority
 """
 
 
@@ -520,7 +500,6 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_items"),
             F.expr(dsum_expr("l_extendedprice * (1.0e0 - l_discount)")).alias("revenue"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -542,7 +521,6 @@ WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
   AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
 GROUP BY n_name
-ORDER BY revenue DESC, n_name
 """
 
 
@@ -577,7 +555,6 @@ SELECT CAST(c_count AS BIGINT) AS c_count,
        CAST(count(*) AS BIGINT) AS custdist
 FROM c_orders
 GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC
 """
 
 
@@ -610,7 +587,6 @@ SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT) AS ym,
        CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) AS STRING) AS DOUBLE) AS total_price
 FROM orders
 GROUP BY 1, 2
-ORDER BY ym, o_orderstatus
 """
 
 
@@ -642,7 +618,6 @@ def mv_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("part_n").cast("long").alias("n_orders"),
             F.sum("part_sum").cast("double").alias("total_price"),
         )
-        .orderBy("ym", "o_orderstatus")
     )
 
 
@@ -664,7 +639,6 @@ SELECT c.c_mktsegment AS mktsegment,
 FROM orders o
 JOIN customer c ON o.o_custkey = c.c_custkey
 GROUP BY c.c_mktsegment
-ORDER BY mktsegment
 """
 
 
@@ -703,7 +677,6 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.countDistinct("o_custkey").cast("long").alias("n_custs"),
         )
-        .orderBy("mktsegment")
     )
 
 
@@ -739,7 +712,6 @@ SELECT t.tier,
 FROM orders o
 JOIN tiers t ON o.o_totalprice >= t.lo AND o.o_totalprice < t.hi
 GROUP BY t.tier
-ORDER BY t.tier
 """
 
 
@@ -766,7 +738,6 @@ def lookup_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(dsum_expr("o_totalprice", 2)).alias("sum_price"),
             F.countDistinct("o_custkey").alias("n_customers"),
         )
-        .orderBy("tier")
     )
 
 
@@ -802,7 +773,6 @@ SELECT d.label,
 FROM dim d
 LEFT JOIN fact f ON f.k IS NOT DISTINCT FROM d.k
 GROUP BY d.label
-ORDER BY d.label
 """
 
 

@@ -28,7 +28,6 @@ SELECT doc_id,
        CASE WHEN text LIKE '%spark%' THEN 1 ELSE 0 END AS mentions_spark
 FROM documents
 WHERE lang = 'en'
-ORDER BY doc_id
 """
 
 
@@ -54,7 +53,6 @@ def string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.substring("text", 1, 16).alias("prefix"),
             F.when(F.col("text").like("%spark%"), 1).otherwise(0).alias("mentions_spark"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -68,7 +66,6 @@ SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
 FROM events
 WHERE ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts < TIMESTAMP '2024-01-20 00:00:00'
 GROUP BY 1, 2
-ORDER BY day, event_type
 """
 
 
@@ -92,7 +89,6 @@ def date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("event_id").alias("first_event_id"),
             F.max("event_id").alias("last_event_id"),
         )
-        .orderBy("day", "event_type")
     )
 
 
@@ -103,7 +99,6 @@ SELECT CAST(json_extract_string(props, '$.k') AS INT) % 10 AS k_mod,
        max(CAST(json_extract_string(props, '$.k') AS INT)) AS max_k
 FROM events
 GROUP BY 1
-ORDER BY k_mod
 """
 
 
@@ -123,5 +118,4 @@ def json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(k).alias("min_k"),
             F.max(k).alias("max_k"),
         )
-        .orderBy("k_mod")
     )

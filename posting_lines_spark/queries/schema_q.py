@@ -41,7 +41,7 @@ SELECT '{c}' AS col_name,
        CAST(max({c}) AS DOUBLE) AS max_val
 FROM lineitem"""
     for c in PROFILE_COLS
-) + " ORDER BY col_name"
+)
 
 
 @register(
@@ -69,7 +69,6 @@ def profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT stack({len(PROFILE_COLS)}, {stacked})
                AS (col_name, n_nulls, n_distinct, min_val, max_val)
         FROM (SELECT {aggs} FROM lineitem)
-        ORDER BY col_name
         """
     )
 
@@ -123,7 +122,6 @@ SELECT CAST(floor(o_totalprice / {HIST_BUCKET_W}) AS BIGINT) AS bucket,
        CAST(count(*) AS BIGINT) AS n_orders
 FROM orders
 GROUP BY 1, 2
-ORDER BY bucket
 """
 
 
@@ -154,7 +152,6 @@ SELECT source,
        min(md5(text)) AS min_digest
 FROM documents
 GROUP BY source
-ORDER BY source
 """
 
 
@@ -183,7 +180,6 @@ def json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.length("text")).alias("total_text_len"),
             F.min(F.md5("text")).alias("min_digest"),
         )
-        .orderBy("source")
     )
 
 
@@ -203,7 +199,6 @@ SELECT o_orderstatus,
        min(md5(o_orderpriority)) AS min_digest
 FROM orders
 GROUP BY o_orderstatus
-ORDER BY o_orderstatus
 """
 
 
@@ -236,7 +231,6 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("o_orderdate").alias("max_date"),
             F.min(F.md5("o_orderpriority")).alias("min_digest"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -291,7 +285,6 @@ SELECT 'orders_priority_notnull',
        CAST(count(*) FILTER (o_orderpriority IS NULL) AS BIGINT),
        CAST(count(*) AS BIGINT)
 FROM orders
-ORDER BY check_name
 """
 
 DQ_SPARK = DQ_ORACLE.replace("FILTER (", "FILTER (WHERE ")
@@ -347,7 +340,6 @@ SELECT coalesce(o.k, n.k) AS o_orderkey,
             ELSE 'changed' END AS diff_status
 FROM old_d o FULL OUTER JOIN new_d n ON o.k = n.k
 WHERE o.k IS NULL OR n.k IS NULL OR o.d <> n.d
-ORDER BY o_orderkey
 """
 
 
@@ -377,7 +369,6 @@ SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
        min(md5(c_name)) AS min_digest
 FROM customer
 GROUP BY c_nationkey
-ORDER BY nationkey
 """
 
 
@@ -408,7 +399,6 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_acctbal"),
             F.min(F.md5("c_name")).alias("min_digest"),
         )
-        .orderBy("nationkey")
     )
 
 
@@ -440,7 +430,6 @@ SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
        min(md5(c_name)) AS min_digest
 FROM customer
 GROUP BY c_nationkey
-ORDER BY nationkey
 """
 
 
@@ -492,7 +481,6 @@ def jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_acctbal"),
             F.min(F.md5("c_name")).alias("min_digest"),
         )
-        .orderBy("nationkey")
     )
 
 
@@ -520,7 +508,6 @@ FROM (
   FROM orders
 )
 GROUP BY bucket
-ORDER BY bucket
 """
 
 
@@ -574,7 +561,6 @@ def profile_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("o_totalprice").alias("lo"),
             F.max("o_totalprice").alias("hi"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -639,7 +625,6 @@ terms AS (
 total AS (SELECT {fold} AS psi FROM terms)
 SELECT t.bin, t.n_a, t.n_b, t.contrib, tt.psi
 FROM terms t CROSS JOIN total tt
-ORDER BY t.bin
 """
 
 
@@ -717,7 +702,6 @@ SELECT first_digit, n_obs, n_total,
          * (CAST(n_obs AS DOUBLE) / n_total - {_BENFORD_CASE})
          / ({_BENFORD_CASE}) AS chi2_contribution
 FROM counts
-ORDER BY first_digit
 """
 
 
@@ -825,7 +809,6 @@ SELECT d.source,
        max(md5(concat(CAST(d.doc_id AS VARCHAR), '|', d.text))) AS max_digest
 FROM documents d
 GROUP BY d.source
-ORDER BY d.source
 """
 
 
@@ -871,7 +854,6 @@ def text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|"), F.col("text")))).alias("min_digest"),
             F.max(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|"), F.col("text")))).alias("max_digest"),
         )
-        .orderBy("source")
     )
 
 
@@ -918,7 +900,7 @@ SELECT '{child}.{fk}' AS fk_edge,
                AND c.{fk} IS NOT NULL) AS BIGINT) AS n_orphans,
        CAST((SELECT count(*) FROM {child} WHERE {fk} IS NULL) AS BIGINT) AS n_null_fk
 """)
-    return " UNION ALL ".join(parts) + " ORDER BY fk_edge"
+    return " UNION ALL ".join(parts)
 
 
 @register(
@@ -992,7 +974,7 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         out = rows if out is None else out.unionByName(rows)
-    return out.orderBy("fk_edge")
+    return out
 
 
 # --- functional-dependency audit (DQ profiling classic) ---
@@ -1033,7 +1015,6 @@ SELECT fd, n_lhs, n_pairs,
        CAST(n_pairs - n_lhs AS BIGINT) AS violations,
        CASE WHEN n_pairs = n_lhs THEN 1 ELSE 0 END AS holds
 FROM cand
-ORDER BY fd
 """
 
 
@@ -1053,7 +1034,6 @@ SELECT fd, n_lhs, n_pairs,
        CAST(n_pairs - n_lhs AS BIGINT) AS violations,
        CASE WHEN n_pairs = n_lhs THEN 1 ELSE 0 END AS holds
 FROM cand
-ORDER BY fd
 """
 
 
@@ -1161,10 +1141,7 @@ def _entropy_fold_duck(col: str) -> str:
 
 
 def _col_entropy_sql(fold) -> str:
-    return (
-        " UNION ALL ".join(_col_entropy_block(c, fold) for c in ENTROPY_COLS)
-        + " ORDER BY col_name"
-    )
+    return " UNION ALL ".join(_col_entropy_block(c, fold) for c in ENTROPY_COLS)
 
 
 @register(

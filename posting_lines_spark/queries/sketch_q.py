@@ -120,7 +120,6 @@ ex AS (SELECT o_custkey AS k, CAST(count(*) AS BIGINT) AS exact_n FROM orders GR
 SELECT k, coalesce(exact_n, CAST(0 AS BIGINT)) AS exact_n, est_n,
        est_n >= coalesce(exact_n, CAST(0 AS BIGINT)) AS est_ge_exact
 FROM est LEFT JOIN ex USING (k)
-ORDER BY k
 """
 
 
@@ -179,7 +178,6 @@ def sketch_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "est_n",
             (F.col("est_n") >= F.coalesce("exact_n", zero)).alias("est_ge_exact"),
         )
-        .orderBy("k")
     )
 
 
@@ -195,7 +193,6 @@ SELECT o_orderstatus,
 FROM orders
 WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
 GROUP BY o_orderstatus
-ORDER BY o_orderstatus
 """
 
 
@@ -292,7 +289,6 @@ def bloom_semijoin_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("total_price"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -361,7 +357,6 @@ SELECT est.p,
        abs((est.qbin + 1) * {QH_WIDTH!r}e0 - ex.exact_q) <= {QH_WIDTH!r}e0
          AS bound_ok
 FROM est JOIN ex ON est.p = ex.p
-ORDER BY est.p
 """
 
 
@@ -468,7 +463,6 @@ LEFT JOIN shared s ON s.source_a = k.source_a AND s.source_b = k.source_b
 LEFT JOIN exact e ON e.source_a = k.source_a AND e.source_b = k.source_b
 JOIN sizes za ON za.source = k.source_a
 JOIN sizes zb ON zb.source = k.source_b
-ORDER BY k.source_a, k.source_b
 """
 
 
@@ -561,7 +555,6 @@ SELECT toks.k AS gram, CAST(count(*) AS BIGINT) AS n
 FROM toks CROSS JOIN tot
 GROUP BY toks.k, tot.n_total
 HAVING count(*) * {HH_K} > tot.n_total
-ORDER BY n DESC, gram
 """
 
 
@@ -595,7 +588,6 @@ def topk_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tot))
         .filter(F.col("n") * HH_K > F.col("n_total"))
         .select("gram", "n")
-        .orderBy(F.desc("n"), "gram")
     )
 
 

@@ -72,7 +72,6 @@ SELECT station_id,
 FROM d
 WHERE dist_m <= {dlit(RADIUS_M)}
 GROUP BY station_id
-ORDER BY station_id
 """
 
 
@@ -133,7 +132,6 @@ def geo_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             # (measured at sf0.1); scale 3 buys 1000× headroom
             F.expr(davg_expr("dist_m", scale=3)).alias("avg_dist_m"),
         )
-        .orderBy("station_id")
     )
 
 
@@ -172,7 +170,6 @@ SELECT station_id,
        {davg_expr("min_dist_m", scale=3)} AS avg_dist_m
 FROM nearest
 GROUP BY station_id
-ORDER BY station_id
 """
 
 
@@ -218,7 +215,6 @@ def geo_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("min_dist_m").alias("closest_m"),
             F.expr(davg_expr("min_dist_m", scale=3)).alias("avg_dist_m"),
         )
-        .orderBy("station_id")
     )
 
 
@@ -267,7 +263,6 @@ SELECT station_id,
        {davg_expr("min_dist_m", scale=3)} AS avg_dist_m
 FROM nearest
 GROUP BY station_id
-ORDER BY station_id
 """
 
 
@@ -339,7 +334,6 @@ def geo_knn_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("min_dist_m").alias("closest_m"),
             F.expr(davg_expr("min_dist_m", scale=3)).alias("avg_dist_m"),
         )
-        .orderBy("station_id")
     )
 
 
@@ -353,7 +347,6 @@ SELECT returnflag, count(*) AS n_in_bbox
 FROM ({enriched_sql()})
 WHERE {_BBOX_PRED}
 GROUP BY returnflag
-ORDER BY returnflag
 """
 
 
@@ -372,7 +365,6 @@ def geo_bbox_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         df.filter(F.expr(_BBOX_PRED))
         .groupBy("returnflag")
         .agg(F.count(F.lit(1)).alias("n_in_bbox"))
-        .orderBy("returnflag")
     )
 
 
@@ -421,7 +413,6 @@ SELECT (crossings % 2) = 1 AS inside,
        CAST(sum(segment_id) AS BIGINT) AS seg_checksum
 FROM c
 GROUP BY (crossings % 2) = 1
-ORDER BY inside
 """
 
 
@@ -545,7 +536,6 @@ SELECT n_neighbors >= {DBSCAN_MINPTS} AS is_core,
          / sum(w) AS avg_neighbors
 FROM neigh
 GROUP BY 1
-ORDER BY is_core
 """
 
 
@@ -682,7 +672,6 @@ def geo_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.sum("w")
             ).alias("avg_neighbors"),
         )
-        .orderBy("is_core")
     )
 
 
@@ -745,7 +734,6 @@ SELECT user_id, clat, clon, n_fixes,
        start_us, end_us, end_us - start_us AS dwell_us
 FROM stays
 WHERE n_fixes >= {STAY_MIN_FIXES}
-ORDER BY user_id, start_us
 """
 
 

@@ -85,7 +85,6 @@ FROM (
 GROUP BY user_id, session_id
 HAVING max(epoch_us(ts)) + 1800000000
        <= (SELECT max(epoch_us(ts)) - 3600000000 FROM events)
-ORDER BY user_id, session_start_us
 """
 
 
@@ -109,7 +108,7 @@ def stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="1 hour",
         src_dir=_events_src(spark, sf_dir),
     )
-    return out.orderBy("user_id", "session_start_us")
+    return out
 
 
 MULTIMODAL_ORACLE = """
@@ -118,7 +117,6 @@ SELECT doc_id,
        ascii(substr(text, 1, 1)) AS first_byte,
        ascii(substr(text, length(text), 1)) AS last_byte
 FROM documents
-ORDER BY doc_id
 """
 
 
@@ -142,7 +140,6 @@ SELECT doc_id,
        CAST(frame_idx * 16 AS BIGINT) AS frame_offset,
        ascii(substr(text, CAST(frame_idx * 16 + 1 AS INT), 1)) AS frame_byte
 FROM idx
-ORDER BY doc_id, frame_idx
 """
 
 
@@ -158,7 +155,7 @@ ORDER BY doc_id, frame_idx
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     media = multimodal.attach_payload(d)
-    return multimodal.sample_frames(media).orderBy("doc_id", "frame_idx")
+    return multimodal.sample_frames(media)
 
 
 @register(
@@ -171,7 +168,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     media = multimodal.attach_payload(d)
-    return multimodal.extract_features(media, mode="meta").orderBy("doc_id")
+    return multimodal.extract_features(media, mode="meta")
 
 
 # patch grid replayed in SQL: the payload is a 32-byte-wide raster cut
@@ -214,7 +211,6 @@ SELECT doc_id, patch_row, patch_col,
        CAST(sum(byte) AS BIGINT) AS patch_sum
 FROM v
 GROUP BY doc_id, patch_row, patch_col
-ORDER BY doc_id, patch_row, patch_col
 """
 
 
@@ -231,7 +227,7 @@ ORDER BY doc_id, patch_row, patch_col
 def multimodal_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     media = multimodal.attach_payload(d)
-    return multimodal.patchify(media).orderBy("doc_id", "patch_row", "patch_col")
+    return multimodal.patchify(media)
 
 
 # --- streaming CDC upsert into an SCD2 table ---
@@ -254,7 +250,6 @@ SELECT user_id,
        value AS open_value,
        epoch_us(ts) AS closed_at_us
 FROM latest
-ORDER BY user_id
 """
 
 
@@ -305,7 +300,6 @@ def stream_scd_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(F.col("valid_to").isNull(), F.col("value"))).alias("open_value"),
             F.max(F.unix_micros("valid_to")).alias("closed_at_us"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -321,7 +315,6 @@ JOIN events b
   ON a.user_id = b.user_id
  AND a.event_type = 'click' AND b.event_type = 'purchase'
  AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 30 MINUTE
-ORDER BY a.user_id, left_id, right_id
 """
 
 
@@ -340,7 +333,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = incremental.stream_stream_join_append_parquet(
         spark, None, out_dir, ckpt, src_dir=_events_src(spark, sf_dir)
     )
-    return res.orderBy("user_id", "left_id", "right_id")
+    return res
 
 
 # --- streaming exactly-once dedup ---
@@ -351,7 +344,6 @@ SELECT event_type,
        {dsum_expr('value')} AS total_value
 FROM events
 GROUP BY event_type
-ORDER BY event_type
 """
 
 
@@ -389,7 +381,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             F.expr(dsum_expr("value")).alias("total_value"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -459,7 +450,6 @@ SELECT est.p,
        abs((est.qbin + 1) * {SQH_WIDTH!r}e0 - ex.exact_q) <= {SQH_WIDTH!r}e0
          AS bound_ok
 FROM est JOIN ex ON est.p = ex.p
-ORDER BY est.p
 """
 
 
@@ -577,7 +567,7 @@ def stream_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = incremental.minhash_index_stream(
         spark, src, state, ckpt, NUM_HASHES, BANDS, JACCARD_T
     )
-    return pairs.orderBy("id_a", "id_b")
+    return pairs
 
 
 # --- content-defined chunking (binary dedup storage) ---
@@ -889,7 +879,6 @@ WHERE length(suf) - CASE WHEN suf LIKE '%c' THEN 1 ELSE 0 END >= 1
     q.awaitTermination()
     return (
         spark.read.parquet(f"{out_root}/e*")
-        .orderBy("user_id", "ts_start")
     )
 
 
@@ -1035,7 +1024,6 @@ def stream_ewma(
     return (
         spark.read.parquet(f"{state_root}/e{last}")
         .select("event_type", "n_days", "ewma")
-        .orderBy("event_type")
     )
 
 
@@ -1227,7 +1215,6 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").alias("n_purchases"),
             F.col("rev").cast("string").cast("double").alias("revenue"),
         )
-        .orderBy("model", "channel")
     )
 
 
@@ -1364,7 +1351,6 @@ def _attr_ledger(purch: DataFrame) -> DataFrame:
                 "CAST(CAST(sum(CAST(value AS DECIMAL(38,6))) AS STRING) AS DOUBLE)"
             ).alias("revenue"),
         )
-        .orderBy("model", "channel")
     )
 
 
@@ -1505,7 +1491,6 @@ def stream_heavy_hitters(
         .crossJoin(F.broadcast(tot))
         .filter(F.col("n") * HH_K > F.col("n_total"))
         .select("gram", "n")
-        .orderBy(F.desc("n"), "gram")
     )
 
 
@@ -1578,7 +1563,6 @@ SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
          / CAST(count(*) AS DOUBLE) AS late_frac
 FROM {src}
 GROUP BY event_type
-ORDER BY event_type
 """
 
 
@@ -1730,7 +1714,6 @@ SELECT user_id, CAST(min(t) AS BIGINT) AS s_start_us,
        CAST(max(t) AS BIGINT) AS s_end_us,
        CAST(count(*) AS BIGINT) AS n_events
 FROM s GROUP BY user_id, sess
-ORDER BY user_id, s_start_us
 """
 
 
@@ -1750,7 +1733,6 @@ def stream_sessions_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .parquet(out)
         .where(F.col("user_id") >= 0)
-        .orderBy("user_id", "s_start_us")
     )
 
 
@@ -1810,7 +1792,6 @@ cand AS (
 SELECT id_a, id_b, CAST({bitcount} AS INT) AS hamming
 FROM cand
 WHERE {bitcount} <= {PHASH_HAM_T}
-ORDER BY id_a, id_b
 """
 
 
@@ -1985,7 +1966,6 @@ SELECT event_type, n,
        {var} AS var_gap_us,
        {var} / nullif({mean} * {mean}, 0e0) AS cv2
 FROM agg
-ORDER BY event_type
 """
     )
 
@@ -2067,7 +2047,6 @@ SELECT a.doc_id, a.n_frames, a.n_speech,
        coalesce(s.n_segments, CAST(0 AS BIGINT)) AS n_segments,
        coalesce(s.max_run, CAST(0 AS BIGINT)) AS max_run
 FROM agg a LEFT JOIN segs s ON s.doc_id = a.doc_id
-ORDER BY a.doc_id
 """
 
 
@@ -2172,7 +2151,6 @@ SELECT a.doc_id, a.n_frames, a.n_cuts,
 FROM agg a
 JOIN (SELECT doc_id, CAST(max(len) AS BIGINT) AS max_shot_len
       FROM per_shot GROUP BY doc_id) s ON s.doc_id = a.doc_id
-ORDER BY a.doc_id
 """
 
 
@@ -2279,7 +2257,6 @@ SELECT doc_id,
        md5({fold}) AS reading_digest
 FROM ranked
 GROUP BY doc_id
-ORDER BY doc_id
 """
 
 
@@ -2404,7 +2381,6 @@ SELECT d.doc_id, CAST({BMP_W} AS BIGINT) AS width,
 FROM documents d
 CROSS JOIN (SELECT unnest(range(0, {BMP_H})) AS r) r
 GROUP BY d.doc_id
-ORDER BY d.doc_id
 """
 
 
@@ -2415,7 +2391,7 @@ def multimodal_bmp_luma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return bmp_luma_stats(attach_bmp(docs)).orderBy("doc_id")
+    return bmp_luma_stats(attach_bmp(docs))
 
 
 register(
@@ -2460,7 +2436,6 @@ SELECT d.doc_id, CAST({PNG_W} AS BIGINT) AS width,
 FROM documents d
 CROSS JOIN (SELECT unnest(range(0, {PNG_H})) AS r) r
 GROUP BY d.doc_id
-ORDER BY d.doc_id
 """
 
 
@@ -2471,7 +2446,7 @@ def multimodal_png_luma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return png_luma_stats(attach_png(docs)).orderBy("doc_id")
+    return png_luma_stats(attach_png(docs))
 
 
 register(
@@ -2532,7 +2507,6 @@ SELECT l.doc_id,
        CAST(sum({pop_terms}) AS BIGINT) AS n_set_bits
 FROM lum l JOIN tot t ON t.doc_id = l.doc_id
 GROUP BY l.doc_id
-ORDER BY l.doc_id
 """
 
 
@@ -2540,7 +2514,7 @@ def multimodal_png_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from posting_lines_spark.operators.multimodal import attach_png, png_phash
 
     docs = load_table(spark, sf_dir, "documents")
-    return png_phash(attach_png(docs)).orderBy("doc_id")
+    return png_phash(attach_png(docs))
 
 
 register(
@@ -2626,7 +2600,6 @@ SELECT doc_id, CAST({JPG_W} AS BIGINT) AS width,
        CAST(sum(wgt * (2 * rr + 5 * gg + bb)) AS BIGINT) AS weighted_luma
 FROM rgb
 GROUP BY doc_id
-ORDER BY doc_id
 """
 
 
@@ -2637,7 +2610,7 @@ def multimodal_jpeg_rgb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return jpeg_rgb_stats(attach_jpeg(docs)).orderBy("doc_id")
+    return jpeg_rgb_stats(attach_jpeg(docs))
 
 
 register(

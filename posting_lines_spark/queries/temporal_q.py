@@ -25,7 +25,6 @@ SELECT l.event_id, l.user_id,
 FROM (SELECT * FROM events WHERE event_type = 'purchase') l
 ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') r
   ON l.user_id = r.user_id AND r.ts <= l.ts
-ORDER BY l.event_id
 """
 
 
@@ -47,7 +46,7 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("ts_us"),
         F.col("asof_value"),
         F.col("asof_ts_us"),
-    ).orderBy("event_id")
+    )
 """
 Note: ties at identical ts: both engines prefer the right row (ASOF uses
 <=; the window orders right-before-left at equal ts).
@@ -89,7 +88,6 @@ SELECT event_type, CAST(bucket AS BIGINT) AS bucket,
          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_sum,
        is_gap
 FROM joined
-ORDER BY event_type, bucket
 """
 
 
@@ -132,7 +130,7 @@ def timeseries_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("n_events", F.lit(0)).cast("long").alias("n_events"),
         F.last("sum_value", ignorenulls=True).over(w).alias("filled_sum"),
         F.col("n_events").isNull().alias("is_gap"),
-    ).orderBy("event_type", "bucket")
+    )
 
 
 RANGE_ORACLE = """
@@ -141,7 +139,6 @@ SELECT p.event_id AS purchase_id, e.event_id AS error_id,
 FROM (SELECT * FROM events WHERE event_type = 'purchase') p
 JOIN (SELECT * FROM events WHERE event_type = 'error') e
   ON epoch_us(e.ts) >= epoch_us(p.ts) AND epoch_us(e.ts) < epoch_us(p.ts) + 300000000
-ORDER BY purchase_id, error_id
 """
 
 
@@ -167,7 +164,7 @@ def range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_id",
         "error_id",
         (F.unix_micros("e_ts") - F.unix_micros("p_ts")).alias("delta_us"),
-    ).orderBy("purchase_id", "error_id")
+    )
 
 
 # --- M4 time-series downsampling ---
@@ -203,7 +200,6 @@ SELECT event_type, bucket,
        max(CASE WHEN rn_d = 1 THEN value END) AS v_last
 FROM e
 GROUP BY event_type, bucket
-ORDER BY event_type, bucket
 """
 
 
@@ -283,7 +279,6 @@ SELECT event_type, CAST(bucket AS BIGINT) AS bucket,
        END AS interp_sum,
        is_gap
 FROM br
-ORDER BY event_type, bucket
 """
 
 
@@ -371,7 +366,6 @@ SELECT d.event_type, CAST(d.bucket AS BIGINT) AS bucket,
        (CAST(d.n AS DOUBLE) - CAST(d.win_sum AS DOUBLE) / {2 * SEASONAL_WIN + 1}.0e0)
          - CAST(s.s_num AS DOUBLE) / ({2 * SEASONAL_WIN + 1}.0e0 * s.s_cnt) AS residual
 FROM det d JOIN season s ON s.event_type = d.event_type AND s.hod = d.hod
-ORDER BY d.event_type, d.bucket
 """
 
 
@@ -441,7 +435,6 @@ def timeseries_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame
             seasonal.alias("seasonal"),
             ((F.col("n").cast("double") - trend) - seasonal).alias("residual"),
         )
-        .orderBy("event_type", "bucket")
     )
 
 
@@ -503,7 +496,6 @@ SELECT event_type,
             WHEN c_scaled < 0 THEN 'down_then_up'
             ELSE 'flat' END AS shift_shape
 FROM best WHERE rn = 1
-ORDER BY event_type
 """
 
 
@@ -575,7 +567,6 @@ SELECT event_type, n_days,
        st.l AS level, st.b AS trend,
        st.l + st.b AS forecast_next
 FROM folded
-ORDER BY event_type
 """
 
 
@@ -640,7 +631,6 @@ SELECT event_type, n_days, l AS level, b AS trend,
        l + b AS forecast_next
 FROM steps
 WHERE i = n_days
-ORDER BY event_type
 """
 
 
@@ -721,7 +711,6 @@ SELECT n.event_type, CAST(n.lag AS INT) AS lag, s.n_days,
 FROM num n
 JOIN den d ON d.event_type = n.event_type
 JOIN stats s ON s.event_type = n.event_type
-ORDER BY n.event_type, n.lag
 """
 
 
@@ -794,7 +783,6 @@ ic AS (
 )
 SELECT sl.event_type, sl.n_pairs, sl.slope, ic.intercept
 FROM sl JOIN ic ON ic.event_type = sl.event_type
-ORDER BY sl.event_type
 """
 
 
@@ -871,7 +859,6 @@ mad AS (
 SELECT event_type, day, v, med, mad, n_win
 FROM mad
 WHERE abs(v - med) > {HAMPEL_NSIGMA} * {HAMPEL_MAD_K} * mad
-ORDER BY event_type, day
 """
 
 
@@ -982,7 +969,6 @@ SELECT event_type, n_days,
        st.l AS level, st.b AS trend,
        st.l + st.b + element_at(st.s, 1) AS forecast_next
 FROM folded
-ORDER BY event_type
 """
 
 
@@ -1032,7 +1018,6 @@ SELECT event_type, n_days, l AS level, b AS trend,
        l + b + s[1] AS forecast_next
 FROM steps
 WHERE i = n_days
-ORDER BY event_type
 """
 
 
@@ -1124,7 +1109,6 @@ sym AS (
 SELECT event_type, n AS n_days, {string_agg} AS sax
 FROM sym
 GROUP BY event_type, n
-ORDER BY event_type
 """
 
 
@@ -1226,7 +1210,7 @@ SELECT event_type, n AS n_days, m AS m_days,
          ),
          CAST(m AS INT) + 1
        ) AS dtw
-FROM pair ORDER BY event_type
+FROM pair
 """
 
 
@@ -1248,7 +1232,6 @@ dp AS (
 )
 SELECT event_type, n AS n_days, m AS m_days, w[m + 2] AS dtw
 FROM dp WHERE p = (n + 1) * (m + 1)
-ORDER BY event_type
 """
 
 
@@ -1326,7 +1309,7 @@ SELECT event_type,
        CAST((pk - pk % 1000) / 1000.0e0 AS INT) AS i,
        CAST(pk % 1000 AS INT) AS j,
        dist
-FROM pick ORDER BY event_type
+FROM pick
 """
 
 
@@ -1456,7 +1439,6 @@ SELECT event_type, n_days,
        {gain_next} AS gain_next,
        st.l AS forecast_next
 FROM folded
-ORDER BY event_type
 """
 
 
@@ -1513,7 +1495,6 @@ SELECT event_type, n_days, l AS level, p AS p_var,
        l AS forecast_next
 FROM steps
 WHERE i = n_days
-ORDER BY event_type
 """
 
 
@@ -1591,7 +1572,6 @@ SELECT CAST(lag AS INT) AS lag, n AS n_days,
                 * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
                        - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)), 0e0) AS xcorr
 FROM agg
-ORDER BY lag
 """
 
 
@@ -1674,7 +1654,6 @@ SELECT s.event_type, nn.n AS n_days, s.s_stat,
 FROM s
 JOIN nn ON nn.event_type = s.event_type
 LEFT JOIN ties t ON t.event_type = s.event_type
-ORDER BY s.event_type
 """
 
 
@@ -1749,7 +1728,6 @@ SELECT event_type,
          AS n_breakout_down
 FROM flags
 GROUP BY event_type
-ORDER BY event_type
 """
 
 
@@ -1786,11 +1764,8 @@ def timeseries_bollinger_breakouts(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 def _pacf_sql(epoch_us: str) -> str:
-    acf_body = _acf_sql(epoch_us)
-    # reuse the ACF statement as a subquery (strip its ORDER BY)
-    acf_sub = acf_body.replace("ORDER BY n.event_type, n.lag", "")
     return f"""
-WITH acf AS ({acf_sub}),
+WITH acf AS ({_acf_sql(epoch_us)}),
 piv AS (
   SELECT event_type, max(n_days) AS n_days,
          max(CASE WHEN lag = 1 THEN acf END) AS r1,
@@ -1814,7 +1789,6 @@ SELECT event_type, n_days,
        (r3 - phi21 * r2 - phi22 * r1)
          / nullif(1.0e0 - phi21 * r1 - phi22 * r2, 0e0) AS pacf3
 FROM l3
-ORDER BY event_type
 """
 
 
@@ -1876,7 +1850,6 @@ SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us,
        c.ad AS near_dist_us
 FROM l LEFT JOIN (SELECT * FROM cand WHERE rk = 1) c
   ON c.event_id = l.event_id
-ORDER BY l.event_id
 """
 
 
@@ -1945,7 +1918,6 @@ def asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("chosen.ts_us").alias("near_ts_us"),
             F.abs(lts - F.col("chosen.ts_us")).alias("near_dist_us"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -1968,10 +1940,9 @@ ANOM_SEAS_K = 3  # σ multiplier
 def _anomaly_seasonal_sql() -> str:
     from posting_lines_spark.queries.parity import dsum_expr
 
-    base = SEASONAL_ORACLE.replace("ORDER BY d.event_type, d.bucket", "")
     mean = "(sr / CAST(nh AS DOUBLE))"
     return f"""
-WITH decomp AS ({base}),
+WITH decomp AS ({SEASONAL_ORACLE}),
 mom AS (
   SELECT event_type,
          CAST(count(*) AS BIGINT) AS nh,
@@ -1992,7 +1963,6 @@ SELECT d.event_type,
        max(abs(d.residual)) AS max_abs_residual
 FROM decomp d JOIN sig s ON s.event_type = d.event_type
 GROUP BY d.event_type, s.nh, s.sigma
-ORDER BY d.event_type
 """
 
 
@@ -2035,7 +2005,6 @@ SELECT d.event_type,
        max(abs(d.residual)) AS max_abs_residual
 FROM pls_anom_decomp d JOIN sig s ON s.event_type = d.event_type
 GROUP BY d.event_type, s.nh, s.sigma
-ORDER BY d.event_type
 """
     )
 
@@ -2051,10 +2020,9 @@ ORDER BY d.event_type
 def _ljung_box_sql(epoch_us: str) -> str:
     from posting_lines_spark.queries.parity import dsum_expr
 
-    acf_sub = _acf_sql(epoch_us).replace("ORDER BY n.event_type, n.lag", "")
     nd = "CAST(max(n_days) AS DOUBLE)"
     return f"""
-WITH acf AS ({acf_sub}),
+WITH acf AS ({_acf_sql(epoch_us)}),
 terms AS (
   SELECT event_type, n_days,
          acf * acf / nullif(CAST(n_days AS DOUBLE) - CAST(lag AS DOUBLE), 0e0)
@@ -2066,7 +2034,6 @@ SELECT event_type, CAST(max(n_days) AS BIGINT) AS n_days,
        {nd} * ({nd} + 2.0e0) * {dsum_expr("t", 12)} AS q_stat
 FROM terms
 GROUP BY event_type
-ORDER BY event_type
 """
 
 
@@ -2129,7 +2096,6 @@ SELECT event_type, n_days, t_obs,
          / nullif(sqrt((16.0e0 * CAST(n_days AS DOUBLE) - 29.0e0) / 90.0e0),
                   0e0) AS z
 FROM agg
-ORDER BY event_type
 """
 
 
@@ -2234,7 +2200,6 @@ SELECT event_type, n AS n_days, CAST({VR_Q} AS INT) AS q,
                        / (3.0e0 * {VR_Q}.0e0 * CAST(n AS DOUBLE))), 0e0)
          AS z
 FROM vr
-ORDER BY event_type
 """
 
 
@@ -2344,7 +2309,6 @@ sums AS (
 SELECT event_type, p AS period_days, n AS n_days,
        (c * c + s * s) / CAST(n AS DOUBLE) AS power
 FROM sums
-ORDER BY event_type, p
 """
 
 
@@ -2493,7 +2457,6 @@ SELECT event_type, n_pts,
        (CAST(n_pts AS DOUBLE) * sxy - sx * sy)
          / nullif(CAST(n_pts AS DOUBLE) * sxx - sx * sx, 0e0) AS hurst
 FROM ols
-ORDER BY event_type
 """
 
 
@@ -2622,7 +2585,6 @@ ent AS (
 SELECT s.event_type, s.n AS n_days, {m} AS n_periods, e.h_raw,
        e.h_raw / {dlit(math.log(float(m)))} AS h_norm
 FROM stats s LEFT JOIN ent e ON e.event_type = s.event_type
-ORDER BY s.event_type
 """
 
 
@@ -3038,7 +3000,6 @@ SELECT s.event_type, v.n_days, v.n_seasons, s.s_stat, v.v18 AS var18,
             ELSE 0e0 END
          / nullif(sqrt(CAST(v.v18 AS DOUBLE) / 18.0e0), 0e0) AS z_smk
 FROM s JOIN var18 v ON v.event_type = s.event_type
-ORDER BY s.event_type
 """
 
 

@@ -62,7 +62,6 @@ FROM (
   FROM documents
 )
 GROUP BY 1, 2
-ORDER BY 1, 2
 """
 
 
@@ -80,7 +79,6 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
                sum(CASE WHEN predicted_lang = lang THEN 1 ELSE 0 END) AS n_correct
         FROM (SELECT lang, {_argmax(_score_spark)} AS predicted_lang FROM documents)
         GROUP BY 1, 2
-        ORDER BY 1, 2
         """
     )
 
@@ -104,7 +102,6 @@ FROM (
          len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a', 'of', 'and', 'to'))) AS n_stop
   FROM documents
 )
-ORDER BY doc_id
 """
 
 
@@ -136,7 +133,6 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                  CAST(size(filter(split(text, ' '), t -> t IN ('the', 'a', 'of', 'and', 'to'))) AS BIGINT) AS n_stop
           FROM documents
         )
-        ORDER BY doc_id
         """
     )
 
@@ -149,7 +145,6 @@ SELECT source,
        CAST(sum(length(text)) AS BIGINT) AS total_chars
 FROM documents
 GROUP BY source
-ORDER BY source
 """
 
 
@@ -171,7 +166,6 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.sum(F.length("text")).alias("total_chars"),
         )
-        .orderBy("source")
     )
 
 
@@ -182,7 +176,6 @@ FROM (
   FROM documents
 )
 GROUP BY doc_id
-ORDER BY doc_id
 """
 
 
@@ -204,7 +197,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         sh.groupBy("doc_id")
         .agg(F.min(F.expr(md5_int_spark("shingle", salt="fp"))).alias("fingerprint"))
-        .orderBy("doc_id")
     )
 
 
@@ -231,7 +223,6 @@ SELECT source,
        max(md5(norm_text)) AS max_digest
 FROM norm
 GROUP BY source
-ORDER BY source
 """
 
 
@@ -290,7 +281,6 @@ SELECT t.doc_id,
                   AND CAST(n_bigrams - n_distinct_bigrams AS DOUBLE) / n_bigrams <= {REP_DUP_BIGRAM_MAX}
                  THEN 1 ELSE 0 END AS BIGINT) AS passes_repetition
 FROM tok_stats t JOIN bi_stats b ON t.doc_id = b.doc_id
-ORDER BY t.doc_id
 """
 
 
@@ -346,7 +336,7 @@ SELECT source,
        CAST(sum(CASE WHEN redacted != text THEN 1 ELSE 0 END) AS BIGINT) AS n_redacted,
        CAST(sum(length(text)) AS BIGINT) AS chars_before,
        CAST(sum(length(redacted)) AS BIGINT) AS chars_after
-FROM red GROUP BY source ORDER BY source
+FROM red GROUP BY source
 """
 
 REDACT_SPARK = f"""
@@ -362,7 +352,7 @@ SELECT source,
        CAST(sum(CASE WHEN redacted != text THEN 1 ELSE 0 END) AS BIGINT) AS n_redacted,
        CAST(sum(length(text)) AS BIGINT) AS chars_before,
        CAST(sum(length(redacted)) AS BIGINT) AS chars_after
-FROM red GROUP BY source ORDER BY source
+FROM red GROUP BY source
 """
 
 
@@ -430,7 +420,6 @@ v AS (
 SELECT id_a, id_b, name_a, name_b, lev
 FROM v
 WHERE lev <= {FUZZY_K}
-ORDER BY id_a, id_b
 """
 
 
@@ -446,7 +435,6 @@ SELECT a.i AS id_a, b.i AS id_b, a.name AS name_a, b.name AS name_b,
 FROM names a CROSS JOIN names b
 WHERE a.i < 1000 AND b.i >= 1000
   AND levenshtein(a.name, b.name) <= {FUZZY_K}
-ORDER BY id_a, id_b
 """
 _FUZZY_SPARK_CORPUS = _fuzzy_corpus(
     "STRING", "SELECT explode(sequence(CAST(0 AS BIGINT), CAST(299 AS BIGINT))) AS i"
@@ -543,7 +531,7 @@ lmscore AS (
 def _lm_sql(toks: str, fold: str) -> str:
     return (
         _lm_chain(toks, fold)
-        + "\nSELECT doc_id, n_bigrams, xent_nats FROM lmscore ORDER BY doc_id"
+        + "\nSELECT doc_id, n_bigrams, xent_nats FROM lmscore"
     )
 
 
@@ -622,7 +610,6 @@ ns0 AS (SELECT source, n, vocab, sum_clnc FROM persrc),
 SELECT source, n AS n_tokens, vocab,
        (n_ln - (sum_clnc / CAST(n AS DOUBLE))) AS entropy_nats
 FROM {n_last}
-ORDER BY source
 """
 
 
@@ -684,7 +671,6 @@ FROM (
 ) f
 GROUP BY doc_id, idx
 HAVING CAST(sum(sgn) AS BIGINT) <> 0
-ORDER BY doc_id, idx
 """
 
 
@@ -778,7 +764,6 @@ SELECT doc_id,
        CAST({_WNW_POSPAD} - CAST(substring(sel_key, 20, 9) AS BIGINT) AS BIGINT) AS pos,
        CAST(substring(sel_key, 1, 19) AS BIGINT) AS fingerprint
 FROM fp
-ORDER BY doc_id, pos
 """
 
 
@@ -833,7 +818,7 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         (F.lit(_WNW_POSPAD) - F.substring("sel_key", 20, 9).cast("long")).alias("pos"),
         F.substring("sel_key", 1, 19).cast("long").alias("fingerprint"),
-    ).orderBy("doc_id", "pos")
+    )
 
 
 # --- BPE pair counting (one tokenizer-training round) ---
@@ -1009,7 +994,6 @@ SELECT source,
        CAST(count(DISTINCT CASE WHEN oov = 1 THEN tok END) AS BIGINT) AS n_oov_types
 FROM marked
 GROUP BY source
-ORDER BY source
 """
 
 
@@ -1308,7 +1292,6 @@ SELECT source,
          AS n_easy
 FROM scored
 GROUP BY source
-ORDER BY source
 """
 
 
@@ -1451,7 +1434,6 @@ WITH {_nb_pred_ctes(tok_cte)}
 SELECT true_lang, pred_lang, CAST(count(*) AS BIGINT) AS n_docs
 FROM pred
 GROUP BY true_lang, pred_lang
-ORDER BY true_lang, pred_lang
 """
 
 
@@ -1715,7 +1697,7 @@ seq{k + 1} AS (
         "WITH "
         + ",\n".join(parts)
         + f"\nSELECT CAST(round AS INT) AS round, pair AS merged_pair, n_occ"
-        f"\nFROM ({unions}) m ORDER BY round"
+        f"\nFROM ({unions}) m"
     )
 
 
@@ -1814,9 +1796,7 @@ def _bpe_train(
                 F.lit("|" + top["pair"].replace("|", "") + "|"),
             ).alias("seq"),
         ).localCheckpoint(eager=False)
-    out = spark.createDataFrame(
-        merges, "round int, merged_pair string, n_occ long"
-    ).orderBy("round")
+    out = spark.createDataFrame(merges, "round int, merged_pair string, n_occ long")
     return (out, seq) if return_seq else out
 
 
@@ -2142,7 +2122,6 @@ resolved AS (
 SELECT p0.probe_id, r.match_id, r.jw,
        CASE WHEN r.match_id = p0.probe_id THEN 1 ELSE 0 END AS matched_self
 FROM probes0 p0 JOIN resolved r ON r.probe_name = p0.probe_name
-ORDER BY probe_id
 """
 
 
@@ -2263,7 +2242,6 @@ FROM coc a
 LEFT JOIN coc b ON b.r = a.r + 1
 CROSS JOIN tot t CROSS JOIN n1
 WHERE a.r <= {GT_MAX_R}
-ORDER BY a.r
 """
 
 
@@ -2350,7 +2328,6 @@ SELECT source,
        max(sttr) AS max_sttr
 FROM per_doc
 GROUP BY source
-ORDER BY source
 """
 
 
@@ -2420,7 +2397,6 @@ SELECT sf.source,
                            AS BIGINT)) AS DOUBLE), 0e0) AS chars_per_token
 FROM src_freq sf JOIN {last_seq} s ON s.word = sf.word
 GROUP BY sf.source
-ORDER BY sf.source
 """
 
 
@@ -2470,6 +2446,5 @@ SELECT sf.source,
                            AS BIGINT)) AS DOUBLE), 0e0) AS chars_per_token
 FROM src_freq sf JOIN pls_fert_seq s ON s.word = sf.word
 GROUP BY sf.source
-ORDER BY sf.source
 """
     )

@@ -98,7 +98,6 @@ SELECT s_suppkey, s_name, total_revenue
 FROM supplier, revenue
 WHERE s_suppkey = supplier_no
   AND total_revenue = (SELECT max(total_revenue) FROM revenue)
-ORDER BY s_suppkey
 """
 
 
@@ -305,7 +304,6 @@ WHERE c_mktsegment IN ('BUILDING', 'MACHINERY', 'AUTOMOBILE')
     WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT'
   )
 GROUP BY c_mktsegment
-ORDER BY segment
 """
 
 
@@ -399,7 +397,6 @@ WHERE o_orderdate >= TIMESTAMP '1997-07-01 00:00:00'
     WHERE l_orderkey = o_orderkey AND l_returnflag = 'R'
   )
 GROUP BY o_orderpriority
-ORDER BY o_orderpriority
 """
 
 
@@ -466,7 +463,6 @@ FROM (
     AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
 ) shipping
 GROUP BY supp_nation, cust_nation, l_year
-ORDER BY supp_nation, cust_nation, l_year
 """
 
 
@@ -511,7 +507,6 @@ FROM (
     AND p_type = 'PROMO'
 ) all_nations
 GROUP BY o_year
-ORDER BY o_year
 """
 
 
@@ -550,7 +545,6 @@ FROM (
     AND p_name LIKE '%widget%'
 ) profit
 GROUP BY nation, o_year
-ORDER BY nation, o_year DESC
 """
 
 
@@ -588,7 +582,6 @@ HAVING {dsum_expr("l_extendedprice * l_quantity")} > (
     AND s_nationkey = n_nationkey
     AND n_name = 'NATION_7'
 )
-ORDER BY value DESC, ps_partkey
 """
 
 
@@ -622,7 +615,6 @@ WHERE o_orderkey = l_orderkey
   AND l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
   AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
 GROUP BY l_linestatus
-ORDER BY l_linestatus
 """
 
 
@@ -680,7 +672,6 @@ WHERE p_partkey = l_partkey
     SELECT s_suppkey FROM supplier WHERE s_acctbal < 0.0e0
   )
 GROUP BY p_brand, p_type, p_size
-ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 """
 
 
@@ -727,7 +718,6 @@ WHERE s_suppkey IN (
   )
   AND s_nationkey = n_nationkey
   AND n_name = 'NATION_5'
-ORDER BY s_name
 """
 
 

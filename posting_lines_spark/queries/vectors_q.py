@@ -65,7 +65,6 @@ ranked AS (
   FROM scored
 )
 SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {K}
-ORDER BY query_id, rank
 """
 
 
@@ -79,7 +78,7 @@ ORDER BY query_id, rank
 def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id").isin(QUERY_IDS))
-    return sim.brute_force_topk(emb, queries, K).orderBy("query_id", "rank")
+    return sim.brute_force_topk(emb, queries, K)
 
 
 _BUCKET_DUCK = f"""
@@ -104,7 +103,6 @@ ranked AS (
   FROM scored
 )
 SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {K}
-ORDER BY query_id, rank
 """
 
 
@@ -119,7 +117,7 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id").isin(QUERY_IDS))
     planes = sim.hyperplanes(spark, NUM_PLANES, DIMS)
-    return sim.ivf_topk(emb, queries, planes, K).orderBy("query_id", "rank")
+    return sim.ivf_topk(emb, queries, planes, K)
 
 
 _MASK_VALUES = ", ".join(f"({m})" for m in [0] + [1 << p for p in range(NUM_PLANES)])
@@ -143,7 +141,6 @@ ranked AS (
   FROM scored
 )
 SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {K}
-ORDER BY query_id, rank
 """
 
 
@@ -161,7 +158,7 @@ def sim_topk_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = sim.hyperplanes(spark, NUM_PLANES, DIMS)
     return sim.ivf_topk(
         emb, queries, planes, K, probes=1, num_planes=NUM_PLANES
-    ).orderBy("query_id", "rank")
+    )
 
 
 # --- k-means IVF training ---
@@ -260,7 +257,6 @@ SELECT /*+ BROADCAST(s) */ a.cluster_id,
        max(s.centroid_checksum) AS centroid_checksum
 FROM a2 a JOIN cstats s ON a.cluster_id = s.cluster_id
 GROUP BY a.cluster_id
-ORDER BY a.cluster_id
 """
 
 
@@ -322,7 +318,6 @@ ranked AS (
   FROM scored
 )
 SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {K}
-ORDER BY query_id, rank
 """
 
 
@@ -367,7 +362,6 @@ eb AS (SELECT b.vec_id, e.embedding, b.bucket FROM buckets b JOIN base e USING (
 SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cosine_duck('a.embedding', 'b.embedding')} AS cosine
 FROM eb a JOIN eb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
 WHERE {cosine_duck('a.embedding', 'b.embedding')} >= 0.95e0
-ORDER BY id_a, id_b
 """
 
 
@@ -391,7 +385,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cosine", F.expr(sim.cosine_spark("va", "vb")))
         .filter(F.col("cosine") >= 0.95)
         .select("id_a", "id_b", "cosine")
-        .orderBy("id_a", "id_b")
     )
 
 
@@ -412,7 +405,6 @@ SELECT CAST(l.label AS BIGINT) AS label, CAST(lv.dim AS BIGINT) AS dim,
        CAST(count(*) AS BIGINT) AS n_vecs
 FROM long_vecs lv JOIN lab l ON l.vec_id = lv.vec_id
 GROUP BY l.label, lv.dim
-ORDER BY label, dim
 """
 
 
@@ -504,7 +496,6 @@ ranked AS (
   FROM scored
 )
 SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {K}
-ORDER BY query_id, rank
 """
 
 
@@ -531,9 +522,7 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "m", "code", F.expr(sim.l2sq_spark("sub", "cent")).alias("qd"))
     )
     queries = emb.filter(F.col("vec_id").isin(QUERY_IDS))
-    return sim.pq_adc_topk(codes, dtable, emb, queries, K, PQ_RERANK).orderBy(
-        "query_id", "rank"
-    )
+    return sim.pq_adc_topk(codes, dtable, emb, queries, K, PQ_RERANK)
 
 
 # --- Johnson–Lindenstrauss random projection ---
@@ -580,7 +569,6 @@ ranked AS (
 )
 SELECT query_id, vec_id, cosine_proj, cosine_exact, rank
 FROM ranked WHERE rank <= {K}
-ORDER BY query_id, rank
 """
 
 
@@ -620,7 +608,6 @@ def sim_topk_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rank", F.row_number().over(wr).cast("long"))
         .filter(F.col("rank") <= K)
-        .orderBy("query_id", "rank")
     )
 
 
@@ -692,7 +679,6 @@ ranked AS (
   FROM scored
 )
 SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= {K}
-ORDER BY query_id, rank
 """
 
 
@@ -736,7 +722,7 @@ def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id").isin(QUERY_IDS))
     return sim.pq_adc_topk(
         codes, dtable, emb, queries, K, IVFPQ_RERANK, candidates=cand0
-    ).orderBy("query_id", "rank")
+    )
 
 
 # --- int8 embedding quantization (scale/zero-point, per-vector) ---
@@ -777,7 +763,6 @@ SELECT vec_id, scale,
        aggregate(zip_with(codes, embedding, (c, x) -> abs(c * scale + lo - CAST(x AS DOUBLE))),
                  CAST(0.0 AS DOUBLE), (m, e) -> greatest(m, e)) <= scale / 2.0e0 + 1.0e-12 AS bound_ok
 FROM q
-ORDER BY vec_id
 """
 
 
@@ -807,7 +792,6 @@ SELECT vec_id, scale,
        list_reduce(list_prepend(CAST(0.0 AS DOUBLE), es), (m, e) -> greatest(m, e)) AS max_abs_err,
        list_reduce(list_prepend(CAST(0.0 AS DOUBLE), es), (m, e) -> greatest(m, e)) <= scale / 2.0e0 + 1.0e-12 AS bound_ok
 FROM errs
-ORDER BY vec_id
 """
 
 
@@ -874,7 +858,6 @@ SELECT CAST(label AS BIGINT) AS label,
          AS mean_silhouette
 FROM sil
 GROUP BY label
-ORDER BY label
 """
 
 
@@ -967,7 +950,6 @@ ranked AS (
   FROM scored
 )
 SELECT query_id, vec_id, dot, rank FROM ranked WHERE rank <= {K}
-ORDER BY query_id, rank
 """
 
 
@@ -1023,7 +1005,6 @@ def sim_mips_norm_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rank", F.row_number().over(wr).cast("long"))
         .filter(F.col("rank") <= K)
-        .orderBy("query_id", "rank")
     )
 
 
@@ -1046,7 +1027,7 @@ def sim_mips_norm_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 64-column map-side-combinable aggregate — partial state is 64×65
 # integers per partition, the shuffle carries partials, never data.
 # Everything after is DIM²-bounded (4096-row matrix, 64-row vector;
-# broadcast joins, CheckpointCycler-bounded iteration blocks). Integer
+# broadcast joins; all power rounds run in one job). Integer
 # exactness holds to n ≈ 2e5 vectors at this quantization (n·S2 ≤
 # ~1.4e18); beyond that, route the matrix build through DECIMAL(38,0).
 # The oracle builds the same matrix by self-join and unrolls the same
@@ -1109,7 +1090,7 @@ sgn AS (
   WHERE v <> 0 ORDER BY j LIMIT 1
 )
 SELECT CAST({last}.j AS INT) AS dim, {last}.v * sgn.s AS v_fp
-FROM {last} CROSS JOIN sgn ORDER BY dim"""
+FROM {last} CROSS JOIN sgn"""
     )
 
 
@@ -1174,7 +1155,7 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the global max(|y|) aggregate and the scaling projection; a
     # whole-frame window computes mx in the same pass (y is DIM = 64
     # rows — the single-partition window is a non-issue), making the
-    # recurrence linear, so the per-round eager CheckpointCycler jobs
+    # recurrence linear, so the per-round eager checkpoint jobs
     # (~0.3-0.6 s each, 8 of them) collapse into one DAG where every
     # round's matvec reads the checkpointed mp blocks directly. Final v
     # is cut once (lazy) because sgn + the output consume it twice.
@@ -1209,7 +1190,6 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("j").cast("int").alias("dim"),
             (F.col("v") * F.col("s")).cast("long").alias("v_fp"),
         )
-        .orderBy("dim")
     )
 
 
@@ -1291,7 +1271,6 @@ SELECT p.cluster_id, p.n_members,
        CAST(p.n_members - p.n_dup_drops - coalesce(cd.n_min_drops, 0)
             AS BIGINT) AS n_kept
 FROM per_cls p LEFT JOIN cd ON cd.cluster_id = p.cluster_id
-ORDER BY p.cluster_id
 """
     pairwise = f"""
 drops AS (
@@ -1307,7 +1286,6 @@ SELECT m.cluster_id,
 FROM mem m
 LEFT JOIN drops d ON d.cluster_id = m.cluster_id AND d.vec_id = m.vec_id
 GROUP BY m.cluster_id
-ORDER BY m.cluster_id
 """
     return f"""
 {_km_chain(long_explode, h_vec)},
@@ -1366,8 +1344,8 @@ def curation_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _recall_audit_sql() -> str:
     return f"""
-WITH bf AS ({BRUTE_ORACLE.replace("ORDER BY query_id, rank", "")}),
-ivf AS ({IVF_ORACLE.replace("ORDER BY query_id, rank", "")}),
+WITH bf AS ({BRUTE_ORACLE}),
+ivf AS ({IVF_ORACLE}),
 hits AS (
   SELECT bf.query_id,
          CAST(count(ivf.vec_id) AS BIGINT) AS n_hit
@@ -1378,7 +1356,6 @@ hits AS (
 SELECT query_id, n_hit, CAST({K} AS BIGINT) AS k,
        CAST(n_hit AS DOUBLE) / {K}.0e0 AS recall_at_k
 FROM hits
-ORDER BY query_id
 """
 
 
@@ -1414,7 +1391,6 @@ def sim_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(K).cast("long").alias("k"),
             (F.col("n_hit").cast("double") / F.lit(float(K))).alias("recall_at_k"),
         )
-        .orderBy("query_id")
     )
 
 
@@ -1446,7 +1422,6 @@ scored AS (
 )
 SELECT query_id, vec_id, cosine
 FROM scored WHERE cosine >= {RANGE_TAU!r}e0
-ORDER BY query_id, cosine DESC, vec_id
 """
 
 
@@ -1478,7 +1453,6 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cosine", F.expr(cosine_spark("embedding", "qv")))
         .filter(F.col("cosine") >= RANGE_TAU)
         .select("query_id", "vec_id", "cosine")
-        .orderBy("query_id", F.col("cosine").desc(), "vec_id")
     )
 
 
@@ -1531,7 +1505,6 @@ SELECT vec_id, cluster_id FROM a2"""
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= K)
         .select("query_id", "vec_id", "cosine", "rank")
-        .orderBy("query_id", "rank")
     )
 
 

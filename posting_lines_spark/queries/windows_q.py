@@ -31,7 +31,6 @@ FROM (
   FROM events
 )
 WHERE rn <= 3
-ORDER BY event_type, rn
 """
 
 
@@ -48,7 +47,6 @@ def window_topk_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.withColumn("rn", F.row_number().over(w).cast("long"))
         .filter(F.col("rn") <= 3)
         .select("event_type", "event_id", "value", "rn")
-        .orderBy("event_type", "rn")
     )
 
 
@@ -60,7 +58,6 @@ SELECT user_id, event_id,
          AS running_value
 FROM events
 WHERE user_id < 10
-ORDER BY user_id, event_id
 """
 
 
@@ -81,7 +78,6 @@ def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.withColumn("running_value", running)
         .select("user_id", "event_id", "running_value")
-        .orderBy("user_id", "event_id")
     )
 
 
@@ -96,7 +92,6 @@ SELECT user_id,
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
 QUALIFY end_us IS NOT NULL
-ORDER BY user_id, start_us
 """
 
 
@@ -110,7 +105,7 @@ ORDER BY user_id, start_us
 def window_segments_producer(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    out = (
+    return (
         e.select(
             "user_id",
             F.col("event_id").alias("start_event_id"),
@@ -121,9 +116,7 @@ def window_segments_producer(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lead("value").over(w).alias("end_value"),
         )
         .filter(F.col("end_us").isNotNull())
-        .orderBy("user_id", "start_us")
     )
-    return out
 
 
 SESSIONIZE_ORACLE = """
@@ -140,7 +133,6 @@ FROM (
   )
 )
 GROUP BY user_id
-ORDER BY user_id
 """
 
 
@@ -166,7 +158,6 @@ def window_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("session_id").alias("n_sessions"),
             F.count(F.lit(1)).alias("n_events"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -180,7 +171,6 @@ SELECT event_type, event_id,
 FROM events
 WHERE user_id < 20
 WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)
-ORDER BY event_type, event_id
 """
 
 
@@ -216,7 +206,6 @@ FROM (
   FROM events CROSS JOIN (VALUES (0), (1)) t(j)
 )
 GROUP BY window_start_us
-ORDER BY window_start_us
 """
 
 
@@ -241,7 +230,6 @@ def window_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "total_value",
         )
-        .orderBy("window_start_us")
     )
 
 
@@ -288,7 +276,6 @@ SELECT event_type,
        CAST(max(hr_cents) AS BIGINT) AS peak_hour_cents
 FROM win
 GROUP BY event_type
-ORDER BY event_type
 """
 
 

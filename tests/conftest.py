@@ -10,6 +10,13 @@ SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"
 
 
+def row_key(row):
+    """Sort key for comparing query rows as multisets: registry queries
+    return unordered rows, so tests sort both sides. NULLs sort last
+    and are never compared with a value."""
+    return tuple((v is None, v) for v in row)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from posting_lines_spark.session import get_spark

@@ -19,6 +19,8 @@ from posting_lines_spark.queries.analytics_q import (
     _regression_sql,
 )
 
+from tests.conftest import row_key
+
 T0 = datetime(2024, 1, 1, 12, 0, 0)
 
 
@@ -60,13 +62,13 @@ def _duck(pdf: pd.DataFrame, sql: str):
     con = duckdb.connect()
     con.register("events", pdf)
     try:
-        return con.execute(sql).fetchall()
+        return sorted(con.execute(sql).fetchall(), key=row_key)
     finally:
         con.close()
 
 
 def _rows(df):
-    return [tuple(r) for r in df.collect()]
+    return sorted((tuple(r) for r in df.collect()), key=row_key)
 
 
 def test_moments_zero_variance_group_null_on_both_engines(

@@ -794,9 +794,9 @@ def test_stateful_attribution_recovers_after_restart(spark):
     purch = spark.read.schema(
         "eff_first string, eff_last string, value double"
     ).parquet(out)
-    got = [tuple(r) for r in _attr_ledger(purch).collect()]
-    want = [
+    got = sorted(tuple(r) for r in _attr_ledger(purch).collect())
+    want = sorted(
         tuple(r)
         for r in load_all()["attribution_touch_models"].fn(spark, SF0001).collect()
-    ]
+    )
     assert got == want

@@ -57,10 +57,15 @@ def test_all_registered_queries_have_unique_output_columns_and_sane_plans(spark)
         over a tiny side is fine; an unbounded cartesian is never the
         plan we want at 100 TB) except for declared 1-row scalar combines;
       - no row-at-a-time Python UDFs (BatchEvalPython) — Python is only
-        allowed Arrow-batched (ArrowEval/MapInPandas/FlatMapGroups...).
+        allowed Arrow-batched (ArrowEval/MapInPandas/FlatMapGroups...);
+      - no global Sort at the root of the analyzed plan (below any
+        WithCTE): a query returns an unordered multiset, and every gate
+        compares rows order-insensitively. Sorts under a Limit (top-k),
+        window orderings and ordered aggregates are not roots.
     """
     import __spark_entry__ as m
 
+    sorted_roots = []
     for name, fn in m.queries().items():
         df = fn(spark, SF0001)
         cols = [c.lower() for c in df.columns]
@@ -69,13 +74,25 @@ def test_all_registered_queries_have_unique_output_columns_and_sane_plans(spark)
         if name not in _CARTESIAN_OK:
             assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
         assert "BatchEvalPython" not in plan, f"{name} uses a row-at-a-time Python UDF"
+        root = df._jdf.queryExecution().analyzed()
+        if root.nodeName() == "WithCTE":
+            root = root.plan()
+        if root.nodeName() == "Sort" and getattr(root, "global")():
+            sorted_roots.append(name)
+    assert not sorted_roots, (
+        f"{len(sorted_roots)} queries end in a global sort that no gate "
+        f"checks: {sorted_roots}"
+    )
 
 
 def test_timeseries_gapfill_locf_semantics(spark):
     from posting_lines_spark.queries import load_all
 
     q = load_all()["timeseries_gapfill"].fn
-    rows = q(spark, "/root/testdata/sf0.001").collect()
+    rows = sorted(
+        q(spark, "/root/testdata/sf0.001").collect(),
+        key=lambda r: (r.event_type, r.bucket),
+    )
     assert rows, "gapfill produced no rows"
     by_type: dict = {}
     for r in rows:

@@ -20,7 +20,7 @@ from decimal import ROUND_HALF_UP, Decimal
 
 import pyarrow.parquet as pq
 
-from tests.conftest import SF0001
+from tests.conftest import SF0001, row_key
 
 
 def _tbl(name: str) -> list[dict]:
@@ -94,7 +94,7 @@ def test_replay_fuzzy_join_levenshtein(spark):
         (r["id_a"], r["id_b"], r["name_a"], r["name_b"], r["lev"])
         for r in _run(spark, "fuzzy_join_levenshtein")
     ]
-    assert got == want
+    assert sorted(got, key=row_key) == sorted(want, key=row_key)
     # every corruption mode contributes matches
     assert len(want) >= 300
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from fractions import Fraction
 
-from tests.conftest import SF001
+from tests.conftest import SF001, row_key
 
 
 def test_band_sweep_cap_ranking_equivalence(spark):
@@ -77,13 +77,16 @@ def test_band_sweep_cap_engine_oracle_parity(spark, duck):
                                       cap=None).collect()
     }
     cap = max(1, min(r["n_pairs_bound"] for r in probe.values()) // 2)
-    got = [
-        tuple(r)
-        for r in dedup_lsh_band_sweep(
-            spark, "/root/testdata/sf0.001", cap=cap
-        ).collect()
-    ]
-    want = duck.execute(_band_sweep_oracle(cap=cap)).fetchall()
+    got = sorted(
+        (
+            tuple(r)
+            for r in dedup_lsh_band_sweep(
+                spark, "/root/testdata/sf0.001", cap=cap
+            ).collect()
+        ),
+        key=row_key,
+    )
+    want = sorted(duck.execute(_band_sweep_oracle(cap=cap)).fetchall(), key=row_key)
     assert len(got) == len(want) == 4
     for g, w in zip(got, want):
         for gv, wv in zip(g, w):

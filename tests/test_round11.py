@@ -482,7 +482,9 @@ def test_good_turing_matches_python(spark):
     for r in counts.values():
         coc[r] = coc.get(r, 0) + 1
 
-    rows = load_all()["text_good_turing"].fn(spark, SF0001).collect()
+    rows = sorted(
+        load_all()["text_good_turing"].fn(spark, SF0001).collect(), key=lambda r: r["r"]
+    )
     want_rs = sorted(r for r in coc if r <= GT_MAX_R)
     assert [r["r"] for r in rows] == want_rs
     for row in rows:
@@ -533,7 +535,9 @@ def test_fairness_parity_matches_python(spark):
     max_tpr = max(v[2] for v in rates.values())
     min_fpr = min(v[3] for v in rates.values())
 
-    rows = load_all()["ml_fairness_parity"].fn(spark, SF0001).collect()
+    rows = sorted(
+        load_all()["ml_fairness_parity"].fn(spark, SF0001).collect(), key=lambda r: r["grp"]
+    )
     assert [r["grp"] for r in rows] == list(range(FAIR_GROUPS))
     for row in rows:
         a = agg[row["grp"]]
@@ -1202,7 +1206,9 @@ def test_active_users_matches_python(spark):
             wau.setdefault(d + k, set()).add(u)
         for k in range(30):
             mau.setdefault(d + k, set()).add(u)
-    got = load_all()["events_active_users"].fn(spark, SF0001).collect()
+    got = sorted(
+        load_all()["events_active_users"].fn(spark, SF0001).collect(), key=lambda r: r["day"]
+    )
     assert [r["day"] for r in got] == sorted(dau)
     for r in got:
         d = r["day"]

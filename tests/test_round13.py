@@ -360,7 +360,10 @@ def test_cap_sweep_matches_python(spark):
                 if a < c:
                     wedges.append((a, c, max(rnk[(a, z)], rnk[(z, c)])))
     nw = len(wedges)
-    rows = load_all()["graph_linkpred_cap_sweep"].fn(spark, SF0001).collect()
+    rows = sorted(
+        load_all()["graph_linkpred_cap_sweep"].fn(spark, SF0001).collect(),
+        key=lambda r: r["cap"],
+    )
     assert [r["cap"] for r in rows] == list(CAP_SWEEP)
     for r in rows:
         cap = r["cap"]

@@ -246,7 +246,7 @@ def test_dbscan_core_matches_bruteforce(spark):
         .orderBy("is_core")
         .collect()
     )
-    got = load_all()["geo_dbscan_core"].fn(spark, SF0001).collect()
+    got = sorted(load_all()["geo_dbscan_core"].fn(spark, SF0001).collect(), key=lambda r: r.is_core)
     assert [
         (r.is_core, r.n_points, r.min_neighbors, r.max_neighbors) for r in got
     ] == [(r.is_core, r.n_points, r.min_neighbors, r.max_neighbors) for r in brute]

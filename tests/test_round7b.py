@@ -576,10 +576,10 @@ def test_bpe_merge_rounds_matches_python(spark):
                     i += 1
             new_seqs[w] = tuple(out)
         seqs = new_seqs
-    got = [
+    got = sorted(
         (r["round"], r["merged_pair"], r["n_occ"])
         for r in load_all()["text_bpe_merge_rounds"].fn(spark, SF0001).collect()
-    ]
+    )
     assert got == want
 
 

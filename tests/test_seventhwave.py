@@ -478,7 +478,9 @@ def test_pca_power_matches_integer_replay(spark):
         v = [tdiv(x * PCA_VSCALE, mx) for x in y]
     s = next(1 if x > 0 else -1 for x in v if x != 0)
     expected = [x * s for x in v]
-    rows = load_all()["embedding_pca_power"].fn(spark, SF0001).collect()
+    rows = sorted(
+        load_all()["embedding_pca_power"].fn(spark, SF0001).collect(), key=lambda r: r.dim
+    )
     assert [(r.dim, r.v_fp) for r in rows] == list(enumerate(expected))
 
 

@@ -60,6 +60,9 @@ def main() -> int:
     if explain:
         df.explain("formatted")
         return 0
+    # queries return unordered multisets; order what is shown by every
+    # orderable output column so the printed prefix is deterministic
+    df = df.orderBy(*[c for c, t in df.dtypes if not t.startswith("map<")])
     df.persist()  # show + count share one execution
     try:
         df.show(limit, truncate=False)
