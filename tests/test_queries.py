@@ -90,7 +90,7 @@ def test_timeseries_gapfill_locf_semantics(spark):
 
     q = load_all()["timeseries_gapfill"].fn
     rows = sorted(
-        q(spark, "/root/testdata/sf0.001").collect(),
+        q(spark, SF0001).collect(),
         key=lambda r: (r.event_type, r.bucket),
     )
     assert rows, "gapfill produced no rows"

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from fractions import Fraction
 
-from tests.conftest import SF001, row_key
+from tests.conftest import SF001, SF0001, row_key
 
 
 def test_band_sweep_cap_ranking_equivalence(spark):
@@ -80,9 +80,7 @@ def test_band_sweep_cap_engine_oracle_parity(spark, duck):
     got = sorted(
         (
             tuple(r)
-            for r in dedup_lsh_band_sweep(
-                spark, "/root/testdata/sf0.001", cap=cap
-            ).collect()
+            for r in dedup_lsh_band_sweep(spark, SF0001, cap=cap).collect()
         ),
         key=row_key,
     )
