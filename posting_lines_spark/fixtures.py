@@ -27,10 +27,14 @@ _CACHE: dict[tuple, str] = {}
 
 
 def dir_stamp(path: str) -> tuple[int, int]:
-    """Content stamp of an input dir: (total bytes, max mtime_ns) over
-    its files. Changed/rewritten inputs produce a different stamp, so a
-    per-process cache keyed on it re-materializes instead of serving
-    stale data."""
+    """Content stamp of an input dir (or single file): (total bytes, max
+    mtime_ns) over its files. Changed/rewritten inputs produce a
+    different stamp, so a per-process cache keyed on it re-materializes
+    instead of serving stale data. A missing or non-local path stamps
+    (0, 0)."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return st.st_size, st.st_mtime_ns
     total, mtime = 0, 0
     for root, _dirs, files in os.walk(path):
         for name in files:

@@ -191,9 +191,12 @@ def sog_kt_sql(len_m: str, duration: str) -> str:
 
 # --- layered composition (keeps expression text linear, not exponential) ---
 # Each layer introduces named intermediates so every builder above receives
-# a simple column ref. The SAME layer list drives: (a) a SQL string for the
-# DuckDB oracle, (b) withColumn chains for DataFrame pipelines, (c) the pure
-# Python mirror — identical op trees, bit-identical results.
+# a simple column ref. The SAME layer list drives: (a) nested SELECTs for
+# the DuckDB oracle, (b) ONE projection for DataFrame pipelines, whose later
+# layers refer to earlier ones by lateral column alias, (c) the pure Python
+# mirror — identical op trees, bit-identical results. One projection is
+# analyzed once; a Dataset per layer re-analyzed the whole growing plan at
+# every step.
 
 def _point_layers(lon: str, lat: str, sfx: str) -> list[list[tuple[str, str]]]:
     p, l, s = f"__phi{sfx}", f"__lam{sfx}", f"__s{sfx}"
@@ -233,11 +236,7 @@ def albers_cte_sql(inner_sql: str, points: list[tuple[str, str, str]], keep: lis
 def with_albers(df: DataFrame, points: list[tuple[str, str, str]]) -> DataFrame:
     """DataFrame form: adds x{sfx}, y{sfx} per point, drops intermediates.
     Same expression tree as `albers_cte_sql` → bit-identical values."""
-    drop: list[str] = []
-    for layer in _merge_layers(points):
-        df = df.withColumns({name: F.expr(expr) for name, expr in layer})
-        drop += [name for name, _ in layer if name.startswith("__")]
-    return df.drop(*drop)
+    return with_layers(df, _merge_layers(points))
 
 
 # --- spatial predicates (P6 follow-through: the reference builds a GiST
@@ -300,14 +299,20 @@ def layers_cte_sql(inner_sql: str, layers: list[list[tuple[str, str]]], keep: li
     return f"SELECT {', '.join(keep)} FROM {sql}"
 
 
+def project_layers(df: DataFrame, layers: list[list[tuple[str, str]]]) -> DataFrame:
+    """`df`'s columns plus every layer's columns, in ONE projection: an
+    expression reads an earlier layer's column by lateral column alias.
+    A name resolves to an input column first, so layers must introduce
+    new names. Intermediates are kept; project them away afterwards."""
+    return df.selectExpr("*", *(f"{expr} AS {name}" for layer in layers for name, expr in layer))
+
+
 def with_layers(df: DataFrame, layers: list[list[tuple[str, str]]]) -> DataFrame:
-    """DataFrame form of `layers_cte_sql` — same expression tree, `__`
-    intermediates dropped."""
-    drop: list[str] = []
-    for layer in layers:
-        df = df.withColumns({name: F.expr(expr) for name, expr in layer})
-        drop += [name for name, _ in layer if name.startswith("__")]
-    return df.drop(*drop)
+    """DataFrame form of `layers_cte_sql` — same expression tree, as one
+    projection (`project_layers`) and a final one that drops the `__`
+    intermediates."""
+    drop = [name for layer in layers for name, _ in layer if name.startswith("__")]
+    return project_layers(df, layers).drop(*drop)
 
 
 def forward_py(lon: float, lat: float) -> tuple[float, float]:
@@ -355,11 +360,3 @@ def parse_wkt_line(wkt: Column, srid: int) -> Column:
         F.regexp_extract(wkt, pat, 3).cast("double").alias("x2"),
         F.regexp_extract(wkt, pat, 4).cast("double").alias("y2"),
     )
-
-
-def line_length_m(x1: str, y1: str, x2: str, y2: str) -> Column:
-    return F.expr(line_length_m_sql(x1, y1, x2, y2))
-
-
-def sog_kt(len_m: str, duration: str) -> Column:
-    return F.expr(sog_kt_sql(len_m, duration))

@@ -27,8 +27,14 @@ enrichment) makes Catalyst inline the kernel into the predicate — past
 interpreted evaluation. Consume enriched outputs across a storage
 boundary (write parquet / read back — exactly what the reference's
 UPDATE does) before filtering on derived values, or filter on the
-assembled `geom` struct (non-null by construction → the common
-`geom IS NULL` incrementality predicate constant-folds away). `merge_update` shuffles both sides on the key unless
+assembled `geom` struct (a `named_struct`, non-null by construction → the
+common `geom IS NULL` incrementality predicate constant-folds to an empty
+relation; tests/test_pipeline.py pins it). The kernel's size also costs
+driver time: it is built as ONE projection whose layers refer to each
+other by lateral column alias (functions/geo.py `project_layers`), so
+Spark analyzes it once instead of once per `withColumn` step.
+
+`merge_update` shuffles both sides on the key unless
 the update side is small enough to broadcast (pass broadcast_updates=True
 or let AQE convert it); `write_daily_partitioned` hash-partitions by day
 so each output partition is written by one task — idempotent dynamic
@@ -68,9 +74,7 @@ def enrich_segments(df: DataFrame, srid: int = 3005) -> DataFrame:
     preserved reference quirk Q5 (self-acknowledged at S1:38,43); the
     documented extension is `refresh_stale` below.
     """
-    return _enrich_where(
-        clean_zero_duration(df), F.col("geom").isNull(), srid
-    )
+    return _enrich_where(clean_zero_duration(df), "geom IS NULL", srid)
 
 
 def refresh_stale(df: DataFrame, since, srid: int = 3005) -> DataFrame:
@@ -82,44 +86,44 @@ def refresh_stale(df: DataFrame, since, srid: int = 3005) -> DataFrame:
     preserved verbatim in `enrich_segments` for parity); this operator is
     the documented fix, kept SEPARATE so the parity path stays untouched.
 
-    `since` is the processed-at watermark of the last pipeline run (a
-    date/timestamp literal or Column). Same shuffle-free map-only plan as
-    `enrich_segments`; idempotent at a fixed `since` — refreshed rows
-    recompute to the same values on a second pass."""
-    todo = F.col("geom").isNull() | (F.col("last_change") > F.lit(since))
+    `since` is the processed-at watermark of the last pipeline run: a
+    date or timestamp, or its ISO string, compared as a string literal
+    (Spark casts it to `last_change`'s type). Same shuffle-free map-only
+    plan as `enrich_segments`; idempotent at a fixed `since` — refreshed
+    rows recompute to the same values on a second pass."""
+    todo = f"geom IS NULL OR last_change > '{since}'"
     return _enrich_where(clean_zero_duration(df), todo, srid)
 
 
-def _enrich_where(df: DataFrame, todo, srid: int) -> DataFrame:
-    """Shared enrichment body: recompute geom/len_m/sog_kt where `todo`,
-    preserve everything else. One fused scan→project plan (P3)."""
-    out = df.withColumn("__todo", todo)
-    out = geo.with_albers(out, _ENRICH_POINTS)
-    new_len = geo.line_length_m("x_new1", "y_new1", "x_new2", "y_new2")
+_REPLACED = ("len_m", "sog_kt", "geom")
+
+
+def _enrich_where(df: DataFrame, todo: str, srid: int) -> DataFrame:
+    """Shared enrichment body: recompute geom/len_m/sog_kt where the SQL
+    predicate `todo` holds, preserve everything else. One fused
+    scan→project plan (P3), built as ONE projection (`__todo`, the Albers
+    layers, the merged values) and a final one that puts the merged values
+    in place of `len_m`/`sog_kt`/`geom` and drops the rest."""
+    new_len = geo.line_length_m_sql("x_new1", "y_new1", "x_new2", "y_new2")
     # Merge per SCALAR, then assemble the struct from the merged scalars:
     # the output geom is a struct constructor (provably non-null), so a
     # downstream `geom IS NULL` constant-folds to false instead of pushing
     # a kernel-sized predicate into the plan (Janino's 64KB method limit
     # turns such predicates into interpreted evaluation — measured 200s
-    # for two counts; see also the materialize-at-the-boundary note below).
-    merged = {
-        f"__m{c}{p}": F.when(F.col("__todo"), F.col(f"{c}_new{p}")).otherwise(F.col(f"geom.{c}{p}"))
+    # for two counts; see also the materialize-at-the-boundary note above).
+    merged = ", ".join(
+        f"'{c}{p}', CASE WHEN __todo THEN {c}_new{p} ELSE geom.{c}{p} END"
         for p in ("1", "2")
         for c in ("x", "y")
-    }
-    out = out.withColumns(merged)
-    out = out.withColumn("len_m", F.when(F.col("__todo"), new_len).otherwise(F.col("len_m")))
-    out = out.withColumn(
-        "sog_kt",
-        F.when(F.col("__todo"), geo.sog_kt("len_m", "duration")).otherwise(F.col("sog_kt")),
     )
-    out = out.withColumn(
-        "geom",
-        geo.make_line(srid, F.col("__mx1"), F.col("__my1"), F.col("__mx2"), F.col("__my2")),
-    )
-    return out.drop(
-        "__todo", "x_new1", "y_new1", "x_new2", "y_new2", "__mx1", "__my1", "__mx2", "__my2"
-    )
+    layers = [[("__todo", f"({todo})")], *geo.albers_layers(_ENRICH_POINTS), [
+        ("__len_m", f"CASE WHEN __todo THEN {new_len} ELSE len_m END"),
+        ("__sog_kt",
+         f"CASE WHEN __todo THEN {geo.sog_kt_sql('__len_m', 'duration')} ELSE sog_kt END"),
+        ("__geom", f"named_struct('srid', {srid}, {merged})"),
+    ]]
+    out = geo.project_layers(df, layers)
+    return out.selectExpr(*(f"__{c} AS {c}" if c in _REPLACED else f"`{c}`" for c in df.columns))
 
 
 def merge_update(

@@ -957,7 +957,7 @@ def _band_sweep_oracle(cap: int | None = SWEEP_CANDIDATE_CAP) -> str:
         )
     all_bands = "\nUNION ALL\n".join(cfg_selects)
     return f"""
-WITH sh AS ({_SH_DUCK}),
+WITH sh AS MATERIALIZED ({_SH_DUCK}),
 sig AS (
   SELECT doc_id, {mins}
   FROM (
@@ -966,8 +966,8 @@ sig AS (
   )
   GROUP BY doc_id
 ),
-bands AS ({all_bands}),
-bsz AS (
+bands AS MATERIALIZED ({all_bands}),
+bsz AS MATERIALIZED (
   SELECT cfg, band_idx, band_key, CAST(count(*) AS BIGINT) AS width
   FROM bands GROUP BY cfg, band_idx, band_key
 ),
@@ -978,7 +978,7 @@ sat AS (
               AS BIGINT) AS n_sat_docs
   FROM bsz GROUP BY cfg
 ),
-okb AS (
+okb AS MATERIALIZED (
   SELECT b.cfg, b.doc_id, b.band_idx, b.band_key
   FROM bands b JOIN bsz z
     ON z.cfg = b.cfg AND z.band_idx = b.band_idx AND z.band_key = b.band_key
@@ -990,7 +990,7 @@ bnd AS (
            AS n_pairs_bound
   FROM bsz WHERE width <= {SWEEP_MAX_BUCKET} GROUP BY cfg
 ),
-cpairs AS (
+cpairs AS MATERIALIZED (
   SELECT DISTINCT cfg, id_a, id_b
   FROM (
     SELECT a.cfg, a.doc_id AS id_a, b.doc_id AS id_b
@@ -1003,7 +1003,7 @@ ccount AS (
   SELECT cfg, CAST(count(*) AS BIGINT) AS n_sampled
   FROM cpairs GROUP BY cfg
 ),
-keep AS (
+keep AS MATERIALIZED (
   SELECT c.cfg, c.id_a, c.id_b
   FROM cpairs c JOIN ccount n ON n.cfg = c.cfg
   WHERE CAST({md5_int_duck("concat(CAST(c.id_a AS VARCHAR), '|', CAST(c.id_b AS VARCHAR))", salt="sweepv")} AS DECIMAL(38,0))
@@ -1019,7 +1019,7 @@ uinter AS (
   GROUP BY p.id_a, p.id_b
 ),
 sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-truth AS (
+truth AS MATERIALIZED (
   SELECT i.id_a, i.id_b
   FROM uinter i
   JOIN sizes za ON za.doc_id = i.id_a

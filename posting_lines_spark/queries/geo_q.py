@@ -36,14 +36,16 @@ def enriched_sql(keep_extra: list[str] | None = None) -> str:
     return f"SELECT *, {geo.sog_kt_sql('len_m', 'duration')} AS sog_kt FROM ({with_len})"
 
 
+_ENRICH_LAYERS = geo.albers_layers(_POINTS) + [
+    [("len_m", geo.line_length_m_sql("x1", "y1", "x2", "y2"))],
+    [("sog_kt", geo.sog_kt_sql("len_m", "duration"))],
+]
+
+
 def enrich_all_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame form of `enriched_sql` — same expression tree, built with
-    the Column API so Catalyst sees a declarative plan (scan → project;
-    no shuffle)."""
-    df = ais.segments_df(spark, sf_dir)
-    df = geo.with_albers(df, _POINTS)
-    df = df.withColumn("len_m", geo.line_length_m("x1", "y1", "x2", "y2"))
-    return df.withColumn("sog_kt", geo.sog_kt("len_m", "duration"))
+    """DataFrame form of `enriched_sql` — same expression tree, as one
+    projection over the segments (scan → project; no shuffle)."""
+    return geo.with_layers(ais.segments_df(spark, sf_dir), _ENRICH_LAYERS)
 
 
 def enrich_materialized(spark: SparkSession, sf_dir: str, cols: list[str]) -> DataFrame:

@@ -18,6 +18,7 @@ from posting_lines_spark.functions import geo
 from posting_lines_spark.operators import pipeline
 from posting_lines_spark.queries import register
 from posting_lines_spark.queries.geo_q import enrich_all_df, enriched_sql
+from posting_lines_spark.sources import read_parquet
 
 _Q = "floor({c} * 1000.0e0) / 1000.0e0"  # deterministic quantizer (exact FP ops)
 
@@ -60,8 +61,9 @@ def segments_state_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     then read back) — the production shape: the pipeline enriches state
     that arrives from storage, so the enrichment queries measure the
     operator, not the synthetic-state derivation. Also sidesteps the
-    plan-size hazard documented in operators/pipeline.py."""
-    return spark.read.parquet(segments_state_path(spark, sf_dir))
+    plan-size hazard documented in operators/pipeline.py. The schema is
+    inferred once per fixture (sources.read_parquet)."""
+    return read_parquet(spark, segments_state_path(spark, sf_dir))
 
 
 DETECT_ORACLE = f"""

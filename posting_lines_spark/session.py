@@ -14,6 +14,22 @@ import tempfile
 from pyspark.sql import SparkSession
 
 
+def env_positive_int(name: str, default: int | None = None) -> int | None:
+    """Positive integer from environment variable `name`, or `default`
+    when it is unset or empty. Anything else raises a ValueError that
+    names the variable."""
+    raw = os.environ.get(name)
+    if not raw:
+        return default
+    try:
+        n = int(raw)
+    except ValueError as exc:
+        raise ValueError(f"{name} must be a positive integer, got {raw!r}") from exc
+    if n <= 0:
+        raise ValueError(f"{name} must be a positive integer, got {n}")
+    return n
+
+
 def get_spark(
     app: str = "posting-lines-spark",
     cpus: int | str | None = None,
@@ -28,9 +44,9 @@ def get_spark(
     Pandas-UDF extension operators.
     """
     if cpus is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = env_positive_int("SPARK_GRAFT_CPUS", 32)
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(min(int(cpus) * 2, 64))))
+        shuffle_partitions = env_positive_int("SPARK_GRAFT_SHUFFLE", min(int(cpus) * 2, 64))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)

@@ -5,7 +5,9 @@ from posting_lines_spark.sources.tables import (
     load_jsonl,
     load_orc,
     load_table,
+    read_parquet,
     register_views,
+    stream_schema,
     write_jdbc,
     write_jsonl,
     write_orc,
@@ -18,7 +20,9 @@ __all__ = [
     "load_jsonl",
     "load_orc",
     "load_table",
+    "read_parquet",
     "register_views",
+    "stream_schema",
     "write_jdbc",
     "write_jsonl",
     "write_orc",

@@ -9,7 +9,12 @@ connector surface (O1, O7 `loaderDb` csv loading, auth_class.py:19-20).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from posting_lines_spark.fixtures import dir_stamp
 
 # Driver-generated testdata tables (TESTDATA.md).
 TABLES = [
@@ -24,6 +29,39 @@ TABLES = [
     "documents",
     "embeddings",
 ]
+
+
+# The process's one parquet schema memo. A reader without a schema starts
+# a footer-reading Spark job on every call to infer one; a reader given a
+# schema starts none, and still lists the path, so files added since the
+# schema was inferred are read.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` that infers the schema once per content
+    stamp of `path` (`fixtures.dir_stamp`): rewriting the path re-infers.
+    A path whose stamp is empty (missing or non-local) is never memoized."""
+    stamp = dir_stamp(path)
+    key = (path, stamp)
+    if key in _SCHEMAS:
+        return spark.read.schema(_SCHEMAS[key]).parquet(path)
+    df = spark.read.parquet(path)
+    if stamp != (0, 0):
+        _SCHEMAS[key] = df.schema
+    return df
+
+
+def stream_schema(spark: SparkSession, src_dir: str, checkpoint_dir: str) -> StructType:
+    """Schema of the parquet file stream over `src_dir`, inferred once per
+    checkpoint: a file stream's schema is fixed for the life of its
+    checkpoint, so later runs from it reuse the schema even though every
+    new file changes the source's stamp. A fresh checkpoint (no offset
+    log yet, or a non-local one) infers again."""
+    key = ("stream", src_dir, checkpoint_dir)
+    if key not in _SCHEMAS or not os.path.isdir(os.path.join(checkpoint_dir, "offsets")):
+        _SCHEMAS[key] = spark.read.parquet(src_dir).schema
+    return _SCHEMAS[key]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -49,14 +87,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql.types import LongType, TimestampNTZType
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):  # TIMESTAMP(NANOS) read as int64
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         if isinstance(ts_type, TimestampNTZType):  # TIMESTAMP(MICROS), naive
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from posting_lines_spark.fixtures import scratch_dir
 from posting_lines_spark.operators.pipeline import enrich_segments
+from posting_lines_spark.sources import stream_schema
 from posting_lines_spark.streaming.tuning import stream_shuffle_scope
 
 
@@ -32,7 +33,7 @@ def enrich_available_now(
     """Run the batch enrichment as an incremental stream over a parquet
     directory: drain-all-available, then stop. Re-running after new files
     arrive processes only the delta (checkpoint-tracked)."""
-    schema = spark.read.parquet(source_dir).schema
+    schema = stream_schema(spark, source_dir, checkpoint_dir)
     stream = spark.readStream.schema(schema).parquet(source_dir)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
@@ -58,20 +59,24 @@ def dedup_stream_append_parquet(
     src_dir: str | None = None,
 ) -> DataFrame:
     """Streaming exactly-once dedup: `dropDuplicates` over key_cols with a
-    watermark bounding the dedup state (keys older than the watermark are
-    evicted — without it, state grows with every key ever seen). Each
-    first-seen row is emitted immediately (append mode), duplicates
-    arriving within the watermark horizon are dropped. The streaming twin
-    of exact_dedup for ingest pipelines. Pass `src_dir` to stream from an
-    already-materialized parquet dir (skips the fixture write)."""
+    watermark. Each first-seen row is emitted immediately (append mode);
+    a later row with a key already seen is dropped, and so is a row
+    arriving behind the watermark. State is evicted by the watermark only
+    when `key_cols` holds `ts_col`; otherwise Spark can never evict it,
+    so the state grows with every distinct key and the watermark only
+    drops late rows. Such a query skips Spark's no-data micro-batch,
+    which would only load and commit every state partition again. The
+    streaming twin of exact_dedup for ingest pipelines. Pass `src_dir` to
+    stream from an already-materialized parquet dir (skips the fixture
+    write). Returns the sink's rows, read with the stream's schema."""
     if src_dir is not None:
         src = src_dir
     else:
         src = scratch_dir("pls_dedup_src_")
         events.write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = stream_schema(spark, src, checkpoint_dir)
     stream = spark.readStream.schema(schema).parquet(src)
-    with stream_shuffle_scope(spark, src):
+    with stream_shuffle_scope(spark, src, no_data_batches=ts_col in key_cols):
         q = (
             stream.withWatermark(ts_col, watermark)
             .dropDuplicates(key_cols)
@@ -83,7 +88,7 @@ def dedup_stream_append_parquet(
             .start()
         )
         q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return spark.read.schema(schema).parquet(out_dir)
 
 
 def _session_agg(stream: DataFrame, gap: str, watermark: str) -> DataFrame:
@@ -123,7 +128,7 @@ def session_windows_append_parquet(
     else:
         src = scratch_dir("pls_stream_src_")
         events.write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = stream_schema(spark, src, checkpoint_dir)
     stream = spark.readStream.schema(schema).parquet(src)
     with stream_shuffle_scope(spark, src):
         q = (
@@ -175,7 +180,7 @@ def scd_upsert_available_now(
     else:
         src = scratch_dir("pls_cdc_src_")
         updates.write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = stream_schema(spark, src, checkpoint_dir)
     stream = spark.readStream.schema(schema).parquet(src)
 
     order = order_cols or [ts_col]
@@ -242,7 +247,7 @@ def stream_stream_join_append_parquet(
         events.write.mode("overwrite").parquet(src)
     else:
         src = src_dir
-    schema = spark.read.parquet(src).schema
+    schema = stream_schema(spark, src, checkpoint_dir)
 
     def side(event_type: str, tag: str) -> DataFrame:
         reader = spark.readStream.schema(schema)
@@ -400,7 +405,7 @@ def minhash_index_stream(
             for f in futs:
                 f.result()
 
-    schema = spark.read.parquet(src_dir).schema
+    schema = stream_schema(spark, src_dir, checkpoint_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

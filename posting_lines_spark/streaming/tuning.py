@@ -27,6 +27,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+from posting_lines_spark.session import env_positive_int
+
 _TARGET_BYTES = 1024 * 1024
 _FLOOR = 8
 
@@ -42,20 +44,8 @@ def stream_partitions(spark: SparkSession, src_dir: str) -> int:
     the stateful partition count in the offset log at checkpoint
     creation, so a resumed query keeps its original partitioning and
     this scope is a no-op for it."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env:
-        try:
-            n = int(env)
-        except ValueError as exc:
-            raise ValueError(
-                f"SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer, "
-                f"got {env!r}"
-            ) from exc
-        if n <= 0:
-            raise ValueError(
-                f"SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer, "
-                f"got {n}"
-            )
+    n = env_positive_int("SPARK_GRAFT_STREAM_SHUFFLE")
+    if n is not None:
         return n
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
     total = 0
@@ -72,15 +62,26 @@ def stream_partitions(spark: SparkSession, src_dir: str) -> int:
 
 
 @contextmanager
-def stream_shuffle_scope(spark: SparkSession, src_dir: str):
+def stream_shuffle_scope(spark: SparkSession, src_dir: str, no_data_batches: bool = True):
     """Scope ``spark.sql.shuffle.partitions`` to the stream-sized value
     around a streaming query's start/awaitTermination (the conf is read
     once, at checkpoint creation; queries here run sequentially in one
-    session, and the previous value is always restored)."""
+    session, and the previous values are always restored).
+
+    ``no_data_batches=False`` also turns off Spark's no-data micro-batch
+    for the query. Pass it only for a query whose no-data batch can do
+    nothing: one whose state the watermark can never evict and that emits
+    nothing on a watermark advance (a dedup keyed without its event-time
+    column). Such a batch still loads and commits every state partition."""
     n = stream_partitions(spark, src_dir)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    confs = {"spark.sql.shuffle.partitions": str(n)}
+    if not no_data_batches:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         yield n
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        for k, v in old.items():
+            spark.conf.set(k, v)

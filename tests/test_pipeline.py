@@ -34,6 +34,32 @@ def test_enrich_fills_every_surviving_row(spark):
     assert out.filter("geom IS NULL OR len_m IS NULL OR sog_kt IS NULL").count() == 0
 
 
+def test_enrich_keeps_columns_and_order(spark):
+    """The merged values take the place of len_m/sog_kt/geom: same column
+    names in the same order as the input, and geom is a non-null struct."""
+    state = _state(spark)
+    out = pipeline.enrich_segments(state)
+    assert out.columns == state.columns
+    geom = out.schema["geom"]
+    assert not geom.nullable
+    assert [f.name for f in geom.dataType.fields] == ["srid", "x1", "y1", "x2", "y2"]
+
+
+def test_geom_is_null_on_enriched_output_folds_to_empty(spark):
+    """The plan-size guard (operators/pipeline.py): `geom IS NULL` over the
+    enrichment folds to an empty relation, so no kernel expression is
+    pushed into a predicate."""
+    plan = (
+        pipeline.enrich_segments(_state(spark))
+        .filter("geom IS NULL")
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert plan.lstrip().startswith("LocalRelation <empty>"), plan
+    assert "sqrt" not in plan and "CASE WHEN" not in plan, plan
+
+
 def test_enrich_preserves_processed_rows(spark):
     # segment_id carries duplicates by design (plans/ais.py), so compare
     # the preserved rows as multisets rather than joining on the key.
@@ -127,6 +153,39 @@ def test_stream_enrich_processes_only_delta(spark, tmp_path):
     incremental.enrich_available_now(spark, src, out, ckpt)
     n2 = spark.read.parquet(out).count()
     assert n2 == n1 + second.filter("duration != 0").count()
+
+
+def test_stream_dedup_deltas_emit_each_event_once_in_one_batch_each(spark, tmp_path):
+    """Two deltas whose second re-sends part of the first: the dedup stream
+    emits every event once, and runs ONE micro-batch per delta. Its key
+    (event_id) holds no event-time column, so no state is ever evicted
+    and a no-data batch after each delta would do nothing; every
+    micro-batch writes one file to the checkpoint's commit log."""
+    import os
+
+    from posting_lines_spark.streaming import incremental
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+
+    def land(lo: int, hi: int, times: int) -> None:
+        rows = [(i, i * 60, i % 7) for i in range(lo, hi) for _ in range(times)]
+        spark.createDataFrame(rows, "event_id long, sec long, user_id long").selectExpr(
+            "event_id", "timestamp_seconds(1700000000 + sec) AS ts", "user_id"
+        ).coalesce(1).write.mode("append").parquet(src)
+
+    def delta() -> list:
+        res = incremental.dedup_stream_append_parquet(
+            spark, None, out, ckpt, key_cols=["event_id"], ts_col="ts",
+            src_dir=src,
+        )
+        return [r.event_id for r in res.collect()]
+
+    land(0, 50, 2)  # every event twice
+    assert sorted(delta()) == list(range(50))
+    land(40, 100, 1)  # 40..49 re-sent from the first delta
+    assert sorted(delta()) == list(range(100))
+    commits = [f for f in os.listdir(os.path.join(ckpt, "commits")) if f.isdigit()]
+    assert len(commits) == 2
 
 
 def test_observe_enrich_reports_engine_side_metrics(spark):

@@ -74,3 +74,48 @@ def test_write_jdbc_no_coalesce_by_default():
     write_jdbc(df, "jdbc:x", "t")
     df.coalesce.assert_not_called()
     writer.mode.assert_called_once_with("append")
+
+
+def _job_ids(spark, group: str, body):
+    """Ids of the Spark jobs `body()` starts, via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        body()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_load_table_starts_no_job(spark, tmp_path):
+    """The first read of a table infers its schema (a footer job); a later
+    read of the unchanged table takes the memoized schema and starts none."""
+    from posting_lines_spark.sources import load_table
+
+    spark.range(20).selectExpr("id", "id * 2 AS v").write.parquet(str(tmp_path / "t.parquet"))
+    cold = _job_ids(spark, "schema-memo-cold", lambda: load_table(spark, str(tmp_path), "t"))
+    assert cold, "a cold read infers the schema with a job"
+    df = None
+
+    def warm():
+        nonlocal df
+        df = load_table(spark, str(tmp_path), "t")
+
+    assert _job_ids(spark, "schema-memo-warm", warm) == []
+    assert sorted(r.v for r in df.collect()) == [2 * i for i in range(20)]
+
+
+def test_load_table_sees_rewritten_schema(spark, tmp_path):
+    """Rewriting a table at the same path changes its content stamp, so the
+    memo infers the new schema instead of serving the old one."""
+    from posting_lines_spark.sources import load_table
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(5).selectExpr("id", "id * 2 AS v").write.parquet(path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["id", "v"]
+    spark.range(5).selectExpr("id", "CAST(id AS STRING) AS w", "id * 0.5e0 AS x").write.mode(
+        "overwrite"
+    ).parquet(path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["id", "w", "x"]
+    assert sorted(r.w for r in df.collect()) == [str(i) for i in range(5)]
