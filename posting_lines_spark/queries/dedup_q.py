@@ -60,6 +60,32 @@ SELECT DISTINCT doc_id, unnest({shingle_sql_duck('text')}) AS shingle
 FROM ({NEAR_BASE_DUCK})
 """
 
+
+def _near_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The near-copy corpus, fanned out to every core: a single-file
+    source reads as ONE partition, and the explode-heavy stages after it
+    need all cores (a real cluster gets this from input splits)."""
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    return spark.sql(NEAR_BASE_SPARK).repartition(spark.sparkContext.defaultParallelism)
+
+
+def _near_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct (doc_id, shingle) set of the near-copy corpus — the
+    one front-end of every MinHash-family query. MinHash signatures
+    derive from it too: MIN is duplicate-insensitive, so a signature over
+    the distinct set equals one over the raw explode, and a second
+    explode+md5 pass buys nothing.
+
+    The set sits behind one lazy cut because every caller reads it at
+    least twice (signatures or prefix ranks, then verification). A cut
+    on a subtree with ONE consumer only costs a job: under AQE the cut
+    runs its upstream stages as a separate job and hides the subtree
+    from exchange reuse."""
+    return dedup.shingles(_near_base(spark, sf_dir), "doc_id", "text").localCheckpoint(
+        eager=False
+    )
+
+
 # --- exact dedup ---
 
 EXACT_ORACLE = f"""
@@ -148,25 +174,9 @@ WHERE i.n_common / (za.n_sh + zb.n_sh - i.n_common) >= {JACCARD_T!r}
     "(no all-pairs comparison; hot-bucket skew documented in operators/dedup.py)",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    # single-file sources read as ONE partition; fan out before the
-    # explode-heavy stages so all cores work (a real cluster gets this
-    # for free from input splits)
-    # base feeds two branches (signatures + verification shingles): cut
-    # lineage once so the scan/union/repartition runs once, not twice
-    base = (
-        spark.sql(NEAR_BASE_SPARK)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=False)
-    )
-    # ONE shingle pass feeds both signatures and verification (round-15):
-    # MIN aggregates are duplicate-insensitive, so the signature computed
-    # over the DISTINCT shingle set is identical to the non-distinct
-    # stream's — deriving sig FROM the materialized sh removes the second
-    # explode+md5 pass entirely (p50 3.4 → 2.8 s, row-identical). sig
-    # keeps no lineage cut: the band self-join reuses sig's aggregation
-    # exchange (ReuseExchange), so a cut only added a job.
-    sh = dedup.shingles(base, "doc_id", "text").localCheckpoint(eager=False)
+    sh = _near_shingles(spark, sf_dir)
+    # sig keeps no lineage cut: the band self-join reuses sig's
+    # aggregation exchange (ReuseExchange), so a cut only added a job
     sig = dedup.minhash_signature(sh, "doc_id", NUM_HASHES)
     # hot_width arms boilerplate-bucket salting (output-equivalent blocked
     # self-join) — inert at this SF, load-bearing on skewed real corpora
@@ -201,16 +211,11 @@ def _incremental_oracle() -> str:
     "full MinHash pair set restricted to pairs touching the batch",
 )
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    base = spark.sql(NEAR_BASE_SPARK).repartition(spark.sparkContext.defaultParallelism)
-    # ONE shingle pass (round-15, as in dedup_minhash_lsh): signatures
-    # over the DISTINCT shingle set are identical (MIN is duplicate-
-    # insensitive), so both the index and the batch derive from the same
-    # materialized sh — the id-range filters commute with the explode.
-    # persisted state of the live pipeline: band index + shingle sets of
-    # the already-ingested corpus (storage boundary; localCheckpoint is
-    # the local-mode stand-in, exactly as in dedup_minhash_lsh)
-    sh = dedup.shingles(base, "doc_id", "text").localCheckpoint(eager=False)
+    # the index and the batch both derive from the one shingle set — the
+    # id-range filters commute with the explode
+    sh = _near_shingles(spark, sf_dir)
+    # the band index has one consumer (the probe's build side), so it
+    # stays in the plan; the batch's bands feed both probe and build
     banded_idx = dedup.band_signatures(
         dedup.minhash_signature(
             sh.filter(F.col("doc_id") < 100000), "doc_id", NUM_HASHES
@@ -218,7 +223,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         NUM_HASHES,
         BANDS,
-    ).localCheckpoint(eager=False)
+    )
     banded_new = dedup.band_signatures(
         dedup.minhash_signature(
             sh.filter(F.col("doc_id") >= 100000), "doc_id", NUM_HASHES
@@ -239,6 +244,29 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mechanism is exercised by tests/test_operators.py with a boilerplate
 # corpus)
 NGRAM_DF_CAP = 50
+
+
+def _capped_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id_a, id_b, n_common, n_a, n_b) for every pair sharing a shingle
+    of the df-capped index: the overlap counts both capped measures
+    (Jaccard, containment) are computed from. The capped set is read
+    three times (two self-join sides, sizes), hence its cut."""
+    sh = dedup.stop_shingle_cap(
+        dedup.shingles(_near_base(spark, sf_dir), "doc_id", "text"), "doc_id", NGRAM_DF_CAP
+    ).localCheckpoint(eager=False)
+    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
+    inter = (
+        a.join(b, "shingle")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    return inter.join(
+        sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a")), "id_a"
+    ).join(sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
+
 
 NGRAM_ORACLE = f"""
 WITH sh0 AS ({_SH_DUCK}),
@@ -269,23 +297,8 @@ WHERE i.n_common / (za.n_sh + zb.n_sh - i.n_common) >= {JACCARD_T!r}
     "(exact given the capped shingle universe; cap mirrored in the oracle)",
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    base = spark.sql(NEAR_BASE_SPARK).repartition(spark.sparkContext.defaultParallelism)
-    sh = dedup.stop_shingle_cap(
-        dedup.shingles(base, "doc_id", "text"), "doc_id", NGRAM_DF_CAP
-    ).localCheckpoint(eager=False)
-    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     return (
-        inter.join(sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
+        _capped_overlap(spark, sf_dir)
         .withColumn("jaccard", F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")))
         .filter(F.col("jaccard") >= JACCARD_T)
         .select("id_a", "id_b", "jaccard")
@@ -521,9 +534,7 @@ WHERE i.n_common / (za.n_sh + zb.n_sh - i.n_common) >= {JACCARD_T!r}
     "in tests",
 )
 def dedup_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    base = spark.sql(NEAR_BASE_SPARK).repartition(spark.sparkContext.defaultParallelism)
-    sh = dedup.shingles(base, "doc_id", "text").localCheckpoint(eager=False)
+    sh = _near_shingles(spark, sf_dir)
     cand = dedup.prefix_filter_candidates(sh, "doc_id", JACCARD_T)
     return (
         dedup.jaccard_verify(cand, sh, "doc_id", JACCARD_T)
@@ -563,8 +574,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
     "join (output provably identical to the oracle's brute-force all-pairs)",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    base = spark.sql(NEAR_BASE_SPARK).repartition(spark.sparkContext.defaultParallelism)
+    base = _near_base(spark, sf_dir)
     # re-spread the signature after its aggregate: AQE coalesces the tiny
     # post-agg output to ONE partition, and the checkpoint freezes that —
     # the downstream band explode + hamming probe (CPU-dense, broadcast
@@ -614,23 +624,8 @@ WHERE i.n_common / least(za.n_sh, zb.n_sh) >= {CONTAIN_T!r}
     "copies whose symmetric Jaccard falls below threshold",
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    base = spark.sql(NEAR_BASE_SPARK).repartition(spark.sparkContext.defaultParallelism)
-    sh = dedup.stop_shingle_cap(
-        dedup.shingles(base, "doc_id", "text"), "doc_id", NGRAM_DF_CAP
-    ).localCheckpoint(eager=False)
-    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     return (
-        inter.join(sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
+        _capped_overlap(spark, sf_dir)
         .withColumn("containment", F.col("n_common") / F.least("n_a", "n_b"))
         .filter(F.col("containment") >= CONTAIN_T)
         .select("id_a", "id_b", "containment")
@@ -818,16 +813,9 @@ JOIN sizes zb ON zb.doc_id = m.id_b
     "on a new corpus; candidate-bounded cost, two signature rejoins",
 )
 def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    base = (
-        spark.sql(NEAR_BASE_SPARK)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=False)
-    )
-    sig = dedup.minhash_signature(
-        dedup.shingles(base, "doc_id", "text", distinct=False), "doc_id", NUM_HASHES
-    ).localCheckpoint(eager=False)
-    sh = dedup.shingles(base, "doc_id", "text").localCheckpoint(eager=False)
+    sh = _near_shingles(spark, sf_dir)
+    # sig is read three times (banding, both rejoin sides)
+    sig = dedup.minhash_signature(sh, "doc_id", NUM_HASHES).localCheckpoint(eager=False)
     pairs = dedup.lsh_candidate_pairs(sig, "doc_id", NUM_HASHES, BANDS, hot_width=256)
     # threshold 0.0: audit EVERY candidate with a non-empty intersection
     # (inner-join semantics on both engines drop zero-common pairs)
@@ -1081,16 +1069,9 @@ CROSS JOIN tot x
 def dedup_lsh_band_sweep(
     spark: SparkSession, sf_dir: str, cap: int | None = SWEEP_CANDIDATE_CAP
 ) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    base = (
-        spark.sql(NEAR_BASE_SPARK)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=False)
-    )
-    sig = dedup.minhash_signature(
-        dedup.shingles(base, "doc_id", "text", distinct=False), "doc_id", NUM_HASHES
-    ).localCheckpoint(eager=False)
-    sh = dedup.shingles(base, "doc_id", "text").localCheckpoint(eager=False)
+    sh = _near_shingles(spark, sf_dir)
+    # sig has one consumer (the band explode below), so no cut
+    sig = dedup.minhash_signature(sh, "doc_id", NUM_HASHES)
     # ALL 24 (cfg, band) keys from ONE projection + explode — the
     # union-of-lsh_candidate_pairs form planned 24 scan branches and
     # ~180 exchanges (the dq_referential_integrity lesson); this shape

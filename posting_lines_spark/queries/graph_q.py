@@ -12,15 +12,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from posting_lines_spark.operators import dedup, graph
+from posting_lines_spark.operators import graph
 from posting_lines_spark.queries import register
-from posting_lines_spark.queries.dedup_q import (
-    BANDS,
-    JACCARD_T,
-    NEAR_BASE_SPARK,
-    NUM_HASHES,
-    _minhash_oracle,
-)
+from posting_lines_spark.queries.dedup_q import _minhash_oracle, dedup_minhash_lsh
 from posting_lines_spark.sources import load_table
 
 # verified near-dup pairs (DuckDB): the input of every pair-graph oracle
@@ -57,21 +51,7 @@ def _spark_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
 
     def write_pairs(path: str) -> None:
-        # base feeds two branches (signatures + verification shingles):
-        # cut lineage once so the scan/union/repartition runs once
-        base = (
-            spark.sql(NEAR_BASE_SPARK)
-            .repartition(spark.sparkContext.defaultParallelism)
-            .localCheckpoint(eager=False)
-        )
-        sig = dedup.minhash_signature(
-            dedup.shingles(base, "doc_id", "text", distinct=False), "doc_id", NUM_HASHES
-        ).localCheckpoint(eager=False)
-        sh = dedup.shingles(base, "doc_id", "text").localCheckpoint(eager=False)
-        cand = dedup.lsh_candidate_pairs(sig, "doc_id", NUM_HASHES, BANDS, hot_width=256)
-        dedup.jaccard_verify(cand, sh, "doc_id", JACCARD_T).write.mode(
-            "overwrite"
-        ).parquet(path)
+        dedup_minhash_lsh(spark, sf_dir).write.mode("overwrite").parquet(path)
 
     from posting_lines_spark.fixtures import cached_fixture
 

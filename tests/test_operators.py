@@ -151,6 +151,42 @@ class TestDedup:
         )
         assert uncapped_cands == 45 + 1
 
+    @pytest.mark.parametrize(
+        "query",
+        [
+            "dedup_minhash_lsh",
+            "dedup_incremental",
+            "dedup_ppjoin",
+            "dedup_minhash_estimate_audit",
+            "dedup_lsh_band_sweep",
+            "near_dup_pairs_writer",
+        ],
+    )
+    def test_minhash_family_shingles_once(self, spark, monkeypatch, query):
+        # every MinHash-family query reads ONE distinct shingle set:
+        # signatures derive from it (MIN is duplicate-insensitive), so a
+        # second explode+md5 pass would be wasted work
+        from posting_lines_spark import fixtures
+        from posting_lines_spark.queries import load_all
+        from posting_lines_spark.queries.graph_q import _spark_pairs
+        from tests.conftest import SF0001
+
+        calls = []
+        real = dedup.shingles
+
+        def counted(*args, **kwargs):
+            calls.append(kwargs.get("distinct", True))
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(dedup, "shingles", counted)
+        if query == "near_dup_pairs_writer":
+            # an empty fixture cache forces the pair table to be rewritten
+            monkeypatch.setattr(fixtures, "_CACHE", {})
+            _spark_pairs(spark, SF0001)
+        else:
+            load_all()[query].fn(spark, SF0001)
+        assert calls == [True]
+
     def test_simhash_long_doc_matches_unpacked_python(self, spark):
         # 1500 distinct tokens/doc overflowed the old 10-bit vote lanes;
         # verify the packed 20-bit computation against an unpacked replay.
