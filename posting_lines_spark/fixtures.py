@@ -20,7 +20,12 @@ import atexit
 import os
 import shutil
 import tempfile
+import time
 from collections.abc import Callable
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 _SCRATCH: list[str] = []
 _CACHE: dict[tuple, str] = {}
@@ -62,6 +67,25 @@ def force_mtime_order(path: str, seen: set[str], slice_idx: int, base: float) ->
             seen.add(fn)
             t = base + slice_idx
             os.utime(os.path.join(path, fn), (t, t))
+
+
+def write_slices(sliced: DataFrame, path: str, n: int) -> None:
+    """Append `sliced` to `path` as one file per value 0..n-1 of its
+    `slice` column (the column itself is dropped), in slice order, with
+    mtimes pinned by `force_mtime_order`: a file stream reading one file
+    per trigger replays the slices as n micro-batches in slice order. An
+    empty slice still writes one (empty) file."""
+    seen: set[str] = set()
+    base = time.time()
+    for i in range(n):
+        (
+            sliced.filter(f"slice = {i}")
+            .drop("slice")
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(path)
+        )
+        force_mtime_order(path, seen, i, base)
 
 
 def scratch_dir(prefix: str) -> str:

@@ -182,14 +182,16 @@ GROUP BY 1, 2
     "availableNow); oracle replays the window as epoch bucketing",
 )
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from posting_lines_spark.streaming.harness import drain
 
     events = load_table(spark, sf_dir, "events")
     src = scratch_dir(prefix="pls_tumb_src_")
     events.write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
+    name = f"tumbling_{abs(hash(src)) % 10**8}"
+    drain(
+        spark, src, None,
+        lambda r: r.parquet(src)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), F.expr(davg_expr("value")).alias("avg_value"))
         .select(
@@ -198,19 +200,10 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "avg_value",
         )
+        .writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(name),
     )
-    name = f"tumbling_{abs(hash(src)) % 10**8}"
-    from posting_lines_spark.streaming.tuning import stream_shuffle_scope
-
-    with stream_shuffle_scope(spark, src):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return spark.table(name)
 
 

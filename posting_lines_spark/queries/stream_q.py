@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from posting_lines_spark.fixtures import cached_fixture, force_mtime_order, scratch_dir
+from posting_lines_spark.fixtures import cached_fixture, scratch_dir, write_slices
 from posting_lines_spark.functions.hashing import md5_int_duck, md5_int_spark
 from posting_lines_spark.operators import multimodal
 from posting_lines_spark.queries import register
@@ -22,6 +22,14 @@ from posting_lines_spark.queries.parity import dsum_expr
 from posting_lines_spark.queries.pipeline_q import segments_state_path
 from posting_lines_spark.sources import load_table
 from posting_lines_spark.streaming import incremental
+from posting_lines_spark.streaming.harness import (
+    all_epochs,
+    drain,
+    drain_batches,
+    last_epoch,
+    prior_state,
+    write_epoch,
+)
 
 
 def _events_src(spark: SparkSession, sf_dir: str) -> str:
@@ -50,7 +58,7 @@ def stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = scratch_dir("pls_seg_out_")
     ckpt = scratch_dir("pls_seg_ckpt_")
     incremental.enrich_available_now(spark, src, out, ckpt)
-    res = spark.read.parquet(out)
+    res = all_epochs(spark, out)
     return res.select(
         "segment_id",
         "duration",
@@ -462,9 +470,9 @@ SQH_ORACLE = _sqh_tail(
     "stream_quantile_hist",
     oracle=SQH_ORACLE,
     description="streaming mergeable quantile sketch: each micro-batch "
-    "(maxFilesPerTrigger=1 availableNow drain) appends its PARTIAL "
-    "histogram to the sink — no complete-mode state — and the query-time "
-    "merge is plain addition, so quantiles equal the batch computation "
+    "(maxFilesPerTrigger=1 availableNow drain) writes its PARTIAL "
+    "histogram to its own epoch directory — no complete-mode state — "
+    "and the query-time merge is plain addition, so quantiles equal the batch computation "
     "regardless of batching; same ≤ bin-width guarantee checked in-query "
     "against the exact rank-based order statistic at ceil(p·n)",
 )
@@ -482,28 +490,17 @@ def stream_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = scratch_dir("pls_sqh_out_")
     ckpt = scratch_dir("pls_sqh_ckpt_")
-    schema = spark.read.parquet(src).schema
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
+        partial = (
             batch_df.selectExpr(f"{_SQH_BIN} AS bin")
             .groupBy("bin")
             .agg(F.count(F.lit(1)).alias("n"))
-            .write.mode("append")
-            .parquet(out)
         )
+        write_epoch(partial, out, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    spark.read.parquet(out).createOrReplaceTempView("sqh_partials")
+    drain_batches(spark, src, ckpt, per_batch)
+    all_epochs(spark, out).createOrReplaceTempView("sqh_partials")
     events.createOrReplaceTempView("events")
     return spark.sql(
         _sqh_tail(
@@ -534,10 +531,7 @@ def _dedup_stream_src(spark: SparkSession, sf_dir: str) -> str:
     def write(p: str) -> None:
         load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
         base = spark.sql(NEAR_BASE_SPARK)
-        for k in range(4):
-            base.filter(F.col("doc_id") % 4 == k).coalesce(1).write.mode(
-                "append"
-            ).parquet(p)
+        write_slices(base.withColumn("slice", F.col("doc_id") % 4), p, 4)
 
     return cached_fixture("dedup_idx_src", sf_dir, write, "pls_dedup_idx_src_")
 
@@ -687,12 +681,11 @@ def stream_psi_drift(
         )
     out = out or scratch_dir("pls_psi_out_")
     ckpt = ckpt or scratch_dir("pls_psi_ckpt_")
-    schema = spark.read.parquet(src).schema
 
     from posting_lines_spark.queries.schema_q import PSI_BINS, PSI_SPLIT, PSI_WIDTH
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
+        partial = (
             batch_df.selectExpr(
                 f"CAST(least(floor(o_totalprice / {PSI_WIDTH!r}e0), {PSI_BINS - 1})"
                 " AS BIGINT) AS bin",
@@ -703,23 +696,11 @@ def stream_psi_drift(
                 F.sum("ia").cast("bigint").alias("n_a"),
                 (F.count(F.lit(1)) - F.sum("ia")).cast("bigint").alias("n_b"),
             )
-            # per-epoch dir + overwrite: an at-least-once epoch REPLAY
-            # rewrites identical rows instead of double-appending them
-            .write.mode("overwrite")
-            .parquet(f"{out}/e{epoch_id}")
         )
+        write_epoch(partial, out, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    spark.read.parquet(f"{out}/e*").createOrReplaceTempView("psi_partials")
+    drain_batches(spark, src, ckpt, per_batch)
+    all_epochs(spark, out).createOrReplaceTempView("psi_partials")
     merged = (
         "SELECT bin, CAST(sum(n_a) AS BIGINT) AS n_a, "
         "CAST(sum(n_b) AS BIGINT) AS n_b FROM psi_partials GROUP BY bin"
@@ -742,6 +723,28 @@ register(
     "merged partials is bit-identical to the batch statistic at any "
     "batching; oracle = the batch PSI SQL, unchanged",
 )(stream_psi_drift)
+
+
+# --- time-sliced event sources for the order-sensitive twins ---
+# The pattern, EWMA, attribution and session twins carry state across
+# micro-batches that must arrive in event-time order, so their sources
+# hold the events as 4 files, one per 8-day bucket from the first event
+# day, replayed one file per trigger in slice order (`write_slices` pins
+# the file mtimes).
+
+
+def _day_slices(events: DataFrame, *cols: str) -> DataFrame:
+    """`cols` of `events` plus their `slice`: the event day's 8-day
+    bucket from the first day. least(..., 3): a span beyond 32 days
+    lands in the final slice instead of silently dropping events."""
+    day0 = events.selectExpr(
+        "CAST(floor(min(unix_micros(ts)) / 86400000000.0e0) AS BIGINT) AS d"
+    ).collect()[0].d
+    return events.selectExpr(
+        *cols,
+        f"CAST(least(floor((floor(unix_micros(ts) / 86400000000.0e0) - {day0})"
+        " / 8), 3) AS INT) AS slice",
+    )
 
 
 # --- streaming row-pattern matching with cross-batch carry state ---
@@ -769,58 +772,25 @@ register(
 
 
 def stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from posting_lines_spark.queries.analytics_q import PATTERN_SQL, _pattern_sql
 
     events = load_table(spark, sf_dir, "events")
-
-    def write_slices(p: str) -> None:
-        # 4 sequential time-slice appends → mtime-ordered files → the
-        # availableNow drain (maxFilesPerTrigger=1) replays time order;
-        # force_mtime_order pins the order even on coarse-mtime
-        # filesystems (a tie would replay slices out of order and break
-        # the cross-batch pattern carry)
-        import time
-
-        day0 = events.selectExpr(
-            "CAST(floor(min(unix_micros(ts)) / 86400000000.0e0) AS BIGINT) AS d"
-        ).collect()[0].d
-        sliced = events.selectExpr(
-            "user_id", "ts", "event_type",
-            # least(..., 3): a regenerated span beyond 32 days lands in
-            # the final slice instead of silently dropping events
-            f"CAST(least(floor((floor(unix_micros(ts) / 86400000000.0e0) - {day0})"
-            " / 8), 3) AS INT) AS slice",
-        )
-        seen: set[str] = set()
-        base = time.time()
-        for i in range(4):
-            (
-                sliced.filter(F.col("slice") == i)
-                .drop("slice")
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(p)
-            )
-            force_mtime_order(p, seen, i, base)
-
-    src = cached_fixture("pm_events_src", sf_dir, write_slices, "pls_pm_src_")
+    src = cached_fixture(
+        "pm_events_src",
+        sf_dir,
+        lambda p: write_slices(_day_slices(events, "user_id", "ts", "event_type"), p, 4),
+        "pls_pm_src_",
+    )
     state_root = scratch_dir("pls_pm_state_")
     out_root = scratch_dir("pls_pm_out_")
     ckpt = scratch_dir("pls_pm_ckpt_")
-    schema = spark.read.parquet(src).schema
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession
-        prev = f"{state_root}/e{epoch_id - 1}"
-        if os.path.isdir(prev):
-            state = s.read.parquet(prev)
-        else:
-            state = s.createDataFrame(
-                [],
-                "user_id long, k_views long, has_click boolean, ts_start timestamp_ntz",
-            )
+        state = prior_state(
+            s, state_root, epoch_id,
+            "user_id long, k_views long, has_click boolean, ts_start timestamp_ntz",
+        )
         synth = state.selectExpr(
             "user_id",
             "explode(sequence(1, k_views + CASE WHEN has_click THEN 1 ELSE 0 END)) AS i",
@@ -833,9 +803,7 @@ def stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         combined = synth.unionByName(batch_df.select("user_id", "ts", "event_type"))
         combined.createOrReplaceTempView("pm_combined")
         # completed matches (carry ⊕ batch) — the unchanged batch matcher
-        s.sql(_pattern_sql("pm_combined")).write.mode("overwrite").parquet(
-            f"{out_root}/e{epoch_id}"
-        )
+        write_epoch(s.sql(_pattern_sql("pm_combined")), out_root, epoch_id)
         # re-derive the carry: regexp over the per-user code string
         new_state = s.sql(
             """
@@ -865,21 +833,10 @@ FROM carry
 WHERE length(suf) - CASE WHEN suf LIKE '%c' THEN 1 ELSE 0 END >= 1
 """
         )
-        new_state.write.mode("overwrite").parquet(f"{state_root}/e{epoch_id}")
+        write_epoch(new_state, state_root, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.read.parquet(f"{out_root}/e*")
-    )
+    drain_batches(spark, src, ckpt, per_batch)
+    return all_epochs(spark, out_root)
 
 
 def _stream_pm_oracle() -> str:
@@ -915,33 +872,14 @@ register(
 
 
 def _ewma_write_slices(events: DataFrame):
-    def write_slices(p: str) -> None:
-        # force_mtime_order: the EWMA carry is order-sensitive — an
-        # mtime tie between appends could replay slices out of order
-        import time
-
-        day0 = events.selectExpr(
-            "CAST(floor(min(unix_micros(ts)) / 86400000000.0e0) AS BIGINT) AS d"
-        ).collect()[0].d
-        sliced = events.selectExpr(
-            "event_type", "value",
+    return lambda p: write_slices(
+        _day_slices(
+            events, "event_type", "value",
             "CAST(floor(unix_micros(ts) / 86400000000.0e0) AS BIGINT) AS day",
-            f"CAST(least(floor((floor(unix_micros(ts) / 86400000000.0e0) - {day0})"
-            " / 8), 3) AS INT) AS slice",
-        )
-        seen: set[str] = set()
-        base = time.time()
-        for i in range(4):
-            (
-                sliced.filter(F.col("slice") == i)
-                .drop("slice")
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(p)
-            )
-            force_mtime_order(p, seen, i, base)
-
-    return write_slices
+        ),
+        p,
+        4,
+    )
 
 
 def stream_ewma(
@@ -955,8 +893,6 @@ def stream_ewma(
     # src/state_root/ckpt are injectable so the restart-recovery test
     # (tests/test_round10.py) can drive THIS pipeline across a
     # kill/resume instead of a reimplementation
-    import os
-
     from posting_lines_spark.queries.analytics_q import (
         _EWMA_FOLD_SPARK,
         _EWMA_SERIES_SPARK,
@@ -972,15 +908,12 @@ def stream_ewma(
         )
     state_root = state_root or scratch_dir("pls_ewma_state_")
     ckpt = ckpt or scratch_dir("pls_ewma_ckpt_")
-    schema = spark.read.parquet(src).schema
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession
-        prev = f"{state_root}/e{epoch_id - 1}"
-        if os.path.isdir(prev):
-            state = s.read.parquet(prev)
-        else:
-            state = s.createDataFrame([], "event_type string, n_days long, ewma double")
+        state = prior_state(
+            s, state_root, epoch_id, "event_type string, n_days long, ewma double"
+        )
         series = (
             batch_df.groupBy("event_type", "day")
             .agg(F.expr(davg_expr("value")).alias("v"))
@@ -1006,25 +939,10 @@ def stream_ewma(
                   + {1 - EWMA_ALPHA!r}e0 * acc AS DOUBLE))
             END AS ewma""",
         )
-        new_state.write.mode("overwrite").parquet(f"{state_root}/e{epoch_id}")
+        write_epoch(new_state, state_root, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    last = max(
-        int(d[1:]) for d in os.listdir(state_root) if d.startswith("e")
-    )
-    return (
-        spark.read.parquet(f"{state_root}/e{last}")
-        .select("event_type", "n_days", "ewma")
-    )
+    drain_batches(spark, src, ckpt, per_batch)
+    return last_epoch(spark, state_root).select("event_type", "n_days", "ewma")
 
 
 def _stream_ewma_oracle() -> str:
@@ -1073,38 +991,12 @@ def _attr_write_slices(events: DataFrame):
     """Writer for the 4-slice, mtime-ordered attribution stream source —
     shared by the foreachBatch and applyInPandasWithState twins (same
     cached_fixture key → one materialization per process)."""
-
-    def write_slices(p: str) -> None:
-        day0 = events.selectExpr(
-            "CAST(floor(min(unix_micros(ts)) / 86400000000.0e0) AS BIGINT) AS d"
-        ).collect()[0].d
-        sliced = events.selectExpr(
-            "event_id", "ts", "user_id", "event_type", "value",
-            f"CAST(least(floor((floor(unix_micros(ts) / 86400000000.0e0) - {day0})"
-            " / 8), 3) AS INT) AS slice",
-        )
-        import time
-
-        seen: set[str] = set()
-        base = time.time()
-        for i in range(4):
-            (
-                sliced.filter(F.col("slice") == i)
-                .drop("slice")
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(p)
-            )
-            # mtime tie → out-of-order drain → corrupted first/last-
-            # touch carry (round-4 advice); pin slice order explicitly
-            force_mtime_order(p, seen, i, base)
-
-    return write_slices
+    return lambda p: write_slices(
+        _day_slices(events, "event_id", "ts", "user_id", "event_type", "value"), p, 4
+    )
 
 
 def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from pyspark.sql import Window
 
     events = load_table(spark, sf_dir, "events")
@@ -1112,23 +1004,19 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "attr_events_src", sf_dir, _attr_write_slices(events), "pls_attr_src_"
     )
     state_root = scratch_dir("pls_attr_state_")
+    users_root, ledger_root = f"{state_root}/users", f"{state_root}/ledger"
     ckpt = scratch_dir("pls_attr_ckpt_")
-    schema = spark.read.parquet(src).schema
     touch = "CASE WHEN event_type IN ('view','click','signup') THEN event_type END"
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession
-        prev = f"{state_root}/e{epoch_id - 1}"
-        if os.path.isdir(prev):
-            ustate = s.read.parquet(f"{prev}/users")
-            ledger = s.read.parquet(f"{prev}/ledger")
-        else:
-            ustate = s.createDataFrame(
-                [], "user_id long, st_first string, st_last string"
-            )
-            ledger = s.createDataFrame(
-                [], "model string, channel string, n long, rev decimal(38,6)"
-            )
+        ustate = prior_state(
+            s, users_root, epoch_id, "user_id long, st_first string, st_last string"
+        )
+        ledger = prior_state(
+            s, ledger_root, epoch_id,
+            "model string, channel string, n long, rev decimal(38,6)",
+        )
         w = (
             Window.partitionBy("user_id")
             .orderBy("ts", "event_id")
@@ -1193,22 +1081,12 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce("b_last", "st_last").alias("st_last"),
             )
         )
-        new_ustate.write.mode("overwrite").parquet(f"{state_root}/e{epoch_id}/users")
-        new_ledger.write.mode("overwrite").parquet(f"{state_root}/e{epoch_id}/ledger")
+        write_epoch(new_ustate, users_root, epoch_id)
+        write_epoch(new_ledger, ledger_root, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    last = max(int(d[1:]) for d in os.listdir(state_root) if d.startswith("e"))
+    drain_batches(spark, src, ckpt, per_batch)
     return (
-        spark.read.parquet(f"{state_root}/e{last}/ledger")
+        last_epoch(spark, ledger_root)
         .select(
             "model",
             "channel",
@@ -1300,10 +1178,9 @@ def _attr_stateful_run(spark: SparkSession, sf_dir: str):
     )
     out = scratch_dir("pls_attrst_out_")
     ckpt = scratch_dir("pls_attrst_ckpt_")
-    schema = spark.read.parquet(src).schema
-    credits = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
+    q = drain(
+        spark, src, ckpt,
+        lambda r: r.option("maxFilesPerTrigger", 1)
         .parquet(src)
         .groupBy("user_id")
         .applyInPandasWithState(
@@ -1313,22 +1190,12 @@ def _attr_stateful_run(spark: SparkSession, sf_dir: str):
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
+        .writeStream.format("parquet")
+        .option("path", out),
     )
-    from posting_lines_spark.streaming.tuning import stream_shuffle_scope
-
-    with stream_shuffle_scope(spark, src):
-        q = (
-            credits.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    progress = [p for p in q.recentProgress]
     return spark.read.schema(
         "eff_first string, eff_last string, value double"
-    ).parquet(out), progress
+    ).parquet(out), list(q.recentProgress)
 
 
 def _attr_ledger(purch: DataFrame) -> DataFrame:
@@ -1393,25 +1260,9 @@ register(
 
 
 def _hh_write_slices(docs: DataFrame):
-    def write_slices(p: str) -> None:
-        import time
-
-        sliced = docs.selectExpr(
-            "doc_id", "text", "CAST(doc_id % 4 AS INT) AS slice"
-        )
-        seen: set[str] = set()
-        base = time.time()
-        for i in range(4):
-            (
-                sliced.filter(F.col("slice") == i)
-                .drop("slice")
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(p)
-            )
-            force_mtime_order(p, seen, i, base)
-
-    return write_slices
+    return lambda p: write_slices(
+        docs.selectExpr("doc_id", "text", "CAST(doc_id % 4 AS INT) AS slice"), p, 4
+    )
 
 
 def stream_heavy_hitters(
@@ -1423,8 +1274,6 @@ def stream_heavy_hitters(
     ckpt: str | None = None,
 ) -> DataFrame:
     # src/state_root/ckpt injectable for the restart-recovery test
-    import os
-
     from posting_lines_spark.queries.sketch_q import HH_K
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1434,7 +1283,6 @@ def stream_heavy_hitters(
         )
     state_root = state_root or scratch_dir("pls_hh_state_")
     ckpt = ckpt or scratch_dir("pls_hh_ckpt_")
-    schema = spark.read.parquet(src).schema
 
     def grams_of(df: DataFrame) -> DataFrame:
         return (
@@ -1445,11 +1293,7 @@ def stream_heavy_hitters(
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession
-        prev = f"{state_root}/e{epoch_id - 1}"
-        if os.path.isdir(prev):
-            state = s.read.parquet(prev)
-        else:
-            state = s.createDataFrame([], "k string, w long")
+        state = prior_state(s, state_root, epoch_id, "k string, w long")
         bc = grams_of(batch_df).groupBy("k").agg(
             F.count(F.lit(1)).cast("long").alias("c")
         )
@@ -1466,22 +1310,10 @@ def stream_heavy_hitters(
                 .collect()[0][0]
             )
             merged = merged.selectExpr("k", f"w - {kth} AS w").filter("w > 0")
-        merged.write.mode("overwrite").parquet(f"{state_root}/e{epoch_id}")
+        write_epoch(merged, state_root, epoch_id)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    last = max(int(d[1:]) for d in os.listdir(state_root) if d.startswith("e"))
-    cands = spark.read.parquet(f"{state_root}/e{last}").select(
-        F.col("k").alias("ck")
-    )
+    drain_batches(spark, src, ckpt, per_batch)
+    cands = last_epoch(spark, state_root).select(F.col("k").alias("ck"))
     toks = grams_of(spark.read.parquet(src))
     tot = toks.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
     return (
@@ -1656,39 +1488,20 @@ register(
 
 def _sess_write_slices(events: DataFrame):
     def write(p: str) -> None:
-        import time
-
-        stats = events.selectExpr(
-            "CAST(floor(min(unix_micros(ts)) / 86400000000.0e0) AS BIGINT) AS d",
-            "CAST(max(unix_micros(ts)) AS BIGINT) AS mx",
-        ).collect()[0]
-        day0, maxus = stats.d, stats.mx
-        sliced = events.selectExpr(
-            "event_id", "ts", "user_id", "event_type", "value",
-            f"CAST(least(floor((floor(unix_micros(ts) / 86400000000.0e0) - {day0})"
-            " / 8), 3) AS INT) AS slice",
+        maxus = events.selectExpr("CAST(max(unix_micros(ts)) AS BIGINT)").collect()[0][0]
+        # flush sentinels, slices 4 and 5 (10 and 11 days past the last
+        # event): the first advances the watermark, the second fires the
+        # timers
+        flush = events.sparkSession.sql(
+            "SELECT CAST(-1 AS BIGINT) AS event_id,"
+            f" timestamp_micros({maxus} + d * 86400000000) AS ts,"
+            " CAST(-1 AS BIGINT) AS user_id,"
+            " 'flush' AS event_type, CAST(0.0 AS DOUBLE) AS value,"
+            " CAST(d - 6 AS INT) AS slice"
+            " FROM VALUES (10), (11) AS t(d)"
         )
-        seen: set[str] = set()
-        base = time.time()
-        for i in range(4):
-            (
-                sliced.filter(F.col("slice") == i)
-                .drop("slice")
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(p)
-            )
-            force_mtime_order(p, seen, i, base)
-        # flush sentinels: advance the watermark, then fire the timers
-        spark = events.sparkSession
-        for i, off in enumerate((10 * 86400_000_000, 11 * 86400_000_000)):
-            spark.sql(
-                f"SELECT CAST(-1 AS BIGINT) AS event_id,"
-                f" timestamp_micros({maxus + off}) AS ts,"
-                f" CAST(-1 AS BIGINT) AS user_id,"
-                f" 'flush' AS event_type, CAST(0.0 AS DOUBLE) AS value"
-            ).coalesce(1).write.mode("append").parquet(p)
-            force_mtime_order(p, seen, 4 + i, base)
+        sliced = _day_slices(events, "event_id", "ts", "user_id", "event_type", "value")
+        write_slices(sliced.unionByName(flush), p, 6)
 
     return write
 

@@ -52,15 +52,20 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def stream_schema(spark: SparkSession, src_dir: str, checkpoint_dir: str) -> StructType:
-    """Schema of the parquet file stream over `src_dir`, inferred once per
+def stream_schema(
+    spark: SparkSession, src_dir: str, checkpoint_dir: str | None
+) -> StructType:
+    """Schema of the parquet file stream over `src_dir`, fixed once per
     checkpoint: a file stream's schema is fixed for the life of its
     checkpoint, so later runs from it reuse the schema even though every
     new file changes the source's stamp. A fresh checkpoint (no offset
-    log yet, or a non-local one) infers again."""
+    log yet, or a non-local one), or none at all, takes the schema of
+    the source's current content from `read_parquet`'s memo."""
+    if checkpoint_dir is None:
+        return read_parquet(spark, src_dir).schema
     key = ("stream", src_dir, checkpoint_dir)
     if key not in _SCHEMAS or not os.path.isdir(os.path.join(checkpoint_dir, "offsets")):
-        _SCHEMAS[key] = spark.read.parquet(src_dir).schema
+        _SCHEMAS[key] = read_parquet(spark, src_dir).schema
     return _SCHEMAS[key]
 
 

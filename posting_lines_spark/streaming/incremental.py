@@ -12,19 +12,30 @@ watermark — the streaming twin of the batch gaps-and-islands query
 (queries/windows_q.py::window_sessionize).
 
 Scale notes: availableNow batches respect maxFilesPerTrigger for bounded
-memory; checkpoints make re-runs exactly-once into idempotent sinks
-(dynamic partition overwrite pairs with per-day partitioning, P7).
+memory. Every twin drains through `harness.drain`. Spark re-runs an
+epoch whose commit it did not record, so each `foreachBatch` sink
+overwrites only its own epoch's directory (`harness.write_epoch`) and
+reads only earlier epochs: a replayed epoch rewrites identical rows.
+The file sinks (append mode) are exactly-once through their own commit
+log.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamReader
 
 from posting_lines_spark.fixtures import scratch_dir
 from posting_lines_spark.operators.pipeline import enrich_segments
 from posting_lines_spark.sources import stream_schema
-from posting_lines_spark.streaming.tuning import stream_shuffle_scope
+from posting_lines_spark.streaming.harness import (
+    all_epochs,
+    drain,
+    drain_batches,
+    prior_log,
+    write_epoch,
+)
 
 
 def enrich_available_now(
@@ -32,20 +43,16 @@ def enrich_available_now(
 ) -> None:
     """Run the batch enrichment as an incremental stream over a parquet
     directory: drain-all-available, then stop. Re-running after new files
-    arrive processes only the delta (checkpoint-tracked)."""
-    schema = stream_schema(spark, source_dir, checkpoint_dir)
-    stream = spark.readStream.schema(schema).parquet(source_dir)
+    arrive processes only the delta (checkpoint-tracked). Each epoch's
+    rows land in `out_dir/e{epoch}`; read `out_dir` recursively."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        enrich_segments(batch_df).write.mode("append").parquet(out_dir)
+        write_epoch(enrich_segments(batch_df), out_dir, epoch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, source_dir, checkpoint_dir,
+        lambda r: r.parquet(source_dir).writeStream.foreachBatch(sink),
     )
-    q.awaitTermination()
 
 
 def dedup_stream_append_parquet(
@@ -74,21 +81,17 @@ def dedup_stream_append_parquet(
     else:
         src = scratch_dir("pls_dedup_src_")
         events.write.mode("overwrite").parquet(src)
-    schema = stream_schema(spark, src, checkpoint_dir)
-    stream = spark.readStream.schema(schema).parquet(src)
-    with stream_shuffle_scope(spark, src, no_data_batches=ts_col in key_cols):
-        q = (
-            stream.withWatermark(ts_col, watermark)
-            .dropDuplicates(key_cols)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.schema(schema).parquet(out_dir)
+    drain(
+        spark, src, checkpoint_dir,
+        lambda r: r.parquet(src)
+        .withWatermark(ts_col, watermark)
+        .dropDuplicates(key_cols)
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir),
+        no_data_batches=ts_col in key_cols,
+    )
+    return spark.read.schema(stream_schema(spark, src, checkpoint_dir)).parquet(out_dir)
 
 
 def _session_agg(stream: DataFrame, gap: str, watermark: str) -> DataFrame:
@@ -128,19 +131,13 @@ def session_windows_append_parquet(
     else:
         src = scratch_dir("pls_stream_src_")
         events.write.mode("overwrite").parquet(src)
-    schema = stream_schema(spark, src, checkpoint_dir)
-    stream = spark.readStream.schema(schema).parquet(src)
-    with stream_shuffle_scope(spark, src):
-        q = (
-            _session_agg(stream, gap, watermark)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        spark, src, checkpoint_dir,
+        lambda r: _session_agg(r.parquet(src), gap, watermark)
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir),
+    )
     return spark.read.parquet(out_dir)
 
 
@@ -159,9 +156,10 @@ def scd_upsert_available_now(
     """Streaming CDC upsert: a change stream applied to an SCD2 table via
     foreachBatch — the MERGE INTO pattern without a lakehouse format.
     The table lives as VERSIONED parquet snapshots (table_dir/v{n});
-    each batch collapses to latest-per-key (deterministic order), applies
-    scd2_apply against the latest snapshot, and writes the next version —
-    readers never see a half-written table and time travel is free.
+    epoch n collapses its batch to latest-per-key (deterministic order),
+    applies scd2_apply against v{n}, and overwrites v{n+1} — readers
+    never see a half-written table, time travel is free, and a replayed
+    epoch rewrites the same version from the same input.
 
     At scale the same shape holds (Delta/Iceberg would replace the
     versioned-dir bookkeeping with transactional metadata); per-batch
@@ -180,15 +178,7 @@ def scd_upsert_available_now(
     else:
         src = scratch_dir("pls_cdc_src_")
         updates.write.mode("overwrite").parquet(src)
-    schema = stream_schema(spark, src, checkpoint_dir)
-    stream = spark.readStream.schema(schema).parquet(src)
-
     order = order_cols or [ts_col]
-
-    def versions() -> list[int]:
-        return sorted(
-            int(d[1:]) for d in os.listdir(table_dir) if d.startswith("v")
-        )
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         wdw = W.partitionBy(key).orderBy(*[F.col(c).desc() for c in order])
@@ -197,19 +187,16 @@ def scd_upsert_available_now(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        cur_v = versions()[-1]
-        cur = spark.read.parquet(os.path.join(table_dir, f"v{cur_v}"))
+        cur = spark.read.parquet(os.path.join(table_dir, f"v{epoch_id}"))
         new = scd2_apply(cur, latest, key, ts_col, attr_cols)
-        new.write.mode("overwrite").parquet(os.path.join(table_dir, f"v{cur_v + 1}"))
+        new.write.mode("overwrite").parquet(os.path.join(table_dir, f"v{epoch_id + 1}"))
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, src, checkpoint_dir,
+        lambda r: r.parquet(src).writeStream.foreachBatch(apply_batch),
     )
-    q.awaitTermination()
-    return spark.read.parquet(os.path.join(table_dir, f"v{versions()[-1]}"))
+    last = max(int(d[1:]) for d in os.listdir(table_dir) if d.startswith("v"))
+    return spark.read.parquet(os.path.join(table_dir, f"v{last}"))
 
 
 def stream_stream_join_append_parquet(
@@ -247,10 +234,8 @@ def stream_stream_join_append_parquet(
         events.write.mode("overwrite").parquet(src)
     else:
         src = src_dir
-    schema = stream_schema(spark, src, checkpoint_dir)
 
-    def side(event_type: str, tag: str) -> DataFrame:
-        reader = spark.readStream.schema(schema)
+    def side(reader: DataStreamReader, event_type: str, tag: str) -> DataFrame:
         if max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
         return (
@@ -264,51 +249,25 @@ def stream_stream_join_append_parquet(
             .withWatermark(f"ts_{tag}", watermark)
         )
 
-    a, b = side(left_type, "a"), side(right_type, "b")
-    joined = a.join(
-        b,
-        F.expr(f"u_a = u_b AND ts_b >= ts_a AND ts_b <= ts_a + INTERVAL {horizon}"),
-    ).select(
-        F.col("u_a").alias("user_id"),
-        F.col("a_id").alias("left_id"),
-        F.col("b_id").alias("right_id"),
-        (F.unix_micros("ts_b") - F.unix_micros("ts_a")).alias("gap_us"),
+    def joined(reader: DataStreamReader) -> DataFrame:
+        a, b = side(reader, left_type, "a"), side(reader, right_type, "b")
+        return a.join(
+            b,
+            F.expr(f"u_a = u_b AND ts_b >= ts_a AND ts_b <= ts_a + INTERVAL {horizon}"),
+        ).select(
+            F.col("u_a").alias("user_id"),
+            F.col("a_id").alias("left_id"),
+            F.col("b_id").alias("right_id"),
+            (F.unix_micros("ts_b") - F.unix_micros("ts_a")).alias("gap_us"),
+        )
+
+    drain(
+        spark, src, checkpoint_dir,
+        lambda r: joined(r).writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir),
     )
-    with stream_shuffle_scope(spark, src):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return spark.read.parquet(out_dir)
-
-
-def session_windows_available_now(
-    spark: SparkSession, events: DataFrame, gap: str = "30 minutes"
-) -> DataFrame:
-    """TEST HARNESS ONLY — complete-mode memory sink (driver-memory bound):
-    returns every session including ones the watermark hasn't closed.
-    Production/scale code uses `session_windows_append_parquet`."""
-    src = scratch_dir("pls_stream_src_")
-    events.write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    name = f"sessions_{abs(hash(src)) % 10**8}"
-    with stream_shuffle_scope(spark, src):
-        q = (
-            _session_agg(stream, gap, "1 hour")
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def minhash_index_stream(
@@ -344,15 +303,6 @@ def minhash_index_stream(
     sh_dir = os.path.join(state_dir, "shingles")
     pairs_dir = os.path.join(state_dir, "pairs")
 
-    def _maybe(path: str, schema: str) -> DataFrame:
-        # empty only when the state genuinely doesn't exist yet (first
-        # batch); a corrupt/unreadable EXISTING state must raise, not
-        # silently produce an empty index (which would drop pairs).
-        # recursiveFileLookup: state lives in per-epoch subdirs (below)
-        if not os.path.isdir(path):
-            return spark.createDataFrame([], schema)
-        return spark.read.option("recursiveFileLookup", "true").parquet(path)
-
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # ONE shingle pass per batch (round 16; was two): MIN aggregates
         # are duplicate-insensitive, so the MinHash signature computed
@@ -371,17 +321,23 @@ def minhash_index_stream(
         banded_new = dedup.band_signatures(
             sig, "doc_id", num_hashes, bands
         ).localCheckpoint(eager=False)
-        banded_idx = _maybe(bands_dir, "doc_id long, band_idx int, band_key string")
+        # the index and shingle state are append logs: epochs before
+        # this one (empty only at epoch 0; a missing epoch raises rather
+        # than silently dropping pairs)
+        banded_idx = prior_log(
+            spark, bands_dir, epoch_id, "doc_id long, band_idx int, band_key string"
+        )
         cand = dedup.incremental_candidate_pairs(banded_new, banded_idx, "doc_id")
-        sh_all = _maybe(sh_dir, "doc_id long, shingle string").unionByName(sh_new)
+        sh_all = prior_log(
+            spark, sh_dir, epoch_id, "doc_id long, shingle string"
+        ).unionByName(sh_new)
         verified = dedup.jaccard_verify(cand, sh_all, "doc_id", threshold)
         # RETRY IDEMPOTENCE: foreachBatch is at-least-once — a failure
         # after some sinks committed re-runs the whole epoch. Each epoch
-        # OVERWRITES its own subdir (deterministic content ⇒ a retry
-        # rewrites identical rows) instead of appending to a shared dir
-        # (which would double-count pairs and inflate every later
-        # batch's shingle sets). This keeps the documented "every pair
-        # discovered exactly once" invariant under retries.
+        # OVERWRITES its own subdir and reads only earlier ones, so a
+        # retry rewrites identical rows instead of double-counting pairs
+        # or inflating later batches' shingle sets. This keeps the
+        # documented "every pair discovered exactly once" invariant.
         #
         # The three sink writes are INDEPENDENT actions (pairs, bands,
         # shingles never read each other's epoch output): submit them
@@ -390,32 +346,13 @@ def minhash_index_stream(
         # are thread-local so each stays labelled.
         from concurrent.futures import ThreadPoolExecutor
 
-        writes = (
-            (verified, os.path.join(pairs_dir, f"epoch_{epoch_id}")),
-            (banded_new, os.path.join(bands_dir, f"epoch_{epoch_id}")),
-            (sh_new, os.path.join(sh_dir, f"epoch_{epoch_id}")),
-        )
+        writes = ((verified, pairs_dir), (banded_new, bands_dir), (sh_new, sh_dir))
         with ThreadPoolExecutor(max_workers=3) as pool:
             futs = [
-                pool.submit(
-                    lambda df=df, path=path: df.write.mode("overwrite").parquet(path)
-                )
-                for df, path in writes
+                pool.submit(write_epoch, df, root, epoch_id) for df, root in writes
             ]
             for f in futs:
                 f.result()
 
-    schema = stream_schema(spark, src_dir, checkpoint_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.option("recursiveFileLookup", "true").parquet(pairs_dir)
+    drain_batches(spark, src_dir, checkpoint_dir, apply_batch)
+    return all_epochs(spark, pairs_dir)

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from posting_lines_spark.streaming.harness import drain
+
 
 def _track_user(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
     (user_id,) = key
@@ -40,29 +42,23 @@ def running_user_stats(
 
     src = scratch_dir(prefix="pls_state_src_")
     events.repartition(n_files).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    out = stream.groupBy("user_id").applyInPandasWithState(
-        _track_user,
-        outputStructType="user_id long, n_events long, max_value double",
-        stateStructType="n long, mx double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
     name = f"user_stats_{abs(hash(src)) % 10**8}"
-    from posting_lines_spark.streaming.tuning import stream_shuffle_scope
-
-    with stream_shuffle_scope(spark, src):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+    drain(
+        spark, src, None,
+        lambda r: r.option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _track_user,
+            outputStructType="user_id long, n_events long, max_value double",
+            stateStructType="n long, mx double",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        q.awaitTermination()
+        .writeStream.outputMode("update")
+        .format("memory")
+        .queryName(name),
+    )
     # update-mode memory sink appends each batch's emissions; the final
     # state per user is the row with the max n_events
     latest = spark.table(name)
@@ -144,10 +140,9 @@ def sessionize_stateful(
     query progress list."""
     from pyspark.sql import functions as F
 
-    schema = spark.read.parquet(src).schema
-    sessions = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
+    q = drain(
+        spark, src, ckpt,
+        lambda r: r.option("maxFilesPerTrigger", 1)
         .parquet(src)
         .withColumn("ts_us", F.expr("unix_micros(ts)"))
         .withWatermark("ts", "30 minutes")
@@ -160,19 +155,10 @@ def sessionize_stateful(
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
+        .writeStream.format("parquet")
+        .option("path", out),
     )
-    from posting_lines_spark.streaming.tuning import stream_shuffle_scope
-
-    with stream_shuffle_scope(spark, src):
-        q = (
-            sessions.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return [p for p in q.recentProgress]
+    return list(q.recentProgress)
 
 
 # --- inter-arrival moment tracker (mergeable 128-bit state) ---
@@ -237,10 +223,10 @@ def interarrival_stateful(spark: SparkSession, src: str) -> DataFrame:
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    schema = spark.read.parquet(src).schema
-    out = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
+    name = f"gap_moments_{abs(hash(src)) % 10**8}"
+    drain(
+        spark, src, None,
+        lambda r: r.option("maxFilesPerTrigger", 1)
         .parquet(src)
         .where(F.col("user_id") >= 0)  # drop the watermark flush sentinels
         .withColumn("ts_us", F.expr("unix_micros(ts)"))
@@ -254,19 +240,10 @@ def interarrival_stateful(spark: SparkSession, src: str) -> DataFrame:
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
+        .writeStream.outputMode("update")
+        .format("memory")
+        .queryName(name),
     )
-    name = f"gap_moments_{abs(hash(src)) % 10**8}"
-    from posting_lines_spark.streaming.tuning import stream_shuffle_scope
-
-    with stream_shuffle_scope(spark, src):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     latest = spark.table(name)
     w = W.partitionBy("user_id", "event_type").orderBy(F.col("n").desc())
     return (

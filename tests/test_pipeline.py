@@ -146,12 +146,13 @@ def test_stream_enrich_processes_only_delta(spark, tmp_path):
     second = state.filter("uid % 2 = 1")
     first.write.mode("overwrite").parquet(src)
     incremental.enrich_available_now(spark, src, out, ckpt)
-    n1 = spark.read.parquet(out).count()
+    # one directory per epoch under `out`
+    n1 = spark.read.option("recursiveFileLookup", "true").parquet(out).count()
     assert n1 == first.filter("duration != 0").count()
     # new files arrive; same checkpoint → only the delta is enriched
     second.write.mode("append").parquet(src)
     incremental.enrich_available_now(spark, src, out, ckpt)
-    n2 = spark.read.parquet(out).count()
+    n2 = spark.read.option("recursiveFileLookup", "true").parquet(out).count()
     assert n2 == n1 + second.filter("duration != 0").count()
 
 

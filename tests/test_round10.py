@@ -15,7 +15,11 @@
 
 from __future__ import annotations
 
+import re
+import shutil
 from fractions import Fraction
+
+import pytest
 
 from tests.conftest import SF001, SF0001, row_key
 
@@ -416,6 +420,120 @@ def test_dedup_index_recovers_after_restart(spark):
         )
     )
     assert got == want and len(got) > 0
+
+
+# ---- at-least-once epoch replay: Spark re-runs an epoch whose commit
+# it did not record. Every foreachBatch sink must then rewrite identical
+# rows, so a replayed drain's output equals the uninterrupted run's. ----
+
+
+def _replay_run(spark, case):
+    """(run(ckpt) -> output rows) for one stream twin over a multi-file
+    sf0.001 source; every other directory stays fixed across runs."""
+    from pyspark.sql import functions as F
+
+    from posting_lines_spark.fixtures import scratch_dir
+    from posting_lines_spark.queries import stream_q
+    from posting_lines_spark.queries.dedup_q import BANDS, JACCARD_T, NUM_HASHES
+    from posting_lines_spark.queries.pipeline_q import segments_state_path
+    from posting_lines_spark.sources import load_table
+    from posting_lines_spark.streaming import incremental
+
+    def rows(df):
+        return [tuple(r) for r in df.collect()]
+
+    out = scratch_dir("pls_replay_out_")
+    if case == "enrich":
+        src = scratch_dir("pls_replay_src_")
+        spark.read.parquet(segments_state_path(spark, SF0001)).repartition(2).write.mode(
+            "overwrite"
+        ).parquet(src)
+
+        def run(ckpt):
+            incremental.enrich_available_now(spark, src, out, ckpt)
+            return rows(
+                spark.read.option("recursiveFileLookup", "true")
+                .parquet(out)
+                .select("segment_id", "duration", "len_m", "sog_kt")
+            )
+
+        return run
+    if case == "scd":
+        events = load_table(spark, SF0001, "events")
+        src = scratch_dir("pls_replay_src_")
+        events.select("user_id", "ts", "value", "event_id").repartition(2).write.mode(
+            "overwrite"
+        ).parquet(src)
+        initial = events.select("user_id").distinct().select(
+            "user_id",
+            F.lit(0.0).alias("value"),
+            F.timestamp_micros(F.lit(0)).alias("valid_from"),
+            F.lit(None).cast("timestamp_ntz").alias("valid_to"),
+        )
+        return lambda ckpt: rows(
+            incremental.scd_upsert_available_now(
+                spark, initial, None, out, ckpt, key="user_id", ts_col="ts",
+                attr_cols=["value"], order_cols=["ts", "event_id"], src_dir=src,
+            )
+        )
+    if case == "minhash":
+        src = stream_q._dedup_stream_src(spark, SF0001)
+        return lambda ckpt: rows(
+            incremental.minhash_index_stream(
+                spark, src, out, ckpt, NUM_HASHES, BANDS, JACCARD_T
+            )
+        )
+    if case == "psi":
+        return lambda ckpt: rows(stream_q.stream_psi_drift(spark, SF0001, out=out, ckpt=ckpt))
+    twin = {"ewma": stream_q.stream_ewma, "heavy_hitters": stream_q.stream_heavy_hitters}[case]
+    return lambda ckpt: rows(twin(spark, SF0001, state_root=out, ckpt=ckpt))
+
+
+@pytest.mark.parametrize(
+    "case", ["enrich", "scd", "minhash", "ewma", "psi", "heavy_hitters"]
+)
+def test_replayed_epoch_lands_once(spark, case):
+    """Drain once, delete the last commit (and its .crc) so Spark re-runs
+    that epoch, drain again: the output must equal the uninterrupted
+    run's as a multiset."""
+    import os
+
+    from posting_lines_spark.fixtures import scratch_dir
+
+    run = _replay_run(spark, case)
+    ckpt = scratch_dir("pls_replay_ckpt_")
+    want = sorted(run(ckpt), key=row_key)
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    crc = os.path.join(commits, f".{last}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    got = sorted(run(ckpt), key=row_key)
+    assert len(got) == len(want) > 0
+    assert got == want
+
+
+def test_missing_state_epoch_fails_loudly(spark):
+    """A state epoch deleted between two drains: the next epoch has no
+    previous state to fold into, and must raise naming the directory
+    instead of folding its batch into empty state."""
+    from posting_lines_spark.fixtures import scratch_dir
+    from posting_lines_spark.queries.stream_q import _ewma_write_slices, stream_ewma
+    from posting_lines_spark.sources import load_table
+
+    full = scratch_dir("pls_epochgap_full_")
+    _ewma_write_slices(load_table(spark, SF0001, "events"))(full)
+    files = _slice_files(full)
+    src = scratch_dir("pls_epochgap_src_")
+    state = scratch_dir("pls_epochgap_state_")
+    ckpt = scratch_dir("pls_epochgap_ckpt_")
+    _copy_in(files[:2], src)
+    stream_ewma(spark, SF0001, src=src, state_root=state, ckpt=ckpt)
+    shutil.rmtree(f"{state}/e1")
+    _copy_in(files[2:], src)
+    with pytest.raises(Exception, match=re.escape(f"{state}/e1")):
+        stream_ewma(spark, SF0001, src=src, state_root=state, ckpt=ckpt)
 
 
 def test_icc_split_survives_int64_overflow(spark):

@@ -119,3 +119,22 @@ def test_load_table_sees_rewritten_schema(spark, tmp_path):
     df = load_table(spark, str(tmp_path), "t")
     assert df.columns == ["id", "w", "x"]
     assert sorted(r.w for r in df.collect()) == [str(i) for i in range(5)]
+
+
+def test_stream_schema_fresh_checkpoint_on_cached_fixture_starts_no_job(spark, tmp_path):
+    """A stream over an unchanged cached fixture takes a fresh
+    checkpoint's schema from the content-stamp memo: no footer job."""
+    from posting_lines_spark.queries.stream_q import _events_src
+    from posting_lines_spark.sources import stream_schema
+    from tests.conftest import SF0001
+
+    src = _events_src(spark, SF0001)
+    first = stream_schema(spark, src, str(tmp_path / "ckpt_a"))
+    fresh = None
+
+    def again():
+        nonlocal fresh
+        fresh = stream_schema(spark, src, str(tmp_path / "ckpt_b"))
+
+    assert _job_ids(spark, "stream-schema-fresh", again) == []
+    assert fresh == first and "event_id" in fresh.fieldNames()
