@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from posting_lines_spark.functions.hashing import cw_mix_sql, md5_int_spark, md5_limb_spark
+from posting_lines_spark.operators.cuts import cut
 
 # --- shingling (Spark side; the DuckDB twin lives in queries/dedup_q.py) ---
 
@@ -242,6 +243,34 @@ def incremental_candidate_pairs(
         )
         .distinct()
     )
+
+
+def incremental_pairs(
+    sh_new: DataFrame,
+    sh_index: DataFrame,
+    banded_index: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+) -> tuple[DataFrame, DataFrame]:
+    """One near-dup increment, the step the batch `dedup_incremental` and
+    the stream `minhash_index_stream` both run: MinHash signatures of the
+    new docs' distinct shingles `sh_new`, their bands, candidate pairs
+    against `banded_index` ((new × index) ∪ (new × new), never index ×
+    index), then exact Jaccard over the index's and the new shingles.
+    Returns (verified pairs, the new bands — what the index appends).
+
+    Every pair is found when its later member's batch runs, whichever
+    way the corpus is split: both callers run this one function, so the
+    batch result and any batching of the stream agree by construction."""
+    sig = minhash_signature(sh_new, id_col, num_hashes)
+    # shared: the probe side and the build-side union of the candidate
+    # join (and, in the stream, the index append: a separate job)
+    banded_new = cut(band_signatures(sig, id_col, num_hashes, bands))
+    cand = incremental_candidate_pairs(banded_new, banded_index, id_col)
+    verified = jaccard_verify(cand, sh_index.unionByName(sh_new), id_col, threshold)
+    return verified, banded_new
 
 
 def lsh_candidate_pairs(

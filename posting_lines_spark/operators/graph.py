@@ -11,10 +11,8 @@ vs O(diameter) for plain min-label propagation — a 1000-node path graph
 converges in ~10 rounds instead of ~999 (see tests/test_graph_scale.py).
 
 Durability at cluster scale: every `checkpoint_every` rounds the edge
-set is written through a RELIABLE checkpoint (HDFS/object-store safe)
-when the SparkContext has a checkpoint dir configured (get_spark() sets
-one); otherwise falls back to localCheckpoint, which is fine for
-local[...] testing but pins lineage to executor-local blocks. The loop
+set goes through a durable cut (`cuts.cut`: a RELIABLE checkpoint when
+the session has a checkpoint dir, a local one otherwise). The loop
 raises instead of silently returning non-converged labels when max_iter
 is exhausted.
 
@@ -26,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from posting_lines_spark.operators.cuts import cut
 
 
 _OBS_TIMEOUT_S = 60.0
@@ -105,8 +105,6 @@ def connected_components(
     min node id reachable. Alternates large-star/small-star until the edge
     set is a fixpoint (checksum-stable across a full round), checkpointing
     periodically; raises RuntimeError if max_iter rounds don't converge."""
-    sc = edges.sparkSession.sparkContext
-    use_reliable = sc.getCheckpointDir() is not None
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -115,15 +113,13 @@ def connected_components(
     # Materialize the input edges once: each star round references `e`
     # several times (union + self-join), and without truncation round 1
     # re-evaluates the full upstream pipeline (e.g. MinHash candidate
-    # generation) per reference. ALWAYS a local checkpoint (round 15):
-    # this entry cut is a lineage truncation, not the durability point —
-    # a reliable checkpoint here computes the whole upstream pipeline
-    # TWICE (the eager count job, then ReliableRDDCheckpointData's
-    # separate write job re-runs the uncached lineage) plus a filesystem
-    # round-trip, for state that round 1 supersedes anyway. Recovery
-    # depth stays bounded by the in-loop reliable cadence below
-    # (checkpoint_every), which is unchanged.
-    e = e.localCheckpoint(eager=True)
+    # generation) per reference. Not durable (round 15): a reliable
+    # checkpoint here computes the whole upstream pipeline TWICE (the
+    # eager count job, then ReliableRDDCheckpointData's separate write
+    # job re-runs the uncached lineage) plus a filesystem round-trip,
+    # for state that round 1 supersedes anyway. Recovery depth stays
+    # bounded by the in-loop durable cadence (checkpoint_every).
+    e = cut(e, eager=True)  # loop: the rounds' input state
     from pyspark.sql import Observation
 
     prev_chk: tuple | None = None
@@ -142,10 +138,8 @@ def connected_components(
         if use_observe:
             obs = Observation(f"cc_round_{it}")
             round_df = round_df.observe(obs, *_chk_aggs())
-        if use_reliable and (it + 1) % checkpoint_every == 0:
-            e = round_df.checkpoint(eager=True)
-        else:
-            e = round_df.localCheckpoint(eager=True)
+        # loop: the round's state; its eager job fires the observation
+        e = cut(round_df, eager=True, durable=(it + 1) % checkpoint_every == 0)
         m = _obs_get_bounded(obs) if obs is not None else None
         if m is None:
             use_observe = False
@@ -212,15 +206,13 @@ def pagerank(
     `n`. The per-node teleport column rides the same loop-invariant
     node table, so the iteration cost is identical to the uniform
     walk."""
-    spark = edges.sparkSession
-    use_reliable = spark.sparkContext.getCheckpointDir() is not None
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w"))
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    nodes = nodes.checkpoint(eager=True) if use_reliable else nodes.localCheckpoint(eager=True)
+    nodes = cut(nodes, durable=True)  # loop: loop-invariant node set
     n = nodes.count()
     if seeds is not None:
         sd = (
@@ -256,9 +248,7 @@ def pagerank(
             F.lit((15 * PR_SCALE) // (100 * n)).alias("tp"),
             F.lit(PR_SCALE // n).alias("r0"),
         )
-    nodes_t = (
-        nodes_t.checkpoint(eager=True) if use_reliable else nodes_t.localCheckpoint(eager=True)
-    )
+    nodes_t = cut(nodes_t, durable=True)  # loop: loop-invariant teleport table
     out_w = e.groupBy("src").agg(F.sum("w").alias("outw"))
     ew = e.join(out_w, "src")  # loop-invariant: (src, dst, w, outw)
     # NEGATIVE RESULT (round 16, do not re-try): persist-before-reliable-
@@ -271,7 +261,7 @@ def pagerank(
     # already materialized as shuffle files, so the "double compute" is
     # only the final map stage — cheaper than the cache write + columnar
     # InMemoryTableScan read-back the persist adds.
-    ew = ew.checkpoint(eager=True) if use_reliable else ew.localCheckpoint(eager=True)
+    ew = cut(ew, durable=True)  # loop: loop-invariant edge table
     ranks = nodes_t.select("node", F.col("r0").alias("rank"))
     for it in range(iters):
         contrib = ranks.join(ew, ranks["node"] == ew["src"]).select(
@@ -291,17 +281,16 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        # Reliable checkpoints keep their durability cadence; the eager
-        # per-iteration localCheckpoints BETWEEN them were dropped in
-        # round 15: the rank recurrence is linear (each iteration
-        # consumed exactly once by the next), so between reliable cuts
-        # the state lives in the iterations' shuffle files inside one
-        # job — the per-iteration barrier cost a ~0.15-0.3 s sequential
-        # job each and defeated stage reuse of the loop-invariant
-        # ew/nodes_t exchanges (the LPA round-15 lesson; lineage depth
-        # stays bounded at checkpoint_every).
-        if use_reliable and (it + 1) % checkpoint_every == 0:
-            ranks = ranks.checkpoint(eager=True)
+        # Durable cuts keep their cadence; the eager per-iteration cuts
+        # BETWEEN them were dropped in round 15: the rank recurrence is
+        # linear (each iteration consumed exactly once by the next), so
+        # between durable cuts the state lives in the iterations'
+        # shuffle files inside one job — the per-iteration barrier cost
+        # a ~0.15-0.3 s sequential job each and defeated stage reuse of
+        # the loop-invariant ew/nodes_t exchanges (the LPA round-15
+        # lesson; lineage depth stays bounded at checkpoint_every).
+        if (it + 1) % checkpoint_every == 0:
+            ranks = cut(ranks, durable=True)  # loop: the rank state
     return ranks
 
 
@@ -336,15 +325,15 @@ def hits(
     key (co-partitioned under AQE); the edge set is loop-invariant and
     checkpointed once; normalization totals are 1-row aggregates crossed
     back onto the score table (broadcast), never driver collects; each
-    round's blocks are lazily cut and freed when the job ends (round_cut)."""
-    spark = edges.sparkSession
+    round's blocks are lazily cut and freed when the job ends (see the
+    retention note in operators/cuts.py)."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    e = e.localCheckpoint(eager=True)
-    nodes = (
+    e = cut(e, eager=True)  # loop: loop-invariant edge set
+    nodes = cut(  # loop: loop-invariant node set
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
 
     def _normalize(raw: DataFrame, col: str) -> DataFrame:
@@ -367,7 +356,7 @@ def hits(
     # so the cut stays, but all 2·iters half-steps now run in one job
     # with stage overlap (A/B: 3.44→3.02 s sf0.1, wash at sf1). Score
     # tables are node-grain, serialized and spillable — retaining every
-    # round's blocks to the job end is bounded (see round_cut).
+    # round's blocks to the job end is bounded (operators/cuts.py).
     h = nodes.select("node", F.lit(scale).alias("h"))
     a = None
     for _ in range(iters):
@@ -376,13 +365,13 @@ def hits(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("h").alias("raw"))
         )
-        a = round_cut(_normalize(a_raw, "a"))
+        a = cut(_normalize(a_raw, "a"))  # loop: authority state
         h_raw = (
             a.join(e, a["node"] == e["dst"])
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("a").alias("raw"))
         )
-        h = round_cut(_normalize(h_raw, "h"))
+        h = cut(_normalize(h_raw, "h"))  # loop: hub state
     return a.join(h, "node").select("node", "a", "h")
 
 
@@ -393,36 +382,4 @@ def dedup_groups(components: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_members"), F.min("node").alias("survivor"))
         .withColumn("n_drops", F.col("n_members") - 1)
     )
-
-
-def round_cut(df: DataFrame) -> DataFrame:
-    """Per-round LAZY lineage cut for fixed-round loops over CHANGING
-    inputs (kcore/ktruss/HITS — round 16, replacing an eager per-round
-    checkpoint that freed each superseded round's blocks).
-
-    The cut is still required: each round consumes its (changing) input
-    2-3 times and exchange reuse cannot cover a changing subtree. But
-    the EAGER form also imposed a per-round barrier (one sequential job
-    + ~0.15-0.3 s scheduling each, no inter-round stage overlap).
-    Lazily checkpointed blocks are computed exactly once under the
-    block-manager lock and every round runs inside ONE job — interleaved
-    A/Bs (sf0.1, 5 rounds; sf1, 3 rounds): kcore 1.31→1.19 / 1.71→1.49 s,
-    ktruss 1.59→1.46 / 2.09→1.85 s, HITS 3.44→3.02 s / wash.
-
-    Retention trade-off vs the eager form: ALL rounds' blocks stay
-    persisted until the terminal action ends (the eager form freed
-    superseded rounds). `DataFrame.unpersist()` does NOT free
-    localCheckpoint blocks: the persisted RDD is the one inside the
-    LogicalRDD, not the Dataset's cache entry, so freeing takes a
-    JVM-side `rdd().unpersist()` on the analyzed plan's node.
-    Safe here because these loops' tables are monotonically SHRINKING
-    edge sets or node-grain score tables, stored SERIALIZED
-    (MEMORY_AND_DISK, the PySpark serialized level — the round-9 lesson)
-    and disk-spillable, so peak footprint is bounded by ~2x the round-0
-    table. Do NOT apply to loops whose per-round state is data-shaped
-    and non-shrinking (LPA at sf10 needed the eager form's freeing
-    before the round-15 one-job rewrite made the point moot)."""
-    from pyspark import StorageLevel
-
-    return df.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
 

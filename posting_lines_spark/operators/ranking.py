@@ -25,8 +25,58 @@ SNM), equi-depth profiling, and any ORDER-BY-layout write path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
+
+from posting_lines_spark.operators.cuts import cut
+
+
+def _range_prefix(
+    df: DataFrame,
+    order_cols: list[str | Column],
+    num_partitions: int | None,
+    aggs: dict[str, Column],
+    fold: Callable,
+    init: int | None,
+) -> tuple[DataFrame, WindowSpec, dict[str, Column]]:
+    """The two-pass range-partition trick every global prefix shares:
+    range-partition `df` on `order_cols` (tagging each row with `_pid`),
+    collect ONE row of `aggs` per partition (bounded by the partition
+    count; the sanctioned metadata collect), fold them on the driver into
+    each partition's exclusive prefix (`init` for the first partition,
+    then `fold(acc, value)`), and return (partitioned frame, the window
+    ordering each partition, {name: the partition's prefix as a
+    column}). The caller combines a local window value with its prefix
+    and drops `_pid`."""
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
+    # pin: the aggregate job and the caller's window job must see the
+    # SAME range boundaries (RangePartitioner re-samples per execution —
+    # two runs can split ties at different boundaries and skew every
+    # downstream offset)
+    rp = cut(df.repartitionByRange(n, *cols).withColumn("_pid", F.spark_partition_id()))
+    rows = rp.groupBy("_pid").agg(*[a.alias(k) for k, a in aggs.items()]).collect()
+    offsets: dict[str, list] = {k: [] for k in aggs}
+    acc = dict.fromkeys(aggs, init)
+    for r in sorted(rows, key=lambda r: r._pid):
+        for k in aggs:
+            offsets[k] += [r._pid, acc[k]]
+            acc[k] = fold(acc[k], r[k])
+    prefix = {
+        k: F.element_at(F.create_map(*[F.lit(v) for v in kv]), F.col("_pid"))
+        for k, kv in offsets.items()
+    }
+    return rp, Window.partitionBy("_pid").orderBy(*cols), prefix
+
+
+def _add(acc: int, v: int | None) -> int:
+    return acc + (v or 0)
+
+
+def _max(acc: int | None, v: int | None) -> int | None:
+    return v if acc is None or (v is not None and v > acc) else acc
 
 
 def global_row_number(
@@ -39,32 +89,11 @@ def global_row_number(
     single-partition window. `order_cols` must be a total order (include
     a unique tiebreak column — with ties the boundary split would be
     arbitrary). Adds `out_col`; preserves all input columns."""
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    # materialize the partitioned frame ONCE: the counts job and the
-    # ranking job must see the SAME range boundaries (RangePartitioner
-    # re-samples per execution — two independent runs can split ties at
-    # different boundaries and skew every downstream offset)
-    rp = (
-        df.repartitionByRange(n, *cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    rp, w, prefix = _range_prefix(
+        df, order_cols, num_partitions, {"cnt": F.count(F.lit(1))}, _add, 0
     )
-    # one count per partition -> exclusive prefix sums on the driver
-    # (bounded by the partition count; the sanctioned metadata collect)
-    counts = {r._pid: r.cnt for r in rp.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_expr = F.element_at(
-        F.create_map(*[F.lit(v) for kv in sorted(offsets.items()) for v in kv]),
-        F.col("_pid"),
-    )
-    w = Window.partitionBy("_pid").orderBy(*cols)
     return (
-        rp.withColumn(out_col, (F.row_number().over(w) + off_expr).cast("bigint"))
+        rp.withColumn(out_col, (F.row_number().over(w) + prefix["cnt"]).cast("bigint"))
         .drop("_pid")
     )
 
@@ -87,42 +116,15 @@ def global_running_sums(
     the driver offsets coerced NULL totals to 0, desynchronizing the
     two). Adds `run_<col>` for each sum col; preserves all input
     columns."""
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    rp = (
-        df.repartitionByRange(n, *cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # counts job and cumsum job must
-        # see the SAME sampled range boundaries (see global_row_number)
+    val = {c: F.coalesce(F.col(c), F.lit(0)) for c in sum_cols}
+    rp, w, prefix = _range_prefix(
+        df, order_cols, num_partitions,
+        {c: F.sum(v).cast("bigint") for c, v in val.items()}, _add, 0,
     )
-    totals = rp.groupBy("_pid").agg(
-        *[
-            F.sum(F.coalesce(F.col(c), F.lit(0))).cast("bigint").alias(c)
-            for c in sum_cols
-        ]
-    ).collect()
-    by_pid = {r._pid: r for r in totals}
-    offsets: dict[str, dict[int, int]] = {c: {} for c in sum_cols}
-    acc = dict.fromkeys(sum_cols, 0)
-    for pid in sorted(by_pid):
-        for c in sum_cols:
-            offsets[c][pid] = acc[c]
-            acc[c] += by_pid[pid][c] or 0
-    w = Window.partitionBy("_pid").orderBy(*cols).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    out = rp
-    for c in sum_cols:
-        off = F.element_at(
-            F.create_map(*[F.lit(v) for kv in sorted(offsets[c].items()) for v in kv]),
-            F.col("_pid"),
-        )
-        out = out.withColumn(
-            f"run_{c}",
-            (F.sum(F.coalesce(F.col(c), F.lit(0))).over(w) + off).cast("bigint"),
-        )
-    return out.drop("_pid")
+    w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return rp.withColumns(
+        {f"run_{c}": (F.sum(v).over(w) + prefix[c]).cast("bigint") for c, v in val.items()}
+    ).drop("_pid")
 
 
 def global_running_max(
@@ -141,43 +143,14 @@ def global_running_max(
     max columns must be integral (BIGINT). NULL values never become the
     max (greatest skips them); an all-NULL prefix yields NULL, matching
     a single-partition window max. Adds `runmax_<col>` per max col."""
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    rp = (
-        df.repartitionByRange(n, *cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # same sampled boundaries for both jobs
+    rp, w, prefix = _range_prefix(
+        df, order_cols, num_partitions,
+        {c: F.max(F.col(c)).cast("bigint") for c in max_cols}, _max, None,
     )
-    totals = rp.groupBy("_pid").agg(
-        *[F.max(F.col(c)).cast("bigint").alias(c) for c in max_cols]
-    ).collect()
-    by_pid = {r._pid: r for r in totals}
-    offsets: dict[str, dict[int, int | None]] = {c: {} for c in max_cols}
-    acc: dict[str, int | None] = dict.fromkeys(max_cols)
-    for pid in sorted(by_pid):
-        for c in max_cols:
-            offsets[c][pid] = acc[c]
-            v = by_pid[pid][c]
-            if v is not None and (acc[c] is None or v > acc[c]):
-                acc[c] = v
-    w = Window.partitionBy("_pid").orderBy(*cols).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    out = rp
-    for c in max_cols:
-        off = F.element_at(
-            F.create_map(
-                *[
-                    F.lit(v)
-                    for pid, o in sorted(offsets[c].items())
-                    for v in (pid, o)
-                ]
-            ),
-            F.col("_pid"),
-        )
-        out = out.withColumn(
-            f"runmax_{c}",
-            F.greatest(F.max(F.col(c)).over(w), off).cast("bigint"),
-        )
-    return out.drop("_pid")
+    w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return rp.withColumns(
+        {
+            f"runmax_{c}": F.greatest(F.max(F.col(c)).over(w), prefix[c]).cast("bigint")
+            for c in max_cols
+        }
+    ).drop("_pid")

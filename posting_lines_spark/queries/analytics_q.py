@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from posting_lines_spark.functions.hashing import md5_int_duck, md5_int_spark
+from posting_lines_spark.operators.cuts import cut
 from posting_lines_spark.queries import register
 from posting_lines_spark.sources import load_table
 
@@ -851,20 +852,10 @@ def feature_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
 BASKET_MIN_SUPPORT = 3
 
 
-def _basket_sql(b_src: str | None = None) -> str:
-    # b_src: pre-materialized DISTINCT (order, item) grain (Spark side
-    # only — round 15: without it the planner builds the lineitem scan
-    # exchange twice, keyed (o,p) for the distinct and (o) for the
-    # self-join, plus a third orderkey-pruned scan for n_orders; all
-    # three serialize on the single-file scan floor)
-    b_cte = (
-        f"SELECT l_orderkey, l_partkey FROM {b_src}"
-        if b_src
-        else "SELECT DISTINCT l_orderkey, l_partkey FROM lineitem"
-    )
+def _basket_sql() -> str:
     return f"""
 WITH b AS (
-  {b_cte}
+  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
 ),
 n_items AS (
   SELECT l_partkey, CAST(count(*) AS BIGINT) AS n_i FROM b GROUP BY l_partkey
@@ -901,12 +892,10 @@ CROSS JOIN n_orders o
     "support/confidence/lift are ratios of exact int64 counts",
 )
 def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # no cut on the distinct grain: its consumers share one plan, where
+    # exchange reuse covers them (an sf0.1 A/B lost 0.4 s with the cut)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    b = spark.sql(
-        "SELECT DISTINCT l_orderkey, l_partkey FROM lineitem"
-    ).localCheckpoint(eager=False)
-    b.createOrReplaceTempView("basket_b_grain")
-    return spark.sql(_basket_sql("basket_b_grain"))
+    return spark.sql(_basket_sql())
 
 
 # --- two-sample Kolmogorov–Smirnov test (distribution drift) ---
@@ -1796,7 +1785,8 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("y"),
     )
-    u.localCheckpoint(eager=False).createOrReplaceTempView("pls_sp_u")
+    # shared: both rank2 calls (each runs its own offsets job) and the join
+    cut(u).createOrReplaceTempView("pls_sp_u")
     u = spark.table("pls_sp_u")
 
     def rank2(col: str) -> DataFrame:
@@ -2553,7 +2543,7 @@ def anomaly_esd_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         # assumes event_id > Long.MIN_VALUE (generator ids are small
         # positive ints; a MIN_VALUE id would wrap silently under
         # non-ANSI negation — ADVICE r15).
-        pk = (
+        pk = cut(  # loop: the round's picks (ROUNDS-bounded: <= 5 rows)
             d.where(F.col("r").isNotNull())
             .groupBy("event_type")
             .agg(
@@ -2561,8 +2551,8 @@ def anomaly_esd_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("long")
                 .alias("event_id"),
                 F.max("r").alias("r_stat"),
-            )
-            .localCheckpoint(eager=True)  # ROUNDS-bounded: <= 5 rows
+            ),
+            eager=True,
         )
         picks.append(pk.select("event_type", "event_id"))
         outs.append(pk.select(

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from posting_lines_spark.functions.hashing import md5_int_duck
 from posting_lines_spark.operators import dedup
+from posting_lines_spark.operators.cuts import cut
 from posting_lines_spark.queries import register
 from posting_lines_spark.sources import load_table
 
@@ -81,9 +82,8 @@ def _near_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a subtree with ONE consumer only costs a job: under AQE the cut
     runs its upstream stages as a separate job and hides the subtree
     from exchange reuse."""
-    return dedup.shingles(_near_base(spark, sf_dir), "doc_id", "text").localCheckpoint(
-        eager=False
-    )
+    # shared: every caller reads it at least twice
+    return cut(dedup.shingles(_near_base(spark, sf_dir), "doc_id", "text"))
 
 
 # --- exact dedup ---
@@ -214,26 +214,15 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the index and the batch both derive from the one shingle set — the
     # id-range filters commute with the explode
     sh = _near_shingles(spark, sf_dir)
-    # the band index has one consumer (the probe's build side), so it
-    # stays in the plan; the batch's bands feed both probe and build
+    old = sh.filter(F.col("doc_id") < 100000)
     banded_idx = dedup.band_signatures(
-        dedup.minhash_signature(
-            sh.filter(F.col("doc_id") < 100000), "doc_id", NUM_HASHES
-        ),
-        "doc_id",
-        NUM_HASHES,
-        BANDS,
+        dedup.minhash_signature(old, "doc_id", NUM_HASHES), "doc_id", NUM_HASHES, BANDS
     )
-    banded_new = dedup.band_signatures(
-        dedup.minhash_signature(
-            sh.filter(F.col("doc_id") >= 100000), "doc_id", NUM_HASHES
-        ),
-        "doc_id",
-        NUM_HASHES,
-        BANDS,
-    ).localCheckpoint(eager=False)
-    cand = dedup.incremental_candidate_pairs(banded_new, banded_idx, "doc_id")
-    return dedup.jaccard_verify(cand, sh, "doc_id", JACCARD_T)
+    pairs, _ = dedup.incremental_pairs(
+        sh.filter(F.col("doc_id") >= 100000), old, banded_idx,
+        "doc_id", NUM_HASHES, BANDS, JACCARD_T,
+    )
+    return pairs
 
 
 # --- n-gram Jaccard (inverted-index all-candidates) ---
@@ -251,9 +240,11 @@ def _capped_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the df-capped index: the overlap counts both capped measures
     (Jaccard, containment) are computed from. The capped set is read
     three times (two self-join sides, sizes), hence its cut."""
-    sh = dedup.stop_shingle_cap(
-        dedup.shingles(_near_base(spark, sf_dir), "doc_id", "text"), "doc_id", NGRAM_DF_CAP
-    ).localCheckpoint(eager=False)
+    sh = cut(  # shared: the two self-join sides and sizes
+        dedup.stop_shingle_cap(
+            dedup.shingles(_near_base(spark, sf_dir), "doc_id", "text"), "doc_id", NGRAM_DF_CAP
+        )
+    )
     a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
     inter = (
@@ -814,8 +805,8 @@ JOIN sizes zb ON zb.doc_id = m.id_b
 )
 def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _near_shingles(spark, sf_dir)
-    # sig is read three times (banding, both rejoin sides)
-    sig = dedup.minhash_signature(sh, "doc_id", NUM_HASHES).localCheckpoint(eager=False)
+    # shared: banding and both rejoin sides
+    sig = cut(dedup.minhash_signature(sh, "doc_id", NUM_HASHES))
     pairs = dedup.lsh_candidate_pairs(sig, "doc_id", NUM_HASHES, BANDS, hot_width=256)
     # threshold 0.0: audit EVERY candidate with a non-empty intersection
     # (inner-join semantics on both engines drop zero-common pairs)
@@ -1094,17 +1085,18 @@ def dedup_lsh_band_sweep(
         for b in SWEEP_BANDS
         for bi in range(b)
     )
-    bands = (
+    bands = cut(  # shared: bsz and okb
         sig.selectExpr("doc_id", f"explode(array({structs})) AS x")
         .selectExpr("doc_id", "x.cfg", "x.band_idx", "x.band_key")
-        .localCheckpoint(eager=False)
     )
     # saturation guard: buckets wider than SWEEP_MAX_BUCKET are
     # excluded from pair generation and reported (the first draft
     # OOM'd at sf10 on the 12×1 config's quadratic buckets)
-    bsz = bands.groupBy("cfg", "band_idx", "band_key").agg(
-        F.count(F.lit(1)).cast("long").alias("width")
-    ).localCheckpoint(eager=False)
+    bsz = cut(  # shared: sat, okb and bnd
+        bands.groupBy("cfg", "band_idx", "band_key").agg(
+            F.count(F.lit(1)).cast("long").alias("width")
+        )
+    )
     sat = bsz.groupBy("cfg").agg(
         F.sum(F.when(F.col("width") > SWEEP_MAX_BUCKET, 1).otherwise(0))
         .cast("long")
@@ -1163,11 +1155,7 @@ def dedup_lsh_band_sweep(
             hcap * F.col("n_pairs_bound")
             < F.lit(cap).cast("decimal(38,0)") * F.lit(_H60)
         )
-    cpairs = (
-        raw_pairs.select("cfg", "id_a", "id_b")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    cpairs = cut(raw_pairs.select("cfg", "id_a", "id_b").distinct())  # shared: ccount and keep
     ccount = cpairs.groupBy("cfg").agg(
         F.count(F.lit(1)).cast("long").alias("n_sampled")
     )
@@ -1177,14 +1165,13 @@ def dedup_lsh_band_sweep(
             salt="sweepv",
         )
     ).cast("decimal(38,0)")
-    keep = (
+    keep = cut(  # shared: upairs (→ truth) and per_cfg
         cpairs.join(F.broadcast(ccount), "cfg")
         .filter(
             h60 * F.col("n_sampled")
             < F.lit(SWEEP_VERIFY_BUDGET).cast("decimal(38,0)") * F.lit(_H60)
         )
         .select("cfg", "id_a", "id_b")
-        .localCheckpoint(eager=False)
     )
     # keyed explicit repartition: the verify joins otherwise run on ONE
     # AQE-coalesced post-shuffle partition (~1 MB of pairs in, millions
@@ -1198,16 +1185,15 @@ def dedup_lsh_band_sweep(
         .distinct()
         .repartition(spark.sparkContext.defaultParallelism, "id_a")
     )
-    truth = (
+    # shared: tot and per_cfg. EAGER: the final job schedules the two
+    # sibling subtrees CONCURRENTLY — with a lazy cut both stages raced
+    # to compute the same blocks and the whole verify pipeline ran twice
+    # (round-15 profile: two ~1.9 s twin stages).
+    truth = cut(
         dedup.jaccard_verify(upairs, sh, "doc_id", threshold=0.0)
         .filter(F.col("jaccard") >= F.lit(JACCARD_T))
-        .select("id_a", "id_b")
-        # EAGER: truth is consumed by two sibling subtrees (`tot` and
-        # `per_cfg`) that the final job schedules CONCURRENTLY — with a
-        # lazy cut both stages raced to compute the same blocks and the
-        # whole verify pipeline ran twice (round-15 profile: two ~1.9 s
-        # twin stages). Materializing once removes the duplicate.
-        .localCheckpoint(eager=True)
+        .select("id_a", "id_b"),
+        eager=True,
     )
     tot = truth.agg(F.count(F.lit(1)).cast("long").alias("n_union_true"))
     per_cfg = (
@@ -1392,10 +1378,12 @@ def dedup_lsh_hot_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    base = spark.sql(_BOIL_SPARK).localCheckpoint(eager=False)
-    sig = dedup.minhash_signature(
-        dedup.shingles(base, "doc_id", "text", distinct=False), "doc_id", NUM_HASHES
-    ).localCheckpoint(eager=False)
+    base = cut(spark.sql(_BOIL_SPARK))  # shared: shingles (→ sig) and the nd count
+    sig = cut(  # shared: the width census and lsh_candidate_pairs
+        dedup.minhash_signature(
+            dedup.shingles(base, "doc_id", "text", distinct=False), "doc_id", NUM_HASHES
+        )
+    )
     bands = dedup.band_signatures(sig, "doc_id", NUM_HASHES, BANDS)
     widths = bands.groupBy("band_idx", "band_key").agg(
         F.count(F.lit(1)).cast("long").alias("w")

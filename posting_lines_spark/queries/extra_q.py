@@ -13,7 +13,6 @@ from posting_lines_spark.queries import register
 from posting_lines_spark.queries.geo_q import enrich_all_df, enriched_sql
 from posting_lines_spark.queries.parity import davg_expr, dsum_expr
 from posting_lines_spark.sources import load_table
-from posting_lines_spark.fixtures import scratch_dir
 
 CUBE_ORACLE = f"""
 SELECT l_returnflag, l_linestatus, count(*) AS n, {dsum_expr('l_quantity')} AS sum_qty
@@ -182,12 +181,13 @@ GROUP BY 1, 2
     "availableNow); oracle replays the window as epoch bucketing",
 )
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import uuid
+
+    from posting_lines_spark.queries.stream_q import _events_src
     from posting_lines_spark.streaming.harness import drain
 
-    events = load_table(spark, sf_dir, "events")
-    src = scratch_dir(prefix="pls_tumb_src_")
-    events.write.mode("overwrite").parquet(src)
-    name = f"tumbling_{abs(hash(src)) % 10**8}"
+    src = _events_src(spark, sf_dir)
+    name = f"tumbling_{uuid.uuid4().hex}"  # one memory sink per call
     drain(
         spark, src, None,
         lambda r: r.parquet(src)

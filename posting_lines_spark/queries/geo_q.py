@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from posting_lines_spark.functions import geo
+from posting_lines_spark.operators.cuts import cut
 from posting_lines_spark.plans import ais
 from posting_lines_spark.queries import register
 from posting_lines_spark.queries.parity import lavg, lavg_expr, lsum, lsum_expr
@@ -63,12 +64,12 @@ def enrich_materialized(spark: SparkSession, sf_dir: str, cols: list[str]) -> Da
     At production scale the boundary is the enriched parquet table the
     pipeline already writes (O3/O6 — sql_to_line.py:205-234 persists the
     same derived columns via UPDATE); these self-contained queries use
-    `localCheckpoint` instead: partitions materialize executor-local
+    a local cut (`cuts.cut`) instead: partitions materialize executor-local
     (no driver collect, linear in input splits). `eager=False` defers
     materialization to first use — exactly one job. Select only `cols`
     before the cut so the materialized width is minimal.
     """
-    return enrich_all_df(spark, sf_dir).select(*cols).localCheckpoint(eager=False)
+    return cut(enrich_all_df(spark, sf_dir).select(*cols))  # plan-size: the Janino boundary
 
 
 # scale=3 for the geo aggregates: len_m/sog_kt are sqrt outputs (full-

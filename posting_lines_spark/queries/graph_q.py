@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from posting_lines_spark.operators import graph
+from posting_lines_spark.operators.cuts import cut
 from posting_lines_spark.queries import register
 from posting_lines_spark.queries.dedup_q import _minhash_oracle, dedup_minhash_lsh
 from posting_lines_spark.sources import load_table
@@ -259,15 +260,17 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     pairs = _spark_pairs(spark, sf_dir)
-    e = pairs.select(
-        F.least("id_a", "id_b").alias("a"), F.greatest("id_a", "id_b").alias("b")
-    ).localCheckpoint(eager=False)
+    # measured (this cut and tri's): dropping both lost 15 of 15
+    # interleaved sf0.1 pairs, median 0.47 -> 0.59 s
+    e = cut(
+        pairs.select(F.least("id_a", "id_b").alias("a"), F.greatest("id_a", "id_b").alias("b"))
+    )
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    tri = (
+    tri = cut(  # measured: with e above
         e1.join(e2, F.col("e2.a") == F.col("e1.b"))
         .join(e3, (F.col("e3.a") == F.col("e1.a")) & (F.col("e3.b") == F.col("e2.b")))
         .select(F.col("e1.a").alias("a"), F.col("e1.b").alias("b"), F.col("e2.b").alias("c"))
-    ).localCheckpoint(eager=False)
+    )
     nodes = (
         tri.select(F.col("a").alias("node"))
         .union(tri.select("b"))
@@ -336,9 +339,11 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     pairs = _spark_pairs(spark, sf_dir)
-    e = pairs.select(
-        F.least("id_a", "id_b").alias("a"), F.greatest("id_a", "id_b").alias("b")
-    ).localCheckpoint(eager=False)
+    # measured: dropping it lost 14 of 15 interleaved sf0.1 pairs,
+    # median 0.45 -> 0.56 s
+    e = cut(
+        pairs.select(F.least("id_a", "id_b").alias("a"), F.greatest("id_a", "id_b").alias("b"))
+    )
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
         e1.join(e2, F.col("e2.a") == F.col("e1.b"))
@@ -419,11 +424,10 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     pairs = _spark_pairs(spark, sf_dir)
-    sym = (
+    sym = cut(  # loop: loop-invariant edge set
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .unionAll(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     reached = sym.withColumn("dist", F.lit(1))  # (u, v, dist): shortest so far
     frontier = sym
@@ -435,9 +439,9 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        frontier = expanded.join(
-            reached.select("u", "v"), ["u", "v"], "left_anti"
-        ).localCheckpoint(eager=False)
+        frontier = cut(  # loop: the frontier state
+            expanded.join(reached.select("u", "v"), ["u", "v"], "left_anti")
+        )
         reached = reached.unionAll(frontier.withColumn("dist", F.lit(k)))
     return (
         reached.filter(F.col("u") < F.col("v"))
@@ -514,24 +518,16 @@ def _lpa_labels(spark: SparkSession, sf_dir: str):
 
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
 
-    from pyspark import StorageLevel
-
-    # Materialize the UNDOUBLED co-purchase edge table once: the union's
-    # two orientation branches each embedded the full quadratic basket
+    # shared: the UNDOUBLED co-purchase edge table, materialized once. The
+    # union's two orientation branches each embedded the full quadratic basket
     # self-join + partial aggregate, and the two pipelines are NOT
     # reused at runtime (profiled: two heavy map stages, 33 s + 14 s
     # task CPU, per run). Checkpointing BELOW the union makes both
     # branches cheap projections over the same blocks; it also keeps the
     # labels-init consumer from column-pruning its copy of the subtree
     # differently (the round-15 A/B that showed the self-join running
-    # twice when the checkpoint was dropped entirely). SERIALIZED
-    # storage (not the deserialized default): ~90M rows at sf10 and
-    # deserialized row retention is what blew a 24 GiB heap there
-    # (round-9 OOM find); MEMORY_AND_DISK serialized is ~5× denser and
-    # spills cleanly.
-    e0 = spark.sql(_LPA_EDGES).localCheckpoint(
-        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    # twice when the checkpoint was dropped entirely).
+    e0 = cut(spark.sql(_LPA_EDGES))
     edges = e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
     labels = edges.select(F.col("u").alias("node")).distinct().withColumn(
         "label", F.col("node")
@@ -660,8 +656,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf1). Peel rounds shrink the edge set monotonically and the
     # blocks are serialized + spillable, so retaining every round's
     # blocks to the end of the job is bounded (~2x round 0); see
-    # operators/graph.round_cut.
-    edges = graph.round_cut(
+    # operators/cuts.py.
+    edges = cut(  # loop: the edge state
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .unionAll(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
     )
@@ -671,7 +667,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("deg") >= KCORE_K)
             .select("u")
         )
-        edges = graph.round_cut(
+        edges = cut(  # loop: the edge state
             edges.join(keep, "u", "left_semi")
             .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
             .select("u", "v")
@@ -1306,12 +1302,12 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     for t in ("lineitem", "orders", "customer", "supplier"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    e = (
+    e = cut(  # loop: loop-invariant edge set
         spark.sql(_PR_EDGES)
         .filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -1336,12 +1332,11 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("v") != F.col("u"))
             .distinct()
         )
-        frontier = expanded.join(
-            reached.select("v", "u"), ["v", "u"], "left_anti"
-        ).localCheckpoint(eager=True)
-        reached = reached.unionAll(
-            frontier.withColumn("dist", F.lit(k))
-        ).localCheckpoint(eager=True)
+        frontier = cut(  # loop: the frontier state
+            expanded.join(reached.select("v", "u"), ["v", "u"], "left_anti"), eager=True
+        )
+        # loop: the reached state
+        reached = cut(reached.unionAll(frontier.withColumn("dist", F.lit(k))), eager=True)
     w60 = " ".join(f"WHEN {d} THEN {60 // d}" for d in range(1, HC_MAX_D + 1))
     hv = reached.groupBy("v").agg(
         F.count(F.lit(1)).cast("long").alias("n_reached"),
@@ -1477,17 +1472,16 @@ def graph_list_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    cur = (
+    cur = cut(  # loop: the pointer state
         e.select(
             "user_id",
             "event_id",
             F.lead("event_id").over(w).alias("ptr"),
-        )
-        .withColumn(
+        ).withColumn(
             "dist",
             F.when(F.col("ptr").isNotNull(), F.lit(1)).otherwise(F.lit(0)).cast("long"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     max_chain = (
         e.groupBy("user_id").count().agg(F.max("count")).collect()[0][0] or 1
@@ -1499,15 +1493,14 @@ def graph_list_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ptr").alias("p_ptr"),
             F.col("dist").alias("p_dist"),
         )
-        cur = (
-            cur.join(nxt, cur["ptr"] == nxt["p_id"], "left")
-            .select(
+        cur = cut(  # loop: the pointer state
+            cur.join(nxt, cur["ptr"] == nxt["p_id"], "left").select(
                 "user_id",
                 "event_id",
                 F.col("p_ptr").alias("ptr"),
                 (F.col("dist") + F.coalesce(F.col("p_dist"), F.lit(0))).alias("dist"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
     return (
         cur.groupBy("user_id")
@@ -1586,7 +1579,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     e0, _edges, labels = _lpa_labels(spark, sf_dir)
-    # labels is consumed TWICE below (u- and v-side): one lazy lineage
+    # shared: labels is consumed TWICE below (u- and v-side): one lazy lineage
     # cut materializes the 4-round recurrence once — A/B'd round 15:
     # without it AQE stage reuse does NOT dedup the re-aliased
     # recurrence subtrees and modularity pays ~1 s of recompute.
@@ -1595,7 +1588,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # structurally impossible — stage reuse is scoped to one query
     # execution. The round-15 residual "final join re-shuffles the
     # edge table" is therefore minimized rather than removed:)
-    labels = labels.localCheckpoint(eager=False)
+    labels = cut(labels)
     # Round 16: join labels onto the UNDOUBLED e0 (half the edge bytes
     # of the old doubled-edges join), and aggregate to the (v, lu)
     # grain BETWEEN the two label joins — lv is functionally determined
@@ -2074,7 +2067,7 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _spark_pairs(spark, sf_dir)
     # lazy per-round cut, one job, rounds overlap (round 16 — the
     # graph_kcore rationale; A/B 1.59→1.46 s sf0.1, 2.09→1.85 s sf1)
-    edges = graph.round_cut(
+    edges = cut(  # loop: the edge state
         pairs.select(
             F.least("id_a", "id_b").alias("a"),
             F.greatest("id_a", "id_b").alias("b"),
@@ -2097,7 +2090,7 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("sup"))
             .filter(F.col("sup") >= TRUSS_K - 2)
         )
-        edges = graph.round_cut(
+        edges = cut(  # loop: the edge state
             edges.join(
                 support,
                 (edges.a == support.ea) & (edges.b == support.eb),

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from posting_lines_spark.operators.cuts import cut
 from posting_lines_spark.queries import register
 from posting_lines_spark.sources import load_table
 from posting_lines_spark.fixtures import scratch_dir
@@ -480,14 +481,15 @@ def _hilbert_write_layouts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         f"WITH cells AS (SELECT DISTINCT cx, cy FROM pls_hilb_rows),\n{hsql}\n"
         f"SELECT cx, cy, hd FROM {hlast}"
     )
-    data = (
-        rows.join(F.broadcast(cell_hd), ["cx", "cy"])
-        .select("segment_id", "len_m", "cx", "cy", "hd")
-        # materialize the enriched+curve-indexed rows ONCE (round 15):
-        # both layout writes consume `data`, and without the cut each
-        # write re-ran the full enrich+join lineage (profiled: the rows
-        # subtree computed 3× per query — 2 writes + the cell distinct)
-        .localCheckpoint(eager=True)
+    # shared: materialize the enriched+curve-indexed rows ONCE (round
+    # 15): both layout writes (two jobs) consume `data`, and without the
+    # cut each write re-ran the full enrich+join lineage (profiled: the
+    # rows subtree computed 3× per query — 2 writes + the cell distinct)
+    data = cut(
+        rows.join(F.broadcast(cell_hd), ["cx", "cy"]).select(
+            "segment_id", "len_m", "cx", "cy", "hd"
+        ),
+        eager=True,
     )
     p_clustered = scratch_dir(prefix="pls_hilbw_c_")
     p_hashed = scratch_dir(prefix="pls_hilbw_h_")
@@ -751,12 +753,9 @@ def lake_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     path = scratch_dir(prefix="pls_vacuum_")
     o.repartition(VAC_FILES, "o_orderkey").write.mode("overwrite").parquet(path)
-    manifest = (
-        spark.read.parquet(path)
-        .select(F.col("_metadata.file_path").alias("file"))
-        .distinct()
-        .localCheckpoint(eager=True)  # pin the committed snapshot BEFORE
-        # the orphan append lands in the same directory
+    manifest = cut(  # pin: the committed snapshot, BEFORE the orphan append lands
+        spark.read.parquet(path).select(F.col("_metadata.file_path").alias("file")).distinct(),
+        eager=True,
     )
     # uncommitted append: rows land on disk, no manifest entry
     o.filter(F.col("o_orderkey") % VAC_ORPHAN_MOD == 0).repartition(3).write.mode(
@@ -767,8 +766,9 @@ def lake_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("_metadata.file_path").alias("file"))
         .distinct()
     )
-    orphans = listing.join(manifest, "file", "left_anti").localCheckpoint(eager=True)
-    orphan_files = [r["file"] for r in orphans.collect()]
+    orphan_files = [
+        r["file"] for r in listing.join(manifest, "file", "left_anti").collect()
+    ]
     orphan_rows = (
         spark.read.parquet(*orphan_files).count() if orphan_files else 0
     )

@@ -572,13 +572,9 @@ HAVING count(*) * {HH_K} > tot.n_total
 def topk_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     toks = spark.sql(_HH_GRAMS_SPARK)
-    cands = (
-        toks.mapInPandas(_mg_candidates, schema="k string")
-        .distinct()
-        .localCheckpoint(eager=False)  # unknown stats would allow a bad
-        # plan reversal; the candidate set is bounded (≤ partitions·k) and
-        # explicitly broadcast below
-    )
+    # the candidate set is bounded (≤ partitions·k) and explicitly
+    # broadcast below
+    cands = toks.mapInPandas(_mg_candidates, schema="k string").distinct()
     tot = toks.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
     return (
         toks.join(F.broadcast(cands.select(F.col("k").alias("ck"))),

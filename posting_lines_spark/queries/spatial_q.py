@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from posting_lines_spark.functions import geo
 from posting_lines_spark.functions.geo import dlit
+from posting_lines_spark.operators.cuts import cut
 from posting_lines_spark.queries import register
 from posting_lines_spark.queries.geo_q import enrich_materialized, enriched_sql
 from posting_lines_spark.queries.parity import davg_expr
@@ -53,7 +54,7 @@ def _stations_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     attributes everywhere downstream."""
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
     st = geo.with_albers(spark.sql(STATIONS_SQL), [("slon", "slat", "s")])
-    return st.localCheckpoint(eager=False)
+    return cut(st)  # plan-size: keeps the Albers kernel out of the probe
 
 _STATIONS_PROJ = geo.albers_cte_sql(STATIONS_SQL, [("slon", "slat", "s")], keep=["station_id"])
 
@@ -575,9 +576,9 @@ def geo_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serialized the pipeline for ~0.9 s of pure wait; lazily
     # checkpointed blocks are computed once under the block-manager
     # lock and the downstream stages overlap.
-    coords = pts.groupBy("x", "y", "cx", "cy").agg(
-        F.count(F.lit(1)).cast("long").alias("w")
-    ).localCheckpoint(eager=False)
+    coords = cut(  # shared: the probe explode, the join build side, the neighbor count
+        pts.groupBy("x", "y", "cx", "cy").agg(F.count(F.lit(1)).cast("long").alias("w"))
+    )
     probes = coords.select(
         "x",
         "y",

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from posting_lines_spark.fixtures import cached_fixture, scratch_dir, write_slices
 from posting_lines_spark.functions.hashing import md5_int_duck, md5_int_spark
 from posting_lines_spark.operators import multimodal
+from posting_lines_spark.operators.cuts import cut
 from posting_lines_spark.queries import register
 from posting_lines_spark.queries.pipeline_q import ENRICH_ORACLE, segments_state_df  # noqa: F401
 from posting_lines_spark.queries.parity import dsum_expr
@@ -1028,7 +1029,7 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
             F.first(F.expr(touch), ignorenulls=True).over(w).alias("bf"),
             F.last(F.expr(touch), ignorenulls=True).over(w).alias("bl"),
-        ).localCheckpoint(eager=False)
+        )
         purch = (
             run.filter(F.col("event_type") == "purchase")
             .join(ustate, "user_id", "left")
@@ -1297,10 +1298,11 @@ def stream_heavy_hitters(
         bc = grams_of(batch_df).groupBy("k").agg(
             F.count(F.lit(1)).cast("long").alias("c")
         )
-        merged = (
-            state.join(bc, "k", "full_outer")
-            .selectExpr("k", "coalesce(w, 0) + coalesce(c, 0) AS w")
-            .localCheckpoint(eager=True)  # sketch-sized; read 3× below
+        merged = cut(  # shared: the count, the k-th collect and the write (3 jobs)
+            state.join(bc, "k", "full_outer").selectExpr(
+                "k", "coalesce(w, 0) + coalesce(c, 0) AS w"
+            ),
+            eager=True,
         )
         if merged.count() >= HH_K:
             kth = (

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from posting_lines_spark.functions.hashing import md5_int_duck, md5_int_spark
+from posting_lines_spark.operators.cuts import cut
 from posting_lines_spark.queries import register
 from posting_lines_spark.queries.dedup_q import shingle_sql_duck
 from posting_lines_spark.operators.dedup import shingle_array_spark
@@ -1749,11 +1750,9 @@ def _bpe_train(
     result."""
     from pyspark.sql import Window as W
 
-    seq = w0.select(
-        "word",
-        "freq",
-        F.regexp_replace("word", "(.)", "|$1|").alias("seq"),
-    ).localCheckpoint(eager=False)
+    seq = cut(  # loop: the sequence state
+        w0.select("word", "freq", F.regexp_replace("word", "(.)", "|$1|").alias("seq"))
+    )
     merges = []
     for k in range(1, BPE_ROUNDS + 1):
         syms = (
@@ -1783,19 +1782,22 @@ def _bpe_train(
             .collect()[0]
         )
         merges.append((k, top["pair"], top["n_occ"]))
-        seq = seq.select(
-            "word",
-            "freq",
-            # F.replace with literal args: pairs can contain quote chars,
-            # so no SQL-string interpolation. Per-symbol sentinels make
-            # this single non-overlapping replace exactly greedy BPE
-            # (see the block comment above _bpe_rounds_sql).
-            F.replace(
-                F.col("seq"),
-                F.lit("|" + top["pair"].replace("|", "||") + "|"),
-                F.lit("|" + top["pair"].replace("|", "") + "|"),
-            ).alias("seq"),
-        ).localCheckpoint(eager=False)
+        seq = cut(  # loop: the sequence state
+            seq.select(
+                "word",
+                "freq",
+                # F.replace with literal args: pairs can contain quote
+                # chars, so no SQL-string interpolation. Per-symbol
+                # sentinels make this single non-overlapping replace
+                # exactly greedy BPE (see the block comment above
+                # _bpe_rounds_sql).
+                F.replace(
+                    F.col("seq"),
+                    F.lit("|" + top["pair"].replace("|", "||") + "|"),
+                    F.lit("|" + top["pair"].replace("|", "") + "|"),
+                ).alias("seq"),
+            )
+        )
     out = spark.createDataFrame(merges, "round int, merged_pair string, n_occ long")
     return (out, seq) if return_seq else out
 

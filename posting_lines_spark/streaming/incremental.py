@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamReader
 
 from posting_lines_spark.fixtures import scratch_dir
+from posting_lines_spark.operators.cuts import cut
 from posting_lines_spark.operators.pipeline import enrich_segments
 from posting_lines_spark.sources import stream_schema
 from posting_lines_spark.streaming.harness import (
@@ -164,14 +165,18 @@ def scd_upsert_available_now(
     At scale the same shape holds (Delta/Iceberg would replace the
     versioned-dir bookkeeping with transactional metadata); per-batch
     cost is one broadcast of the collapsed updates against the current
-    snapshot. Returns the final SCD2 table."""
+    snapshot. `initial` becomes v0 only on a fresh checkpoint (no
+    offset log yet): a resume keeps the v0 its later versions derive
+    from. Returns the final SCD2 table."""
     import os
 
     from pyspark.sql import Window as W
 
     from posting_lines_spark.operators.scd import scd2_apply
 
-    initial.write.mode("overwrite").parquet(os.path.join(table_dir, "v0"))
+    offsets = os.path.join(checkpoint_dir, "offsets")
+    if not (os.path.isdir(offsets) and any(f.isdigit() for f in os.listdir(offsets))):
+        initial.write.mode("overwrite").parquet(os.path.join(table_dir, "v0"))
 
     if src_dir is not None:
         src = src_dir
@@ -293,7 +298,9 @@ def minhash_index_stream(
     band_key — H·8 bytes per doc) and `shingles/` (id, shingle — what
     exact verification needs; a production variant may re-derive these
     from doc storage instead). Per-batch cost ∝ batch size: the index
-    side of the probe is touched only on matching band keys.
+    side of the probe is touched only on matching band keys. Each batch
+    runs `dedup.incremental_pairs`, the step the batch query
+    `dedup_incremental` runs.
     """
     import os
 
@@ -309,29 +316,21 @@ def minhash_index_stream(
         # over the DISTINCT shingle set is identical to the non-distinct
         # stream's — the same equivalence dedup_minhash_lsh applies —
         # and the distinct set is exactly what Jaccard verification and
-        # the persisted shingle state need. One explode feeds all three
-        # consumers through one lazy cut (blocks are computed once under
-        # the block-manager lock; the eager barrier measurably loses —
-        # the geo_dbscan_core round-16 A/B). The former `b` checkpoint
-        # is gone with the second pass: batch_df now has ONE consumer.
-        sh_new = dedup.shingles(batch_df, "doc_id", "text").localCheckpoint(
-            eager=False
-        )
-        sig = dedup.minhash_signature(sh_new, "doc_id", num_hashes)
-        banded_new = dedup.band_signatures(
-            sig, "doc_id", num_hashes, bands
-        ).localCheckpoint(eager=False)
+        # the persisted shingle state need.
+        # shared: signatures, verification and the state write (a
+        # separate job) read it
+        sh_new = cut(dedup.shingles(batch_df, "doc_id", "text"))
         # the index and shingle state are append logs: epochs before
         # this one (empty only at epoch 0; a missing epoch raises rather
         # than silently dropping pairs)
-        banded_idx = prior_log(
-            spark, bands_dir, epoch_id, "doc_id long, band_idx int, band_key string"
+        verified, banded_new = dedup.incremental_pairs(
+            sh_new,
+            prior_log(spark, sh_dir, epoch_id, "doc_id long, shingle string"),
+            prior_log(
+                spark, bands_dir, epoch_id, "doc_id long, band_idx int, band_key string"
+            ),
+            "doc_id", num_hashes, bands, threshold,
         )
-        cand = dedup.incremental_candidate_pairs(banded_new, banded_idx, "doc_id")
-        sh_all = prior_log(
-            spark, sh_dir, epoch_id, "doc_id long, shingle string"
-        ).unionByName(sh_new)
-        verified = dedup.jaccard_verify(cand, sh_all, "doc_id", threshold)
         # RETRY IDEMPOTENCE: foreachBatch is at-least-once — a failure
         # after some sinks committed re-runs the whole epoch. Each epoch
         # OVERWRITES its own subdir and reads only earlier ones, so a

@@ -262,3 +262,30 @@ def test_plans_md_covers_full_registry():
         f"PLANS.md drift — regenerate with tools/dump_plans.py; "
         f"missing={missing} stale={stale}"
     )
+
+
+def test_every_lineage_cut_goes_through_cuts():
+    """Spark-free guard: the only raw `localCheckpoint` / `checkpoint`
+    calls in the package are inside `operators/cuts.py`, so every cut
+    shares one storage level and one durability rule."""
+    import ast
+    import os
+
+    root = os.path.join(os.path.dirname(os.path.dirname(__file__)), "posting_lines_spark")
+    allowed = os.path.join(root, "operators", "cuts.py")
+    sites = []
+    for d, _, files in os.walk(root):
+        for f in sorted(files):
+            path = os.path.join(d, f)
+            if not f.endswith(".py") or path == allowed:
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            sites += [
+                f"{os.path.relpath(path, root)}:{n.lineno}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("localCheckpoint", "checkpoint")
+            ]
+    assert not sites, f"{len(sites)} raw cut call(s) outside operators/cuts.py: {sites}"

@@ -514,6 +514,40 @@ def test_replayed_epoch_lands_once(spark, case):
     assert got == want
 
 
+def test_scd_resume_keeps_first_v0(spark):
+    """A resume from a checkpoint that has commits, called with a
+    different `initial`: v0 must still hold the first run's rows (the
+    later versions derive from it)."""
+    from pyspark.sql import functions as F
+
+    from posting_lines_spark.fixtures import scratch_dir
+    from posting_lines_spark.sources import load_table
+    from posting_lines_spark.streaming import incremental
+
+    events = load_table(spark, SF0001, "events")
+    src = scratch_dir("pls_scdresume_src_")
+    events.select("user_id", "ts", "value", "event_id").repartition(2).write.mode(
+        "overwrite"
+    ).parquet(src)
+    table, ckpt = scratch_dir("pls_scdresume_tbl_"), scratch_dir("pls_scdresume_ckpt_")
+
+    def run(value):
+        initial = events.select("user_id").distinct().select(
+            "user_id",
+            F.lit(value).alias("value"),
+            F.timestamp_micros(F.lit(0)).alias("valid_from"),
+            F.lit(None).cast("timestamp_ntz").alias("valid_to"),
+        )
+        incremental.scd_upsert_available_now(
+            spark, initial, None, table, ckpt, key="user_id", ts_col="ts",
+            attr_cols=["value"], order_cols=["ts", "event_id"], src_dir=src,
+        )
+        return sorted(tuple(r) for r in spark.read.parquet(f"{table}/v0").collect())
+
+    first = run(0.0)
+    assert first and run(1.0) == first
+
+
 def test_missing_state_epoch_fails_loudly(spark):
     """A state epoch deleted between two drains: the next epoch has no
     previous state to fold into, and must raise naming the directory

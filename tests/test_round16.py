@@ -1,6 +1,6 @@
 """Round-16 optimization-round tests: changed operator internals only
-(no new features) — stream-partition env validation and the lazy
-round-cut loop helper."""
+(no new features) — stream-partition env validation and the one
+lineage cut (`operators/cuts.py`)."""
 
 import pytest
 
@@ -36,15 +36,27 @@ def test_stream_shuffle_env_nonpositive_rejected(monkeypatch, bad):
         stream_partitions(None, "/nonexistent")
 
 
-def test_round_cut_is_lazy_and_truncates(spark):
-    """round_cut must cut lineage (LogicalRDD) without materializing
-    eagerly, and preserve rows exactly."""
-    from posting_lines_spark.operators.graph import round_cut
+@pytest.mark.parametrize("mode", ["lazy", "eager", "durable"])
+def test_cut_is_lazy_or_eager_and_truncates(spark, mode):
+    """`cut` must cut lineage (LogicalRDD), materialize only when asked
+    to (`eager`, implied by `durable`), store a local cut serialized and
+    spillable, write a durable cut under the session's checkpoint dir,
+    and preserve rows exactly."""
+    from posting_lines_spark.operators.cuts import cut
 
     df = spark.range(100).selectExpr("id AS u", "id % 7 AS v")
-    cut = round_cut(df)
-    plan = cut._jdf.queryExecution().analyzed().toString()
-    assert "LogicalRDD" in plan
-    assert sorted(r["v"] for r in cut.collect()) == sorted(
+    out = cut(df, eager=mode == "eager", durable=mode == "durable")
+    plan = out._jdf.queryExecution().analyzed()
+    assert "LogicalRDD" in plan.toString()
+    rdd = plan.rdd()
+    assert rdd.isCheckpointed() == (mode != "lazy")
+    if mode == "durable":
+        ckpt_dir = spark.sparkContext.getCheckpointDir()
+        assert rdd.getCheckpointFile().get().startswith(ckpt_dir + "/")
+    else:
+        level = rdd.getStorageLevel()
+        assert level.useMemory() and level.useDisk() and not level.deserialized()
+    assert sorted(r["v"] for r in out.collect()) == sorted(
         r["v"] for r in df.collect()
     )
+    assert rdd.isCheckpointed()

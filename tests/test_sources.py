@@ -138,3 +138,24 @@ def test_stream_schema_fresh_checkpoint_on_cached_fixture_starts_no_job(spark, t
 
     assert _job_ids(spark, "stream-schema-fresh", again) == []
     assert fresh == first and "event_id" in fresh.fieldNames()
+
+
+def test_stream_tumbling_reuses_its_source(spark):
+    """`stream_tumbling` streams the cached events fixture: a second call
+    writes no new source dir and adds no schema memo entry."""
+    import os
+    import tempfile
+
+    from posting_lines_spark.queries.extra_q import stream_tumbling
+    from posting_lines_spark.sources import tables
+    from tests.conftest import SF0001, row_key
+
+    def src_dirs():
+        return {d for d in os.listdir(tempfile.gettempdir()) if d.startswith("pls_tumb_src_")}
+
+    first = stream_tumbling(spark, SF0001).collect()
+    dirs, memo = src_dirs(), len(tables._SCHEMAS)
+    second = stream_tumbling(spark, SF0001).collect()
+    assert src_dirs() == dirs
+    assert len(tables._SCHEMAS) == memo
+    assert sorted(second, key=row_key) == sorted(first, key=row_key) and first
