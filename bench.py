@@ -7,7 +7,7 @@ line carries both (VERDICT r12 item 2 — tier 2 previously lived only
 in SCALE.md prose, so heavy-tail regressions were invisible to the
 driver's BENCH_r{N}.json): the top-level metric/value/queries stay the
 frozen tier-1 headline set for round-over-round comparability, and a
-`tier2` object carries the 10 heaviest-shuffle registry queries.
+`tier2` object carries the frozen TIER2 set of heavy-shuffle queries.
 
 Each query is forced end-to-end with a noop write (full computation on
 executors, no driver collect — measures the plan, not the pickle).
@@ -45,32 +45,44 @@ HEADLINE = [
     "json_funcs",
 ]
 
-
-def tier2_names(n: int = 10) -> list[str]:
-    """Second bench tier (VERDICT r11 item 7): the N registry queries
-    with the largest MEASURED shuffle volume, parsed from the current
-    PLANS.md — the frozen headline set covers 4% of the registry, so
-    regressions in the heavy tail were invisible to BENCH. Membership
-    is recomputed from PLANS.md each time, so the tier ROTATES as the
-    registry grows and plans change; the headline set stays frozen for
-    round-over-round comparability."""
-    import re
-
-    rows = []
-    plans = os.path.join(os.path.dirname(os.path.abspath(__file__)), "PLANS.md")
-    with open(plans) as fh:
-        for line in fh:
-            m = re.match(r"\| ([a-z_0-9]+) \|.*\| ([0-9.]+|<0\.01|\?) \|$", line.strip())
-            if m and m.group(2) not in ("?", "<0.01"):
-                rows.append((float(m.group(2)), m.group(1)))
-    rows.sort(reverse=True)
-    return [name for _, name in rows[:n]]
+# Second tier (VERDICT r11 item 7): the frozen headline set covers 4% of
+# the registry, so regressions in the heavy tail were invisible to BENCH.
+# These are the 10 registry queries with the largest measured shuffle
+# write (`shuffle_write_mb`, ties by name) in BREAKDOWN_r19.json (sf0.01,
+# tools/profile_query.py over the whole registry); frozen like HEADLINE.
+TIER2 = [
+    "geo_dbscan_core",
+    "graph_modularity",
+    "graph_label_propagation",
+    "dedup_sorted_neighborhood",
+    "lake_hilbert_write",
+    "basket_association_rules",
+    "dedup_lsh_band_sweep",
+    "graph_adamic_adar",
+    "graph_linkpred_cap64",
+    "graph_adamic_adar_capped",
+]
 
 
-def _time_set(spark, qs, names: list[str], runs: int):
-    """Warmup + p50-of-N timed noop-write runs per query. Returns
-    (timings, errors); failed queries are EXCLUDED from totals and
-    reported so a crash can't flatter the headline number."""
+def time_set(spark, qs, names: list[str], runs: int, sf_dir: str, tracer=None):
+    """The registry-timing loop: a warm-up pass, then p50 of `runs`
+    noop writes per query. Each run is a `queries.<name>` span holding a
+    `.construct` span (the query function call) and an `.action` span
+    (the noop write), both with job groups, so an event log splits by the
+    perfbench rule (`pb|<op>|*.construct` jobs start at construction).
+    Returns (timings, errors); failed queries are EXCLUDED from totals
+    and reported so a crash can't flatter the headline number."""
+    from perfbench.spans import Tracer
+
+    tracer = tracer or Tracer(spark.sparkContext, enabled=True)
+
+    def once(name: str) -> None:
+        op = tracer.next_op()
+        with tracer.span(f"queries.{name}.construct", op, group=True):
+            df = qs[name](spark, sf_dir)
+        with tracer.span(f"queries.{name}.action", op, group=True):
+            df.write.format("noop").mode("overwrite").save()
+
     # Warmup pass (untimed): compiles codegen, JITs the hot loops, and
     # materializes per-process fixtures, so the timed pass measures
     # steady-state operator throughput — the number that scales to a real
@@ -78,7 +90,7 @@ def _time_set(spark, qs, names: list[str], runs: int):
     if os.environ.get("SPARK_GRAFT_WARMUP", "1") != "0":
         for name in names:
             try:
-                qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+                once(name)
             except Exception:  # noqa: BLE001
                 pass
 
@@ -87,11 +99,10 @@ def _time_set(spark, qs, names: list[str], runs: int):
     for name in names:
         samples: list[float] = []
         for _ in range(runs):
-            t0 = time.time()
             try:
-                df = qs[name](spark, SF_DIR)
-                df.write.format("noop").mode("overwrite").save()
-                samples.append(time.time() - t0)
+                with tracer.span(f"queries.{name}") as rec:
+                    once(name)
+                samples.append(rec["end"] - rec["start"])
             except Exception as e:  # noqa: BLE001 — one bad query must not kill the bench
                 print(f"# bench error in {name}: {e}", flush=True)
                 errors[name] = str(e).splitlines()[0][:200] if str(e) else type(e).__name__
@@ -169,14 +180,14 @@ def main() -> None:
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").limit(1).count()
 
     t1_names = [n for n in HEADLINE if n in qs] or list(qs)
-    t2_names = [n for n in tier2_names() if n in qs]
+    t2_names = [n for n in TIER2 if n in qs]
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     tier2: dict | None = None
     if tier in ("1", "both"):
-        timings, errors = _time_set(spark, qs, t1_names, runs)
+        timings, errors = time_set(spark, qs, t1_names, runs, SF_DIR)
     if tier in ("2", "both"):
-        t2_timings, t2_errors = _time_set(spark, qs, t2_names, runs)
+        t2_timings, t2_errors = time_set(spark, qs, t2_names, runs, SF_DIR)
         tier2 = {
             "metric": "tier2_heavy_queries_total_wall",
             "value": round(sum(t2_timings.values()), 3),

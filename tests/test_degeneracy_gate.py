@@ -27,10 +27,13 @@ model) and regression-tested in test_round12.py.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
-MANIFEST = "/root/repo/tools/degeneracy_manifest.json"
+from tests.conftest import REPO
+
+MANIFEST = os.path.join(REPO, "tools", "degeneracy_manifest.json")
 
 # Adjudicated zero-row pins: (query, sf_label) -> why empty is correct.
 EXPECTED_EMPTY = {

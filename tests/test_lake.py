@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF0001
@@ -151,29 +152,47 @@ def test_targeted_delete_preserves_null_key_rows(spark):
     assert table.count() == len(rows) - len(keys)
 
 
-def test_hilbert_clustered_write_prunes_more_files(spark):
-    """The write-side clustering claim with actual counts: for the same
-    bbox predicate, the Hilbert range-clustered layout keeps strictly
-    fewer files than the hash layout (whose every file spans the whole
-    grid and so never prunes), and the pruned scan loses no rows."""
-    from posting_lines_spark.queries.lake_q import (
-        HILB_BBOX,
-        HILB_FILES,
-        _hilbert_rows_sql,
-        _hilbert_write_and_prune,
-    )
+@pytest.fixture(scope="module")
+def hilbert_layouts(spark):
+    """Both Hilbert-write layouts written once, the source rows, and
+    their occupied (cx, cy) extent at sf0.001."""
+    from posting_lines_spark.queries.lake_q import _hilbert_rows_sql, _hilbert_write_layouts
     from posting_lines_spark.sources import load_table
 
-    pruned, n_clustered, n_hashed = _hilbert_write_and_prune(spark, SF0001)
-    # hash layout: every file spans the grid → bbox overlaps all 16
-    assert n_hashed == HILB_FILES
-    assert n_clustered < n_hashed, (n_clustered, n_hashed)
-    # soundness: pruned scan count == full-scan count for the same bbox
     load_table(spark, SF0001, "lineitem").createOrReplaceTempView("lineitem")
-    cx_lo, cx_hi, cy_lo, cy_hi = HILB_BBOX
-    full = (
-        spark.sql(_hilbert_rows_sql())
-        .filter(F.col("cx").between(cx_lo, cx_hi) & F.col("cy").between(cy_lo, cy_hi))
-        .count()
-    )
-    assert pruned.count() == full
+    rows = spark.sql(_hilbert_rows_sql())
+    ext = rows.agg(F.min("cx"), F.max("cx"), F.min("cy"), F.max("cy")).first()
+    return _hilbert_write_layouts(spark, SF0001), rows, tuple(ext)
+
+
+@pytest.mark.parametrize(
+    "bbox_name", ["corner", "edge_strip", "center", "HILB_BBOX", "full_extent"]
+)
+def test_hilbert_clustered_write_prunes_more_files(spark, hilbert_layouts, bbox_name):
+    """The write-side clustering claim with actual counts, over predicate
+    shapes from the occupied extent: for every bbox the pruned scan of
+    the Hilbert range-clustered layout loses no rows, and for the
+    registered HILB_BBOX it keeps strictly fewer files than the hash
+    layout (whose every file spans the whole grid and so never prunes)."""
+    from posting_lines_spark.queries.lake_q import HILB_BBOX, HILB_FILES, _bbox_kept_files
+
+    (p_clustered, p_hashed), rows, (cx0, cx1, cy0, cy1) = hilbert_layouts
+    mx, my = (cx0 + cx1) // 2, (cy0 + cy1) // 2
+    bbox = {
+        "corner": (cx0, cx0 + 1, cy0, cy0 + 1),
+        "edge_strip": (cx0, cx1, cy0, cy0),
+        "center": (mx - 1, mx + 1, my - 1, my + 1),
+        "HILB_BBOX": HILB_BBOX,
+        "full_extent": (cx0, cx1, cy0, cy1),
+    }[bbox_name]
+    cx_lo, cx_hi, cy_lo, cy_hi = bbox
+    pred = F.col("cx").between(cx_lo, cx_hi) & F.col("cy").between(cy_lo, cy_hi)
+    keep_c = _bbox_kept_files(spark, p_clustered, bbox)
+    # soundness: pruned scan count == full filter count for the same bbox
+    pruned = spark.read.parquet(*keep_c).filter(pred).count() if keep_c else 0
+    assert pruned == rows.filter(pred).count(), (bbox, len(keep_c))
+    if bbox_name == "HILB_BBOX":
+        n_hashed = len(_bbox_kept_files(spark, p_hashed, bbox))
+        # hash layout: every file spans the grid → bbox overlaps all 16
+        assert n_hashed == HILB_FILES
+        assert 0 < len(keep_c) < n_hashed, (len(keep_c), n_hashed)

@@ -7,14 +7,17 @@ after later commits land; structural invariants are checked on top.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
+
+from tests.conftest import REPO
 
 
 def test_ledger_priority_no_drift():
     r = subprocess.run(
         [sys.executable, "tools/ledger_priority.py", "--check"],
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
         text=True,
     )
@@ -24,7 +27,6 @@ def test_ledger_priority_no_drift():
 def test_ledger_priority_is_total_permutation():
     """Every registered query appears exactly once — a priority that
     drops a name silently exempts it from the driver draw."""
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as m
     from posting_lines_spark.queries import load_all
 
@@ -37,10 +39,9 @@ def test_readme_count_matches_registry():
     VERDICT caught a hand-maintained count three waves stale."""
     import re
 
-    sys.path.insert(0, "/root/repo")
     from posting_lines_spark.queries import load_all
 
-    text = open("/root/repo/README.md").read()
+    text = open(os.path.join(REPO, "README.md")).read()
     counts = re.findall(r"(\d+) registered queries", text)
     assert counts, "README lost its registry-count sentence"
     assert all(int(c) == len(load_all()) for c in counts), (

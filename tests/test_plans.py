@@ -264,6 +264,39 @@ def test_plans_md_covers_full_registry():
     )
 
 
+def test_profile_query_cli_fields():
+    """tools/profile_query.py prints one JSON object per query with the
+    construction/action split and the event-log totals of its timed
+    runs. After the warm-up, geo_flagship builds its plan without a job
+    (the footer schema is memoized), while dedup_minhash_lsh's shared
+    shingle cut runs upstream stages at construction under AQE."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import REPO
+
+    r = subprocess.run(
+        [sys.executable, os.path.join("tools", "profile_query.py"), SF0001,
+         "geo_flagship", "dedup_minhash_lsh"],
+        cwd=REPO, capture_output=True, text=True, timeout=600,
+        env=dict(os.environ, SPARK_GRAFT_DRIVER_MEM="2g"),
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    rows = {o["query"]: o for o in (json.loads(ln) for ln in r.stdout.splitlines()
+                                      if ln.startswith("{"))}
+    fields = {"construct_s", "action_s", "construct_jobs", "jobs", "stages", "tasks",
+              "run_s", "gc_s", "shuffle_write_mb", "shuffle_read_mb", "spill_mb",
+              "one_task_stage_s", "core_idle_frac"}
+    assert set(rows) == {"geo_flagship", "dedup_minhash_lsh"}, r.stdout
+    for name, row in rows.items():
+        assert fields <= set(row) and "error" not in row, row
+        assert row["jobs"] >= 1, row
+    assert rows["geo_flagship"]["construct_jobs"] == 0, rows["geo_flagship"]
+    assert rows["dedup_minhash_lsh"]["construct_jobs"] >= 1, rows["dedup_minhash_lsh"]
+
+
 def test_every_lineage_cut_goes_through_cuts():
     """Spark-free guard: the only raw `localCheckpoint` / `checkpoint`
     calls in the package are inside `operators/cuts.py`, so every cut
@@ -289,3 +322,38 @@ def test_every_lineage_cut_goes_through_cuts():
                 and n.func.attr in ("localCheckpoint", "checkpoint")
             ]
     assert not sites, f"{len(sites)} raw cut call(s) outside operators/cuts.py: {sites}"
+
+
+def test_no_checkout_path_in_tests_or_tools():
+    """Spark-free guard: tests and tools find the package from their own
+    `__file__`, never from a hard-coded checkout path, so a suite run
+    from another checkout (a copy of the parent commit, say) tests that
+    checkout's code rather than silently importing another one's. A
+    checkout path is any absolute path inside a directory that holds
+    the package; this checkout's own path counts even where it is not
+    spelled out whole."""
+    import os
+
+    from tests.conftest import REPO
+
+    def in_checkout(path: str) -> bool:
+        parts = path.split("/")
+        return any(
+            os.path.isfile(os.path.join("/".join(parts[:i]), "posting_lines_spark", "__init__.py"))
+            for i in range(2, len(parts) + 1)
+        )
+
+    hits = []
+    for sub in ("tests", "tools"):
+        for d, dirs, files in os.walk(os.path.join(REPO, sub)):
+            dirs[:] = [x for x in dirs if x != "__pycache__"]
+            for f in sorted(files):
+                path = os.path.join(d, f)
+                with open(path, errors="replace") as fh:
+                    hits += [
+                        f"{os.path.relpath(path, REPO)}:{i}"
+                        for i, line in enumerate(fh, 1)
+                        if REPO in line
+                        or any(in_checkout(t) for t in re.findall(r"(?<![\w.~])/[\w.\-/]+", line))
+                    ]
+    assert not hits, f"{len(hits)} line(s) hard-code a checkout path: {hits}"

@@ -28,7 +28,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from tests.conftest import SF0001
+from tests.conftest import REPO, SF0001
 
 
 def _canon_rows(rows, cols):
@@ -706,7 +706,7 @@ def test_time_to_convert_matches_python(spark):
 
 import os
 
-SF1 = "/root/repo/.benchdata/sf1"
+SF1 = os.path.join(REPO, ".benchdata", "sf1")
 
 
 @pytest.mark.skipif(not os.path.isdir(SF1), reason="sf1 benchdata not generated")

@@ -8,9 +8,11 @@ scale lever."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
-from tests.conftest import SF0001
+from tests.conftest import REPO, SF0001
 
 
 # ---- graph_linkpred cap=8 (parity demo) vs cap=64 (production) ----
@@ -142,7 +144,7 @@ def test_hot_salted_twin_ids_never_collide(spark):
 def test_timed_reraises_genuine_failures(spark):
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(REPO, "tools"))
     from skew_pressure import _timed
 
     def boom():
@@ -349,7 +351,7 @@ def test_ivf_hotsplit_identical_to_plain_on_skewed_cells(spark):
 
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(REPO, "tools"))
     from ann_recall import make_skew_clustered
 
     from posting_lines_spark.queries import load_all

@@ -16,9 +16,11 @@ each probing rung buys.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -70,7 +72,7 @@ def bucket_recall(emb, queries, truth, assign, n_queries):
     return len(got & truth) / len(truth), n_cand
 
 
-CLUSTERED_DIR = "/root/repo/.benchdata/emb_clustered"
+CLUSTERED_DIR = os.path.join(REPO, ".benchdata", "emb_clustered")
 CLUSTERED_N = 2000
 CLUSTERED_C = 25
 CLUSTERED_SIGMA = 0.25
@@ -85,8 +87,6 @@ def make_clustered(spark) -> str:
     Gaussian centers with sigma-noise points (same schema as the
     testdata table: vec_id BIGINT, embedding FLOAT[], label INT =
     true cluster), fixed seed, written once and reused."""
-    import os
-
     import numpy as np
 
     path = os.path.join(CLUSTERED_DIR, "embeddings.parquet")
@@ -110,7 +110,7 @@ def make_clustered(spark) -> str:
     return CLUSTERED_DIR
 
 
-SKEWCLUSTERED_DIR = "/root/repo/.benchdata/emb_skewclustered"
+SKEWCLUSTERED_DIR = os.path.join(REPO, ".benchdata", "emb_skewclustered")
 SKEWC_N = 4000
 SKEWC_C = 25
 SKEWC_ALPHA = 1.1
@@ -130,8 +130,6 @@ def make_skew_clustered(spark) -> str:
     discipline as make_clustered; the other testdata tables are
     symlinked from sf0.01 so every registered audit query runs on this
     dir unchanged (the re-certification path)."""
-    import os
-
     import numpy as np
 
     path = os.path.join(SKEWCLUSTERED_DIR, "embeddings.parquet")

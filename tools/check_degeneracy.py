@@ -60,6 +60,8 @@ SF_DIRS = {
 # silently collapse at larger SFs without parity noticing (band-sweep
 # census cap, DBSCAN grid, modularity rounds). Pinned via --pin-sf01;
 # checked via --sf sf01 (covers only queries that carry an sf01 entry).
+# geo_knn_join and geo_knn_grid keep the pins they took as tier-2
+# members before bench.TIER2 was re-picked from BREAKDOWN_r19.json.
 SF01_DIR = "/root/testdata/sf0.1"
 # Queries whose engine side is legitimately nondeterministic in row
 # count (none today — parity discipline forbids it). Kept explicit so
@@ -187,17 +189,16 @@ def pin(only: list[str] | None = None) -> int:
 
 
 def pin_sf01(names: list[str]) -> int:
-    """Merge sf0.1 profiles for `names` (default: the current bench
-    tier-2 membership) into the existing manifest as an `sf01` section
+    """Merge sf0.1 profiles for `names` (default: bench.TIER2) into the existing manifest as an `sf01` section
     per query."""
     sys.path.insert(0, os.path.dirname(os.path.dirname(__file__)))
     from posting_lines_spark.queries import load_all
     from posting_lines_spark.session import get_spark
 
     if not names:
-        from bench import tier2_names
+        from bench import TIER2
 
-        names = tier2_names()
+        names = TIER2
     registry = load_all()
     unknown = sorted(set(names) - set(registry))
     if unknown:

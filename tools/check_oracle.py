@@ -11,6 +11,7 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
@@ -49,7 +50,7 @@ def rows_canon(rows, colnames):
 def main() -> int:
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from posting_lines_spark.session import get_spark
     from posting_lines_spark.sources import TABLES
@@ -64,8 +65,6 @@ def main() -> int:
     if unknown:
         print(f"ERROR: unknown queries: {unknown}; known: {sorted(qs)}")
         return 2
-
-    import os
 
     con = duckdb.connect()
     for t in TABLES:

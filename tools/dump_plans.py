@@ -58,94 +58,15 @@ def _noop_lazy_checkpoints() -> None:
     DataFrame.localCheckpoint = patched
 
 
-def _shuffle_bytes_from_eventlog(log_dir: str) -> dict[str, int]:
-    """query -> total shuffle-write bytes, parsed from the Spark event
-    log (public JSON format). Jobs are attributed to queries via the
-    job-group id set around each execution; per-stage write bytes come
-    from the `internal.metrics.shuffle.write.bytesWritten` accumulable
-    on SparkListenerStageCompleted. This is volumetric ground truth —
-    exchange COUNTS are structural, and the round-8 verdict asked for
-    the bytes a plan actually moves (a 2-exchange query can shuffle
-    more than a 10-exchange one)."""
-    import json
-
-    stage_group: dict[int, str] = {}
-    out: dict[str, int] = {}
-    for fname in sorted(os.listdir(log_dir)):
-        path = os.path.join(log_dir, fname)
-        if not os.path.isfile(path):
-            continue
-        with open(path) as f:
-            for line in f:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                kind = ev.get("Event")
-                if kind == "SparkListenerJobStart":
-                    grp = (ev.get("Properties") or {}).get("spark.jobGroup.id")
-                    if grp:
-                        for sid in ev.get("Stage IDs", []):
-                            stage_group[sid] = grp
-                elif kind == "SparkListenerStageCompleted":
-                    info = ev.get("Stage Info", {})
-                    grp = stage_group.get(info.get("Stage ID"))
-                    if not grp:
-                        continue
-                    for acc in info.get("Accumulables", []):
-                        if acc.get("Name") == "internal.metrics.shuffle.write.bytesWritten":
-                            out[grp] = out.get(grp, 0) + int(acc.get("Value", 0))
-    return out
-
-
-def _fmt_mb(n_bytes: int | None) -> str:
-    if n_bytes is None:
-        return "?"
-    if n_bytes == 0:
-        return "0"
-    mb = n_bytes / (1024 * 1024)
-    return f"{mb:.2f}" if mb >= 0.005 else "<0.01"
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    import tempfile
-
     from posting_lines_spark.queries import load_all
     from posting_lines_spark.session import get_spark
 
-    log_dir = tempfile.mkdtemp(prefix="pls_eventlog_")
-    spark = get_spark(
-        app="plans",
-        extra={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": log_dir,
-            # Spark 4 defaults to a rolling zstd V2 log the stdlib can't
-            # read; a single plain-JSON file is what the parser expects.
-            "spark.eventLog.compress": "false",
-            "spark.eventLog.rolling.enabled": "false",
-        },
-    )
+    spark = get_spark(app="plans")
     registry = sorted(load_all().items())
 
-    # Pass 1 — EXECUTE each query (noop sink, production code paths:
-    # lazy checkpoints real) under a per-query job group so the event
-    # log attributes its stages. Streaming sinks run their micro-batch
-    # jobs on separate threads (job group is thread-local), so stream_*
-    # shuffle volume lands unattributed — their volumetrics live in
-    # SCALE.md's per-epoch rows instead.
-    exec_err: dict[str, str] = {}
-    for name, spec in registry:
-        sc = spark.sparkContext
-        sc.setJobGroup(name, name)
-        try:
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        except Exception as e:  # noqa: BLE001
-            exec_err[name] = str(e).splitlines()[0][:80]
-        finally:
-            sc.setJobGroup("", "")
-
-    # Pass 2 — structural audit of the FULL plan (lazy cuts no-op'd).
+    # Structural audit of the FULL plan (lazy cuts no-op'd).
     _noop_lazy_checkpoints()
     rows = []
     exemplar_plans = {}
@@ -158,7 +79,7 @@ def main() -> None:
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
             )
         except Exception as e:  # noqa: BLE001
-            rows.append((name, "ERROR", "", "", str(e).splitlines()[0][:80], "?"))
+            rows.append((name, "ERROR", "", "", str(e).splitlines()[0][:80]))
             continue
         n_exchange = len(re.findall(r"\bExchange\b", plan))
         joins = sorted({j for j in JOIN_NODES if j in plan})
@@ -170,7 +91,6 @@ def main() -> None:
         if name in EXEMPLARS:
             exemplar_plans[name] = formatted
     spark.stop()
-    shuffle = _shuffle_bytes_from_eventlog(log_dir)
 
     out = [
         "# PLANS — physical-plan audit (generated by tools/dump_plans.py)",
@@ -185,32 +105,14 @@ def main() -> None:
         "Eager checkpoints inside iterative operators still truncate; those",
         "plans repeat one per-round segment shape.",
         "",
-        "`shuffle MB` is MEASURED shuffle-write volume (event-log stage",
-        "metrics, production code paths, noop sink) — the volumetric",
-        "counterpart to the structural exchange count: a 2-exchange query",
-        "can move more bytes than a 10-exchange one. First-touch fixture",
-        "materialization is attributed to the first query that needs it;",
-        "streaming sinks run micro-batch jobs on their own threads, so",
-        "stream_* rows show `?` here (their volumetrics are in SCALE.md).",
+        "Measured per-query volumes (shuffle bytes, jobs, stages, spill) are",
+        "not audited here: `tools/profile_query.py` reports them, and its",
+        "registry-wide run is committed as `BREAKDOWN_rNN.json`.",
         "",
-        "| query | exchanges | joins | python | pushed filters | shuffle MB |",
-        "|---|---|---|---|---|---|",
+        "| query | exchanges | joins | python | pushed filters |",
+        "|---|---|---|---|---|",
     ]
-    for r in rows:
-        name = r[0]
-        if len(r) == 6:  # plan ERROR row (carries its own last column)
-            out.append("| " + " | ".join(r) + " |")
-            continue
-        if name in exec_err:
-            vol = "ERR"
-        elif name.startswith("stream_"):
-            vol = "?"  # micro-batch jobs run off-thread, unattributable
-        else:
-            vol = _fmt_mb(shuffle.get(name, 0))
-        out.append("| " + " | ".join(r) + f" | {vol} |")
-    if exec_err:
-        out += ["", "Execution errors during the metrics pass:", ""]
-        out += [f"- `{n}`: {m}" for n, m in sorted(exec_err.items())]
+    out += ["| " + " | ".join(r) + " |" for r in rows]
     for name, plan in exemplar_plans.items():
         out += ["", f"## {name} (formatted plan)", "", "```", plan.rstrip(), "```"]
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:

@@ -2,7 +2,7 @@
 #2): replicates an existing sf dir N× with disjoint key spaces, writing
 to a repo-local dir (testdata itself is read-only).
 
-    python tools/make_sf.py /root/testdata/sf0.1 /root/repo/.benchdata/sf1 10
+    python tools/make_sf.py path/to/sf0.1 .benchdata/sf1 10
 
 Replication rules (per replica i, key offset i·10⁹):
 - every entity/foreign key shifts by the SAME offset on both sides, so
@@ -19,9 +19,10 @@ Replication rules (per replica i, key offset i·10⁹):
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 OFFSET = 10**9
 

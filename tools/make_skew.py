@@ -6,8 +6,8 @@ was taken on make_sf's replica-constant corpus (max co-purchase degree
 salted join, LSH hot-band salting, and AQE skew-join splitting never
 fired. This tool produces corpora where they do:
 
-  python tools/make_skew.py /root/testdata/sf0.1 /root/repo/.benchdata/skew01
-  python tools/make_skew.py /root/repo/.benchdata/sf1 /root/repo/.benchdata/skew1
+  python tools/make_skew.py path/to/sf0.1 .benchdata/skew01
+  python tools/make_skew.py .benchdata/sf1 .benchdata/skew1
   python tools/make_skew.py SRC DST --mode order    # hot-join-key fixture
 
 Default mode (`hub`) skews the ANALYTIC keys, leaving join keys alone:
@@ -46,9 +46,10 @@ Zipf, monotone in u, giving P(rank 1) ~= 1 - 2^(1-alpha) for large R.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 ALPHA = 1.1
 DOC_DUP_FRAC = 0.10  # fraction of docs replaced by near-dup mutations

@@ -12,13 +12,14 @@ This wrapper is the smallest possible driver around it.
 
 from __future__ import annotations
 
+import os
 import sys
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     args = [a for a in sys.argv[1:]]
     explain = "--explain" in args
     listing = "--list" in args

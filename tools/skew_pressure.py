@@ -5,10 +5,10 @@ degree ~6, uniform join keys, no boilerplate docs). This tool runs the
 levers on corpora where they DO engage and prints one JSON line per
 measurement for SCALE.md:
 
-  python tools/skew_pressure.py wedge  /root/repo/.benchdata/skew01
-  python tools/skew_pressure.py lsh    /root/repo/.benchdata/skew1
-  python tools/skew_pressure.py join   /root/repo/.benchdata/skeworder1
-  python tools/skew_pressure.py aqe    /root/repo/.benchdata/skeworder1
+  python tools/skew_pressure.py wedge  .benchdata/skew01
+  python tools/skew_pressure.py lsh    .benchdata/skew1
+  python tools/skew_pressure.py join   .benchdata/skeworder1
+  python tools/skew_pressure.py aqe    .benchdata/skeworder1
 
 wedge — graph_linkpred_capped vs uncapped graph_link_prediction on the
   hub corpus: wall times, capped_nodes (cap BINDING), top-20 overlap
@@ -35,11 +35,12 @@ aqe — same join with AQE skew-join ON and thresholds at their
 from __future__ import annotations
 
 import json
+import os
 import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CAP_TIMEOUT_DEFAULT = 900.0
 
