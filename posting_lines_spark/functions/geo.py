@@ -347,16 +347,3 @@ def line_wkt(geom: Column) -> Column:
         geom["x2"].cast("string"),
         geom["y2"].cast("string"),
     )
-
-
-def parse_wkt_line(wkt: Column, srid: int) -> Column:
-    """Inverse of `line_wkt`: parse `LINESTRING(x1 y1, x2 y2)` back into
-    the struct form (regexp capture groups; PostGIS interop O17)."""
-    pat = r"LINESTRING\(([-0-9.eE]+) ([-0-9.eE]+), ([-0-9.eE]+) ([-0-9.eE]+)\)"
-    return F.struct(
-        F.lit(srid).alias("srid"),
-        F.regexp_extract(wkt, pat, 1).cast("double").alias("x1"),
-        F.regexp_extract(wkt, pat, 2).cast("double").alias("y1"),
-        F.regexp_extract(wkt, pat, 3).cast("double").alias("x2"),
-        F.regexp_extract(wkt, pat, 4).cast("double").alias("y2"),
-    )

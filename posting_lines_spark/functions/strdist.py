@@ -4,7 +4,7 @@ leading characters, applied only when jaro > 0.7; empty strings score
 0 even against themselves).
 
 Verified BIT-IDENTICAL to DuckDB's `jaro_winkler_similarity` across
-46k random + adversarial pairs (tests/test_round9.py) — which is what
+46k random + adversarial pairs (tests/test_text.py) — which is what
 lets the fuzzy-join oracle use DuckDB's independent C++ implementation
 while the engine side runs this one in an Arrow-batched Pandas UDF.
 

@@ -8,7 +8,7 @@ a join + min-aggregate — the Spark-shaped formulation (no driver-side
 adjacency; the driver only sees a per-round convergence checksum).
 Convergence is O(log² n) rounds worst case and ~O(log n) in practice,
 vs O(diameter) for plain min-label propagation — a 1000-node path graph
-converges in ~10 rounds instead of ~999 (see tests/test_graph_scale.py).
+converges in ~10 rounds instead of ~999 (see tests/test_graph.py).
 
 Durability at cluster scale: every `checkpoint_every` rounds the edge
 set goes through a durable cut (`cuts.cut`: a RELIABLE checkpoint when

@@ -525,54 +525,6 @@ def decode_bmp(payload: bytes) -> tuple[int, int, list[list[tuple[int, int, int]
     return w, h, rows
 
 
-def decode_media(df: DataFrame) -> DataFrame:
-    """REAL decode dispatch over binary payloads (Arrow-batched): BMP →
-    (kind='bmp', dim1=width, dim2=height, checksum=Σ all channel bytes),
-    WAV → (kind='wav', dim1=rate, dim2=n_samples, checksum=Σ|sample|),
-    PNG/baseline JPEG → (kind, width, height, Σ RGB bytes). Formats
-    with no pure-Python codec path (MP3/H.264) raise
-    NotImplementedError — the residual stub boundary."""
-
-    def per_batch(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload[0:2] == b"BM":
-                    w, h, px = decode_bmp(bytes(payload))
-                    csum = sum(c for row in px for p in row for c in p)
-                    rows.append((int(doc_id), "bmp", w, h, csum))
-                elif payload[0:4] == b"RIFF":
-                    rate, samples = decode_wav(bytes(payload))
-                    rows.append(
-                        (int(doc_id), "wav", rate, len(samples),
-                         sum(abs(s) for s in samples))
-                    )
-                elif payload[0:8] == b"\x89PNG\r\n\x1a\n":
-                    w, h, px = decode_png(bytes(payload))
-                    csum = sum(c for row in px for p in row for c in p)
-                    rows.append((int(doc_id), "png", w, h, csum))
-                elif payload[0:2] == b"\xff\xd8":
-                    w, h, px = decode_jpeg(bytes(payload))
-                    csum = sum(c for row in px for p in row for c in p)
-                    rows.append((int(doc_id), "jpg", w, h, csum))
-                else:
-                    raise NotImplementedError(
-                        "media formats without a pure-Python codec path "
-                        "(MP3/H.264) are the residual stub; BMP/WAV/PNG/"
-                        "baseline-JPEG decode is real (decode_bmp/"
-                        "decode_wav/decode_png/decode_jpeg)"
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "kind", "dim1", "dim2", "checksum"]
-            )
-
-    return df.mapInPandas(
-        per_batch,
-        schema="doc_id long, kind string, dim1 long, dim2 long, checksum long",
-    )
-
 
 def attach_wav(df: DataFrame) -> DataFrame:
     """REAL-container twin of attach_audio: the same md5-derived sample
@@ -1460,7 +1412,7 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, list[list[tuple[int, int, int
 # fully standard baseline JFIF (Annex-K Huffman, byte stuffing, DC
 # prediction across 12 blocks); the decoder is general — the AC/ZRL/
 # EOB and multi-coefficient paths are exercised by the coefficient
-# round-trip tests in tests/test_round14.py.
+# round-trip tests in tests/test_operators.py.
 JPG_W, JPG_H = 16, 16
 _JPG_DCQ = 8  # DC quant step: dequantized DC = 8*(v-128) -> IDCT = v-128
 _JPG_QL = [_JPG_DCQ] + [1] * 63

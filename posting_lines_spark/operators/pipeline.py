@@ -183,22 +183,3 @@ def write_daily_partitioned(df: DataFrame, path: str, ts_col: str = "start_time"
         .partitionBy("__day")
         .parquet(path)
     )
-
-
-def observe_enrich(df: DataFrame, srid: int = 3005):
-    """`enrich_segments` instrumented with engine-side run metrics
-    (`df.observe`): rows seen, rows newly enriched, geometry nulls left
-    behind. Metrics are computed inside the same job — no second scan, no
-    driver-side counting — which is the only monitoring pattern that
-    survives 100 TB (a `.count()` per metric would re-run the pipeline).
-    Returns (DataFrame, Observation); read `observation.get` after the
-    sink action completes."""
-    from pyspark.sql import Observation
-
-    obs = Observation("enrich_metrics")
-    watched = clean_zero_duration(df).observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_in"),
-        F.sum(F.col("geom").isNull().cast("long")).alias("rows_to_enrich"),
-    )
-    return enrich_segments(watched, srid=srid), obs

@@ -15,7 +15,7 @@ invisible at sf0.01 and fatal at 100 TB. The standard two-pass fix
 Correctness requires a TOTAL order (a tiebreak column): with no ties,
 any contiguous range split preserves global order, so the result equals
 the single-partition window's ranks exactly — asserted by test on the
-real corpus (tests/test_fifthwave.py) regardless of where the sampled
+real corpus (tests/test_operators.py) regardless of where the sampled
 range boundaries land.
 
 Reference scope note: the reference engine (SURVEY.md §2) never ranks;

@@ -58,11 +58,6 @@ def scd2_apply(
     return closed.unionByName(fresh)
 
 
-def scd2_current(table: DataFrame) -> DataFrame:
-    """The current snapshot: the open row per key."""
-    return table.filter(F.col("valid_to").isNull())
-
-
 def scd2_as_of(table: DataFrame, ts: Column) -> DataFrame:
     """Point-in-time snapshot: rows whose interval covers `ts`."""
     return table.filter(

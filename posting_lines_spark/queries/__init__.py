@@ -24,14 +24,14 @@ from pyspark.sql import DataFrame, SparkSession
 @dataclass
 class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
+    oracle: str  # ANSI SQL for DuckDB
     description: str = ""
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None = None, description: str = ""):
+def register(name: str, oracle: str, description: str = ""):
     def deco(fn):
         # Duplicate registration is a silent OVERWRITE of an existing
         # query — round 13 nearly shipped one (a second

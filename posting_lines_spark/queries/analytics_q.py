@@ -5755,7 +5755,7 @@ def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # contract is robust on any new SF/dataset (ADVICE r12: at 3σ ~0.3%
 # of cells are EXPECTED outside the bound even when the sketch is
 # correct — a pinned-TRUE oracle must sit beyond the expected tail);
-# the tight 3σ ≈ 6% empirical check lives in tests/test_round13.py
+# the tight 3σ ≈ 6% empirical check lives in tests/test_analytics.py
 # against the fixed sf0.001/sf0.01 corpora where it is deterministic.
 # At extreme user counts drop the exact aggregate and keep the HLL
 # column — the state per (day, grain) becomes a constant 2^lgK bytes

@@ -884,7 +884,7 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 #    estimate n_sampled·B div CAP and the truncation is REPORTED:
 #    n_cand_sampled (exact kept count), n_pairs_bound (B), capped
 #    (0/1). A capped census still ranks configs — the sweep is a
-#    tuning audit — and tests/test_round10.py proves capped-vs-
+#    tuning audit — and tests/test_dedup.py proves capped-vs-
 #    uncapped ranking equivalence plus engine/oracle hash parity in
 #    the capped regime.
 

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from posting_lines_spark.operators import graph
 from posting_lines_spark.operators.cuts import cut
 from posting_lines_spark.queries import register
-from posting_lines_spark.queries.dedup_q import _minhash_oracle, dedup_minhash_lsh
+from posting_lines_spark.queries.dedup_q import NEAR_BASE_DUCK, _minhash_oracle, dedup_minhash_lsh
 from posting_lines_spark.sources import load_table
 
 # verified near-dup pairs (DuckDB): the input of every pair-graph oracle
@@ -721,7 +721,7 @@ LINKPRED_COOC = 2
 # AT-SCALE DEFAULT: on the same hub corpus it returns the real top-20
 # at 14x less cost than uncapped (3.5 s vs 48.7 s) while keeping the
 # |V|·cap² bound. Both are registered with their own oracle rows;
-# tests/test_round14.py pins the hub-graph behavior of each.
+# tests/test_graph.py pins the hub-graph behavior of each.
 GRAPH_NEIGHBOR_CAP = 8
 GRAPH_NEIGHBOR_CAP_PROD = 64
 
@@ -815,18 +815,6 @@ LIMIT 20
 
 
 LINKPRED_ORACLE = "WITH " + _linkpred_core("lineitem")
-
-
-def _wedge_count_sql(lineitem_src: str, cap: int | None = None) -> str:
-    """Count of wedge-join rows — the Σ deg² work term the neighbor cap
-    bounds; used by the hub-explosion tests to show the cap turns
-    O(hub_degree²) into O(cap²)."""
-    return f"""WITH {_copurchase_graph(lineitem_src, cap)},
-wedge AS (
-  SELECT w1.u AS a, w2.v AS c
-  FROM adj w1 JOIN adj w2 ON w2.u = w1.v AND w1.u < w2.v
-)
-SELECT CAST(count(*) AS BIGINT) AS wedges FROM wedge"""
 
 
 # --- Adamic-Adar link prediction ---
@@ -1926,7 +1914,7 @@ GROUP BY component
 
 @register(
     "curation_dedup_keep_best",
-    oracle=None,  # set below — needs dedup_q constants
+    oracle=KEEP_BEST_ORACLE.format(pairs=_PAIRS_DUCK, base=NEAR_BASE_DUCK),
     description="quality-aware dedup survivor selection: each near-dup "
     "component keeps its LONGEST member (tie → min id) instead of "
     "dedup_groups' arbitrary min-id — the keep-longest heuristic that "
@@ -1970,18 +1958,6 @@ def curation_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.count(F.lit(1)) - 1).cast("long").alias("n_drops"),
         )
     )
-
-
-def _set_keep_best_oracle() -> None:
-    from posting_lines_spark.queries import REGISTRY
-    from posting_lines_spark.queries.dedup_q import NEAR_BASE_DUCK
-
-    REGISTRY["curation_dedup_keep_best"].oracle = KEEP_BEST_ORACLE.format(
-        pairs=_PAIRS_DUCK, base=NEAR_BASE_DUCK
-    )
-
-
-_set_keep_best_oracle()
 
 
 # --- k-truss peeling (wave 29) ---

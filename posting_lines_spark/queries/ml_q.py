@@ -61,7 +61,7 @@ def _auc_final_sql(src: str) -> str:
     # nullif guards: a one-class corpus has P·N = 0 — Spark's ANSI mode
     # ERRORS on double division by zero while DuckDB returns NULL, so
     # the guard is an engine-parity requirement, not just cosmetics
-    # (tests/test_degenerate.py::test_ml_zero_positive_corpus)
+    # (tests/test_degenerate.py::test_ml_zero_positive_corpus_null_on_both_engines)
     pn = "nullif(CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE), 0.0e0)"
     return f"""
 SELECT n_pos, n_neg, num2,

@@ -517,7 +517,7 @@ def ntile_from_rank_sql(rank_col: str, n: int, k: int) -> str:
     hold ceil(n/k) rows, the rest floor(n/k). (A naive
     floor((rank-1)·k/n)+1 spreads the remainder Bresenham-style and
     diverges from ntile whenever k does not divide n — caught by
-    tests/test_fifthwave.py on n=10007.)"""
+    tests/test_schema.py on n=10007.)"""
     q, r = divmod(n, k)
     big = q + 1
     cut = r * big  # ranks 1..cut live in the size-(q+1) buckets

@@ -892,7 +892,7 @@ def stream_ewma(
     ckpt: str | None = None,
 ) -> DataFrame:
     # src/state_root/ckpt are injectable so the restart-recovery test
-    # (tests/test_round10.py) can drive THIS pipeline across a
+    # (tests/test_stream.py) can drive THIS pipeline across a
     # kill/resume instead of a reimplementation
     from posting_lines_spark.queries.analytics_q import (
         _EWMA_FOLD_SPARK,
@@ -2362,7 +2362,7 @@ register(
 # DC = v-128 against a DC quant step of 8, IDCT of a lone DC is a
 # constant plane, floor(x+0.5) recovers the integer. The AC/ZRL/EOB
 # Huffman paths are pinned by coefficient round-trip tests
-# (tests/test_round14.py).
+# (tests/test_stream.py).
 
 
 def _jpeg_rgb_duck() -> str:

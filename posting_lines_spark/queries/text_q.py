@@ -1992,7 +1992,7 @@ FROM pls_bpe_final_seq
 # part: the engine computes it with the pure-Python textbook kernel
 # (functions/strdist.py) in an Arrow-batched Pandas UDF, the oracle
 # with DuckDB's C++ jaro_winkler_similarity — two unrelated
-# implementations that tests/test_round9.py shows agree BIT-FOR-BIT
+# implementations that tests/test_text.py shows agree BIT-FOR-BIT
 # (46k adversarial pairs, max |Δ| = 0.0), so the argmax ordering
 # (jw DESC, key ASC) picks the identical winner on both engines. The
 # self-audit rides along: matched_self = the probe's top-1 is its own

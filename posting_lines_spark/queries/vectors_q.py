@@ -1241,7 +1241,7 @@ def _semdedup_sql(
     #   - a class's min copy is dropped iff some OTHER class with an
     #     id below it (⟺ min(E') < min(E)) is θ-similar — the class
     #     pair join with x.min_id < y.min_id.
-    # tests/test_round10.py proves collapsed ≡ pairwise at sf0.01.
+    # tests/test_vectors.py proves collapsed ≡ pairwise at sf0.01.
     cls = f"""
 cls AS (
   SELECT cluster_id, embedding, min(vec_id) AS min_id,

@@ -203,7 +203,7 @@ def write_jdbc(
     completes the connector round-trip). No PG server exists in this
     environment, but the path is exercised LIVE against embedded Apache
     Derby (a real database in the Spark JVM): see the registered
-    `jdbc_roundtrip` query (oracle-checked) and tests/test_round11.py's
+    `jdbc_roundtrip` query (oracle-checked) and tests/test_sources.py's
     pushdown/partitioned-read assertions; only the dialect differs from
     PG, and Spark's JdbcDialect layer owns that.
 

@@ -4,10 +4,12 @@ from __future__ import annotations
 
 import math
 import struct
+from collections import Counter, defaultdict
 
 import pytest
 
 from posting_lines_spark.functions import geo
+from tests.conftest import SF0001, _run
 
 
 def bits(x: float) -> bytes:
@@ -116,21 +118,58 @@ class TestSog:
         assert bad == 0
 
 
-class TestWktInterop:
-    def test_wkt_round_trip(self, spark):
-        from pyspark.sql import functions as F
 
-        df = spark.createDataFrame(
-            [(1, 1207619.5, 478302.25, -1000.125, 0.5)], "id long, x1 double, y1 double, x2 double, y2 double"
-        )
-        geom = geo.make_line(3005, F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"))
-        out = (
-            df.withColumn("wkt", geo.line_wkt(geom))
-            .withColumn("back", geo.parse_wkt_line(F.col("wkt"), 3005))
-            .collect()[0]
-        )
-        # values chosen exactly representable in the default float rendering
-        assert (out.back.x1, out.back.y1, out.back.x2, out.back.y2) == (
-            1207619.5, 478302.25, -1000.125, 0.5,
-        )
-        assert out.back.srid == 3005
+def test_replay_geo_heatmap_counts(spark):
+    """Partial replay of geo_heatmap_grid: the n_points per cell derive
+    from the projected coordinates, which we take from the ENGINE's own
+    enrichment (the Albers kernel has its own dedicated parity tests in
+    test_geo.py); what this verifies independently is the tiling math
+    and both zoom aggregations."""
+    import math
+
+    from posting_lines_spark.queries import load_all
+    from posting_lines_spark.queries.geo_q import enriched_sql
+    from posting_lines_spark.sources import load_table
+
+    load_table(spark, SF0001, "lineitem").createOrReplaceTempView("lineitem")
+    pts = spark.sql(f"SELECT x1, y1 FROM ({enriched_sql()})").collect()
+    cells = Counter()
+    for p in pts:
+        cells[(1, math.floor(p["x1"] / 400000.0), math.floor(p["y1"] / 400000.0))] += 1
+        cells[(2, math.floor(p["x1"] / 100000.0), math.floor(p["y1"] / 100000.0))] += 1
+    got = _run(spark, "geo_heatmap_grid")
+    assert len(got) == len(cells)
+    for r in got:
+        assert cells[(r["zoom"], r["cell_x"], r["cell_y"])] == r["n_points"]
+
+
+def test_replay_geo_track_summary(spark):
+    """Aggregation-layer replay: len_m comes from the ENGINE's enriched
+    frame (the Albers kernel has its own parity suite); the int64
+    fixed-point rollup, exact-totals track speed, and max are
+    recomputed in Python."""
+    from posting_lines_spark.queries import load_all
+    from posting_lines_spark.queries.geo_q import enriched_sql
+    from posting_lines_spark.sources import load_table
+
+    load_table(spark, SF0001, "lineitem").createOrReplaceTempView("lineitem")
+    rows = spark.sql(
+        f"SELECT mmsi, len_m, duration, sog_kt FROM ({enriched_sql()}) "
+        "WHERE duration > 0"
+    ).collect()
+    agg = defaultdict(lambda: [0, 0, 0, -1.0])  # n, len_mm, dur, max_sog
+    for r in rows:
+        a = agg[r["mmsi"]]
+        a[0] += 1
+        a[1] += round(r["len_m"] * 1000.0)
+        a[2] += r["duration"]
+        a[3] = max(a[3], r["sog_kt"])
+    got = _run(spark, "geo_track_summary")
+    assert len(got) == len(agg)
+    for r in got:
+        n, mm, dur, mx = agg[r["mmsi"]]
+        assert r["n_segments"] == n
+        assert r["total_len_m"] == mm / 1000.0
+        assert r["total_duration_s"] == dur
+        assert r["track_sog_kt"] == (mm / 1000.0) / dur * 1.94384
+        assert r["max_sog_kt"] == mx

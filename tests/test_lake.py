@@ -196,3 +196,19 @@ def test_hilbert_clustered_write_prunes_more_files(spark, hilbert_layouts, bbox_
         # hash layout: every file spans the grid → bbox overlaps all 16
         assert n_hashed == HILB_FILES
         assert 0 < len(keep_c) < n_hashed, (len(keep_c), n_hashed)
+
+
+def test_vacuum_orphans_counts(spark):
+    """8 registered files, orphan rows == the uncommitted filter's
+    exact count, registered rows == the full table."""
+    import pyarrow.parquet as pq
+
+    from posting_lines_spark.queries import load_all
+    from posting_lines_spark.queries.lake_q import VAC_FILES, VAC_ORPHAN_MOD
+
+    got = load_all()["lake_vacuum_orphans"].fn(spark, SF0001).collect()[0]
+    orders = pq.read_table(SF0001 + "/orders.parquet").to_pylist()
+    want_orphans = sum(1 for r in orders if r["o_orderkey"] % VAC_ORPHAN_MOD == 0)
+    assert got["n_registered"] == VAC_FILES
+    assert got["orphan_rows"] == want_orphans
+    assert got["registered_rows"] == len(orders)

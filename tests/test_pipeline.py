@@ -5,8 +5,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-import pytest
-
 from posting_lines_spark.operators import pipeline
 from tests.conftest import SF0001
 
@@ -187,21 +185,6 @@ def test_stream_dedup_deltas_emit_each_event_once_in_one_batch_each(spark, tmp_p
     assert sorted(delta()) == list(range(100))
     commits = [f for f in os.listdir(os.path.join(ckpt, "commits")) if f.isdigit()]
     assert len(commits) == 2
-
-
-def test_observe_enrich_reports_engine_side_metrics(spark):
-    from posting_lines_spark.operators.pipeline import observe_enrich
-
-    segments_raw = _state(spark)
-    out, obs = observe_enrich(segments_raw)
-    n_out = out.count()  # the action that materializes the metrics
-    m = obs.get
-    assert m["rows_in"] == n_out  # clean() applied before observe
-    expected_todo = (
-        segments_raw.filter("duration != 0").filter("geom IS NULL").count()
-    )
-    assert m["rows_to_enrich"] == expected_todo
-    assert out.filter("geom IS NULL").count() == 0
 
 
 # --- Q5 extension: refresh_stale (round 14, VERDICT r13 item 5) ---

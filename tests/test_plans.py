@@ -357,3 +357,73 @@ def test_no_checkout_path_in_tests_or_tools():
                         or any(in_checkout(t) for t in re.findall(r"(?<![\w.~])/[\w.\-/]+", line))
                     ]
     assert not hits, f"{len(hits)} line(s) hard-code a checkout path: {hits}"
+
+
+# Test files that check the whole registry or the harness rather than one
+# operator family.
+CROSS_CUTTING_TESTS = {
+    "test_plans.py",
+    "test_queries.py",
+    "test_properties.py",
+    "test_degenerate.py",
+    "test_degeneracy_gate.py",
+    "test_driver_env.py",
+    "test_ledger_priority.py",
+}
+
+
+def test_tests_are_laid_out_by_family():
+    """Spark-free guard on the test layout:
+      - every `tests/test_*.py` is a family file — named after a query
+        module (`queries/<family>_q.py`), an operator, streaming or
+        functions module, or a package subpackage — or one of the
+        cross-cutting files, and none is named by round, wave or replay;
+      - no test module defines a top-level function or class twice (the
+        second silently shadows the first, and pytest drops a shadowed
+        test);
+      - every `tests/test_*.py` path named in the package, the tools, the
+        README or the verify skill exists, and so does the test a
+        `path::name` pointer names.
+    """
+    import ast
+    import glob
+    import os
+
+    from tests.conftest import REPO
+
+    pkg = os.path.join(REPO, "posting_lines_spark")
+    families = {os.path.basename(p)[:-5] for p in glob.glob(os.path.join(pkg, "queries", "*_q.py"))}
+    for sub in ("operators", "streaming", "functions"):
+        families |= {os.path.basename(p)[:-3] for p in glob.glob(os.path.join(pkg, sub, "*.py"))}
+    families |= {os.path.basename(os.path.dirname(p)) for p in glob.glob(os.path.join(pkg, "*", "__init__.py"))}
+    files = sorted(os.path.basename(p) for p in glob.glob(os.path.join(REPO, "tests", "test_*.py")))
+    stray = [f for f in files if f not in CROSS_CUTTING_TESTS and f[5:-3] not in families]
+    assert not stray, f"test files that are neither a family nor cross-cutting: {stray}"
+    by_round = [f for f in files if re.search(r"round|wave|replays", f)]
+    assert not by_round, f"test files named by round: {by_round}"
+
+    shadowed = []
+    for path in sorted(glob.glob(os.path.join(REPO, "tests", "*.py"))):
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        seen = set()
+        for n in tree.body:
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                if n.name in seen:
+                    shadowed.append(f"{os.path.basename(path)}:{n.lineno} {n.name}")
+                seen.add(n.name)
+    assert not shadowed, f"top-level names defined twice: {shadowed}"
+
+    docs = [os.path.join(REPO, "README.md"), os.path.join(REPO, ".claude", "skills", "verify", "SKILL.md")]
+    for sub in ("posting_lines_spark", "tools"):
+        docs += glob.glob(os.path.join(REPO, sub, "**", "*.py"), recursive=True)
+    missing = []
+    for path in docs:
+        with open(path) as fh:
+            for t, name in re.findall(r"(tests/test_\w+\.py)(?:::(\w+))?", fh.read()):
+                target = os.path.join(REPO, t)
+                if not os.path.isfile(target) or (
+                    name and not re.search(rf"\b(def|class) {name}\b", open(target).read())
+                ):
+                    missing.append(f"{os.path.relpath(path, REPO)}: {t}::{name}")
+    assert not missing, f"pointers at tests that do not exist: {missing}"

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from tests.conftest import SF0001
 
 
@@ -48,9 +50,22 @@ def test_no_oracle_uses_multifield_struct_accumulator():
 _CARTESIAN_OK = {"corpus_survivors", "approx_stats"}
 
 
-def test_all_registered_queries_have_unique_output_columns_and_sane_plans(spark):
-    """One pass over every registered query checks two driver-facing
-    invariants and two scale invariants:
+def _registry_params():
+    """One param per registered query, id `<family>-<query>` where the
+    family is the query module's name without `_q`, so `-k graph-` runs
+    one family's slice of the sweep."""
+    from posting_lines_spark.queries import load_all
+
+    return [
+        pytest.param(name, id=f"{spec.fn.__module__.rsplit('.', 1)[1].removesuffix('_q')}-{name}")
+        for name, spec in load_all().items()
+    ]
+
+
+@pytest.mark.parametrize("name", _registry_params())
+def test_all_registered_queries_have_unique_output_columns_and_sane_plans(spark, name):
+    """Each registered query checks two driver-facing invariants and two
+    scale invariants:
       - no duplicate output column names (the driver sorts columns by
         name before hashing — duplicates silently corrupt the compare);
       - no CartesianProduct in the physical plan (broadcast nested-loop
@@ -63,25 +78,20 @@ def test_all_registered_queries_have_unique_output_columns_and_sane_plans(spark)
         compares rows order-insensitively. Sorts under a Limit (top-k),
         window orderings and ordered aggregates are not roots.
     """
-    import __spark_entry__ as m
+    from posting_lines_spark.queries import load_all
 
-    sorted_roots = []
-    for name, fn in m.queries().items():
-        df = fn(spark, SF0001)
-        cols = [c.lower() for c in df.columns]
-        assert len(cols) == len(set(cols)), f"{name} has duplicate columns: {cols}"
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        if name not in _CARTESIAN_OK:
-            assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
-        assert "BatchEvalPython" not in plan, f"{name} uses a row-at-a-time Python UDF"
-        root = df._jdf.queryExecution().analyzed()
-        if root.nodeName() == "WithCTE":
-            root = root.plan()
-        if root.nodeName() == "Sort" and getattr(root, "global")():
-            sorted_roots.append(name)
-    assert not sorted_roots, (
-        f"{len(sorted_roots)} queries end in a global sort that no gate "
-        f"checks: {sorted_roots}"
+    df = load_all()[name].fn(spark, SF0001)
+    cols = [c.lower() for c in df.columns]
+    assert len(cols) == len(set(cols)), f"{name} has duplicate columns: {cols}"
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if name not in _CARTESIAN_OK:
+        assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
+    assert "BatchEvalPython" not in plan, f"{name} uses a row-at-a-time Python UDF"
+    root = df._jdf.queryExecution().analyzed()
+    if root.nodeName() == "WithCTE":
+        root = root.plan()
+    assert not (root.nodeName() == "Sort" and getattr(root, "global")()), (
+        f"{name} ends in a global sort that no gate checks"
     )
 
 
@@ -180,3 +190,36 @@ def test_gapfill_matches_pandas_locf_replay(spark):
         gn, gs, ggap = got[k]
         assert (gn, ggap) == (n, gap), k
         assert gs == s or abs(gs - s) < 1e-9, (k, gs, s)
+
+
+def test_no_duplicate_toplevel_defs_in_query_modules():
+    """A later same-named module-level function silently SHADOWS an
+    earlier one — round 13 hit this live: a second _cusum_sql broke the
+    round-8 timeseries_changepoint_cusum at runtime while every
+    individually-targeted check stayed green (only the full-registry
+    sweep caught it). AST-scan every queries module for duplicate
+    top-level def names; registration-name duplicates are separately
+    guarded in register() itself."""
+    import ast
+    import os
+
+    qdir = os.path.join(
+        os.path.dirname(os.path.dirname(__file__)),
+        "posting_lines_spark",
+        "queries",
+    )
+    for fname in sorted(os.listdir(qdir)):
+        if not fname.endswith(".py"):
+            continue
+        tree = ast.parse(open(os.path.join(qdir, fname)).read())
+        seen: dict[str, int] = {}
+        dupes = []
+        for node in tree.body:  # top level only — nested defs are fine
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if node.name in seen:
+                    dupes.append(
+                        f"{fname}:{node.lineno} def {node.name} shadows "
+                        f"line {seen[node.name]}"
+                    )
+                seen[node.name] = node.lineno
+        assert not dupes, dupes

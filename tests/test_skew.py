@@ -11,10 +11,13 @@ as the runtime alternative."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from posting_lines_spark.operators.skew import salted_join
+from tests.conftest import REPO
 
 N_ROWS = 60_000
 N_KEYS = 1_000
@@ -131,3 +134,22 @@ def test_aqe_skew_join_splits_the_hot_partition(spark, skewed):
     finally:
         for k, v in before.items():
             spark.conf.set(k, v)
+
+
+# ---- ADVICE r13: skew_pressure._timed distinguishes failure/timeout ----
+
+
+def test_timed_reraises_genuine_failures(spark):
+    import sys
+
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    from skew_pressure import _timed
+
+    def boom():
+        raise ValueError("genuine failure, not a timeout")
+
+    with pytest.raises(ValueError, match="genuine failure"):
+        _timed(spark, "t14-boom", boom, timeout_s=60.0)
+
+    sec, res, timed_out = _timed(spark, "t14-ok", lambda: 42, timeout_s=60.0)
+    assert res == 42 and timed_out is False and sec is not None

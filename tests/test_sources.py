@@ -159,3 +159,55 @@ def test_stream_tumbling_reuses_its_source(spark):
     assert src_dirs() == dirs
     assert len(tables._SCHEMAS) == memo
     assert sorted(second, key=row_key) == sorted(first, key=row_key) and first
+
+
+# ---- JDBC: live embedded Derby (the r3-era "mock-tested only" caveat
+# shrinks to dialect-only: a real database, real INSERTs, real parallel
+# range reads, real pushdown into the DB) ----
+
+
+def _derby_url(spark):
+    from posting_lines_spark.fixtures import scratch_dir
+
+    home = scratch_dir(prefix="pls_derby_home_")
+    spark.sparkContext._jvm.System.setProperty("derby.system.home", home)
+    return (
+        f"jdbc:derby:{scratch_dir(prefix='pls_derby_')}/db;create=true",
+        "org.apache.derby.jdbc.EmbeddedDriver",
+    )
+
+
+def test_jdbc_live_partitioned_read_and_pushdown(spark):
+    """Round-trip through a live Derby DB: the partitioned read issues
+    8 range-predicated scans (8 RDD partitions, no row lost or doubled)
+    and a filter is pushed INTO the database (`*` = source-evaluated)."""
+    import re
+
+    from posting_lines_spark.sources import load_jdbc, load_table, write_jdbc
+    from tests.conftest import SF0001
+
+    url, driver = _derby_url(spark)
+    c = load_table(spark, SF0001, "customer")
+    write_jdbc(c, url, "customer_live", mode="overwrite", driver=driver)
+    back = load_jdbc(
+        spark,
+        url,
+        "customer_live",
+        partition_column="c_custkey",
+        num_partitions=8,
+        lower_bound=1,
+        upper_bound=c.count(),
+        driver=driver,
+    )
+    assert back.rdd.getNumPartitions() == 8
+    assert sorted(r["c_custkey"] for r in back.collect()) == sorted(
+        r["c_custkey"] for r in c.collect()
+    )
+
+    flt = back.filter(back.c_acctbal > 1000.0).select("c_custkey")
+    plan = flt._jdf.queryExecution().executedPlan().toString()
+    m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert m and "*GreaterThan(c_acctbal,1000.0)" in m.group(1)
+    # column pruning reaches the DB too: only the needed columns scanned
+    rs = re.search(r"ReadSchema: ([^\n]*)", plan)
+    assert rs and "c_name" not in rs.group(1)

@@ -4,10 +4,13 @@ equi-join — never a cross join)."""
 
 from __future__ import annotations
 
+from collections import defaultdict
+
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from posting_lines_spark.functions import geo
-from tests.conftest import SF0001
+from tests.conftest import SF0001, SF001, _events, _segments_py
 
 
 def _dist(spark, px, py, x1, y1, x2, y2):
@@ -153,3 +156,122 @@ def test_knn_grid_agrees_with_broadcast_knn_under_bound(spark):
         assert g.closest_m == f.closest_m, sid
         assert g.n_nearest_segments <= f.n_nearest_segments, sid
         assert g.closest_m < KNN_RING_MAX * CELL_M
+
+
+# --- DBSCAN halving: equals in-Spark brute force at sf0.001 ---
+
+
+def test_dbscan_core_matches_bruteforce(spark):
+    from pyspark.sql import functions as F
+
+    from posting_lines_spark.queries import load_all
+    from posting_lines_spark.queries.spatial_q import (
+        DBSCAN_EPS_M,
+        DBSCAN_MINPTS,
+    )
+    from posting_lines_spark.queries.geo_q import enrich_materialized
+
+    pts = (
+        enrich_materialized(spark, SF0001, ["segment_id", "x1", "y1"])
+        .selectExpr("segment_id AS id", "x1 AS x", "y1 AS y")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    b = pts.select(
+        F.col("id").alias("id2"), F.col("x").alias("x2"), F.col("y").alias("y2")
+    )
+    eps2 = DBSCAN_EPS_M * DBSCAN_EPS_M
+    # brute force: every ordered pair incl. self, no grid, no halving
+    brute = (
+        pts.crossJoin(b)
+        .filter(
+            (F.col("x") - F.col("x2")) * (F.col("x") - F.col("x2"))
+            + (F.col("y") - F.col("y2")) * (F.col("y") - F.col("y2"))
+            <= F.lit(eps2)
+        )
+        .groupBy("id", "x", "y")
+        .agg(F.count(F.lit(1)).alias("n_neighbors"))
+        .groupBy((F.col("n_neighbors") >= DBSCAN_MINPTS).alias("is_core"))
+        .agg(
+            F.count(F.lit(1)).alias("n_points"),
+            F.min("n_neighbors").alias("min_neighbors"),
+            F.max("n_neighbors").alias("max_neighbors"),
+        )
+        .orderBy("is_core")
+        .collect()
+    )
+    got = sorted(load_all()["geo_dbscan_core"].fn(spark, SF0001).collect(), key=lambda r: r.is_core)
+    assert [
+        (r.is_core, r.n_points, r.min_neighbors, r.max_neighbors) for r in got
+    ] == [(r.is_core, r.n_points, r.min_neighbors, r.max_neighbors) for r in brute]
+
+
+def test_geo_stay_points_matches_python(spark):
+    from collections import defaultdict
+
+    from posting_lines_spark.queries import load_all
+
+    fixes = defaultdict(list)
+    for r in _events(sf=SF001):
+        us = int(r["ts"].timestamp() * 1e6)
+        cell = int(round(r["value"] * 100) // 5000)
+        fixes[r["user_id"]].append((us, r["event_id"], cell))
+    want = []
+    for uid, fx in fixes.items():
+        fx.sort()
+        run: list[tuple] = []
+        for us, _eid, cell in fx + [(None, None, "END")]:
+            if run and cell == run[-1][1]:
+                run.append((us, cell))
+                continue
+            if len(run) >= 3:
+                want.append((uid, run[0][1], run[0][0], run[-1][0], len(run)))
+            run = [(us, cell)] if cell != "END" else []
+    got = load_all()["geo_stay_points"].fn(spark, SF001).collect()
+    got_set = {
+        (r["user_id"], r["clat"], r["start_us"], r["end_us"], r["n_fixes"]) for r in got
+    }
+    assert got_set == set(want)
+    assert len(got) > 500  # non-vacuous at the correctness SF
+
+
+def test_replay_geo_point_in_polygon(spark):
+    from posting_lines_spark.queries.spatial_q import ZONE
+
+    def crossings(x: float, y: float) -> int:
+        c = 0
+        n = len(ZONE)
+        for i in range(n):
+            xi, yi = ZONE[i]
+            xj, yj = ZONE[(i + 1) % n]
+            if (yi > y) != (yj > y) and x < (xj - xi) * (y - yi) / (yj - yi) + xi:
+                c += 1
+        return c
+
+    from tests.conftest import SF001
+    from posting_lines_spark.queries import load_all
+
+    for sf, expect_both in ((SF0001, False), (SF001, True)):
+        groups = defaultdict(lambda: [0, None, None, 0])
+        for li in pq.read_table(f"{sf}/lineitem.parquet").to_pylist():
+            s = _segments_py(li)
+            inside = crossings(s["start_lon"], s["start_lat"]) % 2 == 1
+            g = groups[inside]
+            g[0] += 1
+            g[1] = s["segment_id"] if g[1] is None else min(g[1], s["segment_id"])
+            g[2] = s["segment_id"] if g[2] is None else max(g[2], s["segment_id"])
+            g[3] += s["segment_id"]
+        got = {
+            r["inside"]: r
+            for r in load_all()["geo_point_in_polygon"].fn(spark, sf).collect()
+        }
+        assert set(got) == set(groups)
+        if expect_both:
+            # sf0.001's key ranges keep every point below the pentagon
+            # (lat <= 48.54); the full extent at sf0.01 populates BOTH
+            assert set(got) == {True, False}
+        for inside, (n, mn, mx, ck) in groups.items():
+            r = got[inside]
+            assert (
+                r["n_points"], r["min_seg"], r["max_seg"], r["seg_checksum"]
+            ) == (n, mn, mx, ck)

@@ -21,7 +21,8 @@ Steps (name, command, pass criterion):
   skew_parity    make_skew.py (hub+order from sf0.1) then
                  check_oracle.py on a pinned skew-sensitive subset
                                                          both ALL PASS
-  pytest         python -m pytest tests/ -q              exit 0
+  pytest         python -m pytest tests/ -q -rfE         exit 0; passed and
+                 failed counts per test file recorded
 """
 
 from __future__ import annotations
@@ -31,6 +32,7 @@ import os
 import re
 import subprocess
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -46,6 +48,22 @@ def _run(cmd: list[str], timeout: int = 7200) -> tuple[int, str]:
         timeout=timeout,
     )
     return p.returncode, (p.stdout or "") + ("\n" + p.stderr if p.returncode else "")
+
+
+def _per_file_counts(junit_xml: str) -> dict[str, dict[str, int]]:
+    """Passed and failed (failures + errors) test counts per test file,
+    from one pytest run's JUnit XML report."""
+    import xml.etree.ElementTree as ET
+
+    counts: dict[str, dict[str, int]] = {}
+    for case in ET.parse(junit_xml).getroot().iter("testcase"):
+        module = next(p for p in case.get("classname", "").split(".") if p.startswith("test_"))
+        c = counts.setdefault(f"{module}.py", {"passed": 0, "failed": 0})
+        if case.find("failure") is not None or case.find("error") is not None:
+            c["failed"] += 1
+        elif case.find("skipped") is None:
+            c["passed"] += 1
+    return dict(sorted(counts.items()))
 
 
 def _git_head() -> str:
@@ -269,8 +287,15 @@ def main() -> int:
 
     if "--skip-pytest" not in args:
         def pytest_step():
-            rc, out = _run(["-m", "pytest", "tests/", "-q"])
-            return rc == 0, out.strip().splitlines()[-1:]
+            with tempfile.TemporaryDirectory() as tmp:
+                xml = os.path.join(tmp, "pytest.xml")
+                rc, out = _run(["-m", "pytest", "tests/", "-q", "-rfE", f"--junitxml={xml}"])
+                per_file = _per_file_counts(xml)
+            return rc == 0, {
+                "summary": out.strip().splitlines()[-1:],
+                "failed": re.findall(r"^(?:FAILED|ERROR) (\S+)", out, re.M),
+                "per_file": per_file,
+            }
 
         step("pytest", pytest_step)
 

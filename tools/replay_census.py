@@ -94,8 +94,7 @@ def census():
 
     out = {}
     for q, spec in registry.items():
-        oracle = spec.oracle or ""
-        divergent = bool(_DIVERGENT.search(oracle))
+        divergent = bool(_DIVERGENT.search(spec.oracle))
         try:
             src = inspect.getsource(spec.fn)
         except (OSError, TypeError):

@@ -38,8 +38,7 @@ def main() -> int:
     registry = load_all()
     if listing:
         for name, spec in sorted(registry.items()):
-            kind = "oracle" if spec.oracle else "rows-only"
-            print(f"{name:36s} [{kind}] {spec.description[:90]}")
+            print(f"{name:36s} {spec.description[:90]}")
         return 0
 
     if not args:
