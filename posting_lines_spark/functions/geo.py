@@ -336,14 +336,3 @@ def make_line(srid: int, x1: Column, y1: Column, x2: Column, y2: Column) -> Colu
         x2.alias("x2"),
         y2.alias("y2"),
     )
-
-
-def line_wkt(geom: Column) -> Column:
-    """Interop form: WKT `LINESTRING(x1 y1, x2 y2)` for PostGIS parity."""
-    return F.format_string(
-        "LINESTRING(%s %s, %s %s)",
-        geom["x1"].cast("string"),
-        geom["y1"].cast("string"),
-        geom["x2"].cast("string"),
-        geom["y2"].cast("string"),
-    )

@@ -10,7 +10,7 @@ Convergence is O(log² n) rounds worst case and ~O(log n) in practice,
 vs O(diameter) for plain min-label propagation — a 1000-node path graph
 converges in ~10 rounds instead of ~999 (see tests/test_graph.py).
 
-Durability at cluster scale: every `checkpoint_every` rounds the edge
+Durability at cluster scale: every `CHECKPOINT_EVERY` rounds the edge
 set goes through a durable cut (`cuts.cut`: a RELIABLE checkpoint when
 the session has a checkpoint dir, a local one otherwise). The loop
 raises instead of silently returning non-converged labels when max_iter
@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from posting_lines_spark.operators.cuts import cut
 
+CHECKPOINT_EVERY = 4  # rounds between durable cuts in the iterative loops
 
 _OBS_TIMEOUT_S = 60.0
 
@@ -99,7 +100,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """(node, component) for every node appearing in `edges`; component =
     min node id reachable. Alternates large-star/small-star until the edge
@@ -118,7 +118,7 @@ def connected_components(
     # eager count job, then ReliableRDDCheckpointData's separate write
     # job re-runs the uncached lineage) plus a filesystem round-trip,
     # for state that round 1 supersedes anyway. Recovery depth stays
-    # bounded by the in-loop durable cadence (checkpoint_every).
+    # bounded by the in-loop durable cadence (CHECKPOINT_EVERY).
     e = cut(e, eager=True)  # loop: the rounds' input state
     from pyspark.sql import Observation
 
@@ -139,7 +139,7 @@ def connected_components(
             obs = Observation(f"cc_round_{it}")
             round_df = round_df.observe(obs, *_chk_aggs())
         # loop: the round's state; its eager job fires the observation
-        e = cut(round_df, eager=True, durable=(it + 1) % checkpoint_every == 0)
+        e = cut(round_df, eager=True, durable=(it + 1) % CHECKPOINT_EVERY == 0)
         m = _obs_get_bounded(obs) if obs is not None else None
         if m is None:
             use_observe = False
@@ -174,7 +174,6 @@ def pagerank(
     weight: str = "w",
     iters: int = 6,
     damping_pct: int = 85,
-    checkpoint_every: int = 4,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Weighted PageRank over (src, dst, weight) edges, fixed iteration
@@ -288,8 +287,8 @@ def pagerank(
         # shuffle files inside one job — the per-iteration barrier cost
         # a ~0.15-0.3 s sequential job each and defeated stage reuse of
         # the loop-invariant ew/nodes_t exchanges (the LPA round-15
-        # lesson; lineage depth stays bounded at checkpoint_every).
-        if (it + 1) % checkpoint_every == 0:
+        # lesson; lineage depth stays bounded at CHECKPOINT_EVERY).
+        if (it + 1) % CHECKPOINT_EVERY == 0:
             ranks = cut(ranks, durable=True)  # loop: the rank state
     return ranks
 
@@ -299,7 +298,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     iters: int = 5,
-    scale: int = PR_SCALE,
 ) -> DataFrame:
     """HITS hubs & authorities over (src, dst) edges (unweighted — pass a
     pre-thresholded/distinct edge set), fixed iteration count, FIXED-POINT
@@ -318,8 +316,8 @@ def hits(
     normalization choice rescales but never reranks (documented
     deviation, Kleinberg 1999 §3 notes any norm works). Exactness bound:
     a_raw*SCALE <= n*SCALE^2 must fit int128 → n <= 1e38/SCALE^2 = 1e14
-    nodes at the default SCALE=1e12; raw sums fit BIGINT to n <= 9.2e6
-    in-degree (lower SCALE for denser graphs).
+    nodes at SCALE = PR_SCALE = 1e12; raw sums fit BIGINT to n <= 9.2e6
+    in-degree (lower PR_SCALE for denser graphs).
 
     Scale: each half-step is one join + one aggregate on an edge-endpoint
     key (co-partitioned under AQE); the edge set is loop-invariant and
@@ -344,7 +342,7 @@ def hits(
             .select(
                 "node",
                 F.expr(
-                    f"CAST((CAST(coalesce(raw, 0L) AS DECIMAL(38,0)) * {scale})"
+                    f"CAST((CAST(coalesce(raw, 0L) AS DECIMAL(38,0)) * {PR_SCALE})"
                     f" div CAST(tot AS DECIMAL(38,0)) AS BIGINT)"
                 ).alias(col),
             )
@@ -357,7 +355,7 @@ def hits(
     # with stage overlap (A/B: 3.44→3.02 s sf0.1, wash at sf1). Score
     # tables are node-grain, serialized and spillable — retaining every
     # round's blocks to the job end is bounded (operators/cuts.py).
-    h = nodes.select("node", F.lit(scale).alias("h"))
+    h = nodes.select("node", F.lit(PR_SCALE).alias("h"))
     a = None
     for _ in range(iters):
         a_raw = (

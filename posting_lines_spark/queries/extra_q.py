@@ -13,6 +13,7 @@ from posting_lines_spark.queries import register
 from posting_lines_spark.queries.geo_q import enrich_all_df, enriched_sql
 from posting_lines_spark.queries.parity import davg_expr, dsum_expr
 from posting_lines_spark.sources import load_table
+from posting_lines_spark.streaming.harness import Dir
 
 CUBE_ORACLE = f"""
 SELECT l_returnflag, l_linestatus, count(*) AS n, {dsum_expr('l_quantity')} AS sum_qty
@@ -180,16 +181,19 @@ GROUP BY 1, 2
     description="streaming tumbling-window aggregation (window() + watermark, "
     "availableNow); oracle replays the window as epoch bucketing",
 )
-def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
+def stream_tumbling(
+    spark: SparkSession, sf_dir: str, *, src: Dir = None, ckpt: Dir = None, out: Dir = None
+) -> DataFrame:
+    from posting_lines_spark.fixtures import scratch_dir
+    from posting_lines_spark.queries.stream_q import _event_slices_src
+    from posting_lines_spark.streaming.harness import drain, last_epoch, write_epoch
 
-    from posting_lines_spark.queries.stream_q import _events_src
-    from posting_lines_spark.streaming.harness import drain
-
-    src = _events_src(spark, sf_dir)
-    name = f"tumbling_{uuid.uuid4().hex}"  # one memory sink per call
+    src = src or _event_slices_src(spark, sf_dir)
+    out = out or scratch_dir("pls_tumb_out_")
+    # complete mode: every epoch writes the whole window table, so the
+    # last epoch is the answer
     drain(
-        spark, src, None,
+        spark, src, ckpt or scratch_dir("pls_tumb_ckpt_"),
         lambda r: r.parquet(src)
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -201,10 +205,9 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avg_value",
         )
         .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name),
+        .foreachBatch(lambda df, epoch_id: write_epoch(df, out, epoch_id)),
     )
-    return spark.table(name)
+    return last_epoch(spark, out)
 
 
 # --- z-order spatial bucketing (P6: the GiST-index substitute) ---

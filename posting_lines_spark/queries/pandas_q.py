@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from posting_lines_spark.queries import register
 from posting_lines_spark.sources import load_table
+from posting_lines_spark.streaming.harness import Dir
 
 GAP_STATS_ORACLE = """
 SELECT user_id,
@@ -85,11 +86,19 @@ GROUP BY user_id
     "per-user state carried across real micro-batches via "
     "maxFilesPerTrigger=1); final state ≡ the batch aggregate",
 )
-def stream_stateful_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def stream_stateful_stats(
+    spark: SparkSession, sf_dir: str, *, src: Dir = None, ckpt: Dir = None, out: Dir = None
+) -> DataFrame:
+    from posting_lines_spark.fixtures import scratch_dir
+    from posting_lines_spark.queries.stream_q import _event_slices_src
     from posting_lines_spark.streaming.stateful import running_user_stats
 
-    events = load_table(spark, sf_dir, "events").select("user_id", "value")
-    return running_user_stats(spark, events, n_files=4)
+    return running_user_stats(
+        spark,
+        src or _event_slices_src(spark, sf_dir),
+        ckpt or scratch_dir("pls_stats_ckpt_"),
+        out or scratch_dir("pls_stats_out_"),
+    )
 
 
 # --- scalar Arrow pandas_udf on a parity path ---

@@ -24,8 +24,8 @@ from posting_lines_spark.queries.pipeline_q import segments_state_path
 from posting_lines_spark.sources import load_table
 from posting_lines_spark.streaming import incremental
 from posting_lines_spark.streaming.harness import (
+    Dir,
     all_epochs,
-    drain,
     drain_batches,
     last_epoch,
     prior_state,
@@ -53,11 +53,13 @@ def _events_src(spark: SparkSession, sf_dir: str) -> str:
     "Streaming: parquet source + availableNow + foreachBatch(enrich_segments) "
     "— hash-matches the BATCH oracle, proving the paths are equivalent",
 )
-def stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
+def stream_enrich(
+    spark: SparkSession, sf_dir: str, *, src: Dir = None, ckpt: Dir = None, out: Dir = None
+) -> DataFrame:
     # the cached state-table parquet IS the stream source — no re-write
-    src = segments_state_path(spark, sf_dir)
-    out = scratch_dir("pls_seg_out_")
-    ckpt = scratch_dir("pls_seg_ckpt_")
+    src = src or segments_state_path(spark, sf_dir)
+    out = out or scratch_dir("pls_seg_out_")
+    ckpt = ckpt or scratch_dir("pls_seg_ckpt_")
     incremental.enrich_available_now(spark, src, out, ckpt)
     res = all_epochs(spark, out)
     return res.select(
@@ -262,6 +264,18 @@ FROM latest
 """
 
 
+def _scd_src(spark: SparkSession, sf_dir: str) -> str:
+    return cached_fixture(
+        "scd_updates_src",
+        sf_dir,
+        lambda p: load_table(spark, sf_dir, "events")
+        .select("user_id", "ts", "value", "event_id")
+        .write.mode("overwrite")
+        .parquet(p),
+        "pls_cdc_src_",
+    )
+
+
 @register(
     "stream_scd_upsert",
     oracle=SCD_UPSERT_ORACLE,
@@ -271,36 +285,27 @@ FROM latest
     "collapse, history kept, readers never see partial writes); oracle "
     "derives the expected final table from the change stream",
 )
-def stream_scd_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events")
-    users = events.select("user_id").distinct()
+def stream_scd_upsert(
+    spark: SparkSession, sf_dir: str, *, src: Dir = None, ckpt: Dir = None, out: Dir = None
+) -> DataFrame:
+    users = load_table(spark, sf_dir, "events").select("user_id").distinct()
     initial = users.select(
         "user_id",
         F.lit(0.0).alias("value"),
         F.timestamp_micros(F.lit(0)).alias("valid_from"),
         F.lit(None).cast("timestamp_ntz").alias("valid_to"),
     )
-    table_dir = scratch_dir("pls_cdc_tbl_")
-    ckpt = scratch_dir("pls_cdc_ckpt_")
-    updates_src = cached_fixture(
-        "scd_updates_src",
-        sf_dir,
-        lambda p: events.select("user_id", "ts", "value", "event_id")
-        .write.mode("overwrite")
-        .parquet(p),
-        "pls_cdc_src_",
-    )
     final = incremental.scd_upsert_available_now(
         spark,
         initial,
         None,
-        table_dir,
-        ckpt,
+        out or scratch_dir("pls_cdc_tbl_"),
+        ckpt or scratch_dir("pls_cdc_ckpt_"),
         key="user_id",
         ts_col="ts",
         attr_cols=["value"],
         order_cols=["ts", "event_id"],
-        src_dir=updates_src,
+        src_dir=src or _scd_src(spark, sf_dir),
     )
     return (
         final.groupBy("user_id")
@@ -553,16 +558,18 @@ def _dedup_stream_oracle() -> str:
     "set, proving stream-maintained index ≡ batch recompute at any "
     "batching",
 )
-def stream_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+def stream_dedup_index(
+    spark: SparkSession, sf_dir: str, *, src: Dir = None, ckpt: Dir = None, out: Dir = None
+) -> DataFrame:
     from posting_lines_spark.queries.dedup_q import BANDS, JACCARD_T, NUM_HASHES
 
-    src = _dedup_stream_src(spark, sf_dir)
-    state = scratch_dir("pls_dedup_idx_state_")
-    ckpt = scratch_dir("pls_dedup_idx_ckpt_")
-    pairs = incremental.minhash_index_stream(
-        spark, src, state, ckpt, NUM_HASHES, BANDS, JACCARD_T
+    return incremental.minhash_index_stream(
+        spark,
+        src or _dedup_stream_src(spark, sf_dir),
+        out or scratch_dir("pls_dedup_idx_state_"),
+        ckpt or scratch_dir("pls_dedup_idx_ckpt_"),
+        NUM_HASHES, BANDS, JACCARD_T,
     )
-    return pairs
 
 
 # --- content-defined chunking (binary dedup storage) ---
@@ -658,28 +665,25 @@ def multimodal_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partial-merge path ≡ the batch computation.
 
 
+def _psi_src(spark: SparkSession, sf_dir: str) -> str:
+    return cached_fixture(
+        "psi_orders_src",
+        sf_dir,
+        lambda p: load_table(spark, sf_dir, "orders")
+        .select("o_totalprice", "o_orderdate")
+        .repartition(4)
+        .write.mode("overwrite")
+        .parquet(p),
+        "pls_psi_src_",
+    )
+
+
 def stream_psi_drift(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    src: str | None = None,
-    out: str | None = None,
-    ckpt: str | None = None,
+    spark: SparkSession, sf_dir: str, *, src: Dir = None, ckpt: Dir = None, out: Dir = None
 ) -> DataFrame:
-    # src/out/ckpt injectable for the restart-recovery test
     from posting_lines_spark.queries.schema_q import _PSI_FOLD_SPARK, _psi_sql
 
-    orders = load_table(spark, sf_dir, "orders")
-    if src is None:
-        src = cached_fixture(
-            "psi_orders_src",
-            sf_dir,
-            lambda p: orders.select("o_totalprice", "o_orderdate")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(p),
-            "pls_psi_src_",
-        )
+    src = src or _psi_src(spark, sf_dir)
     out = out or scratch_dir("pls_psi_out_")
     ckpt = ckpt or scratch_dir("pls_psi_ckpt_")
 
@@ -872,28 +876,25 @@ register(
 # batch EWMA bit-for-bit — the oracle is the batch SQL, unchanged.
 
 
-def _ewma_write_slices(events: DataFrame):
-    return lambda p: write_slices(
-        _day_slices(
-            events, "event_type", "value",
-            "CAST(floor(unix_micros(ts) / 86400000000.0e0) AS BIGINT) AS day",
+def _ewma_src(spark: SparkSession, sf_dir: str) -> str:
+    return cached_fixture(
+        "ewma_events_src",
+        sf_dir,
+        lambda p: write_slices(
+            _day_slices(
+                load_table(spark, sf_dir, "events"), "event_type", "value",
+                "CAST(floor(unix_micros(ts) / 86400000000.0e0) AS BIGINT) AS day",
+            ),
+            p,
+            4,
         ),
-        p,
-        4,
+        "pls_ewma_src_",
     )
 
 
 def stream_ewma(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    src: str | None = None,
-    state_root: str | None = None,
-    ckpt: str | None = None,
+    spark: SparkSession, sf_dir: str, *, src: Dir = None, ckpt: Dir = None, out: Dir = None
 ) -> DataFrame:
-    # src/state_root/ckpt are injectable so the restart-recovery test
-    # (tests/test_stream.py) can drive THIS pipeline across a
-    # kill/resume instead of a reimplementation
     from posting_lines_spark.queries.analytics_q import (
         _EWMA_FOLD_SPARK,
         _EWMA_SERIES_SPARK,
@@ -901,19 +902,14 @@ def stream_ewma(
     )
     from posting_lines_spark.queries.parity import davg_expr
 
-    events = load_table(spark, sf_dir, "events")
-    if src is None:
-        src = cached_fixture(
-            "ewma_events_src", sf_dir, _ewma_write_slices(events),
-            "pls_ewma_src_",
-        )
-    state_root = state_root or scratch_dir("pls_ewma_state_")
+    src = src or _ewma_src(spark, sf_dir)
+    out = out or scratch_dir("pls_ewma_state_")
     ckpt = ckpt or scratch_dir("pls_ewma_ckpt_")
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession
         state = prior_state(
-            s, state_root, epoch_id, "event_type string, n_days long, ewma double"
+            s, out, epoch_id, "event_type string, n_days long, ewma double"
         )
         series = (
             batch_df.groupBy("event_type", "day")
@@ -940,10 +936,10 @@ def stream_ewma(
                   + {1 - EWMA_ALPHA!r}e0 * acc AS DOUBLE))
             END AS ewma""",
         )
-        write_epoch(new_state, state_root, epoch_id)
+        write_epoch(new_state, out, epoch_id)
 
     drain_batches(spark, src, ckpt, per_batch)
-    return last_epoch(spark, state_root).select("event_type", "n_days", "ewma")
+    return last_epoch(spark, out).select("event_type", "n_days", "ewma")
 
 
 def _stream_ewma_oracle() -> str:
@@ -988,22 +984,29 @@ register(
 # this foreachBatch form stays registered as the exactly-auditable twin
 # (its state tables are plain parquet you can query between epochs).
 
-def _attr_write_slices(events: DataFrame):
-    """Writer for the 4-slice, mtime-ordered attribution stream source —
-    shared by the foreachBatch and applyInPandasWithState twins (same
-    cached_fixture key → one materialization per process)."""
-    return lambda p: write_slices(
-        _day_slices(events, "event_id", "ts", "user_id", "event_type", "value"), p, 4
+def _event_slices_src(spark: SparkSession, sf_dir: str) -> str:
+    """The events as 4 mtime-ordered day slices: the source of both
+    attribution twins, `stream_stateful_stats` and `stream_tumbling`
+    (one materialization per process)."""
+    return cached_fixture(
+        "event_slices_src",
+        sf_dir,
+        lambda p: write_slices(
+            _day_slices(
+                load_table(spark, sf_dir, "events"),
+                "event_id", "ts", "user_id", "event_type", "value",
+            ),
+            p,
+            4,
+        ),
+        "pls_event_slices_",
     )
 
 
 def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    events = load_table(spark, sf_dir, "events")
-    src = cached_fixture(
-        "attr_events_src", sf_dir, _attr_write_slices(events), "pls_attr_src_"
-    )
+    src = _event_slices_src(spark, sf_dir)
     state_root = scratch_dir("pls_attr_state_")
     users_root, ledger_root = f"{state_root}/users", f"{state_root}/ledger"
     ckpt = scratch_dir("pls_attr_ckpt_")
@@ -1167,36 +1170,16 @@ def _attr_state_update(key, pdfs, state):
         )
 
 
-def _attr_stateful_run(spark: SparkSession, sf_dir: str):
-    """Drive the stateful attribution stream; returns (credits_df,
-    per-batch progress dicts) so tests can pin the state-write metrics."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
+def _attr_stateful_run(spark: SparkSession, src: str, ckpt: str, out: str):
+    """Drive the stateful attribution stream; returns (credits_df, the
+    terminated query) so tests can pin the state-write metrics."""
+    from posting_lines_spark.streaming.stateful import drain_state
 
-    # same 4-slice mtime-ordered source fixture as stream_attribution
-    events = load_table(spark, sf_dir, "events")
-    src = cached_fixture(
-        "attr_events_src", sf_dir, _attr_write_slices(events), "pls_attr_src_"
+    return drain_state(
+        spark, src, ckpt, out, ["user_id"], _attr_state_update,
+        output="eff_first string, eff_last string, value double",
+        state="f string, l string",
     )
-    out = scratch_dir("pls_attrst_out_")
-    ckpt = scratch_dir("pls_attrst_ckpt_")
-    q = drain(
-        spark, src, ckpt,
-        lambda r: r.option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _attr_state_update,
-            outputStructType="eff_first string, eff_last string, value double",
-            stateStructType="f string, l string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        .writeStream.format("parquet")
-        .option("path", out),
-    )
-    return spark.read.schema(
-        "eff_first string, eff_last string, value double"
-    ).parquet(out), list(q.recentProgress)
 
 
 def _attr_ledger(purch: DataFrame) -> DataFrame:
@@ -1222,8 +1205,15 @@ def _attr_ledger(purch: DataFrame) -> DataFrame:
     )
 
 
-def stream_attribution_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    purch, _ = _attr_stateful_run(spark, sf_dir)
+def stream_attribution_stateful(
+    spark: SparkSession, sf_dir: str, *, src: Dir = None, ckpt: Dir = None, out: Dir = None
+) -> DataFrame:
+    purch, _ = _attr_stateful_run(
+        spark,
+        src or _event_slices_src(spark, sf_dir),
+        ckpt or scratch_dir("pls_attrst_ckpt_"),
+        out or scratch_dir("pls_attrst_out_"),
+    )
     return _attr_ledger(purch)
 
 
@@ -1260,29 +1250,28 @@ register(
 # bounded-metadata pattern.
 
 
-def _hh_write_slices(docs: DataFrame):
-    return lambda p: write_slices(
-        docs.selectExpr("doc_id", "text", "CAST(doc_id % 4 AS INT) AS slice"), p, 4
+def _hh_src(spark: SparkSession, sf_dir: str) -> str:
+    return cached_fixture(
+        "hh_docs_src",
+        sf_dir,
+        lambda p: write_slices(
+            load_table(spark, sf_dir, "documents").selectExpr(
+                "doc_id", "text", "CAST(doc_id % 4 AS INT) AS slice"
+            ),
+            p,
+            4,
+        ),
+        "pls_hh_src_",
     )
 
 
 def stream_heavy_hitters(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    src: str | None = None,
-    state_root: str | None = None,
-    ckpt: str | None = None,
+    spark: SparkSession, sf_dir: str, *, src: Dir = None, ckpt: Dir = None, out: Dir = None
 ) -> DataFrame:
-    # src/state_root/ckpt injectable for the restart-recovery test
     from posting_lines_spark.queries.sketch_q import HH_K
 
-    docs = load_table(spark, sf_dir, "documents")
-    if src is None:
-        src = cached_fixture(
-            "hh_docs_src", sf_dir, _hh_write_slices(docs), "pls_hh_src_"
-        )
-    state_root = state_root or scratch_dir("pls_hh_state_")
+    src = src or _hh_src(spark, sf_dir)
+    out = out or scratch_dir("pls_hh_state_")
     ckpt = ckpt or scratch_dir("pls_hh_ckpt_")
 
     def grams_of(df: DataFrame) -> DataFrame:
@@ -1294,7 +1283,7 @@ def stream_heavy_hitters(
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession
-        state = prior_state(s, state_root, epoch_id, "k string, w long")
+        state = prior_state(s, out, epoch_id, "k string, w long")
         bc = grams_of(batch_df).groupBy("k").agg(
             F.count(F.lit(1)).cast("long").alias("c")
         )
@@ -1312,10 +1301,10 @@ def stream_heavy_hitters(
                 .collect()[0][0]
             )
             merged = merged.selectExpr("k", f"w - {kth} AS w").filter("w > 0")
-        write_epoch(merged, state_root, epoch_id)
+        write_epoch(merged, out, epoch_id)
 
     drain_batches(spark, src, ckpt, per_batch)
-    cands = last_epoch(spark, state_root).select(F.col("k").alias("ck"))
+    cands = last_epoch(spark, out).select(F.col("k").alias("ck"))
     toks = grams_of(spark.read.parquet(src))
     tot = toks.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
     return (
@@ -1488,7 +1477,11 @@ register(
 # stream_watermark_late_audit is the query that measures when that
 # assumption breaks).
 
-def _sess_write_slices(events: DataFrame):
+def _sess_src(spark: SparkSession, sf_dir: str) -> str:
+    """The events as 4 day slices plus 2 flush-sentinel slices: the
+    source of the session and inter-arrival twins."""
+    events = load_table(spark, sf_dir, "events")
+
     def write(p: str) -> None:
         maxus = events.selectExpr("CAST(max(unix_micros(ts)) AS BIGINT)").collect()[0][0]
         # flush sentinels, slices 4 and 5 (10 and 11 days past the last
@@ -1505,7 +1498,7 @@ def _sess_write_slices(events: DataFrame):
         sliced = _day_slices(events, "event_id", "ts", "user_id", "event_type", "value")
         write_slices(sliced.unionByName(flush), p, 6)
 
-    return write
+    return cached_fixture("sess_events_src", sf_dir, write, "pls_sess_src_")
 
 
 SESS_ORACLE = f"""
@@ -1532,22 +1525,16 @@ FROM s GROUP BY user_id, sess
 """
 
 
-def stream_sessions_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
+def stream_sessions_stateful(
+    spark: SparkSession, sf_dir: str, *, src: Dir = None, ckpt: Dir = None, out: Dir = None
+) -> DataFrame:
     from posting_lines_spark.streaming.stateful import sessionize_stateful
 
-    events = load_table(spark, sf_dir, "events")
-    src = cached_fixture(
-        "sess_events_src", sf_dir, _sess_write_slices(events), "pls_sess_src_"
-    )
-    out = scratch_dir("pls_sessst_out_")
-    ckpt = scratch_dir("pls_sessst_ckpt_")
-    sessionize_stateful(spark, src, out, ckpt)
-    return (
-        spark.read.schema(
-            "user_id long, s_start_us long, s_end_us long, n_events long"
-        )
-        .parquet(out)
-        .where(F.col("user_id") >= 0)
+    return sessionize_stateful(
+        spark,
+        src or _sess_src(spark, sf_dir),
+        ckpt or scratch_dir("pls_sessst_ckpt_"),
+        out or scratch_dir("pls_sessst_out_"),
     )
 
 
@@ -1753,14 +1740,17 @@ register(
 # batch query, so the twin's output is hash-equal to the batch oracle.
 
 
-def stream_interarrival_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
+def stream_interarrival_stateful(
+    spark: SparkSession, sf_dir: str, *, src: Dir = None, ckpt: Dir = None, out: Dir = None
+) -> DataFrame:
     from posting_lines_spark.streaming.stateful import interarrival_stateful
 
-    events = load_table(spark, sf_dir, "events")
-    src = cached_fixture(
-        "sess_events_src", sf_dir, _sess_write_slices(events), "pls_sess_src_"
+    partials = interarrival_stateful(
+        spark,
+        src or _sess_src(spark, sf_dir),
+        ckpt or scratch_dir("pls_gap_ckpt_"),
+        out or scratch_dir("pls_gap_out_"),
     )
-    partials = interarrival_stateful(spark, src)
     partials.createOrReplaceTempView("pls_gap_partials")
     d38 = "DECIMAL(38,0)"
     mean = "(sg / CAST(n AS DOUBLE))"

@@ -23,16 +23,11 @@ from pyspark.sql import functions as F
 
 from posting_lines_spark.queries import register
 from posting_lines_spark.queries.parity import davg_expr, dsum_expr
-from posting_lines_spark.sources import load_table
+from posting_lines_spark.sources import load_table, register_views
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
-
-
-def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    for t in names:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 # --- TPC-H Q10 (returned item reporting): 4-table join + top-k ---
@@ -109,7 +104,7 @@ WHERE s_suppkey = supplier_no
     "makes the equality comparison engine-stable; supplier side broadcast",
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "lineitem", "supplier")
+    register_views(spark, sf_dir, ["lineitem", "supplier"])
     return spark.sql(Q15_SQL)
 
 
@@ -138,7 +133,7 @@ WHERE p_partkey = l_partkey
     "quantities are exact small ints so the avg threshold is engine-stable",
 )
 def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "lineitem", "part")
+    register_views(spark, sf_dir, ["lineitem", "part"])
     return spark.sql(Q17_SQL)
 
 
@@ -229,7 +224,7 @@ WHERE (p_partkey = l_partkey AND p_brand = 'Brand#12'
     "tests/test_plans.py",
 )
 def q19_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "lineitem", "part")
+    register_views(spark, sf_dir, ["lineitem", "part"])
     return spark.sql(Q19_SQL)
 
 
@@ -275,7 +270,7 @@ LIMIT 10
     "subquery execution at any scale",
 )
 def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "supplier", "lineitem", "orders", "nation")
+    register_views(spark, sf_dir, ["supplier", "lineitem", "orders", "nation"])
     return spark.sql(Q21_SQL)
 
 
@@ -317,7 +312,7 @@ GROUP BY c_mktsegment
     "keeps the balance threshold bit-identical across engines",
 )
 def q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "customer", "orders")
+    register_views(spark, sf_dir, ["customer", "orders"])
     return spark.sql(Q22_SQL)
 
 
@@ -379,7 +374,7 @@ LIMIT 100
     "engine-stable because MIN is order-independent",
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "part", "supplier", "lineitem", "nation", "region")
+    register_views(spark, sf_dir, ["part", "supplier", "lineitem", "nation", "region"])
     return spark.sql(Q2_SQL)
 
 
@@ -409,7 +404,7 @@ GROUP BY o_orderpriority
     "probe, so the build side is the filtered order-key set",
 )
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "orders", "lineitem")
+    register_views(spark, sf_dir, ["orders", "lineitem"])
     return spark.sql(Q4_SQL)
 
 
@@ -435,7 +430,7 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
     "of row data — the minimal full-scan aggregate at any scale",
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "lineitem")
+    register_views(spark, sf_dir, ["lineitem"])
     return spark.sql(Q6_SQL)
 
 
@@ -475,7 +470,7 @@ GROUP BY supp_nation, cust_nation, l_year
     "aggregate is tiny",
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "supplier", "lineitem", "orders", "customer", "nation")
+    register_views(spark, sf_dir, ["supplier", "lineitem", "orders", "customer", "nation"])
     return spark.sql(Q7_SQL)
 
 
@@ -519,8 +514,8 @@ GROUP BY o_year
     "prunes the customer side before the fact join",
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(
-        spark, sf_dir, "part", "supplier", "lineitem", "orders", "customer", "nation", "region"
+    register_views(
+        spark, sf_dir, ["part", "supplier", "lineitem", "orders", "customer", "nation", "region"]
     )
     return spark.sql(Q8_SQL)
 
@@ -557,7 +552,7 @@ GROUP BY nation, o_year
     "(25 nations × years) aggregate",
 )
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "part", "supplier", "lineitem", "orders", "nation")
+    register_views(spark, sf_dir, ["part", "supplier", "lineitem", "orders", "nation"])
     return spark.sql(Q9_SQL)
 
 
@@ -595,7 +590,7 @@ HAVING {dsum_expr("l_extendedprice * l_quantity")} > (
     "comparison is bit-stable",
 )
 def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "lineitem", "supplier", "nation")
+    register_views(spark, sf_dir, ["lineitem", "supplier", "nation"])
     return spark.sql(Q11_SQL)
 
 
@@ -627,7 +622,7 @@ GROUP BY l_linestatus
     "routing needed",
 )
 def q12_priority_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "orders", "lineitem")
+    register_views(spark, sf_dir, ["orders", "lineitem"])
     return spark.sql(Q12_SQL)
 
 
@@ -652,7 +647,7 @@ WHERE l_partkey = p_partkey
     "double — single-row result, bit-identical across engines",
 )
 def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "lineitem", "part")
+    register_views(spark, sf_dir, ["lineitem", "part"])
     return spark.sql(Q14_SQL)
 
 
@@ -684,7 +679,7 @@ GROUP BY p_brand, p_type, p_size
     "count(DISTINCT) per (brand, type, size) after the part filters",
 )
 def q16_supplier_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "lineitem", "part", "supplier")
+    register_views(spark, sf_dir, ["lineitem", "part", "supplier"])
     return spark.sql(Q16_SQL)
 
 
@@ -732,5 +727,5 @@ WHERE s_suppkey IN (
     "exact",
 )
 def q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "supplier", "nation", "lineitem", "part")
+    register_views(spark, sf_dir, ["supplier", "nation", "lineitem", "part"])
     return spark.sql(Q20_SQL)

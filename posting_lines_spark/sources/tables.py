@@ -52,18 +52,14 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def stream_schema(
-    spark: SparkSession, src_dir: str, checkpoint_dir: str | None
-) -> StructType:
-    """Schema of the parquet file stream over `src_dir`, fixed once per
-    checkpoint: a file stream's schema is fixed for the life of its
-    checkpoint, so later runs from it reuse the schema even though every
-    new file changes the source's stamp. A fresh checkpoint (no offset
-    log yet, or a non-local one), or none at all, takes the schema of
-    the source's current content from `read_parquet`'s memo."""
-    if checkpoint_dir is None:
-        return read_parquet(spark, src_dir).schema
-    key = ("stream", src_dir, checkpoint_dir)
+def stream_schema(spark: SparkSession, src_dir: str, checkpoint_dir: str) -> StructType:
+    """Schema of the parquet file stream over `src_dir`, fixed when a
+    stream over it starts: a fresh checkpoint (no offset log yet, or a
+    non-local one) takes the schema of the source's current content from
+    `read_parquet`'s memo and keeps it for the source; a run resumed from
+    a checkpoint reuses it, though every new file changed the source's
+    stamp. One entry per source, however many checkpoints read it."""
+    key = ("stream", src_dir)
     if key not in _SCHEMAS or not os.path.isdir(os.path.join(checkpoint_dir, "offsets")):
         _SCHEMAS[key] = read_parquet(spark, src_dir).schema
     return _SCHEMAS[key]

@@ -3,7 +3,10 @@
 `drain` is the only place a file stream starts: it fixes the stream's
 schema with `sources.stream_schema`, starts the writer with its
 checkpoint and `trigger(availableNow=True)` inside
-`stream_shuffle_scope`, and waits until the backlog is drained.
+`stream_shuffle_scope`, and waits until the backlog is drained. Every
+drain needs a checkpoint: a twin has no checkpoint-less sink (no memory
+sink), so each one resumes from its checkpoint where the last run
+stopped.
 
 A `foreachBatch` sink is at-least-once: Spark re-runs an epoch whose
 commit it did not record. So every `foreachBatch` twin keeps its
@@ -25,25 +28,28 @@ from pyspark.sql.streaming import DataStreamReader, DataStreamWriter, StreamingQ
 from posting_lines_spark.sources import stream_schema
 from posting_lines_spark.streaming.tuning import stream_shuffle_scope
 
+# A stream twin's `src`, `ckpt` and `out` keywords: the dirs it drains,
+# restarts from and writes to. None takes the twin's default (its cached
+# source fixture, or a fresh scratch dir).
+Dir = str | None
+
 
 def drain(
     spark: SparkSession,
     src: str,
-    checkpoint: str | None,
+    checkpoint: str,
     query: Callable[[DataStreamReader], DataStreamWriter],
     *,
     no_data_batches: bool = True,
 ) -> StreamingQuery:
     """Drain the parquet file stream over `src` once. `query` turns a
     reader that carries the stream's schema into a configured writer;
-    the writer starts from `checkpoint` (None: a memory sink's temporary
-    one) and runs until every available file is processed. Returns the
-    terminated query; its `recentProgress` holds the per-batch metrics.
-    `no_data_batches` is passed to `stream_shuffle_scope`."""
+    the writer starts from `checkpoint` and runs until every available
+    file is processed. Returns the terminated query; its
+    `recentProgress` holds the per-batch metrics. `no_data_batches` is
+    passed to `stream_shuffle_scope`."""
     reader = spark.readStream.schema(stream_schema(spark, src, checkpoint))
-    writer = query(reader)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
+    writer = query(reader).option("checkpointLocation", checkpoint)
     with stream_shuffle_scope(spark, src, no_data_batches=no_data_batches):
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()

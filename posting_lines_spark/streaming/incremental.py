@@ -123,9 +123,8 @@ def session_windows_append_parquet(
     passes their end (state for them is then evicted — bounded memory,
     unbounded stream); sessions still open at the final watermark stay in
     state for the next incremental run instead of being re-emitted, which
-    is what makes the file sink exactly-once under re-runs. The memory-
-    sink/complete-mode variant below is driver-memory bound and exists for
-    tests only. Returns the emitted sessions read back from the sink.
+    is what makes the file sink exactly-once under re-runs. Returns the
+    emitted sessions read back from the sink.
     Pass `src_dir` to stream from an already-materialized parquet dir."""
     if src_dir is not None:
         src = src_dir

@@ -1,24 +1,72 @@
-"""Custom stateful streaming operator via applyInPandasWithState
-(SURVEY.md §2.8 extension surface; the "custom stateful operators" entry
-of the pyspark guide).
+"""Engine-state stream twins: custom stateful operators via
+applyInPandasWithState (SURVEY.md §2.8 extension surface; the "custom
+stateful operators" entry of the pyspark guide).
 
-The operator keeps (n_events, max_value) per user across micro-batches
-and emits the running totals each batch. Driven with availableNow +
-maxFilesPerTrigger=1 so a bounded parquet directory exercises REAL
-multi-batch state handoff (one batch per file), then the final state is
-compared against the plain batch aggregate — state plumbing proven
-end-to-end without an unbounded source.
+Every such twin has one form, `drain_state`: it drains a bounded parquet
+directory one file per trigger (availableNow + maxFilesPerTrigger=1, so
+each file is a REAL micro-batch and state is handed across batches),
+groups it by the twin's keys into applyInPandasWithState and appends
+every emitted row to a checkpointed parquet sink. The state store lives
+under the checkpoint and the file sink keeps its own commit log, so a
+new query started from the checkpoint resumes with the state the last
+one committed, and the sink holds each emitted row once.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from posting_lines_spark.streaming.harness import drain
+
+
+def drain_state(
+    spark: SparkSession,
+    src: str,
+    ckpt: str,
+    out: str,
+    keys: list[str],
+    func: Callable,
+    *,
+    output: str,
+    state: str,
+    timeout: str = GroupStateTimeout.NoTimeout,
+    prepare: Callable[[DataFrame], DataFrame] = lambda df: df,
+) -> tuple[DataFrame, StreamingQuery]:
+    """Drain `src` one file per trigger through `prepare`, group it by
+    `keys` and fold each group with `func` in applyInPandasWithState
+    (rows typed by `output`, state by `state`), appending every emitted
+    row to the parquet sink `out` under the checkpoint `ckpt`. Returns
+    the sink's rows and the terminated query (its `recentProgress`
+    holds the per-batch state metrics)."""
+    q = drain(
+        spark, src, ckpt,
+        lambda r: prepare(r.option("maxFilesPerTrigger", 1).parquet(src))
+        .groupBy(*keys)
+        .applyInPandasWithState(
+            func,
+            outputStructType=output,
+            stateStructType=state,
+            outputMode="append",
+            timeoutConf=timeout,
+        )
+        .writeStream.format("parquet")
+        .option("path", out),
+    )
+    return spark.read.schema(output).parquet(out), q
+
+
+def _last_totals(rows: DataFrame, keys: list[str], running: str) -> DataFrame:
+    """Each key's final state: of the running totals a key emitted (one
+    per batch it appeared in), the one with the highest `running` count."""
+    w = W.partitionBy(*keys).orderBy(F.col(running).desc())
+    return rows.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
 
 
 def _track_user(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
@@ -32,45 +80,16 @@ def _track_user(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterato
     yield pd.DataFrame({"user_id": [user_id], "n_events": [n], "max_value": [mx]})
 
 
-def running_user_stats(
-    spark: SparkSession, events: DataFrame, n_files: int = 4
-) -> DataFrame:
-    """Run the stateful tracker over `events` split into `n_files` files →
-    n_files micro-batches. Returns the LAST emitted row per user (= final
-    state). Update-mode memory sink keeps the latest row per key batch."""
-    from posting_lines_spark.fixtures import scratch_dir
-
-    src = scratch_dir(prefix="pls_state_src_")
-    events.repartition(n_files).write.mode("overwrite").parquet(src)
-    name = f"user_stats_{abs(hash(src)) % 10**8}"
-    drain(
-        spark, src, None,
-        lambda r: r.option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _track_user,
-            outputStructType="user_id long, n_events long, max_value double",
-            stateStructType="n long, mx double",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name),
+def running_user_stats(spark: SparkSession, src: str, ckpt: str, out: str) -> DataFrame:
+    """Per-user (n_events, max_value) carried across the micro-batches
+    of `src`: each batch emits its users' running totals, and the last
+    total per user is the final state."""
+    rows, _ = drain_state(
+        spark, src, ckpt, out, ["user_id"], _track_user,
+        output="user_id long, n_events long, max_value double",
+        state="n long, mx double",
     )
-    # update-mode memory sink appends each batch's emissions; the final
-    # state per user is the row with the max n_events
-    latest = spark.table(name)
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        latest.withColumn("__rn", F.row_number().over(w))
-        .filter("__rn = 1")
-        .drop("__rn")
-    )
+    return _last_totals(rows, ["user_id"], "n_events")
 
 
 # --- session windows with event-time timeout ---
@@ -130,35 +149,20 @@ def _session_update(
         )
 
 
-def sessionize_stateful(
-    spark: SparkSession, src: str, out: str, ckpt: str
-):
+def sessionize_stateful(spark: SparkSession, src: str, ckpt: str, out: str) -> DataFrame:
     """Drive the session-window stateful stream over the sliced parquet
     source dir `src` (last two slices must be the far-future flush
     sentinels that advance the watermark and fire the remaining
-    timers). Appends closed sessions to parquet `out`. Returns the
-    query progress list."""
-    from pyspark.sql import functions as F
-
-    q = drain(
-        spark, src, ckpt,
-        lambda r: r.option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withColumn("ts_us", F.expr("unix_micros(ts)"))
-        .withWatermark("ts", "30 minutes")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _session_update,
-            outputStructType="user_id long, s_start_us long, s_end_us long,"
-            " n_events long",
-            stateStructType="s0 long, s1 long, n long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-        .writeStream.format("parquet")
-        .option("path", out),
+    timers). Returns the closed sessions, without the sentinels'."""
+    rows, _ = drain_state(
+        spark, src, ckpt, out, ["user_id"], _session_update,
+        output="user_id long, s_start_us long, s_end_us long, n_events long",
+        state="s0 long, s1 long, n long",
+        timeout=GroupStateTimeout.EventTimeTimeout,
+        prepare=lambda df: df.withColumn("ts_us", F.expr("unix_micros(ts)"))
+        .withWatermark("ts", "30 minutes"),
     )
-    return list(q.recentProgress)
+    return rows.where(F.col("user_id") >= 0)
 
 
 # --- inter-arrival moment tracker (mergeable 128-bit state) ---
@@ -173,8 +177,7 @@ _LANE = 1 << 62  # Σg² exceeds int64 (one year-scale gap squared ≈ 1e27),
 def _track_gaps(key, pdfs, state: GroupState) -> "Iterator[pd.DataFrame]":
     """Per-(user, type) inter-arrival tracker: fold each micro-batch's
     time-sorted events into (last_ts, n, Σg, Σg²-hi, Σg²-lo) state;
-    emit the running totals (update mode — the final row per key is
-    the answer). Slices are time-disjoint, so the boundary gap between
+    emit the running totals (the last row per key is the answer). Slices are time-disjoint, so the boundary gap between
     batches is last_ts → first event of the new batch."""
     user_id, event_type = key
     if state.exists:
@@ -217,37 +220,14 @@ def _track_gaps(key, pdfs, state: GroupState) -> "Iterator[pd.DataFrame]":
     )
 
 
-def interarrival_stateful(spark: SparkSession, src: str) -> DataFrame:
+def interarrival_stateful(spark: SparkSession, src: str, ckpt: str, out: str) -> DataFrame:
     """Drive the gap tracker over the time-sliced parquet dir and
     return the FINAL per-key moment partials."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    name = f"gap_moments_{abs(hash(src)) % 10**8}"
-    drain(
-        spark, src, None,
-        lambda r: r.option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .where(F.col("user_id") >= 0)  # drop the watermark flush sentinels
-        .withColumn("ts_us", F.expr("unix_micros(ts)"))
-        .groupBy("user_id", "event_type")
-        .applyInPandasWithState(
-            _track_gaps,
-            outputStructType="user_id long, event_type string, n long,"
-            " sg long, sgg_hi long, sgg_lo long",
-            stateStructType="last_ts long, n long, sg long, sgg_hi long,"
-            " sgg_lo long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name),
+    rows, _ = drain_state(
+        spark, src, ckpt, out, ["user_id", "event_type"], _track_gaps,
+        output="user_id long, event_type string, n long, sg long, sgg_hi long, sgg_lo long",
+        state="last_ts long, n long, sg long, sgg_hi long, sgg_lo long",
+        prepare=lambda df: df.where(F.col("user_id") >= 0)  # drop the flush sentinels
+        .withColumn("ts_us", F.expr("unix_micros(ts)")),
     )
-    latest = spark.table(name)
-    w = W.partitionBy("user_id", "event_type").orderBy(F.col("n").desc())
-    return (
-        latest.withColumn("__rn", F.row_number().over(w))
-        .filter("__rn = 1")
-        .drop("__rn")
-    )
+    return _last_totals(rows, ["user_id", "event_type"], "n")

@@ -36,15 +36,21 @@ def spark():
     s.stop()
 
 
-@pytest.fixture(scope="session")
-def duck():
+def _duck_views(sf: str):
+    """A DuckDB connection with the testdata tables at `sf` as views."""
     import duckdb
 
     from posting_lines_spark.sources import TABLES
 
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF0001}/{t}.parquet')")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+    return con
+
+
+@pytest.fixture(scope="session")
+def duck():
+    con = _duck_views(SF0001)
     yield con
     con.close()
 

@@ -710,32 +710,27 @@ def test_stateful_attribution_state_writes_scale_with_touched_users(spark):
     corresponds to slice file i."""
     import os
 
+    from posting_lines_spark.fixtures import scratch_dir
     from posting_lines_spark.queries.stream_q import (
         _ATTR_TOUCH_TYPES,
         _attr_stateful_run,
+        _event_slices_src,
     )
     from posting_lines_spark.sources import load_table
     from tests.conftest import SF0001
 
-    _credits, progress = _attr_stateful_run(spark, SF0001)
+    src = _event_slices_src(spark, SF0001)
+    _credits, q = _attr_stateful_run(
+        spark, src, scratch_dir("pls_attrscale_ckpt_"), scratch_dir("pls_attrscale_out_")
+    )
     batches = [
-        p for p in progress if p.get("stateOperators") and p["numInputRows"] > 0
+        p for p in q.recentProgress if p.get("stateOperators") and p["numInputRows"] > 0
     ]
     assert len(batches) == 4, f"expected 4 slice batches, got {len(batches)}"
 
     events = load_table(spark, SF0001, "events")
     total_users = events.select("user_id").distinct().count()
     # per-slice touched-user counts, in slice (mtime) order
-    from posting_lines_spark.fixtures import _CACHE
-
-    # Match the FULL cache key (name, sf_dir, stamp): another test
-    # materializing the attribution fixture at a different SF in the same
-    # process must not satisfy this lookup (ADVICE r5).
-    src = next(
-        v
-        for k, v in _CACHE.items()
-        if k[0] == "attr_events_src" and k[1] == SF0001
-    )
     files = sorted(
         (os.path.join(src, f) for f in os.listdir(src) if f.endswith(".parquet")),
         key=os.path.getmtime,
@@ -756,87 +751,6 @@ def test_stateful_attribution_state_writes_scale_with_touched_users(spark):
     # rewrite all users (only first-touch movers update after batch 0)
     assert sum(updated) < 4 * total_users
     assert updated[0] > 0
-
-
-def test_stateful_attribution_recovers_after_restart(spark):
-    """Crash/resume path of the state store (round-5 VERDICT item 5):
-    drain slices 0-1, STOP the query (checkpoint + per-user state
-    persisted), append slices 2-3, then start a brand-new query object
-    from the same checkpoint. The resumed query must reload the per-user
-    (first,last) carry from the state store — a purchase in slice 2 by a
-    user whose only touches were in slice 0 still credits that touch —
-    so the final ledger equals the one-shot batch query exactly."""
-    import os
-    import shutil
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from posting_lines_spark.fixtures import scratch_dir
-    from posting_lines_spark.queries import load_all
-    from posting_lines_spark.queries.stream_q import (
-        _attr_ledger,
-        _attr_state_update,
-        _attr_write_slices,
-    )
-    from posting_lines_spark.sources import load_table
-    from tests.conftest import SF0001
-
-    events = load_table(spark, SF0001, "events")
-    full = scratch_dir("pls_attrrec_full_")
-    _attr_write_slices(events)(full)
-    slices = sorted(
-        (os.path.join(full, f) for f in os.listdir(full) if f.endswith(".parquet")),
-        key=os.path.getmtime,
-    )
-    assert len(slices) == 4
-
-    src = scratch_dir("pls_attrrec_src_")
-    out = scratch_dir("pls_attrrec_out_")
-    ckpt = scratch_dir("pls_attrrec_ckpt_")
-    schema = spark.read.parquet(full).schema
-
-    def drain_available() -> None:
-        credits = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _attr_state_update,
-                outputStructType="eff_first string, eff_last string, value double",
-                stateStructType="f string, l string",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        q = (
-            credits.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # phase 1: slices 0-1 visible; query drains them and terminates
-    for f in slices[:2]:
-        shutil.copy2(f, os.path.join(src, os.path.basename(f)))
-    drain_available()
-    # phase 2: slices 2-3 appear; a NEW query resumes from the checkpoint
-    # (copy2 preserves the forced mtimes, so drain order is still 2, 3)
-    for f in slices[2:]:
-        shutil.copy2(f, os.path.join(src, os.path.basename(f)))
-    drain_available()
-
-    purch = spark.read.schema(
-        "eff_first string, eff_last string, value double"
-    ).parquet(out)
-    got = sorted(tuple(r) for r in _attr_ledger(purch).collect())
-    want = sorted(
-        tuple(r)
-        for r in load_all()["attribution_touch_models"].fn(spark, SF0001).collect()
-    )
-    assert got == want
 
 
 def test_global_row_number_equals_window_and_parallelizes(spark):

@@ -297,31 +297,55 @@ def test_profile_query_cli_fields():
     assert rows["dedup_minhash_lsh"]["construct_jobs"] >= 1, rows["dedup_minhash_lsh"]
 
 
-def test_every_lineage_cut_goes_through_cuts():
-    """Spark-free guard: the only raw `localCheckpoint` / `checkpoint`
-    calls in the package are inside `operators/cuts.py`, so every cut
-    shares one storage level and one durability rule."""
+def _package_calls(match, skip: str | None = None) -> list[str]:
+    """`path:line` of every call node in the package (but the module
+    `skip`) for which `match(call)` holds."""
     import ast
     import os
 
     root = os.path.join(os.path.dirname(os.path.dirname(__file__)), "posting_lines_spark")
-    allowed = os.path.join(root, "operators", "cuts.py")
     sites = []
     for d, _, files in os.walk(root):
         for f in sorted(files):
             path = os.path.join(d, f)
-            if not f.endswith(".py") or path == allowed:
+            if not f.endswith(".py") or os.path.relpath(path, root) == skip:
                 continue
             with open(path) as fh:
                 tree = ast.parse(fh.read(), path)
             sites += [
                 f"{os.path.relpath(path, root)}:{n.lineno}"
                 for n in ast.walk(tree)
-                if isinstance(n, ast.Call)
-                and isinstance(n.func, ast.Attribute)
-                and n.func.attr in ("localCheckpoint", "checkpoint")
+                if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and match(n)
             ]
+    return sites
+
+
+def test_every_lineage_cut_goes_through_cuts():
+    """Spark-free guard: the only raw `localCheckpoint` / `checkpoint`
+    calls in the package are inside `operators/cuts.py`, so every cut
+    shares one storage level and one durability rule."""
+    sites = _package_calls(
+        lambda n: n.func.attr in ("localCheckpoint", "checkpoint"), skip="operators/cuts.py"
+    )
     assert not sites, f"{len(sites)} raw cut call(s) outside operators/cuts.py: {sites}"
+
+
+def test_every_stream_twin_restarts_from_a_checkpoint():
+    """Spark-free guard: no stream writes to a memory sink (it cannot
+    restart from a checkpoint), and applyInPandasWithState is called in
+    one place only, `streaming/stateful.drain_state`, the one form of an
+    engine-state twin."""
+    import ast
+
+    memory = _package_calls(
+        lambda n: n.func.attr == "format"
+        and any(isinstance(a, ast.Constant) and a.value == "memory" for a in n.args)
+    )
+    stateful = _package_calls(lambda n: n.func.attr == "applyInPandasWithState")
+    assert not memory and len(stateful) <= 1, (
+        f"{len(memory)} memory sink(s): {memory}; "
+        f"{len(stateful)} applyInPandasWithState call(s): {stateful}"
+    )
 
 
 def test_no_checkout_path_in_tests_or_tools():

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 from unittest.mock import MagicMock
 
+import pytest
+
 from posting_lines_spark.sources import load_jdbc, write_jdbc
 
 
@@ -140,24 +142,28 @@ def test_stream_schema_fresh_checkpoint_on_cached_fixture_starts_no_job(spark, t
     assert fresh == first and "event_id" in fresh.fieldNames()
 
 
-def test_stream_tumbling_reuses_its_source(spark):
-    """`stream_tumbling` streams the cached events fixture: a second call
-    writes no new source dir and adds no schema memo entry."""
+@pytest.mark.parametrize("name", ["stream_tumbling", "stream_stateful_stats"])
+def test_stream_twin_reuses_its_source(spark, name):
+    """A stream twin streams a cached fixture: a second call writes no
+    new source dir, adds no schema memo entry and registers no session
+    table."""
     import os
     import tempfile
 
-    from posting_lines_spark.queries.extra_q import stream_tumbling
+    from posting_lines_spark.queries import load_all
     from posting_lines_spark.sources import tables
     from tests.conftest import SF0001, row_key
 
-    def src_dirs():
-        return {d for d in os.listdir(tempfile.gettempdir()) if d.startswith("pls_tumb_src_")}
+    def state():
+        tmp = tempfile.gettempdir()
+        srcs = {d for d in os.listdir(tmp) if d.startswith("pls_") and "_src_" in d}
+        return srcs, len(tables._SCHEMAS), {t.name for t in spark.catalog.listTables()}
 
-    first = stream_tumbling(spark, SF0001).collect()
-    dirs, memo = src_dirs(), len(tables._SCHEMAS)
-    second = stream_tumbling(spark, SF0001).collect()
-    assert src_dirs() == dirs
-    assert len(tables._SCHEMAS) == memo
+    twin = load_all()[name].fn
+    first = twin(spark, SF0001).collect()
+    before = state()
+    second = twin(spark, SF0001).collect()
+    assert state() == before
     assert sorted(second, key=row_key) == sorted(first, key=row_key) and first
 
 

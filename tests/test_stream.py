@@ -15,6 +15,7 @@ import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 
+from posting_lines_spark.queries import pipeline_q, stream_q
 from posting_lines_spark.queries.stream_q import PHASH_HAM_T, _phash_pairs_sql
 from posting_lines_spark.streaming.tuning import stream_partitions
 from tests.conftest import SF0001, SF001, _events, _run, _tbl, _us, row_key
@@ -178,7 +179,7 @@ def test_stateful_sessions_cross_batch_carry_and_timer(spark, tmp_path):
             f" 'flush' AS event_type, CAST(0.0 AS DOUBLE) AS value"
         ).coalesce(1).write.mode("append").parquet(src)
         force_mtime_order(src, seen, 2 + i, base)
-    sessionize_stateful(spark, src, out, ckpt)
+    sessionize_stateful(spark, src, ckpt, out)
     got = sorted(
         (r.user_id, r.s_start_us, r.s_end_us, r.n_events)
         for r in spark.read.parquet(out).where("user_id >= 0").collect()
@@ -363,103 +364,6 @@ def test_stream_interarrival_twin_multichunk(spark):
     assert twin == batch
 
 
-def test_interarrival_stateful_recovers_after_restart(spark):
-    """Crash/resume path of the gap-moment state store (round-8 VERDICT
-    item 3, mirroring test_stateful_attribution_recovers_after_restart):
-    drain the first half of the time slices, STOP the query (offsets +
-    per-(user,type) lane state checkpointed), reveal the rest, then
-    start a BRAND-NEW query from the same checkpoint. The resumed query
-    must reload (last_ts, n, Σg, Σg²-lanes) from the state store — the
-    boundary gap between the halves is only correct if last_ts
-    survived — so the per-key union-max partials equal the
-    uninterrupted run's exactly."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import Window as W
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from posting_lines_spark.fixtures import scratch_dir
-    from posting_lines_spark.queries.stream_q import _sess_write_slices
-    from posting_lines_spark.sources import load_table
-    from posting_lines_spark.streaming.stateful import (
-        _track_gaps,
-        interarrival_stateful,
-    )
-
-    events = load_table(spark, SF001, "events")
-    full = scratch_dir("pls_gaprec_full_")
-    _sess_write_slices(events)(full)
-    files = sorted(
-        (os.path.join(full, f) for f in os.listdir(full) if f.endswith(".parquet")),
-        key=os.path.getmtime,
-    )
-    assert len(files) == 6  # 4 slices + 2 watermark-flush sentinels
-
-    src = scratch_dir("pls_gaprec_src_")
-    sink = scratch_dir("pls_gaprec_out_")
-    ckpt = scratch_dir("pls_gaprec_ckpt_")
-    schema = spark.read.parquet(full).schema
-
-    def drain() -> None:
-        # The memory sink can't recover from a checkpoint, so the
-        # restart path uses a parquet sink in append mode: every
-        # micro-batch appends each touched key's RUNNING totals, and
-        # the max-n row per key is the final answer — same row-shape
-        # and same _track_gaps state encoding as the registered query.
-        out = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .where(F.col("user_id") >= 0)
-            .withColumn("ts_us", F.expr("unix_micros(ts)"))
-            .groupBy("user_id", "event_type")
-            .applyInPandasWithState(
-                _track_gaps,
-                outputStructType="user_id long, event_type string, n long,"
-                " sg long, sgg_hi long, sgg_lo long",
-                stateStructType="last_ts long, n long, sg long,"
-                " sgg_hi long, sgg_lo long",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    for f in files[:3]:
-        shutil.copy2(f, os.path.join(src, os.path.basename(f)))
-    drain()
-    for f in files[3:]:
-        shutil.copy2(f, os.path.join(src, os.path.basename(f)))
-    drain()  # new query object; resumes from ckpt
-
-    # final per-key row = max-n row across all appended running totals
-    both = spark.read.schema(
-        "user_id long, event_type string, n long, sg long,"
-        " sgg_hi long, sgg_lo long"
-    ).parquet(sink)
-    w = W.partitionBy("user_id", "event_type").orderBy(F.col("n").desc())
-    got = {
-        (r["user_id"], r["event_type"]): (r["n"], r["sg"], r["sgg_hi"], r["sgg_lo"])
-        for r in both.withColumn("__rn", F.row_number().over(w))
-        .filter("__rn = 1")
-        .collect()
-    }
-    want = {
-        (r["user_id"], r["event_type"]): (r["n"], r["sg"], r["sgg_hi"], r["sgg_lo"])
-        for r in interarrival_stateful(spark, full).collect()
-    }
-    assert got == want
-
-
 def test_audio_vad_matches_python(spark):
     """Replay the whole audio lane in Python: md5 fake PCM, frame
     energies, threshold, segment runs — per-doc stats must be equal."""
@@ -508,11 +412,27 @@ def test_audio_vad_matches_python(spark):
     assert got == want
 
 
-# ---- restart-recovery tests for the 6 remaining stateful twins
-# (VERDICT-r9 item 3; attribution + interarrival set the bar: kill at a
-# checkpoint boundary, resume with a BRAND-NEW query, assert output ≡
-# the uninterrupted run). These drive the PRODUCTION pipelines — the
-# twins take injectable src/state/ckpt dirs — not reimplementations. ----
+# ---- restart and replay through the registered twins. Each twin below
+# takes its source, checkpoint and output dirs as `src`/`ckpt`/`out`,
+# so one test stops and restarts it from its checkpoint and one replays
+# its last epoch, both running the registered query itself. ----
+
+# twin -> its default source, a cached fixture
+STREAM_TWINS = {
+    "stream_attribution_stateful": stream_q._event_slices_src,
+    "stream_dedup_index": stream_q._dedup_stream_src,
+    "stream_enrich": pipeline_q.segments_state_path,
+    "stream_ewma": stream_q._ewma_src,
+    "stream_heavy_hitters": stream_q._hh_src,
+    "stream_interarrival_stateful": stream_q._sess_src,
+    "stream_psi_drift": stream_q._psi_src,
+    "stream_scd_upsert": stream_q._scd_src,
+    "stream_sessions_stateful": stream_q._sess_src,
+    "stream_stateful_stats": stream_q._event_slices_src,
+    "stream_tumbling": stream_q._event_slices_src,
+}
+# a restart splits the source's files; these two sources are one file
+RESTARTS = sorted(set(STREAM_TWINS) - {"stream_enrich", "stream_scd_upsert"})
 
 
 def _slice_files(d):
@@ -530,379 +450,60 @@ def _slice_files(d):
 
 def _copy_in(files, dst):
     import os
-    import shutil
 
     for f in files:
         shutil.copy2(f, os.path.join(dst, os.path.basename(f)))
 
 
-def test_sessions_stateful_recovers_after_restart(spark):
-    """Kill the event-time-timer sessionizer after 3 of 6 slices
-    (open-session carry + timers checkpointed), resume: the appended
-    closed-session set must equal the uninterrupted run's."""
-    from pyspark.sql import functions as F
-
+@pytest.mark.parametrize("name", RESTARTS)
+def test_twin_restarts_from_its_checkpoint(spark, name):
+    """Drain the first half of the twin's source files, stop, add the
+    rest, and start a new query from the same checkpoint: the output
+    must equal the uninterrupted run's and the oracle's rows at sf0.01.
+    The copies keep the files' mtimes, so the order of the slices is
+    the same in both runs."""
     from posting_lines_spark.fixtures import scratch_dir
-    from posting_lines_spark.queries.stream_q import _sess_write_slices
-    from posting_lines_spark.sources import load_table
-    from posting_lines_spark.streaming.stateful import sessionize_stateful
+    from posting_lines_spark.queries import load_all
+    from tests.conftest import _canon_rows, _duck_views
 
-    events = load_table(spark, SF001, "events")
-    full = scratch_dir("pls_sessrec_full_")
-    _sess_write_slices(events)(full)
-    files = _slice_files(full)
-    assert len(files) == 6  # 4 slices + 2 watermark-flush sentinels
-
-    schema = "user_id long, s_start_us long, s_end_us long, n_events long"
-
-    def read_out(p):
-        return sorted(
-            tuple(r)
-            for r in spark.read.schema(schema)
-            .parquet(p)
-            .where(F.col("user_id") >= 0)
-            .collect()
-        )
-
-    src = scratch_dir("pls_sessrec_src_")
-    out = scratch_dir("pls_sessrec_out_")
-    ckpt = scratch_dir("pls_sessrec_ckpt_")
-    _copy_in(files[:3], src)
-    sessionize_stateful(spark, src, out, ckpt)
-    _copy_in(files[3:], src)
-    sessionize_stateful(spark, src, out, ckpt)  # new query, same ckpt
-
-    out2 = scratch_dir("pls_sessrec_out2_")
-    sessionize_stateful(spark, full, out2, scratch_dir("pls_sessrec_ck2_"))
-    got, want = read_out(out), read_out(out2)
-    assert got == want and len(got) > 0
-
-
-def test_stateful_stats_recovers_after_restart(spark):
-    """Kill the per-user running (n, max) tracker after 2 of 4 files,
-    resume from the checkpoint: final per-user state must equal the
-    batch aggregate (the registered twin's oracle)."""
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import Window as W
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from posting_lines_spark.fixtures import scratch_dir
-    from posting_lines_spark.sources import load_table
-    from posting_lines_spark.streaming.stateful import _track_user
-
-    events = load_table(spark, SF001, "events").select("user_id", "value")
-    full = scratch_dir("pls_statsrec_full_")
-    events.repartition(4).write.mode("overwrite").parquet(full)
-    files = _slice_files(full)
-    assert len(files) == 4
-
-    src = scratch_dir("pls_statsrec_src_")
-    sink = scratch_dir("pls_statsrec_out_")
-    ckpt = scratch_dir("pls_statsrec_ckpt_")
-    schema = spark.read.parquet(full).schema
-
-    def drain():
-        out = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _track_user,
-                outputStructType="user_id long, n_events long,"
-                " max_value double",
-                stateStructType="n long, mx double",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    _copy_in(files[:2], src)
-    drain()
-    _copy_in(files[2:], src)
-    drain()  # new query; per-user (n, mx) reloads from the state store
-
-    rows = spark.read.schema(
-        "user_id long, n_events long, max_value double"
-    ).parquet(sink)
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    got = {
-        r["user_id"]: (r["n_events"], r["max_value"])
-        for r in rows.withColumn("__rn", F.row_number().over(w))
-        .filter("__rn = 1")
-        .collect()
-    }
-    want = {
-        r["user_id"]: (r["n"], r["mx"])
-        for r in events.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.max("value").alias("mx"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
-def test_ewma_recovers_after_restart(spark):
-    """The ORDER-DEPENDENT carry class: kill after 2 of 4 in-order day
-    slices, resume — the resumed fold must seed from the persisted
-    (ewma, n_days) carry, so the final state is bit-identical to the
-    uninterrupted run's."""
-    from posting_lines_spark.fixtures import scratch_dir
-    from posting_lines_spark.queries.stream_q import (
-        _ewma_write_slices,
-        stream_ewma,
-    )
-    from posting_lines_spark.sources import load_table
-
-    events = load_table(spark, SF001, "events")
-    full = scratch_dir("pls_ewmarec_full_")
-    _ewma_write_slices(events)(full)
-    files = _slice_files(full)
-    assert len(files) == 4
-
-    src = scratch_dir("pls_ewmarec_src_")
-    state = scratch_dir("pls_ewmarec_state_")
-    ckpt = scratch_dir("pls_ewmarec_ckpt_")
-    _copy_in(files[:2], src)
-    stream_ewma(spark, SF001, src=src, state_root=state, ckpt=ckpt)
-    _copy_in(files[2:], src)
-    got = {
-        r["event_type"]: (r["n_days"], r["ewma"])
-        for r in stream_ewma(
-            spark, SF001, src=src, state_root=state, ckpt=ckpt
-        ).collect()
-    }
-    want = {
-        r["event_type"]: (r["n_days"], r["ewma"])
-        for r in stream_ewma(
-            spark,
-            SF001,
-            src=full,
-            state_root=scratch_dir("pls_ewmarec_st2_"),
-            ckpt=scratch_dir("pls_ewmarec_ck2_"),
-        ).collect()
-    }
-    assert got == want  # exact — same fold, same seeds, same order
-
-
-def test_psi_drift_recovers_after_restart(spark):
-    """Additive-partials class: kill after 2 of 4 files, resume — the
-    merged (bin, n_a, n_b) partials and the PSI must equal the
-    uninterrupted run's exactly."""
-    from posting_lines_spark.fixtures import scratch_dir
-    from posting_lines_spark.queries.stream_q import stream_psi_drift
-    from posting_lines_spark.sources import load_table
-
-    orders = load_table(spark, SF001, "orders")
-    full = scratch_dir("pls_psirec_full_")
-    orders.select("o_totalprice", "o_orderdate").repartition(4).write.mode(
-        "overwrite"
-    ).parquet(full)
-    files = _slice_files(full)
-    assert len(files) == 4
-
-    src = scratch_dir("pls_psirec_src_")
-    out = scratch_dir("pls_psirec_out_")
-    ckpt = scratch_dir("pls_psirec_ckpt_")
-    _copy_in(files[:2], src)
-    stream_psi_drift(spark, SF001, src=src, out=out, ckpt=ckpt)
-    _copy_in(files[2:], src)
-    got = sorted(
-        tuple(r)
-        for r in stream_psi_drift(
-            spark, SF001, src=src, out=out, ckpt=ckpt
-        ).collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in stream_psi_drift(
-            spark,
-            SF001,
-            src=full,
-            out=scratch_dir("pls_psirec_out2_"),
-            ckpt=scratch_dir("pls_psirec_ck2_"),
-        ).collect()
-    )
-    assert got == want and len(got) > 0
-
-
-def test_heavy_hitters_recovers_after_restart(spark):
-    """Mergeable Misra-Gries carry: kill after 2 of 4 slices, resume —
-    the k-bounded carry reloads from parquet state, and the final
-    exact counting pass must equal the uninterrupted run's."""
-    from posting_lines_spark.fixtures import scratch_dir
-    from posting_lines_spark.queries.stream_q import (
-        _hh_write_slices,
-        stream_heavy_hitters,
-    )
-    from posting_lines_spark.sources import load_table
-
-    docs = load_table(spark, SF001, "documents")
-    full = scratch_dir("pls_hhrec_full_")
-    _hh_write_slices(docs)(full)
-    files = _slice_files(full)
-    assert len(files) == 4
-
-    src = scratch_dir("pls_hhrec_src_")
-    state = scratch_dir("pls_hhrec_state_")
-    ckpt = scratch_dir("pls_hhrec_ckpt_")
-    _copy_in(files[:2], src)
-    stream_heavy_hitters(spark, SF001, src=src, state_root=state, ckpt=ckpt)
-    _copy_in(files[2:], src)
-    got = [
-        tuple(r)
-        for r in stream_heavy_hitters(
-            spark, SF001, src=src, state_root=state, ckpt=ckpt
-        ).collect()
-    ]
-    want = [
-        tuple(r)
-        for r in stream_heavy_hitters(
-            spark,
-            SF001,
-            src=full,
-            state_root=scratch_dir("pls_hhrec_st2_"),
-            ckpt=scratch_dir("pls_hhrec_ck2_"),
-        ).collect()
-    ]
-    assert got == want and len(got) > 0
-
-
-def test_dedup_index_recovers_after_restart(spark):
-    """Persisted MinHash band index: kill after 2 of 4 corpus chunks,
-    resume — the resumed batches must probe the persisted band/shingle
-    state, so the cumulative pair table equals the uninterrupted
-    run's."""
-    from posting_lines_spark.fixtures import scratch_dir
-    from posting_lines_spark.queries.dedup_q import (
-        BANDS,
-        JACCARD_T,
-        NUM_HASHES,
-    )
-    from posting_lines_spark.queries.stream_q import _dedup_stream_src
-    from posting_lines_spark.streaming.incremental import (
-        minhash_index_stream,
-    )
-
-    full = _dedup_stream_src(spark, SF001)
-    files = _slice_files(full)
-    assert len(files) == 4
-
-    def pairs_of(df):
-        return sorted(
-            (r["id_a"], r["id_b"]) for r in df.select("id_a", "id_b").collect()
-        )
-
-    src = scratch_dir("pls_idxrec_src_")
-    state = scratch_dir("pls_idxrec_state_")
-    ckpt = scratch_dir("pls_idxrec_ckpt_")
-    _copy_in(files[:2], src)
-    minhash_index_stream(
-        spark, src, state, ckpt, NUM_HASHES, BANDS, JACCARD_T
-    )
-    _copy_in(files[2:], src)
-    got = pairs_of(
-        minhash_index_stream(
-            spark, src, state, ckpt, NUM_HASHES, BANDS, JACCARD_T
-        )
-    )
-    want = pairs_of(
-        minhash_index_stream(
-            spark,
-            full,
-            scratch_dir("pls_idxrec_st2_"),
-            scratch_dir("pls_idxrec_ck2_"),
-            NUM_HASHES,
-            BANDS,
-            JACCARD_T,
-        )
-    )
-    assert got == want and len(got) > 0
+    q = load_all()[name]
+    files = _slice_files(STREAM_TWINS[name](spark, SF001))
+    src, ckpt, out = (scratch_dir(f"pls_restart_{d}_") for d in ("src", "ckpt", "out"))
+    half = len(files) // 2
+    _copy_in(files[:half], src)
+    q.fn(spark, SF001, src=src, ckpt=ckpt, out=out)
+    _copy_in(files[half:], src)
+    got = q.fn(spark, SF001, src=src, ckpt=ckpt, out=out)
+    cols, got = got.columns, sorted((tuple(r) for r in got.collect()), key=row_key)
+    want = sorted((tuple(r) for r in q.fn(spark, SF001).collect()), key=row_key)
+    assert got == want and got
+    con = _duck_views(SF001)
+    res = con.execute(q.oracle)
+    oracle = _canon_rows(res.fetchall(), [d[0] for d in res.description])
+    con.close()
+    assert _canon_rows(got, cols) == oracle
 
 
 # ---- at-least-once epoch replay: Spark re-runs an epoch whose commit
-# it did not record. Every foreachBatch sink must then rewrite identical
-# rows, so a replayed drain's output equals the uninterrupted run's. ----
+# it did not record. Every sink must then rewrite identical rows, so a
+# replayed drain's output equals the uninterrupted run's. ----
 
 
-def _replay_run(spark, case):
-    """(run(ckpt) -> output rows) for one stream twin over a multi-file
-    sf0.001 source; every other directory stays fixed across runs."""
-    from pyspark.sql import functions as F
-
+def _replay_run(spark, name):
+    """run(ckpt) -> the rows of the twin `name` over its sf0.001 source;
+    the output dir stays fixed across runs."""
     from posting_lines_spark.fixtures import scratch_dir
-    from posting_lines_spark.queries import stream_q
-    from posting_lines_spark.queries.dedup_q import BANDS, JACCARD_T, NUM_HASHES
-    from posting_lines_spark.queries.pipeline_q import segments_state_path
-    from posting_lines_spark.sources import load_table
-    from posting_lines_spark.streaming import incremental
+    from posting_lines_spark.queries import load_all
 
-    def rows(df):
-        return [tuple(r) for r in df.collect()]
-
-    out = scratch_dir("pls_replay_out_")
-    if case == "enrich":
-        src = scratch_dir("pls_replay_src_")
-        spark.read.parquet(segments_state_path(spark, SF0001)).repartition(2).write.mode(
-            "overwrite"
-        ).parquet(src)
-
-        def run(ckpt):
-            incremental.enrich_available_now(spark, src, out, ckpt)
-            return rows(
-                spark.read.option("recursiveFileLookup", "true")
-                .parquet(out)
-                .select("segment_id", "duration", "len_m", "sog_kt")
-            )
-
-        return run
-    if case == "scd":
-        events = load_table(spark, SF0001, "events")
-        src = scratch_dir("pls_replay_src_")
-        events.select("user_id", "ts", "value", "event_id").repartition(2).write.mode(
-            "overwrite"
-        ).parquet(src)
-        initial = events.select("user_id").distinct().select(
-            "user_id",
-            F.lit(0.0).alias("value"),
-            F.timestamp_micros(F.lit(0)).alias("valid_from"),
-            F.lit(None).cast("timestamp_ntz").alias("valid_to"),
-        )
-        return lambda ckpt: rows(
-            incremental.scd_upsert_available_now(
-                spark, initial, None, out, ckpt, key="user_id", ts_col="ts",
-                attr_cols=["value"], order_cols=["ts", "event_id"], src_dir=src,
-            )
-        )
-    if case == "minhash":
-        src = stream_q._dedup_stream_src(spark, SF0001)
-        return lambda ckpt: rows(
-            incremental.minhash_index_stream(
-                spark, src, out, ckpt, NUM_HASHES, BANDS, JACCARD_T
-            )
-        )
-    if case == "psi":
-        return lambda ckpt: rows(stream_q.stream_psi_drift(spark, SF0001, out=out, ckpt=ckpt))
-    twin = {"ewma": stream_q.stream_ewma, "heavy_hitters": stream_q.stream_heavy_hitters}[case]
-    return lambda ckpt: rows(twin(spark, SF0001, state_root=out, ckpt=ckpt))
+    fn, out = load_all()[name].fn, scratch_dir("pls_replay_out_")
+    src = STREAM_TWINS[name](spark, SF0001)
+    return lambda ckpt: [
+        tuple(r) for r in fn(spark, SF0001, src=src, ckpt=ckpt, out=out).collect()
+    ]
 
 
-@pytest.mark.parametrize(
-    "case", ["enrich", "scd", "minhash", "ewma", "psi", "heavy_hitters"]
-)
-def test_replayed_epoch_lands_once(spark, case):
+@pytest.mark.parametrize("name", sorted(STREAM_TWINS))
+def test_replayed_epoch_lands_once(spark, name):
     """Drain once, delete the last commit (and its .crc) so Spark re-runs
     that epoch, drain again: the output must equal the uninterrupted
     run's as a multiset."""
@@ -910,7 +511,7 @@ def test_replayed_epoch_lands_once(spark, case):
 
     from posting_lines_spark.fixtures import scratch_dir
 
-    run = _replay_run(spark, case)
+    run = _replay_run(spark, name)
     ckpt = scratch_dir("pls_replay_ckpt_")
     want = sorted(run(ckpt), key=row_key)
     commits = os.path.join(ckpt, "commits")
@@ -929,21 +530,18 @@ def test_missing_state_epoch_fails_loudly(spark):
     previous state to fold into, and must raise naming the directory
     instead of folding its batch into empty state."""
     from posting_lines_spark.fixtures import scratch_dir
-    from posting_lines_spark.queries.stream_q import _ewma_write_slices, stream_ewma
-    from posting_lines_spark.sources import load_table
+    from posting_lines_spark.queries.stream_q import stream_ewma
 
-    full = scratch_dir("pls_epochgap_full_")
-    _ewma_write_slices(load_table(spark, SF0001, "events"))(full)
-    files = _slice_files(full)
+    files = _slice_files(stream_q._ewma_src(spark, SF0001))
     src = scratch_dir("pls_epochgap_src_")
     state = scratch_dir("pls_epochgap_state_")
     ckpt = scratch_dir("pls_epochgap_ckpt_")
     _copy_in(files[:2], src)
-    stream_ewma(spark, SF0001, src=src, state_root=state, ckpt=ckpt)
+    stream_ewma(spark, SF0001, src=src, ckpt=ckpt, out=state)
     shutil.rmtree(f"{state}/e1")
     _copy_in(files[2:], src)
     with pytest.raises(Exception, match=re.escape(f"{state}/e1")):
-        stream_ewma(spark, SF0001, src=src, state_root=state, ckpt=ckpt)
+        stream_ewma(spark, SF0001, src=src, ckpt=ckpt, out=state)
 
 
 def test_video_scenecut_matches_python(spark):
