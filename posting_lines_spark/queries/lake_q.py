@@ -469,8 +469,8 @@ def _hilbert_rows_sql() -> str:
 def _hilbert_write_layouts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write the SAME rows into both layouts (clustered-by-curve and
     hash-partitioned strawman), HILB_FILES files each; returns
-    (clustered_path, hashed_path). Split out so the bbox sweep tool
-    (tools/hilbert_sweep.py) can write once and prune many."""
+    (clustered_path, hashed_path). Split out so the bbox sweep in
+    tests/test_lake.py can write once and prune many."""
     from posting_lines_spark.queries.extra_q import _hilbert_layers
 
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")

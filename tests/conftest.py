@@ -36,21 +36,11 @@ def spark():
     s.stop()
 
 
-def _duck_views(sf: str):
-    """A DuckDB connection with the testdata tables at `sf` as views."""
-    import duckdb
-
-    from posting_lines_spark.sources import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
-    return con
-
-
 @pytest.fixture(scope="session")
 def duck():
-    con = _duck_views(SF0001)
+    from tools.check_oracle import duck_views
+
+    con = duck_views(SF0001)
     yield con
     con.close()
 

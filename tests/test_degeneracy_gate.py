@@ -16,7 +16,9 @@ queries in pytest (the full sweep is the closing-gate run):
     without pinning it fails here, forcing the deliberate-review step;
   * zero-row pins are only legal on the documented EXPECTED_EMPTY
     list (each with its adjudication);
-  * a deterministic sample of queries re-runs through the live gate.
+  * a deterministic sample of queries re-runs through the live gate;
+  * the one verdict function (`check_profile`) fails each collapse
+    shape, and `profile` groups values as Spark's aggregate does.
 
 The de-vacuization the gate's first pin surfaced —
 stream_watermark_late_audit's late branch was dead code against the
@@ -142,16 +144,52 @@ _SAMPLE = [
 
 def test_live_gate_on_sample(manifest, spark):
     from posting_lines_spark.queries import load_all
-    from tools.check_degeneracy import SF_DIRS, _profile
+    from tools.check_degeneracy import SF_DIRS, check_profile, profile
 
     registry = load_all()
     for name in _SAMPLE:
-        want = manifest[name]["sf0001"]
-        got = _profile(spark, registry[name].fn, SF_DIRS["sf0001"])
-        assert got["cols"] == want["cols"], name
-        assert got["rows"] == want["rows"], name
-        for c in want["cols"]:
-            if want["distinct"][c] > 1:
-                assert got["distinct"][c] > 1, f"{name}.{c} went constant"
-            if want["nonnull"][c] > 0:
-                assert got["nonnull"][c] > 0, f"{name}.{c} went all-NULL"
+        df = registry[name].fn(spark, SF_DIRS["sf0001"])
+        assert check_profile(manifest[name]["sf0001"], profile(df.collect(), df.schema)) == [], name
+
+
+def test_check_profile_fails_each_collapse(manifest):
+    """The sweep's one verdict, on the text_sttr pin (the r11
+    near-miss): it holds against itself and names every collapse."""
+    from tools.check_degeneracy import check_profile
+
+    pin = manifest["text_sttr"]["sf001"]
+    cases = {
+        "rows 20 -> 1": ("rows", 1),
+        "column mean_sttr collapsed to constant": ("distinct", {**pin["distinct"], "mean_sttr": 1}),
+        "column min_sttr collapsed to all-NULL": ("nonnull", {**pin["nonnull"], "min_sttr": 0}),
+        "cols [": ("cols", [c.replace("mean_sttr", "sttr_mean") for c in pin["cols"]]),
+    }
+    assert check_profile(pin, pin) == []
+    for line, (key, value) in cases.items():
+        assert any(line in bad for bad in check_profile(pin, {**pin, key: value})), line
+    assert check_profile(manifest.get("no_such_query", {}).get("sf001"), pin) != []
+
+
+def test_profile_groups_as_spark_does():
+    """As count_distinct/count on Spark: in an atomic column NaN is one
+    value, -0.0 is 0.0 and NULL is not counted; a non-atomic column goes
+    through to_json, so NULL is a value, -0.0 is not 0.0 and timestamps
+    keep milliseconds."""
+    from datetime import datetime
+
+    from pyspark.sql import types as T
+
+    from tools.check_degeneracy import profile
+
+    ts = T.StructType([T.StructField("ts", T.TimestampType())])
+    schema = T.StructType([T.StructField("d", T.DoubleType()),
+                           T.StructField("a", T.ArrayType(T.DoubleType())),
+                           T.StructField("s", ts)])
+    us = [datetime(2020, 1, 1, 0, 0, 0, u) for u in (123456, 123999, 124000)]
+    # each NaN a distinct object, as a collect returns them
+    rows = [(float("nan"), [0.0], (us[0],)), (float("nan"), [-0.0], (us[1],)),
+            (-0.0, [float("nan")], (us[2],)), (0.0, [float("nan")], None),
+            (None, [float("nan")], None)]
+    assert profile(rows, schema) == {"rows": 5, "cols": ["d", "a", "s"],
+                                     "distinct": {"d": 2, "a": 3, "s": 3},
+                                     "nonnull": {"d": 4, "a": 5, "s": 5}}

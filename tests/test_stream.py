@@ -464,7 +464,8 @@ def test_twin_restarts_from_its_checkpoint(spark, name):
     the same in both runs."""
     from posting_lines_spark.fixtures import scratch_dir
     from posting_lines_spark.queries import load_all
-    from tests.conftest import _canon_rows, _duck_views
+    from tests.conftest import _canon_rows
+    from tools.check_oracle import duck_views
 
     q = load_all()[name]
     files = _slice_files(STREAM_TWINS[name](spark, SF001))
@@ -477,7 +478,7 @@ def test_twin_restarts_from_its_checkpoint(spark, name):
     cols, got = got.columns, sorted((tuple(r) for r in got.collect()), key=row_key)
     want = sorted((tuple(r) for r in q.fn(spark, SF001).collect()), key=row_key)
     assert got == want and got
-    con = _duck_views(SF001)
+    con = duck_views(SF001)
     res = con.execute(q.oracle)
     oracle = _canon_rows(res.fetchall(), [d[0] for d in res.description])
     con.close()

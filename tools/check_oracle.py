@@ -5,6 +5,9 @@ against the same parquet, then compares row count, column names, and
 values (order-insensitive, exact after query-side canonicalization —
 stricter than a hash, and it prints the first differing row).
 
+At a dir `tools/degeneracy_manifest.json` names, the same rows are also
+checked against the query's degeneracy pin (`check_degeneracy.py`).
+
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
@@ -47,13 +50,26 @@ def rows_canon(rows, colnames):
     return sorted(tuple(canon(r[i]) for i in order) for r in rows)
 
 
-def main() -> int:
+def duck_views(sf_dir: str):
+    """A DuckDB connection with the testdata tables at `sf_dir` as views."""
     import duckdb
 
+    from posting_lines_spark.sources import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        # Spark-layout table dirs (tools/make_sf.py output) need a glob
+        src = f"{p}/*.parquet" if os.path.isdir(p) else p
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
+    return con
+
+
+def main() -> int:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from posting_lines_spark.session import get_spark
-    from posting_lines_spark.sources import TABLES
+    from tools.check_degeneracy import SF_DIRS, check_profile, load_manifest, profile
 
     args = sys.argv[1:]
     sf_dir = args[0] if args and "/" in args[0] else SF_DEFAULT
@@ -66,16 +82,18 @@ def main() -> int:
         print(f"ERROR: unknown queries: {unknown}; known: {sorted(qs)}")
         return 2
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        # Spark-layout table dirs (tools/make_sf.py output) need a glob
-        src = f"{p}/*.parquet" if os.path.isdir(p) else p
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
+    con = duck_views(sf_dir)
+    spark = get_spark(app="check_oracle", cpus=os.cpu_count())
 
-    spark = get_spark(app="check_oracle", cpus=8, shuffle_partitions=16)
-
-    failures = 0
+    # the degeneracy pins at this SF, if the manifest names the dir
+    manifest = load_manifest()
+    pins = manifest["queries"]
+    real = os.path.realpath(sf_dir)
+    label = next((k for k, d in manifest["sf_dirs"].items() if os.path.realpath(d) == real), None)
+    failures = npinned = 0
+    if label and set(pins) - set(qs):
+        print(f"FAIL  degeneracy manifest has unregistered queries: {sorted(set(pins) - set(qs))}")
+        failures += 1
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -131,6 +149,12 @@ def main() -> int:
                     if a != b:
                         status.append(f"  first diff:\n   spark : {a}\n   duckdb: {b}")
                         break
+        # every query is pinned at the SF_DIRS SFs, only some at sf01
+        if label in SF_DIRS or label in pins.get(name, {}):
+            npinned += 1
+            bad = check_profile(pins.get(name, {}).get(label), profile(srows, sdf.schema))
+            if bad:
+                status.append(f"degeneracy {label}: " + "; ".join(bad))
         if status:
             print(f"FAIL  {name}: " + "; ".join(status[:1]))
             for s in status[1:]:
@@ -140,6 +164,8 @@ def main() -> int:
             print(f"PASS  {name}: {len(srows)} rows, {len(scols)} cols ({time.time()-t0:.1f}s)")
 
     spark.stop()
+    if label:
+        print(f"\ndegeneracy pins checked at {label}: {npinned}")
     print(f"\n{'ALL PASS' if failures == 0 else f'{failures} FAILURES'}")
     return 1 if failures else 0
 

@@ -10,9 +10,9 @@ any gate fails.
   python tools/close_round.py --skip-sf01-sweep --skip-bench   # quick
 
 Steps (name, command, pass criterion):
-  oracle_sf001   check_oracle.py /root/testdata/sf0.01   "ALL PASS"
-  oracle_sf01    check_oracle.py /root/testdata/sf0.1    "ALL PASS"
-  degeneracy     check_degeneracy.py (sf0001) + --sf sf001   "ALL PASS"
+  oracle_sf0001  check_oracle.py at sf0.001               "ALL PASS" (parity
+  oracle_sf001   check_oracle.py at sf0.01                and the degeneracy
+  oracle_sf01    check_oracle.py at sf0.1                 pins at that SF)
   replay_census  replay_census.py                        risk == 0
   ledger         ledger_priority.py --check              exit 0
   bench          bench.py (both tiers)                   valid JSON, no errors,
@@ -103,24 +103,19 @@ def main() -> int:
         # report the FAIL lines themselves, not the raw tail — on rc!=0
         # stderr is appended and its last line is WARN noise
         fail_lines = re.findall(r"^FAIL.*", out, re.M)
+        pins = re.findall(r"^degeneracy pins checked.*", out, re.M)
         ok = rc == 0 and "ALL PASS" in out
         return ok, fail_lines[:10] if fail_lines else (
-            "ALL PASS" if ok else out.strip().splitlines()[-3:]
+            ["ALL PASS"] + pins if ok else out.strip().splitlines()[-3:]
         )
 
+    from check_degeneracy import SF01_DIR, SF_DIRS
+
+    step("oracle_sf0001", lambda: sweep(SF_DIRS["sf0001"]))
     if "--skip-sf001-sweep" not in args:
-        step("oracle_sf001", lambda: sweep("/root/testdata/sf0.01"))
+        step("oracle_sf001", lambda: sweep(SF_DIRS["sf001"]))
     if "--skip-sf01-sweep" not in args:
-        step("oracle_sf01", lambda: sweep("/root/testdata/sf0.1"))
-
-    def degeneracy():
-        rc1, o1 = _run(["tools/check_degeneracy.py"])
-        rc2, o2 = _run(["tools/check_degeneracy.py", "--sf", "sf001"])
-        ok = rc1 == 0 and rc2 == 0 and "ALL PASS" in o1 and "ALL PASS" in o2
-        return ok, (o1.strip().splitlines()[-1:] + o2.strip().splitlines()[-1:])
-
-    if "--skip-degeneracy" not in args:
-        step("degeneracy", degeneracy)
+        step("oracle_sf01", lambda: sweep(SF01_DIR))
 
     def census():
         rc, out = _run(["tools/replay_census.py"])
